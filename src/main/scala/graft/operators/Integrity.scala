@@ -67,70 +67,56 @@ object Integrity {
       .select(lit(label).as("dataset"), col("n_rows"), col("xor_hash"),
         col("sum_hash"), col("min_hash"), col("max_hash"))
 
-  /** One (row_count, sum_hash) pair over ALL of `df`'s columns — the
-    * [[fingerprint]] digest reduced to the two numbers a manifest can
-    * chain: `sum_hash` (modular sum of row hashes) is ADDITIVE over a
-    * multiset union, so the digest of "base ∪ delta₁ ∪ delta₂" is the
-    * mod-2⁴⁸ sum of the parts' digests — no rescan of the parts. That
-    * additivity is what lets [[Snapshot]] record a whole-table digest
-    * on every incremental link while scanning only the link's own
-    * rows. One column-complete scan, map-side-combined; an empty frame
-    * digests to (0, 0).
+  /** The (row_count, sum_hash) pair over ALL of `df`'s columns as a
+    * single-row aggregate frame `(n, s, st)` — the [[fingerprint]]
+    * digest reduced to the two numbers a manifest can chain: `s`
+    * (modular sum of row hashes) is ADDITIVE over a multiset union, so
+    * the digest of "base ∪ delta₁ ∪ delta₂" is the mod-2⁴⁸ sum of the
+    * parts' digests — no rescan of the parts. That additivity is what
+    * lets [[Snapshot]] record a whole-table digest on every incremental
+    * link while scanning only the link's own rows. With `withStamps`,
+    * `st` also collects the frame's distinct `batch_id` stamps in the
+    * same scan (else it is an empty array). One column-complete scan,
+    * map-side-combined; an empty frame digests to (0, 0). The frame is
+    * lazy so callers can fuse several into one action.
     */
-  def contentDigest(df: DataFrame): (Long, Long) = {
-    val r = df.select(rowHash(df.columns.toSeq.map(col)).as("h"))
-      .agg(count(lit(1)).as("n"),
-        (sum(col("h").cast("decimal(38,0)")) % lit(SumMod))
-          .cast(LongType).as("s"))
-      .head()
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  def contentDigestAgg(df: DataFrame, withStamps: Boolean = false): DataFrame = {
+    val h = rowHash(df.columns.toSeq.map(col)).as("h")
+    val stamps =
+      if (withStamps) collect_set(col("batch_id")) else array().cast("array<bigint>")
+    (if (withStamps) df.select(h, col("batch_id")) else df.select(h))
+      .agg(count(lit(1)).as("n"), modSum(col("h")).as("s"), stamps.as("st"))
   }
 
-  /** The [[contentDigest]] modulus — additive chaining must reduce with
-    * the same one.
+  /** [[contentDigestAgg]]'s (n, s), collected. */
+  def contentDigest(df: DataFrame): (Long, Long) = {
+    val r = contentDigestAgg(df).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** The [[contentDigestAgg]] modulus — additive chaining must reduce
+    * with the same one.
     */
   def digestMod: Long = SumMod
 
-  /** [[contentDigest]] PLUS the frame's distinct `batch_id` stamps, in
-    * one scan — the "digest what landed, then collect its stamps"
-    * pattern ([[Snapshot.rebase]]) fused into a single aggregate so the
-    * landed files are read once, not twice (guide §2.4: consecutive
-    * passes over one input share a scan). Values are identical to
-    * `contentDigest(df)` + `df.select("batch_id").distinct()` sorted.
-    */
-  def contentDigestWithStamps(df: DataFrame): (Long, Long, Seq[Long]) = {
-    val r = df
-      .select(rowHash(df.columns.toSeq.map(col)).as("h"), col("batch_id"))
-      .agg(count(lit(1)).as("n"),
-        (sum(col("h").cast("decimal(38,0)")) % lit(SumMod))
-          .cast(LongType).as("s"),
-        collect_set(col("batch_id")).as("st"))
-      .head()
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1),
-      r.getSeq[Long](2).sorted)
-  }
+  // exact sum first, one mod after; an empty input sums to 0
+  private def modSum(h: Column): Column =
+    coalesce((sum(h.cast("decimal(38,0)")) % lit(SumMod)).cast(LongType), lit(0L))
 
   /** One scan of a stamped CUT slice answering both questions the
-    * incremental export asks of it ([[Snapshot.export]]'s delta path):
-    * the slice's distinct stamps AND the count + digest of its
-    * `batch_id <= since` prefix — the parent-history audit. Fuses what
-    * was a distinct-collect scan plus a [[contentDigest]] scan into one
-    * aggregate with conditional branches; the returned values are
-    * bit-identical to the two-scan originals (count of the prefix, its
-    * modular row-hash sum over ALL columns, sorted distinct stamps of
-    * the whole slice; an empty prefix digests to (0, 0)).
+    * incremental export asks of it ([[Snapshot.export]]'s delta path),
+    * as a single-row aggregate frame `(st, hn, hs)`: the slice's
+    * distinct stamps AND the count + digest of its `batch_id <= since`
+    * prefix — the parent-history audit. The values equal a
+    * distinct-collect scan plus a [[contentDigestAgg]] scan of the
+    * prefix (an empty prefix digests to (0, 0)).
     */
-  def cutAuditAgg(cutDf: DataFrame, since: Long): (Seq[Long], Long, Long) = {
+  def cutAuditAgg(cutDf: DataFrame, since: Long): DataFrame = {
     val hist = col("batch_id") <= since
-    val r = cutDf
+    cutDf
       .select(rowHash(cutDf.columns.toSeq.map(col)).as("h"), col("batch_id"))
       .agg(collect_set(col("batch_id")).as("st"),
-        count(when(hist, 1)).as("hn"),
-        (sum(when(hist, col("h")).cast("decimal(38,0)")) % lit(SumMod))
-          .cast(LongType).as("hs"))
-      .head()
-    (r.getSeq[Long](0).sorted, r.getLong(1),
-      if (r.isNullAt(2)) 0L else r.getLong(2))
+        count(when(hist, 1)).as("hn"), modSum(when(hist, col("h"))).as("hs"))
   }
 
   /** Bucket-digest reconciliation (anti-entropy): compare two snapshots

@@ -48,11 +48,8 @@ object LabelPropagation {
       .localCheckpoint()
     // labels are node-sized but checkpointed (no stats), so unhinted
     // every round sort-merge-shuffled the full undirected edge list to
-    // join them; the measured gate is the house PageRank/q119 bound —
-    // a ≤6M-row node table builds a ~100 MB hash relation, and past it
-    // the hint disengages and the shuffle join is the at-scale shape
-    val n = labels.count()
-    def hinted(df: DataFrame) = if (n <= 6000000L) broadcast(df) else df
+    // join them
+    val hinted = graft.core.BroadcastGate.hint(labels.count()) _
     val w = Window.partitionBy("id").orderBy(col("c").desc, col("lbl").asc)
     var it = 0
     while (it < iters) {

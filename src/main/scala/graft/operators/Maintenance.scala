@@ -607,7 +607,8 @@ object Maintenance {
       val generation = acquireLease(spark, f.path, me, leaseTtlMs)
       val (ran, backup) = try graft.core.CommitGuard.withGuard(
         () => requireLeaseHeld(spark, f.path, me, generation)) {
-        val compacted = sweepOne(spark, f, f.policy.getOrElse(policy))
+        val compacted = familyKind(f.kind)
+          .compactIfDue(spark, f, f.policy.getOrElse(policy))
         // backup AFTER the compact, same lease tenure: the tick that
         // rewrites history is the tick whose backup rolls the epoch
         // (Snapshot.backupTick's delta→full fallback), and the lease
@@ -622,60 +623,68 @@ object Maintenance {
     report.toDF("table", "kind", "compacted", "backup")
   }
 
-  private def sweepOne(spark: SparkSession, f: Family,
-      policy: CompactPolicy): Boolean = f.kind match {
-    case "rollup" =>
-      compactRollupIfDue(spark, f.table, f.path, policy, f.nBuckets)
-    case "join" =>
-      require(f.joinKeys.nonEmpty, s"sweep: join family ${f.table} needs joinKeys")
-      compactJoinIfDue(spark, f.table, f.path, f.joinKeys, policy, f.nBuckets)
-    case "pairs" => compactPairsIfDue(spark, f.table, f.path, policy, f.nBuckets)
-    case "lsh" => compactLshIfDue(spark, f.table, f.path, policy, f.nBuckets)
-    case "retrieval" =>
-      compactRetrievalIfDue(spark, f.table, f.path, policy, f.nBuckets)
-    case "positions" =>
-      compactPositionsIfDue(spark, f.table, f.path, policy, f.nBuckets)
-    case "ivf" => compactIvfIfDue(spark, f.table, f.path, policy, f.nBuckets)
-    case other => throw new IllegalArgumentException(
-      s"sweep: unknown family kind '$other' for ${f.table}")
+  // ------------------------------------------------------------------
+  // the family-kind registry
+  // ------------------------------------------------------------------
+
+  /** One maintained family kind, as table SUFFIXES of the family's
+    * name ([[tableOf]]: "base" is the family's base table itself): its
+    * commit marker (None for the markerless rollup), the stamped logs
+    * [[fsck]] audits, the unstamped side tables that carry no ledger to
+    * audit (the pair graph's frozen `_dict`, the IVF's frozen
+    * `_centroids`), and the kind's policy-driven compact. Every
+    * family's `_deleted` frontier is an APPEND-mode stamped ledger
+    * (which is what lets delete verbs compose with
+    * [[graft.operators.Snapshot.exportAtCut]]'s commit-boundary slice).
+    * The snapshot tier's closed vocabulary is derived, never restated:
+    * [[suffixes]] = marker ∪ logs ∪ side tables — what the family
+    * operators actually WRITE, so anything else sharing the name prefix
+    * is not family state.
+    */
+  private[operators] final case class FamilyKind(marker: Option[String],
+      logs: Seq[String], side: Seq[String],
+      compactIfDue: (SparkSession, Family, CompactPolicy) => Boolean) {
+    def suffixes: Set[String] = (marker.toSeq ++ logs ++ side).toSet
   }
+
+  private val kinds: Seq[(String, FamilyKind)] = Seq(
+    "pairs" -> FamilyKind(Some("batches"),
+      Seq("base", "members", "sets", "postings", "deleted"), Seq("dict"),
+      (s, f, p) => compactPairsIfDue(s, f.table, f.path, p, f.nBuckets)),
+    "lsh" -> FamilyKind(Some("batches"), Seq("postings", "sets", "deleted"),
+      Nil, (s, f, p) => compactLshIfDue(s, f.table, f.path, p, f.nBuckets)),
+    "retrieval" -> FamilyKind(Some("meta"), Seq("postings", "deleted"), Nil,
+      (s, f, p) => compactRetrievalIfDue(s, f.table, f.path, p, f.nBuckets)),
+    "positions" -> FamilyKind(Some("pbatches"), Seq("positions", "deleted"),
+      Nil, (s, f, p) => compactPositionsIfDue(s, f.table, f.path, p, f.nBuckets)),
+    "ivf" -> FamilyKind(Some("batches"), Seq("cells", "deleted"),
+      Seq("centroids"),
+      (s, f, p) => compactIvfIfDue(s, f.table, f.path, p, f.nBuckets)),
+    "join" -> FamilyKind(Some("batches"), Seq("base", "fact", "dim"), Nil,
+      (s, f, p) => {
+        require(f.joinKeys.nonEmpty, s"sweep: join family ${f.table} needs joinKeys")
+        compactJoinIfDue(s, f.table, f.path, f.joinKeys, p, f.nBuckets)
+      }),
+    "rollup" -> FamilyKind(None, Seq("base"), Nil,
+      (s, f, p) => compactRollupIfDue(s, f.table, f.path, p, f.nBuckets)))
+
+  private[operators] def familyKind(kind: String): FamilyKind =
+    kinds.collectFirst { case (`kind`, k) => k }.getOrElse(
+      throw new IllegalArgumentException(s"unknown family kind '$kind' " +
+        kinds.map(_._1).mkString("(", "|", ")")))
+
+  /** The family naming rule: suffix "base" is the family's own table,
+    * every other suffix `s` names the sibling `<family>_s`.
+    */
+  private[operators] def tableOf(family: String, suffix: String): String =
+    if (suffix == "base") family else s"${family}_$suffix"
+
+  private[operators] def suffixOf(family: String, table: String): String =
+    if (table == family) "base" else table.stripPrefix(family + "_")
 
   // ------------------------------------------------------------------
   // fsck — the structural ledger audit
   // ------------------------------------------------------------------
-
-  /** Which tables make up a family, for [[fsck]]: its commit-marker
-    * table (None for the markerless rollup) and its stamped logs.
-    * Every family's `_deleted` frontier is an APPEND-mode stamped
-    * ledger (which is what lets delete verbs compose with
-    * [[graft.operators.Snapshot.exportAtCut]]'s commit-boundary slice);
-    * the runtime unstamped-column guard keeps fsck safe on any legacy
-    * unstamped table with an informational row. Frozen unstamped side
-    * state (the pair graph's `_dict` rides its stamped rows; the IVF's
-    * `_centroids` has none) carries no ledger to audit and is owned by
-    * the snapshot tier's vocabulary instead
-    * ([[graft.operators.Snapshot]]).
-    */
-  private[operators] def familyTables(table: String, kind: String):
-      (Option[String], Seq[String]) = kind match {
-    case "pairs" => (Some(s"${table}_batches"),
-      Seq(table, s"${table}_members", s"${table}_sets",
-        s"${table}_postings", s"${table}_deleted"))
-    case "lsh" => (Some(s"${table}_batches"),
-      Seq(s"${table}_postings", s"${table}_sets", s"${table}_deleted"))
-    case "retrieval" => (Some(s"${table}_meta"),
-      Seq(s"${table}_postings", s"${table}_deleted"))
-    case "positions" => (Some(s"${table}_pbatches"),
-      Seq(s"${table}_positions", s"${table}_deleted"))
-    case "ivf" => (Some(s"${table}_batches"),
-      Seq(s"${table}_cells", s"${table}_deleted"))
-    case "join" => (Some(s"${table}_batches"),
-      Seq(table, s"${table}_fact", s"${table}_dim"))
-    case "rollup" => (None, Seq(table))
-    case other => throw new IllegalArgumentException(
-      s"fsck: unknown family kind '$other' (pairs|lsh|retrieval|" +
-        "positions|ivf|join|rollup)")
-  }
 
   /** FSCK — audit the STRUCTURAL invariants every family's crash/replay
     * protocol rests on, without serving anything. The serve paths
@@ -715,7 +724,9 @@ object Maintenance {
   def fsck(spark: SparkSession, table: String, kind: String):
       org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
-    val (markerOpt, logs) = familyTables(table, kind)
+    val k = familyKind(kind)
+    val markerOpt = k.marker.map(tableOf(table, _))
+    val logs = k.logs.map(tableOf(table, _))
     val rows = scala.collection.mutable.ArrayBuffer.empty[
       (String, String, Boolean, String)]
     // committed stamps (rollup: derived from the log itself, no marker)

@@ -52,13 +52,9 @@ object PageRank {
     // simpler original shape is kept.)
     val ew = e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
       .localCheckpoint()
-    // ranks are node-sized; checkpointed frames carry no stats, so hint
-    // the build side from the measured node count. 6M rows ≈ 100 MB as a
-    // built hash relation — the same byte budget as the other measured
-    // broadcast gates (Dedup / cosinePairs); rebuilt per iteration, so
-    // an oversized hint would hurt three times
-    val bcastOk = n <= 6000000L
-    def hinted(df: DataFrame) = if (bcastOk) broadcast(df) else df
+    // ranks are node-sized: hint the build side from the measured node
+    // count
+    val hinted = graft.core.BroadcastGate.hint(n) _
 
     var pr = nodes.withColumn("pr", lit(1.0 / n))
     var it = 0

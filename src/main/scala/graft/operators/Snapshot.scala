@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, collect_set}
+import com.fasterxml.jackson.annotation.JsonInclude
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{array, col, collect_set, count, lit}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Portable snapshots of a maintained-state family — the backup/restore
@@ -99,9 +103,96 @@ import org.apache.spark.sql.types.{DataType, StructType}
 object Snapshot {
 
   private val ManifestName = "_MANIFEST.json"
+  private val FleetManifestName = "_FLEET.json"
 
   private def fsFor(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  // Jackson reads a Long inside a generic container (Seq, Option) as an
+  // Integer when it fits; `contentAs` pins the element type
+  private type JLong = java.lang.Long
+
+  /** One table's entry in `_MANIFEST.json`: what the link wrote (`rows`,
+    * `checksum`: the slice) and what the whole table held at the cut
+    * (`rowsTotal`, `totalChecksum`: the numbers each restore link
+    * verifies and each child delta audits against). The digest fields
+    * are absent from pre-digest manifests (counts-only auditing, named),
+    * and `rowsTotal` from pre-cumulative ones ([[cumulativeRows]] refuses
+    * those by name).
+    */
+  private final case class TableEntry(name: String, suffix: String,
+      schema: String, bucketCols: Seq[String], nBuckets: Int,
+      @JsonDeserialize(contentAs = classOf[JLong]) stamps: Seq[Long],
+      rows: Long,
+      @JsonDeserialize(contentAs = classOf[JLong]) checksum: Option[Long],
+      @JsonDeserialize(contentAs = classOf[JLong]) rowsTotal: Option[Long],
+      @JsonDeserialize(contentAs = classOf[JLong]) totalChecksum: Option[Long]) {
+    def structType: StructType =
+      DataType.fromJson(schema).asInstanceOf[StructType]
+    def stamped: Boolean = structType.fieldNames.contains("batch_id")
+  }
+
+  /** A snapshot directory's `_MANIFEST.json`, written LAST (the commit).
+    * `kind` is absent on kind-less exports, `parent` on fulls, `cut` on
+    * plain (non-cut) exports; `rebaseOf` (provenance only; chain verbs
+    * ignore it) appears on [[rebase]] outputs alone.
+    */
+  private final case class Manifest(table: String, kind: Option[String],
+      excluded: Seq[String], parent: Option[String],
+      @JsonDeserialize(contentAs = classOf[JLong]) cut: Option[Long],
+      @JsonInclude(JsonInclude.Include.NON_ABSENT) rebaseOf: Option[String],
+      tables: Seq[TableEntry])
+
+  private final case class FleetMember(table: String, kind: String)
+
+  /** A fleet export's `_FLEET.json` ([[exportFleetAtCut]]). */
+  private final case class FleetManifest(cut: Long, parent: Option[String],
+      members: Seq[FleetMember])
+
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** The one manifest reader; `what` is "" or "fleet ". */
+  private def readJson[T](spark: SparkSession, dir: String, name: String,
+      cls: Class[T], what: String): T = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/$name")
+    val fs = fsFor(spark, p)
+    require(fs.exists(p),
+      s"Snapshot: no $name under $dir — not a ${what}snapshot " +
+        s"(or a crashed ${what}export; re-export it)")
+    val in = fs.open(p)
+    try mapper.readValue(in: java.io.InputStream, cls) finally in.close()
+  }
+
+  private def readManifest(spark: SparkSession, dir: String): Manifest =
+    readJson(spark, dir, ManifestName, classOf[Manifest], "")
+
+  /** The one manifest writer — called LAST, it commits the directory. */
+  private def writeJson(spark: SparkSession, dir: String, name: String,
+      manifest: AnyRef): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/$name")
+    val out = fsFor(spark, p).create(p, true)
+    try out.write(mapper.writerWithDefaultPrettyPrinter()
+      .writeValueAsBytes(manifest))
+    finally out.close()
+  }
+
+  /** A stale manifest must not vouch for a partially re-exported dir. */
+  private def dropManifest(spark: SparkSession, dir: String,
+      name: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/$name")
+    fsFor(spark, p).delete(p, false)
+  }
+
+  /** The table's cumulative row count at its link's cut — what chains
+    * anchor on, links ship against and restores verify. Manifests
+    * written before cumulative totals existed cannot serve any of
+    * those, so every verb refuses them with this one message.
+    */
+  private def cumulativeRows(dir: String, e: TableEntry): Long =
+    e.rowsTotal.getOrElse(throw new IllegalArgumentException(
+      s"Snapshot: manifest under $dir predates cumulative totals (table " +
+        s"${e.name} has no rowsTotal) — chains cannot anchor on it, ship " +
+        "it or restore it; take a fresh full snapshot"))
 
   /** The family's catalog tables: the base table (if registered) plus
     * every `table_*` sibling. Prefix discovery is what keeps the verb
@@ -120,13 +211,13 @@ object Snapshot {
     * When the family's KIND is known (round-11 verdict #4: the capture
     * half of the namespace discipline becomes enforcement), membership
     * is keyed by the kind's CLOSED table vocabulary
-    * ([[snapshotSuffixes]]) instead: a prefix-matched sibling outside
-    * the vocabulary — the unrelated `idx_backup` the discipline could
-    * only ask callers to avoid — is excluded from the snapshot, and the
-    * manifest records the exclusion so the backup's scope is auditable.
-    * [[exportAtCut]] always knows the kind (it reads the kind's
-    * marker); plain [[export]] takes it optionally and falls back to
-    * prefix capture for unknown/legacy layouts.
+    * ([[Maintenance.FamilyKind.suffixes]]) instead: a prefix-matched
+    * sibling outside the vocabulary — the unrelated `idx_backup` the
+    * discipline could only ask callers to avoid — is excluded from the
+    * snapshot, and the manifest records the exclusion so the backup's
+    * scope is auditable. [[exportAtCut]] always knows the kind (it
+    * reads the kind's marker); plain [[export]] takes it optionally and
+    * falls back to prefix capture for unknown/legacy layouts.
     */
   private def siblings(spark: SparkSession, table: String): Seq[String] = {
     val t = table.toLowerCase
@@ -140,86 +231,14 @@ object Snapshot {
       .sorted.toSeq
   }
 
-  /** Each kind's complete snapshot vocabulary, as suffixes ("base" =
-    * the family's base table). Derived from what the family operators
-    * actually WRITE — marker + stamped logs ([[Maintenance
-    * .familyTables]]) plus the unstamped side tables fsck has no
-    * stamps to audit (the pair graph's frozen `_dict`, the IVF's
-    * frozen `_centroids`). A kind's backup is exactly this set ∩ the
-    * catalog; anything else sharing the name prefix is not family
-    * state.
-    */
-  private[operators] def snapshotSuffixes(kind: String): Set[String] =
-    kind match {
-      case "pairs" =>
-        Set("base", "members", "sets", "postings", "dict", "batches", "deleted")
-      case "lsh" => Set("postings", "sets", "batches", "deleted")
-      case "retrieval" => Set("postings", "meta", "deleted")
-      case "positions" => Set("positions", "pbatches", "deleted")
-      case "ivf" => Set("centroids", "cells", "batches", "deleted")
-      case "join" => Set("base", "fact", "dim", "batches")
-      case "rollup" => Set("base")
-      case other => throw new IllegalArgumentException(
-        s"Snapshot: unknown family kind '$other' (pairs|lsh|retrieval|" +
-          "positions|ivf|join|rollup)")
-    }
-
   /** Test seam: invoked after each table's slice lands on disk, before
     * the export's consistency re-checks — lets specs stage a mutation
     * RACING the export deterministically (a delete verb overwriting an
-    * unstamped frontier, a rollup batch landing mid-copy). Production
-    * never sets it.
+    * unstamped frontier, a rollup batch landing mid-copy). It runs on
+    * the copy's own thread, concurrently with the family's other
+    * copies. Production never sets it.
     */
   private[graft] var onTableExported: Option[String => Unit] = None
-
-  private def readManifest(spark: SparkSession, dest: String):
-      com.fasterxml.jackson.databind.JsonNode = {
-    val p = new org.apache.hadoop.fs.Path(s"$dest/$ManifestName")
-    val fs = fsFor(spark, p)
-    require(fs.exists(p),
-      s"Snapshot: no $ManifestName under $dest — not a snapshot " +
-        "(or a crashed export; re-export it)")
-    val in = fs.open(p)
-    try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-    finally in.close()
-  }
-
-  private def jsonSeq(node: com.fasterxml.jackson.databind.JsonNode):
-      Seq[com.fasterxml.jackson.databind.JsonNode] = {
-    val it = node.elements()
-    val buf = scala.collection.mutable.ArrayBuffer.empty[
-      com.fasterxml.jackson.databind.JsonNode]
-    while (it.hasNext) buf += it.next()
-    buf.toSeq
-  }
-
-  /** What a parent manifest recorded about one table — the anchor a
-    * delta export slices from and audits against. The digest fields
-    * are OPTIONAL (round-11 advice: pre-digest manifests exist — a
-    * chain exported before the content-digest fields landed must
-    * degrade to count-only auditing with a named reason, not die on a
-    * bare NullPointerException).
-    */
-  private final case class ParentEntry(stamps: Set[Long], rowsTotal: Long,
-      totalChecksum: Option[Long])
-
-  private def optLong(e: com.fasterxml.jackson.databind.JsonNode,
-      field: String): Option[Long] =
-    Option(e.get(field)).filterNot(_.isNull).map(_.asLong())
-
-  private def parentEntries(dest: String,
-      m: com.fasterxml.jackson.databind.JsonNode): Map[String, ParentEntry] =
-    jsonSeq(m.get("tables")).map { e =>
-      val name = e.get("name").asText()
-      val rowsTotal = optLong(e, "rowsTotal").getOrElse(
-        throw new IllegalArgumentException(
-          s"Snapshot: manifest under $dest predates cumulative totals " +
-            s"(table $name has no rowsTotal) — chains cannot anchor on " +
-            "it; take a fresh full snapshot"))
-      name -> ParentEntry(
-        jsonSeq(e.get("stamps")).map(_.asLong()).toSet,
-        rowsTotal, optLong(e, "totalChecksum"))
-    }.toMap
 
   /** Export `table`'s family to `dest`. With `incrementalFrom = Some(
     * parentDest)`, exports a DELTA against that earlier snapshot: each
@@ -235,48 +254,45 @@ object Snapshot {
     * derives `c` from the family's marker so the slice is the
     * consistent committed prefix under a LIVE stream. Returns the rows
     * written into THIS snapshot directory.
+    *
+    * Four phases (guide §2.4/§2.6): the per-table pre-write cut audits
+    * fuse into ONE union-of-aggregates action; the per-table writes
+    * overlap; the post-write read-back digests (+ landed-stamp collects)
+    * and the cut-consistency live re-checks fuse into one more action;
+    * then the totals arithmetic and the manifest. T tables cost T
+    * writes + ≤3 fused actions. Landed stamps are read from the landed
+    * slice on the full path: the write IS the cut frame's
+    * materialization, so the sets are equal by construction.
     */
   def export(spark: SparkSession, table: String, dest: String,
       incrementalFrom: Option[String] = None, cut: Option[Long] = None,
       auditParent: Boolean = true, kind: Option[String] = None): Long = {
-    val discovered = siblings(spark, table)
+    val t = table.toLowerCase
     // kind known → membership is the kind's CLOSED vocabulary; an
     // out-of-vocabulary prefix neighbor (`idx_backup`) is excluded and
     // recorded, not silently swept into the family's backup
-    val (names, excluded) = kind match {
-      case Some(k) =>
-        val allowed = snapshotSuffixes(k)
-        val t = table.toLowerCase
-        def suffix(n: String) = if (n == t) "base" else n.stripPrefix(t + "_")
-        val (in, out) = discovered.partition(n => allowed.contains(suffix(n)))
-        (in, out)
-      case None => (discovered, Nil)
-    }
+    val vocabulary = kind.map(Maintenance.familyKind(_).suffixes)
+    val (names, excluded) = siblings(spark, t).partition(n =>
+      vocabulary.forall(_.contains(Maintenance.suffixOf(t, n))))
     require(names.nonEmpty, s"Snapshot.export: no catalog tables match " +
       s"'$table' or '${table}_*'" +
       kind.map(k => s" within kind '$k'").getOrElse("") +
       " — nothing to snapshot")
     val parent = incrementalFrom.map { pd =>
       val m = readManifest(spark, pd)
-      require(m.get("table").asText() == table.toLowerCase,
+      require(m.table == t,
         s"Snapshot.export: parent snapshot under $pd is of " +
-          s"'${m.get("table").asText()}', not '$table'")
-      pd -> parentEntries(pd, m)
+          s"'${m.table}', not '$table'")
+      pd -> m.tables.map(e => e.name -> e).toMap
     }
     // markerless kinds (the rollup) derive their cut from the log
     // itself, so the cut slice must additionally prove STABILITY —
     // marker-ful kinds get consistency from the fsck invariant instead
     val verifyStampedCut = cut.isDefined &&
-      kind.exists(k => Maintenance.familyTables(table, k)._1.isEmpty)
-    val manifestPath = new org.apache.hadoop.fs.Path(s"$dest/$ManifestName")
-    val fs = fsFor(spark, manifestPath)
-    // a stale manifest must not vouch for a partially re-exported dir
-    fs.delete(manifestPath, false)
+      kind.exists(Maintenance.familyKind(_).marker.isEmpty)
+    dropManifest(spark, dest, ManifestName)
     val catalog = spark.sessionState.catalog
-    val suffixOf = names.map { name =>
-      name -> (if (name == table.toLowerCase) "base"
-               else name.stripPrefix(table.toLowerCase + "_"))
-    }.toMap
+    val suffixOf = names.map(n => n -> Maintenance.suffixOf(t, n)).toMap
     // disk-collision fence (round-10 advice): a sibling literally named
     // `table_base` strips to the base table's own suffix; both would
     // write `$dest/base` and the second silently clobbers the first
@@ -287,10 +303,12 @@ object Snapshot {
             s"collide on snapshot directory '$s' — rename the sibling; " +
             "'base' is reserved for the family's base table")
       }
-    def exportOne(name: String): Map[String, Any] = {
-      val meta = catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(name))
-      val bucket = meta.bucketSpec
+    case class Prep(name: String, suffix: String, schema: StructType,
+        bucketCols: Seq[String], nBuckets: Int, stamped: Boolean,
+        cutDf: DataFrame, parentE: Option[(String, TableEntry)])
+    val preps = names.map { name =>
+      val bucket = catalog.getTableMetadata(
+        spark.sessionState.sqlParser.parseTableIdentifier(name)).bucketSpec
       bucket.foreach { b =>
         // the house writer always sorts by the bucket key; a spec that
         // diverged would silently restore into a different layout
@@ -298,7 +316,6 @@ object Snapshot {
           s"Snapshot.export: $name sorts by ${b.sortColumnNames}, " +
             s"buckets by ${b.bucketColumnNames} — unsupported layout")
       }
-      val suffix = suffixOf(name)
       val df = spark.table(name)
       val stamped = df.columns.contains("batch_id")
       // the CUT state — the committed prefix this snapshot captures;
@@ -311,291 +328,142 @@ object Snapshot {
       val parentEntry = parent.flatMap { case (pd, pe) =>
         if (stamped) pe.get(name).map(p => (pd, p)) else None
       }
-      // the delta path's slice-stamps collect and parent-history audit
-      // read the SAME cut slice — fused into one aggregate so the slice
-      // is scanned once, not twice (values bit-identical; guide §2.4)
-      val (stamps: Seq[Long], historyAudit) = parentEntry match {
-        case Some((_, p)) =>
-          val since = if (p.stamps.nonEmpty) p.stamps.max else -1L
-          val (st, hn, hsum) = Integrity.cutAuditAgg(cutDf, since)
-          (st, Some((hn, hsum)))
-        case None =>
-          (if (stamped) cutDf.select("batch_id").distinct()
-            .collect().map(_.getLong(0)).sorted.toSeq
-          else Nil, None)
+      Prep(name, suffixOf(name), df.schema,
+        bucket.map(_.bucketColumnNames).getOrElse(Nil),
+        bucket.map(_.numBuckets).getOrElse(0), stamped, cutDf,
+        parentEntry)
+    }
+    def sinceOf(p: TableEntry): Long =
+      if (p.stamps.nonEmpty) p.stamps.max else -1L
+    // phase 1 — every delta table's slice-stamps + parent-history
+    // audit, one action; the audits gate the writes
+    val deltas = preps.filter(_.parentE.isDefined)
+    val audits: Map[String, (Seq[Long], Long, Long)] = deltas.map(_.name)
+      .zip(collectFused(deltas.map(p =>
+        Integrity.cutAuditAgg(p.cutDf, sinceOf(p.parentE.get._2))))
+        .map(r => (r.getSeq[Long](0).sorted, r.getLong(1), r.getLong(2))))
+      .toMap
+    deltas.foreach { p =>
+      val (pd, pe) = p.parentE.get
+      val (stamps, hn, hsum) = audits(p.name)
+      val rowsTotal = cumulativeRows(pd, pe)
+      require(pe.stamps.toSet.subsetOf(stamps.toSet),
+        s"Snapshot.export: ${p.name} no longer holds the parent " +
+          s"snapshot's stamps (a compact rewrote history since " +
+          s"$pd) — incremental chains break at compacts; take a " +
+          "full snapshot")
+      val since = sinceOf(pe)
+      // the round-10 advice fix: stamps can SURVIVE a rewrite (a
+      // default compact folds history back to {0}, exactly a fresh
+      // build's stamp set) — so audit the CONTENT beneath the parent's
+      // max stamp, not just the stamp names. A pre-digest (legacy)
+      // parent degrades to the count fence.
+      if (auditParent && pe.totalChecksum.isDefined) {
+        require(hn == rowsTotal && hsum == pe.totalChecksum.get,
+          s"Snapshot.export: ${p.name}'s history at batch_id <= " +
+            s"$since no longer matches the parent snapshot under " +
+            s"$pd ($hn rows / digest $hsum vs recorded " +
+            s"$rowsTotal / ${pe.totalChecksum.get}) — a compact " +
+            "or manual repair rewrote backed-up history; " +
+            "incremental chains break there, take a full snapshot")
+      } else {
+        require(hn == rowsTotal,
+          s"Snapshot.export: ${p.name} holds $hn rows at batch_id " +
+            s"<= $since, the parent snapshot under $pd recorded " +
+            s"$rowsTotal — a compact rewrote backed-up " +
+            "history; incremental chains break there, take a " +
+            "full snapshot")
       }
-      val (slice, parentTotals) = parentEntry match {
-        case Some((pd, p)) =>
-          require(p.stamps.subsetOf(stamps.toSet),
-            s"Snapshot.export: $name no longer holds the parent " +
-              s"snapshot's stamps (a compact rewrote history since " +
-              s"$pd) — incremental chains break at compacts; take a " +
-              "full snapshot")
-          val since = if (p.stamps.nonEmpty) p.stamps.max else -1L
-          // the round-10 advice fix: stamps can SURVIVE a rewrite
-          // (a default compact folds history back to {0}, exactly a
-          // fresh build's stamp set) — so audit the CONTENT beneath
-          // the parent's max stamp, not just the stamp names. A
-          // pre-digest (legacy) parent degrades to the count fence.
-          val (hn, hsum) = historyAudit.get
-          if (auditParent && p.totalChecksum.isDefined) {
-            require(hn == p.rowsTotal && hsum == p.totalChecksum.get,
-              s"Snapshot.export: $name's history at batch_id <= " +
-                s"$since no longer matches the parent snapshot under " +
-                s"$pd ($hn rows / digest $hsum vs recorded " +
-                s"${p.rowsTotal} / ${p.totalChecksum.get}) — a compact " +
-                "or manual repair rewrote backed-up history; " +
-                "incremental chains break there, take a full snapshot")
-          } else {
-            require(hn == p.rowsTotal,
-              s"Snapshot.export: $name holds $hn rows at batch_id " +
-                s"<= $since, the parent snapshot under $pd recorded " +
-                s"${p.rowsTotal} — a compact rewrote backed-up " +
-                "history; incremental chains break there, take a " +
-                "full snapshot")
-          }
-          (cutDf.filter(col("batch_id") > since), Some(p))
-        case None => (cutDf, None) // full/unstamped, or born after the parent
+    }
+    // phase 2 — the per-table slice copies, overlapped (guide §2.6)
+    graft.core.Par.run(preps) { p =>
+      val slice = p.parentE match {
+        case Some((_, pe)) => p.cutDf.filter(col("batch_id") > sinceOf(pe))
+        case None => p.cutDf // full/unstamped, or born after the parent
       }
-      slice.write.mode(SaveMode.Overwrite).parquet(s"$dest/$suffix")
-      onTableExported.foreach(_(name)) // race-staging seam (specs only)
-      // digest what LANDED (not the plan): count + order-free content
-      // digest in one read-back aggregate — the numbers verify/restore
-      // audit against, so they must describe the files, not the intent
-      val (written, sliceSum) = Integrity.contentDigest(
-        spark.read.schema(df.schema).parquet(s"$dest/$suffix"))
+      slice.write.mode(SaveMode.Overwrite).parquet(s"$dest/${p.suffix}")
+      onTableExported.foreach(_(p.name)) // race-staging seam (specs only)
+    }
+    // phase 3 — digest what LANDED (not the plan): count + order-free
+    // content digest per table (full-path stamped tables collect their
+    // stamps in the same pass) — the numbers verify/restore audit
+    // against, so they must describe the files, not the intent. Plus
+    // the CONSISTENCY RE-CHECKS for hot (cut) exports, which re-read
+    // the LIVE table after the copy landed:
+    //  - unstamped side state (round-11 verdict #3: IVF centroids /
+    //    overwrite-merged frontiers): a delete verb racing the export
+    //    overwrites the very files the copy read — if the live table
+    //    no longer digests to what landed, the captured copy belongs
+    //    to no consistent moment and the export refuses;
+    //  - stamped logs of MARKERLESS kinds (the rollup, verdict #2):
+    //    the cut is derived from the log itself, so the one batch the
+    //    marker-ful kinds exclude by fsck arithmetic (the in-flight
+    //    max) is instead proven ABSENT by stability — rows at
+    //    `batch_id <= cut` are append-only between compacts, so an
+    //    unchanged count+digest across the copy means the slice was
+    //    a complete committed prefix, not a mid-append tear.
+    // One action for all of it.
+    val landedLegs = preps.map { p =>
+      (spark.read.schema(p.schema).parquet(s"$dest/${p.suffix}"),
+        p.stamped && p.parentE.isEmpty)
+    }
+    val liveIdx = preps.zipWithIndex.filter { case (p, _) =>
+      cut.isDefined && (!p.stamped || verifyStampedCut)
+    }
+    val liveLegs = liveIdx.map { case (p, _) =>
+      // refreshTable drops any cached file listing, and a FRESH
+      // spark.table resolve is needed too — a pre-refresh analyzed plan
+      // would pin the pre-copy file listing
+      spark.catalog.refreshTable(p.name)
+      val fresh = spark.table(p.name)
+      (if (p.stamped) fresh.filter(col("batch_id") <= cut.get)
+       else fresh, false)
+    }
+    val got = fusedDigestLegs(landedLegs ++ liveLegs)
+    val lives: Map[Int, (Long, Long)] = liveIdx.map(_._2)
+      .zip(got.drop(preps.size).map(t => (t._1, t._2))).toMap
+    // phase 4 — totals arithmetic, consistency requires, manifest rows
+    val entries = preps.zipWithIndex.map { case (p, i) =>
+      val (written, sliceSum, landedStamps) = got(i)
+      val stamps: Seq[Long] = p.parentE match {
+        case Some(_) => audits(p.name)._1
+        case None => if (p.stamped) landedStamps else Nil
+      }
       // whole-cut-state totals, rescan-free on deltas: the modular-sum
       // digest is additive over multiset union (a pre-digest legacy
       // parent breaks the digest chain — the child records none and
       // downstream audits degrade to counts for this table)
-      val rowsTotal = parentTotals.map(_.rowsTotal + written).getOrElse(written)
-      val totalChecksum: Option[Long] = parentTotals match {
-        case Some(p) =>
-          p.totalChecksum.map(tc => (tc + sliceSum) % Integrity.digestMod)
+      val rowsTotal = p.parentE.map { case (pd, pe) =>
+        cumulativeRows(pd, pe) + written
+      }.getOrElse(written)
+      val totalChecksum: Option[Long] = p.parentE match {
+        case Some((_, pe)) =>
+          pe.totalChecksum.map(tc => (tc + sliceSum) % Integrity.digestMod)
         case None => Some(sliceSum)
       }
-      // CONSISTENCY RE-CHECKS for hot (cut) exports — both re-read the
-      // LIVE table after the copy landed (refreshTable drops any cached
-      // file listing so the re-read sees what is on disk NOW):
-      //  - unstamped side state (round-11 verdict #3: IVF centroids /
-      //    overwrite-merged frontiers): a delete verb racing the export
-      //    overwrites the very files the copy read — if the live table
-      //    no longer digests to what landed, the captured copy belongs
-      //    to no consistent moment and the export refuses;
-      //  - stamped logs of MARKERLESS kinds (the rollup, verdict #2):
-      //    the cut is derived from the log itself, so the one batch the
-      //    marker-ful kinds exclude by fsck arithmetic (the in-flight
-      //    max) is instead proven ABSENT by stability — rows at
-      //    `batch_id <= cut` are append-only between compacts, so an
-      //    unchanged count+digest across the copy means the slice was
-      //    a complete committed prefix, not a mid-append tear.
-      if (cut.isDefined && (!stamped || verifyStampedCut)) {
-        spark.catalog.refreshTable(name)
-        // a FRESH spark.table resolve — the original frame's analyzed
-        // plan pins the pre-refresh file listing
-        val fresh = spark.table(name)
-        val live = if (stamped) fresh.filter(col("batch_id") <= cut.get)
-                   else fresh
-        val (ln, lsum) = Integrity.contentDigest(live)
+      lives.get(i).foreach { case (ln, lsum) =>
         val consistent =
-          if (stamped) ln == rowsTotal && totalChecksum.forall(_ == lsum)
+          if (p.stamped) ln == rowsTotal && totalChecksum.forall(_ == lsum)
           else ln == written && lsum == sliceSum
         require(consistent,
-          s"Snapshot.export: $name changed UNDER the export (live " +
-            s"${if (stamped) s"cut slice" else "table"} now $ln rows / " +
-            s"digest $lsum, captured ${if (stamped) rowsTotal else written}" +
-            s" / ${if (stamped) totalChecksum.getOrElse(sliceSum) else sliceSum})" +
+          s"Snapshot.export: ${p.name} changed UNDER the export (live " +
+            s"${if (p.stamped) s"cut slice" else "table"} now $ln rows / " +
+            s"digest $lsum, captured ${if (p.stamped) rowsTotal else written}" +
+            s" / ${if (p.stamped) totalChecksum.getOrElse(sliceSum) else sliceSum})" +
             " — a concurrent writer raced the copy (a delete verb on " +
             "unstamped side state, or a mid-append batch on a markerless " +
             "log). Bracket the export with Maintenance.withLease against " +
             "compacts/deletes, or re-run it; the snapshot directory is " +
             "not committed (no manifest was written)")
       }
-      Map[String, Any](
-        "name" -> name, "suffix" -> suffix,
-        "schema" -> df.schema.json,
-        "bucketCols" -> bucket.map(_.bucketColumnNames).getOrElse(Nil),
-        "nBuckets" -> bucket.map(_.numBuckets).getOrElse(0),
-        "stamps" -> stamps,
-        "rows" -> written,
-        "checksum" -> sliceSum,
-        // what the whole table held at the cut — the numbers each
-        // restore link verifies and each child delta audits against
-        "rowsTotal" -> rowsTotal,
-        "totalChecksum" -> totalChecksum.map(Long.box).orNull)
+      TableEntry(p.name, p.suffix, p.schema.json, p.bucketCols, p.nBuckets,
+        stamps, written, Some(sliceSum), Some(rowsTotal), totalChecksum)
     }
-    // FUSED production path (guide §2.4): the per-table pre-write cut
-    // audits, the post-write read-back digests (+ landed-stamp
-    // collects), and the cut-consistency live re-checks each collapse
-    // into ONE union-of-aggregates action across the family's tables,
-    // and the per-table writes between them overlap (guide §2.6).
-    // Every per-table value — stamps, counts, digests, refusal
-    // messages — is bit-identical to [[exportOne]]'s; only the job
-    // count changes (T tables: 3T+ actions → T writes + ≤3 fused).
-    // Landed stamps are read from the landed slice instead of the live
-    // cut frame on the full path: the write IS that frame's
-    // materialization, so the sets are equal by construction.
-    def exportFusedAll(): Seq[Map[String, Any]] = {
-      case class Prep(name: String, suffix: String, schema: StructType,
-          bucketCols: Seq[String], nBuckets: Int, stamped: Boolean,
-          cutDf: org.apache.spark.sql.DataFrame,
-          parentE: Option[(String, ParentEntry)])
-      val preps = names.map { name =>
-        val meta = catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(name))
-        val bucket = meta.bucketSpec
-        bucket.foreach { b =>
-          require(b.sortColumnNames == b.bucketColumnNames,
-            s"Snapshot.export: $name sorts by ${b.sortColumnNames}, " +
-              s"buckets by ${b.bucketColumnNames} — unsupported layout")
-        }
-        val df = spark.table(name)
-        val stamped = df.columns.contains("batch_id")
-        val cutDf = cut match {
-          case Some(c) if stamped => df.filter(col("batch_id") <= c)
-          case _ => df
-        }
-        val parentEntry = parent.flatMap { case (pd, pe) =>
-          if (stamped) pe.get(name).map(p => (pd, p)) else None
-        }
-        Prep(name, suffixOf(name), df.schema,
-          bucket.map(_.bucketColumnNames).getOrElse(Nil),
-          bucket.map(_.numBuckets).getOrElse(0), stamped, cutDf,
-          parentEntry)
-      }
-      def sinceOf(p: ParentEntry): Long =
-        if (p.stamps.nonEmpty) p.stamps.max else -1L
-      // phase 1 — every delta table's slice-stamps + parent-history
-      // audit, one action; the audits gate the writes exactly as the
-      // sequential path's per-table requires did
-      val deltas = preps.filter(_.parentE.isDefined)
-      val audits: Map[String, (Seq[Long], Long, Long)] = deltas
-        .map(_.name)
-        .zip(fusedCutAudits(deltas.map(p =>
-          (p.cutDf, sinceOf(p.parentE.get._2)))))
-        .toMap
-      deltas.foreach { p =>
-        val (pd, pe) = p.parentE.get
-        val (stamps, hn, hsum) = audits(p.name)
-        require(pe.stamps.subsetOf(stamps.toSet),
-          s"Snapshot.export: ${p.name} no longer holds the parent " +
-            s"snapshot's stamps (a compact rewrote history since " +
-            s"$pd) — incremental chains break at compacts; take a " +
-            "full snapshot")
-        val since = sinceOf(pe)
-        if (auditParent && pe.totalChecksum.isDefined) {
-          require(hn == pe.rowsTotal && hsum == pe.totalChecksum.get,
-            s"Snapshot.export: ${p.name}'s history at batch_id <= " +
-              s"$since no longer matches the parent snapshot under " +
-              s"$pd ($hn rows / digest $hsum vs recorded " +
-              s"${pe.rowsTotal} / ${pe.totalChecksum.get}) — a compact " +
-              "or manual repair rewrote backed-up history; " +
-              "incremental chains break there, take a full snapshot")
-        } else {
-          require(hn == pe.rowsTotal,
-            s"Snapshot.export: ${p.name} holds $hn rows at batch_id " +
-              s"<= $since, the parent snapshot under $pd recorded " +
-              s"${pe.rowsTotal} — a compact rewrote backed-up " +
-              "history; incremental chains break there, take a " +
-              "full snapshot")
-        }
-      }
-      // phase 2 — the per-table slice copies, overlapped (guide §2.6)
-      graft.core.Par.run(preps) { p =>
-        val slice = p.parentE match {
-          case Some((_, pe)) =>
-            p.cutDf.filter(col("batch_id") > sinceOf(pe))
-          case None => p.cutDf
-        }
-        slice.write.mode(SaveMode.Overwrite).parquet(s"$dest/${p.suffix}")
-      }
-      // phase 3 — read-back digests of what LANDED (full-path tables
-      // collect their stamps in the same pass) plus the cut exports'
-      // live-table re-checks, one action for all of it
-      val landedLegs = preps.map { p =>
-        (spark.read.schema(p.schema).parquet(s"$dest/${p.suffix}"),
-          p.stamped && p.parentE.isEmpty)
-      }
-      val liveIdx = preps.zipWithIndex.filter { case (p, _) =>
-        cut.isDefined && (!p.stamped || verifyStampedCut)
-      }
-      val liveLegs = liveIdx.map { case (p, _) =>
-        spark.catalog.refreshTable(p.name)
-        // a FRESH spark.table resolve — a pre-refresh analyzed plan
-        // would pin the pre-copy file listing
-        val fresh = spark.table(p.name)
-        (if (p.stamped) fresh.filter(col("batch_id") <= cut.get)
-         else fresh, false)
-      }
-      val got = fusedDigestLegs(landedLegs ++ liveLegs)
-      val lives: Map[Int, (Long, Long)] = liveIdx.map(_._2)
-        .zip(got.drop(preps.size).map(t => (t._1, t._2))).toMap
-      // phase 4 — totals arithmetic, consistency requires, manifest rows
-      preps.zipWithIndex.map { case (p, i) =>
-        val (written, sliceSum, landedStamps) = got(i)
-        val stamps: Seq[Long] = p.parentE match {
-          case Some(_) => audits(p.name)._1
-          case None => if (p.stamped) landedStamps else Nil
-        }
-        val parentTotals = p.parentE.map(_._2)
-        val rowsTotal =
-          parentTotals.map(_.rowsTotal + written).getOrElse(written)
-        val totalChecksum: Option[Long] = parentTotals match {
-          case Some(pe) =>
-            pe.totalChecksum.map(tc => (tc + sliceSum) % Integrity.digestMod)
-          case None => Some(sliceSum)
-        }
-        lives.get(i).foreach { case (ln, lsum) =>
-          val consistent =
-            if (p.stamped) ln == rowsTotal && totalChecksum.forall(_ == lsum)
-            else ln == written && lsum == sliceSum
-          require(consistent,
-            s"Snapshot.export: ${p.name} changed UNDER the export (live " +
-              s"${if (p.stamped) s"cut slice" else "table"} now $ln rows / " +
-              s"digest $lsum, captured ${if (p.stamped) rowsTotal else written}" +
-              s" / ${if (p.stamped) totalChecksum.getOrElse(sliceSum) else sliceSum})" +
-              " — a concurrent writer raced the copy (a delete verb on " +
-              "unstamped side state, or a mid-append batch on a markerless " +
-              "log). Bracket the export with Maintenance.withLease against " +
-              "compacts/deletes, or re-run it; the snapshot directory is " +
-              "not committed (no manifest was written)")
-        }
-        Map[String, Any](
-          "name" -> p.name, "suffix" -> p.suffix,
-          "schema" -> p.schema.json,
-          "bucketCols" -> p.bucketCols,
-          "nBuckets" -> p.nBuckets,
-          "stamps" -> stamps,
-          "rows" -> written,
-          "checksum" -> sliceSum,
-          "rowsTotal" -> rowsTotal,
-          "totalChecksum" -> totalChecksum.map(Long.box).orNull)
-      }
-    }
-    // the spec race-staging seam keeps the deterministic sequential
-    // per-table order; production takes the fused path
-    val entries =
-      if (onTableExported.isEmpty) exportFusedAll()
-      else names.map(exportOne)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    import scala.jdk.CollectionConverters._
-    val payload = Map[String, Any](
-      "table" -> table.toLowerCase,
-      "kind" -> kind.orNull,
-      // prefix neighbors the kind vocabulary ruled out — recorded so
-      // "what did this backup NOT cover" is auditable from the manifest
-      "excluded" -> excluded.asJava,
-      "parent" -> parent.map(_._1).orNull,
-      "cut" -> cut.map(Long.box).orNull,
-      "tables" -> entries.map(e => e.map {
-        case (k, v: Seq[_]) => k -> v.asJava
-        case kv => kv
-      }.asJava).asJava).asJava
-    val bytes = mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(payload)
-    val out = fs.create(manifestPath, true) // manifest LAST = the commit
-    try out.write(bytes) finally out.close()
-    entries.map(_("rows").asInstanceOf[Long]).sum
+    // prefix neighbors the kind vocabulary ruled out are recorded, so
+    // "what did this backup NOT cover" is auditable from the manifest
+    writeJson(spark, dest, ManifestName, // manifest LAST = the commit
+      Manifest(t, kind, excluded, parent.map(_._1), cut, None, entries))
+    entries.map(_.rows).sum
   }
 
   /** Consistent-cut export UNDER A LIVE STREAM (round-10 verdict #1):
@@ -611,7 +479,7 @@ object Snapshot {
     * the first re-delivered stamp is cut + 1 and passes the writer
     * fence (q229 drives the whole composition).
     *
-    * `kind` names the family's marker ([[Maintenance.familyTables]]'s
+    * `kind` names the family's marker ([[Maintenance.familyKind]]'s
     * vocabulary) — and keys the snapshot's table membership to the
     * kind's closed vocabulary (round-11 verdict #4), so an unrelated
     * prefix neighbor is never swept into the backup.
@@ -662,33 +530,24 @@ object Snapshot {
     */
   def committedCut(spark: SparkSession, table: String,
       kind: String): Long = {
-    val (markerOpt, _) = Maintenance.familyTables(table, kind)
-    markerOpt match {
-      case Some(marker) =>
-        val committed = spark.table(marker).select("batch_id").distinct()
-          .collect().map(_.getLong(0))
-        require(committed.nonEmpty,
-          s"Snapshot.exportAtCut: $marker holds no committed stamps — " +
-            "nothing consistent to cut at (crashed build?)")
-        committed.max
-      case None =>
-        // markerless rollup: the committed-cut surrogate — max visible
-        // stamp, with the slice's stability proven inside export
-        val stamps = spark.table(table).select("batch_id").distinct()
-          .collect().map(_.getLong(0))
-        require(stamps.nonEmpty,
-          s"Snapshot.exportAtCut: $table holds no batches — nothing " +
-            "consistent to cut at (crashed build?)")
-        stamps.max
-    }
+    // markerless rollup: the committed-cut surrogate — max visible
+    // stamp of its own log, with the slice's stability proven in export
+    val ledger = Maintenance.familyKind(kind).marker
+      .fold(table)(Maintenance.tableOf(table, _))
+    val committed = spark.table(ledger).select("batch_id").distinct()
+      .collect().map(_.getLong(0))
+    require(committed.nonEmpty,
+      s"Snapshot: $ledger holds no committed stamps — nothing " +
+        "consistent to cut at (crashed build?)")
+    committed.max
   }
 
   /** The snapshot chain base-first, parent pointers followed; refuses
     * cycles (a tampered chain) and mixed-family links.
     */
-  private def chainOf(spark: SparkSession, dest: String):
-      List[(String, com.fasterxml.jackson.databind.JsonNode)] = {
-    var links = List.empty[(String, com.fasterxml.jackson.databind.JsonNode)]
+  private def chainOf(spark: SparkSession,
+      dest: String): List[(String, Manifest)] = {
+    var links = List.empty[(String, Manifest)]
     var cur = Option(dest)
     val seen = scala.collection.mutable.Set.empty[String]
     while (cur.isDefined) {
@@ -697,11 +556,11 @@ object Snapshot {
         s"Snapshot: parent cycle through $d — chain is corrupt")
       val m = readManifest(spark, d)
       links = (d -> m) :: links
-      cur = Option(m.get("parent")).filterNot(_.isNull).map(_.asText())
+      cur = m.parent
     }
-    val srcTable = links.head._2.get("table").asText()
+    val srcTable = links.head._2.table
     links.foreach { case (d, m) =>
-      require(m.get("table").asText() == srcTable,
+      require(m.table == srcTable,
         s"Snapshot: chain link $d snapshots a different family")
     }
     links
@@ -725,13 +584,13 @@ object Snapshot {
   def restore(spark: SparkSession, dest: String, newTable: String,
       newPath: String): Unit = {
     val chain = chainOf(spark, dest)
-    val srcTable = chain.head._2.get("table").asText()
-    // occupied-target check against the FULL sibling set across links
-    val allNames = chain.flatMap { case (_, m) =>
-      jsonSeq(m.get("tables")).map(_.get("suffix").asText())
-    }.distinct
-    allNames.foreach { suffix =>
-      val newName = if (suffix == "base") newTable else s"${newTable}_$suffix"
+    val srcTable = chain.head._2.table
+    // refusals run before anything lands: a link without cumulative
+    // totals has nothing to verify against, and the occupied-target
+    // check covers the FULL sibling set across links
+    chain.foreach { case (d, m) => m.tables.foreach(cumulativeRows(d, _)) }
+    chain.flatMap(_._2.tables.map(_.suffix)).distinct.foreach { suffix =>
+      val newName = Maintenance.tableOf(newTable, suffix)
       require(!spark.catalog.tableExists(newName),
         s"Snapshot.restore: target table $newName already exists — " +
           "restore never overwrites; drop it first if you mean to")
@@ -739,19 +598,13 @@ object Snapshot {
     chain.foreach { case (d, m) =>
       // links replay in order (the chain contract), but the tables
       // WITHIN one link land independently — overlap them (guide §2.6)
-      val targets = graft.core.Par.run(jsonSeq(m.get("tables"))) { e =>
-        val suffix = e.get("suffix").asText()
-        val newName = if (suffix == "base") newTable
-        else s"${newTable}_$suffix"
-        val schema = DataType.fromJson(e.get("schema").asText())
-          .asInstanceOf[StructType]
+      val targets = graft.core.Par.run(m.tables) { e =>
+        val newName = Maintenance.tableOf(newTable, e.suffix)
         // explicit schema: an empty slice's directory may hold no data
         // files to infer from, and inference could drift anyway
-        val df = spark.read.schema(schema).parquet(s"$d/$suffix")
-        val nBuckets = e.get("nBuckets").asInt()
-        val stamped = schema.fieldNames.contains("batch_id")
+        val df = spark.read.schema(e.structType).parquet(s"$d/${e.suffix}")
         val exists = spark.catalog.tableExists(newName)
-        if (exists && stamped) {
+        if (exists && e.stamped) {
           // delta link on a stamped log: append through the restored
           // table's bucket spec (insertInto is positional; the manifest
           // schema IS the table's column order)
@@ -763,23 +616,21 @@ object Snapshot {
           // previously dropped external table leaves files behind —
           // ErrorIfExists would register the new table over old + new
           // rows and read doubles)
-          if (nBuckets > 0) {
-            val cols = jsonSeq(e.get("bucketCols")).map(_.asText())
+          if (e.nBuckets > 0)
             graft.sources.TableWriter.writeBucketed(df, newName,
-              s"$newPath/$suffix", cols, nBuckets, SaveMode.Overwrite)
-          } else
+              s"$newPath/${e.suffix}", e.bucketCols, e.nBuckets,
+              SaveMode.Overwrite)
+          else
             df.write.mode(SaveMode.Overwrite)
-              .option("path", s"$newPath/$suffix")
+              .option("path", s"$newPath/${e.suffix}")
               .format("parquet").saveAsTable(newName)
         }
-        (newName, e.get("rowsTotal").asLong())
+        (newName, cumulativeRows(d, e))
       }
       // each link's cumulative cut-state counts — a torn restore
       // surfaces at the first link it diverges from. The per-table
       // landed-count read-backs (the torn-restore audit — it must read
       // the TABLE, not observe the write) fuse into ONE action per link
-      // (guide §2.4): a union of single-row counts, values identical to
-      // the per-table spark.table(..).count() jobs this replaces
       val landedOf = fusedTableCounts(spark, targets.map(_._1))
       targets.foreach { case (newName, expected) =>
         val landed = landedOf(newName)
@@ -791,97 +642,40 @@ object Snapshot {
     }
   }
 
-  /** One action answering "how many rows does each of these tables
-    * hold" — the per-table `spark.table(t).count()` read-backs of a
-    * restore/applyLink link fused into a single union-of-aggregates job
-    * (guide §2.4). Values identical to the per-table counts.
+  /** Several single-row aggregate frames answered by ONE action — a
+    * union of the legs tagged by input position (guide §2.4), so each
+    * leg's values are exactly those its own job would return. Rows come
+    * back untagged, in input order; every leg must share one schema.
     */
+  private def collectFused(legs: Seq[DataFrame]): Seq[Row] =
+    if (legs.isEmpty) Nil
+    else {
+      val got = legs.zipWithIndex
+        .map { case (df, i) =>
+          df.select(lit(i).as("__leg") +: df.columns.toSeq.map(col): _*)
+        }
+        .reduce(_ union _).collect()
+        .map(r => r.getInt(0) -> Row.fromSeq(r.toSeq.tail)).toMap
+      legs.indices.map(got)
+    }
+
+  /** How many rows each of these tables holds, in one action. */
   private def fusedTableCounts(spark: SparkSession,
-      tables: Seq[String]): Map[String, Long] = {
-    import org.apache.spark.sql.functions.{count, lit}
-    if (tables.isEmpty) Map.empty
-    else if (tables.sizeIs == 1)
-      Map(tables.head -> spark.table(tables.head).count())
-    else tables.zipWithIndex
-      .map { case (t, i) =>
-        spark.table(t).agg(count(lit(1)).as("n")).select(lit(i).as("i"), col("n"))
-      }
-      .reduce(_ union _).collect()
-      .map(r => tables(r.getInt(0)) -> r.getLong(1)).toMap
-  }
+      tables: Seq[String]): Map[String, Long] =
+    tables.zip(collectFused(tables.map(t =>
+      spark.table(t).agg(count(lit(1)))))).map { case (t, r) =>
+      t -> r.getLong(0)
+    }.toMap
 
-  /** Several frames' [[Integrity.contentDigest]] /
-    * [[Integrity.contentDigestWithStamps]] read-backs in ONE action — a
-    * union of the per-frame single-row aggregates (guide §2.4). Each
-    * leg is (count, modular row-hash sum, sorted distinct stamps when
-    * `withStamps`, else Nil); values per leg are bit-identical to the
-    * per-frame jobs this replaces. Result order = input order.
+  /** Several frames' [[Integrity.contentDigestAgg]] read-backs in one
+    * action: per leg (count, modular row-hash sum, sorted distinct
+    * stamps when `withStamps`, else Nil), in input order.
     */
-  private def fusedDigestLegs(
-      legs: Seq[(org.apache.spark.sql.DataFrame, Boolean)]):
-      Seq[(Long, Long, Seq[Long])] = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.LongType
-    if (legs.isEmpty) Nil
-    else if (legs.sizeIs == 1) {
-      val (df, withStamps) = legs.head
-      if (withStamps) Seq(Integrity.contentDigestWithStamps(df))
-      else { val (n, s) = Integrity.contentDigest(df); Seq((n, s, Nil)) }
-    } else {
-      val frames = legs.zipWithIndex.map { case ((df, withStamps), i) =>
-        val h = Integrity.rowHash(df.columns.toSeq.map(col)).as("h")
-        val modSum = coalesce(
-          (sum(col("h").cast("decimal(38,0)")) % lit(Integrity.digestMod))
-            .cast(LongType), lit(0L)).as("s")
-        val agg =
-          if (withStamps) df.select(h, col("batch_id"))
-            .agg(count(lit(1)).as("n"), modSum,
-              collect_set(col("batch_id")).as("st"))
-          else df.select(h)
-            .agg(count(lit(1)).as("n"), modSum,
-              org.apache.spark.sql.functions.array()
-                .cast("array<bigint>").as("st"))
-        agg.select(lit(i).as("i"), col("n"), col("s"), col("st"))
-      }
-      val got = frames.reduce(_ unionByName _).collect()
-        .map(r => r.getInt(0) ->
-          ((r.getLong(1), r.getLong(2), r.getSeq[Long](3).sorted))).toMap
-      legs.indices.map(got)
-    }
-  }
-
-  /** Several delta tables' [[Integrity.cutAuditAgg]] probes in ONE
-    * action (guide §2.4) — the incremental export's pre-write
-    * slice-stamps + parent-history audits, fused across the family's
-    * tables. Values per table identical to the per-table jobs.
-    */
-  private def fusedCutAudits(
-      legs: Seq[(org.apache.spark.sql.DataFrame, Long)]):
-      Seq[(Seq[Long], Long, Long)] = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.LongType
-    if (legs.isEmpty) Nil
-    else if (legs.sizeIs == 1) {
-      val (df, since) = legs.head
-      Seq(Integrity.cutAuditAgg(df, since))
-    } else {
-      val frames = legs.zipWithIndex.map { case ((cutDf, since), i) =>
-        val hist = col("batch_id") <= since
-        cutDf.select(
-            Integrity.rowHash(cutDf.columns.toSeq.map(col)).as("h"),
-            col("batch_id"))
-          .agg(collect_set(col("batch_id")).as("st"),
-            count(when(hist, 1)).as("hn"),
-            coalesce((sum(when(hist, col("h")).cast("decimal(38,0)")) %
-              lit(Integrity.digestMod)).cast(LongType), lit(0L)).as("hs"))
-          .select(lit(i).as("i"), col("st"), col("hn"), col("hs"))
-      }
-      val got = frames.reduce(_ unionByName _).collect()
-        .map(r => r.getInt(0) ->
-          ((r.getSeq[Long](1).sorted, r.getLong(2), r.getLong(3)))).toMap
-      legs.indices.map(got)
-    }
-  }
+  private def fusedDigestLegs(legs: Seq[(DataFrame, Boolean)]):
+      Seq[(Long, Long, Seq[Long])] =
+    collectFused(legs.map { case (df, withStamps) =>
+      Integrity.contentDigestAgg(df, withStamps)
+    }).map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).sorted))
 
   /** Audit a snapshot chain WITHOUT restoring it: every link reachable
     * base-first (manifest present, same family, no cycles — [[chainOf]]
@@ -899,97 +693,64 @@ object Snapshot {
     * gates its restore on a clean report.
     */
   def verify(spark: SparkSession, dest: String,
-      deep: Boolean = true): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, count, lit, sum}
-    import org.apache.spark.sql.types.LongType
-    val work = chainOf(spark, dest).flatMap { case (d, m) =>
-      jsonSeq(m.get("tables")).map(e => (d, e))
-    }
+      deep: Boolean = true): DataFrame = {
     // per-entry expectations; legs whose directory cannot even be
     // RESOLVED (missing path — an analysis-time error) report
-    // UNREADABLE without a scan, exactly as the per-entry scan did
-    val legs = work.zipWithIndex.map { case ((d, e), i) =>
-      val suffix = e.get("suffix").asText()
-      val schema = DataType.fromJson(e.get("schema").asText())
-        .asInstanceOf[StructType]
-      val expectedRows = e.get("rows").asLong()
-      // pre-digest (legacy) manifests carry no checksum: degrade this
-      // entry to count-only with a named reason, even under deep
-      val expectedSumOpt = optLong(e, "checksum")
-      val checkDigest = deep && expectedSumOpt.isDefined
-      val dfOpt =
-        try Some(spark.read.schema(schema).parquet(s"$d/$suffix"))
-        catch { case scala.util.control.NonFatal(_) => None }
-      (i, d, suffix, expectedRows, expectedSumOpt, checkDigest, dfOpt)
+    // UNREADABLE without a scan. Pre-digest (legacy) manifests carry
+    // no checksum: those entries degrade to count-only with a named
+    // reason, even under deep
+    val legs = chainOf(spark, dest).flatMap { case (d, m) =>
+      m.tables.map { e =>
+        val dfOpt =
+          try Some(spark.read.schema(e.structType).parquet(s"$d/${e.suffix}"))
+          catch { case scala.util.control.NonFatal(_) => None }
+        (d, e, deep && e.checksum.isDefined, dfOpt)
+      }
     }
     // EVERY (link, table) audit fused into ONE action (guide §2.4):
-    // a union of per-entry single-row aggregates — each leg exactly
-    // Integrity.contentDigest's (or count-only's) arithmetic, tagged by
-    // entry index — replaces one job per chain entry. A runtime read
-    // error (corrupt file discovered mid-scan) falls back to the
-    // per-entry overlapped path below, whose report is the original's.
-    val fused: Option[Map[Int, (Long, Long)]] =
-      if (!legs.exists(_._7.isDefined)) Some(Map.empty)
-      else try {
-        val aggLegs = legs.flatMap {
-          case (i, _, _, _, _, checkDigest, Some(df)) =>
-            val leg =
-              if (checkDigest)
-                df.select(Integrity.rowHash(df.columns.toSeq.map(col)).as("h"))
-                  .agg(count(lit(1)).as("n"),
-                    coalesce((sum(col("h").cast("decimal(38,0)")) %
-                      lit(Integrity.digestMod)).cast(LongType), lit(0L)).as("s"))
-              else df.agg(count(lit(1)).as("n"), lit(0L).as("s"))
-            Some(leg.select(lit(i).as("i"), col("n"), col("s")))
-          case _ => None
-        }
-        Some(aggLegs.reduce(_ union _).collect()
-          .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap)
-      } catch { case scala.util.control.NonFatal(_) => None }
-    def assemble(i: Int, d: String, suffix: String, expectedRows: Long,
-        expectedSumOpt: Option[Long], checkDigest: Boolean,
+    // each leg exactly Integrity.contentDigestAgg's (or count-only's)
+    // arithmetic. A runtime read error (corrupt file discovered
+    // mid-scan) falls back to the per-entry overlapped path below,
+    // which marks exactly the damaged entry UNREADABLE.
+    val fused: Option[Seq[(Long, Long)]] =
+      try Some(collectFused(legs.collect {
+        case (_, _, true, Some(df)) =>
+          Integrity.contentDigestAgg(df).select("n", "s")
+        case (_, _, false, Some(df)) => df.agg(count(lit(1)), lit(0L))
+      }).map(r => (r.getLong(0), r.getLong(1))))
+      catch { case scala.util.control.NonFatal(_) => None }
+    def assemble(d: String, e: TableEntry, checkDigest: Boolean,
         landed: Long, sum: Long): (String, String, Boolean, String) = {
-      val ok = landed == expectedRows &&
-        (!checkDigest || sum == expectedSumOpt.get)
-      (d, suffix, ok,
-        if (ok) s"$expectedRows rows" +
-          (if (checkDigest) s", digest ${expectedSumOpt.get}"
+      val ok = landed == e.rows && (!checkDigest || e.checksum.contains(sum))
+      (d, e.suffix, ok,
+        if (ok) s"${e.rows} rows" +
+          (if (checkDigest) s", digest ${e.checksum.get}"
            else if (deep) " (legacy pre-digest manifest: counts only)"
            else " (counts only)")
         else if (landed < 0) "UNREADABLE"
-        else if (landed != expectedRows)
-          s"$landed of $expectedRows rows — snapshot dir was modified"
-        else s"digest $sum != recorded ${expectedSumOpt.get} — content " +
+        else if (landed != e.rows)
+          s"$landed of ${e.rows} rows — snapshot dir was modified"
+        else s"digest $sum != recorded ${e.checksum.get} — content " +
           "changed under an unchanged row count (bit-rot or tamper)")
     }
     val rows = fused match {
-      case Some(got) => legs.map {
-        case (i, d, suffix, expectedRows, expectedSumOpt, checkDigest, dfOpt) =>
-          val (landed, sum) = dfOpt match {
-            case None => (-1L, 0L)
-            case Some(_) =>
-              val (n, s) = got(i)
-              (n, if (checkDigest) s else expectedSumOpt.getOrElse(0L))
-          }
-          assemble(i, d, suffix, expectedRows, expectedSumOpt, checkDigest,
-            landed, sum)
-      }
+      case Some(got) =>
+        val readBack = got.iterator // one result per readable leg, in order
+        legs.map { case (d, e, checkDigest, dfOpt) =>
+          val (landed, sum) = if (dfOpt.isEmpty) (-1L, 0L) else readBack.next()
+          assemble(d, e, checkDigest, landed, sum)
+        }
       // fallback: one read-only scan per entry, overlapped (guide §2.6);
       // the per-entry try/catch restores the UNREADABLE row for exactly
       // the entry whose bytes are damaged
-      case None => graft.core.Par.run(legs) {
-        case (i, d, suffix, expectedRows, expectedSumOpt, checkDigest, dfOpt) =>
-          val (landed, sum) =
-            try {
-              dfOpt match {
-                case None => (-1L, 0L)
-                case Some(df) =>
-                  if (checkDigest) Integrity.contentDigest(df)
-                  else (df.count(), expectedSumOpt.getOrElse(0L))
-              }
-            } catch { case scala.util.control.NonFatal(_) => (-1L, 0L) }
-          assemble(i, d, suffix, expectedRows, expectedSumOpt, checkDigest,
-            landed, sum)
+      case None => graft.core.Par.run(legs) { case (d, e, checkDigest, dfOpt) =>
+        val (landed, sum) =
+          try dfOpt match {
+            case None => (-1L, 0L)
+            case Some(df) =>
+              if (checkDigest) Integrity.contentDigest(df) else (df.count(), 0L)
+          } catch { case scala.util.control.NonFatal(_) => (-1L, 0L) }
+        assemble(d, e, checkDigest, landed, sum)
       }
     }
     import spark.implicits._
@@ -1039,12 +800,12 @@ object Snapshot {
     }
     val keepChain = chainOf(spark, keep)
     val keepDirs = keepChain.map { case (d, _) => qualified(d) }.toSet
-    val keepFamily = keepChain.head._2.get("table").asText()
+    val keepFamily = keepChain.head._2.table
     superseded.foreach { d =>
       require(!keepDirs.contains(qualified(d)),
         s"Snapshot.prune: $d is a link of the kept chain under $keep — " +
           "refusing to amputate the backup being kept")
-      val fam = readManifest(spark, d).get("table").asText()
+      val fam = readManifest(spark, d).table
       require(fam == keepFamily,
         s"Snapshot.prune: $d snapshots family '$fam', the kept chain " +
           s"is of '$keepFamily' — refusing to delete across families")
@@ -1110,96 +871,65 @@ object Snapshot {
       s"Snapshot.rebase: chain under $head failed verification — " +
         s"refusing to squash a damaged chain: ${bad.mkString("; ")}")
     val (_, headM) = chain.last
-    val manifestPath = new org.apache.hadoop.fs.Path(s"$dest/$ManifestName")
-    val fs = fsFor(spark, manifestPath)
-    fs.delete(manifestPath, false) // stale-manifest fence, as in export
+    // the head's cumulative totals predict the squash — refused before
+    // anything is written when the chain predates them
+    val expectedRows = headM.tables.map(cumulativeRows(head, _))
+    dropManifest(spark, dest, ManifestName)
     // per-suffix slice dirs base-first, with schema drift refused (a
     // drifted link read under the head's schema would coerce to nulls —
     // the digest would catch it, but the refusal should name the cause)
     val dirsOf = scala.collection.mutable.Map.empty[String, List[String]]
     val schemaOf = scala.collection.mutable.Map.empty[String, String]
     chain.foreach { case (d, m) =>
-      jsonSeq(m.get("tables")).foreach { e =>
-        val suffix = e.get("suffix").asText()
-        val sj = e.get("schema").asText()
-        schemaOf.get(suffix).foreach(s0 => require(s0 == sj,
-          s"Snapshot.rebase: $suffix changed schema mid-chain at $d — " +
+      m.tables.foreach { e =>
+        schemaOf.get(e.suffix).foreach(s0 => require(s0 == e.schema,
+          s"Snapshot.rebase: ${e.suffix} changed schema mid-chain at $d — " +
             "rebase cannot union drifted slices"))
-        schemaOf(suffix) = sj
-        dirsOf(suffix) = dirsOf.getOrElse(suffix, Nil) :+ s"$d/$suffix"
+        schemaOf(e.suffix) = e.schema
+        dirsOf(e.suffix) = dirsOf.getOrElse(e.suffix, Nil) :+ s"$d/${e.suffix}"
       }
     }
     // per-suffix squash copies are independent until the trailing
     // manifest — overlap them (guide §2.6); their read-back digests
     // (+ landed-stamp collects) then fuse into ONE union-of-aggregates
     // action across the tables (guide §2.4; per-table values identical)
-    val tableEs = jsonSeq(headM.get("tables")).map { e =>
-      val schema = DataType.fromJson(e.get("schema").asText())
-        .asInstanceOf[StructType]
-      (e, e.get("name").asText(), e.get("suffix").asText(), schema,
-        schema.fieldNames.contains("batch_id"))
-    }
-    graft.core.Par.run(tableEs) { case (_, _, suffix, schema, stamped) =>
-      val dirs = dirsOf(suffix)
+    graft.core.Par.run(headM.tables) { e =>
+      val dirs = dirsOf(e.suffix)
+      val read = spark.read.schema(e.structType)
       val src =
-        if (stamped) spark.read.schema(schema).parquet(dirs: _*)
-        else spark.read.schema(schema).parquet(dirs.last) // newest frontier
-      src.write.mode(SaveMode.Overwrite).parquet(s"$dest/$suffix")
+        if (e.stamped) read.parquet(dirs: _*)
+        else read.parquet(dirs.last) // newest frontier
+      src.write.mode(SaveMode.Overwrite).parquet(s"$dest/${e.suffix}")
     }
-    val landed = fusedDigestLegs(tableEs.map {
-      case (_, _, suffix, schema, stamped) =>
-        (spark.read.schema(schema).parquet(s"$dest/$suffix"), stamped)
+    val landed = fusedDigestLegs(headM.tables.map { e =>
+      (spark.read.schema(e.structType).parquet(s"$dest/${e.suffix}"), e.stamped)
     })
-    val entries = tableEs.zip(landed).map {
-      case ((e, name, suffix, _, stamped), (written, sum, landedStamps)) =>
+    val entries = headM.tables.lazyZip(expectedRows).lazyZip(landed).map {
+      case (e, expected, (written, sum, landedStamps)) =>
         // the chain's digest arithmetic, checked against the squashed
         // bytes: cumulative totals were computed additively link by link,
         // so they must equal one honest digest of the union
-        val expectedRows = e.get("rowsTotal").asLong()
-        val expectedSum = optLong(e, "totalChecksum")
-        require(written == expectedRows && expectedSum.forall(_ == sum),
-          s"Snapshot.rebase: $name squashed to $written rows / digest " +
+        require(written == expected && e.totalChecksum.forall(_ == sum),
+          s"Snapshot.rebase: ${e.name} squashed to $written rows / digest " +
             s"$sum, the head manifest's cumulative cut state says " +
-            s"$expectedRows / ${expectedSum.getOrElse(sum)} — the chain " +
+            s"$expected / ${e.totalChecksum.getOrElse(sum)} — the chain " +
             s"under ${chain.head._1} does not reassemble; take a fresh " +
             "full export from the primary")
-        val recordedStamps = jsonSeq(e.get("stamps")).map(_.asLong()).sorted
-        if (stamped)
+        val recordedStamps = e.stamps.sorted
+        if (e.stamped)
           require(landedStamps == recordedStamps,
-            s"Snapshot.rebase: $name's squashed stamps $landedStamps != " +
+            s"Snapshot.rebase: ${e.name}'s squashed stamps $landedStamps != " +
               s"head's recorded cumulative stamps $recordedStamps")
-        Map[String, Any](
-          "name" -> name, "suffix" -> suffix,
-          "schema" -> e.get("schema").asText(),
-          "bucketCols" -> jsonSeq(e.get("bucketCols")).map(_.asText()),
-          "nBuckets" -> e.get("nBuckets").asInt(),
-          "stamps" -> recordedStamps,
-          "rows" -> written, "checksum" -> sum,
-          "rowsTotal" -> written,
-          // a parentless full's cumulative state IS its slice — and the
-          // freshly computed digest holds even when the squashed chain
-          // was legacy pre-digest, so a rebase UPGRADES such lineages
-          "totalChecksum" -> Long.box(sum))
+        // a parentless full's cumulative state IS its slice — and the
+        // freshly computed digest holds even when the squashed chain
+        // was legacy pre-digest, so a rebase UPGRADES such lineages
+        e.copy(stamps = recordedStamps, rows = written, checksum = Some(sum),
+          rowsTotal = Some(written), totalChecksum = Some(sum))
     }
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    import scala.jdk.CollectionConverters._
-    val payload = Map[String, Any](
-      "table" -> headM.get("table").asText(),
-      "kind" -> Option(headM.get("kind")).filterNot(_.isNull)
-        .map(_.asText()).orNull,
-      "excluded" -> Nil.asJava,
-      "parent" -> null,
-      "cut" -> optLong(headM, "cut").map(Long.box).orNull,
-      "rebaseOf" -> head, // provenance only; chain verbs ignore it
-      "tables" -> entries.map(e => e.map {
-        case (k, v: Seq[_]) => k -> v.asJava
-        case kv => kv
-      }.asJava).asJava).asJava
-    val bytes = mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(payload)
-    val out = fs.create(manifestPath, true) // manifest LAST = the commit
-    try out.write(bytes) finally out.close()
-    entries.map(_("rows").asInstanceOf[Long]).sum
+    writeJson(spark, dest, ManifestName, // manifest LAST = the commit
+      headM.copy(excluded = Nil, parent = None, rebaseOf = Some(head),
+        tables = entries))
+    entries.map(_.rows).sum
   }
 
   /** WARM STANDBY (log shipping): apply ONE delta-snapshot link to an
@@ -1242,63 +972,45 @@ object Snapshot {
   def applyLink(spark: SparkSession, linkDir: String, table: String,
       path: String, kind: String): Long = {
     val m = readManifest(spark, linkDir)
-    require(Option(m.get("parent")).exists(!_.isNull),
+    require(m.parent.isDefined,
       s"Snapshot.applyLink: $linkDir is a FULL snapshot — a standby is " +
         "seeded with restore; applyLink ships the delta links after it")
-    val srcTable = m.get("table").asText()
-    val marker = Maintenance.familyTables(srcTable, kind)._1
+    val marker = Maintenance.familyKind(kind).marker
+      .map(Maintenance.tableOf(m.table, _))
     // marker LAST: a crash mid-link must leave data-without-marker,
     // the crash window every family's protocol already absorbs
-    val (markerEntries, dataEntries) = jsonSeq(m.get("tables"))
-      .partition(e => marker.contains(e.get("name").asText()))
-    final case class Entry(e: com.fasterxml.jackson.databind.JsonNode,
-        suffix: String, newName: String, schema: StructType,
-        slice: org.apache.spark.sql.DataFrame, stamped: Boolean,
-        nBuckets: Int, exists: Boolean, expectedTotal: Long)
-    def entryOf(e: com.fasterxml.jackson.databind.JsonNode): Entry = {
-      val suffix = e.get("suffix").asText()
-      val newName = if (suffix == "base") table else s"${table}_$suffix"
-      val schema = DataType.fromJson(e.get("schema").asText())
-        .asInstanceOf[StructType]
-      // the cumulative cut-state total every branch below verifies
-      // against — the round-11 advice fix: the check covers UNSTAMPED
-      // overwrites too, so a torn frontier on the replica is caught,
-      // not just a torn stamped append
-      val expectedTotal = optLong(e, "rowsTotal").getOrElse(
-        throw new IllegalArgumentException(
-          s"Snapshot.applyLink: $linkDir's manifest predates cumulative " +
-            s"totals (table ${e.get("name").asText()} has no rowsTotal) " +
-            "— pre-digest chains cannot ship as links; re-seed with a " +
-            "fresh full snapshot"))
-      Entry(e, suffix, newName, schema,
-        spark.read.schema(schema).parquet(s"$linkDir/$suffix"),
-        schema.fieldNames.contains("batch_id"), e.get("nBuckets").asInt(),
-        spark.catalog.tableExists(newName), expectedTotal)
+    val (markerEntries, dataEntries) =
+      m.tables.partition(e => marker.contains(e.name))
+    // `expectedTotal` is the cumulative cut-state total every branch
+    // below verifies against — the round-11 advice fix: the check
+    // covers UNSTAMPED overwrites too, so a torn frontier on the replica
+    // is caught, not just a torn stamped append
+    final case class Entry(e: TableEntry, newName: String, slice: DataFrame,
+        stamped: Boolean, exists: Boolean, expectedTotal: Long)
+    def entryOf(e: TableEntry): Entry = {
+      val newName = Maintenance.tableOf(table, e.suffix)
+      Entry(e, newName,
+        spark.read.schema(e.structType).parquet(s"$linkDir/${e.suffix}"),
+        e.stamped, spark.catalog.tableExists(newName),
+        cumulativeRows(linkDir, e))
     }
     val dataEs = dataEntries.map(entryOf)
     val markerEs = markerEntries.map(entryOf)
     // EVERY stamped entry's pre-append stamp sets (slice + standby) fuse
-    // into ONE action (guide §2.4) — a union of per-entry collect_set
-    // aggregates; values identical to the per-table 1×1 crossJoins this
-    // replaces. The marker's leg is valid here too: its table is not
-    // touched until the strictly-last marker append, so its pre-append
-    // stamp set equals what the sequential code read after the data
-    // appends.
-    val stampsOf: Map[String, (Set[Long], Set[Long])] = {
-      import org.apache.spark.sql.functions.{array, lit}
-      val legs = (dataEs ++ markerEs).filter(_.stamped).map { en =>
+    // into ONE action (guide §2.4). The marker's leg is valid here too:
+    // its table is not touched until the strictly-last marker append,
+    // so its pre-append stamp set equals what a read after the data
+    // appends would see.
+    val stampedEs = (dataEs ++ markerEs).filter(_.stamped)
+    val stampsOf: Map[String, (Set[Long], Set[Long])] = stampedEs
+      .map(_.newName)
+      .zip(collectFused(stampedEs.map { en =>
         val ss = en.slice.agg(collect_set(col("batch_id")).as("ss"))
-        val leg =
-          if (en.exists) ss.crossJoin(spark.table(en.newName)
-            .agg(collect_set(col("batch_id")).as("ts")))
-          else ss.select(col("ss"), array().cast("array<bigint>").as("ts"))
-        leg.select(lit(en.newName).as("t"), col("ss"), col("ts"))
-      }
-      if (legs.isEmpty) Map.empty
-      else legs.reduce(_ union _).collect()
-        .map(r => r.getString(0) ->
-          (r.getSeq[Long](1).toSet, r.getSeq[Long](2).toSet)).toMap
-    }
+        if (en.exists) ss.crossJoin(spark.table(en.newName)
+          .agg(collect_set(col("batch_id")).as("ts")))
+        else ss.select(col("ss"), array().cast("array<bigint>").as("ts"))
+      }).map(r => (r.getSeq[Long](0).toSet, r.getSeq[Long](1).toSet)))
+      .toMap
     def applyOne(en: Entry): Long = {
       var appended = 0L
       if (!en.stamped) {
@@ -1306,7 +1018,7 @@ object Snapshot {
         require(en.exists,
           s"Snapshot.applyLink: standby table ${en.newName} is missing — " +
             "seed the standby with restore first")
-        require(en.nBuckets == 0,
+        require(en.e.nBuckets == 0,
           s"Snapshot.applyLink: unstamped table ${en.newName} claims a " +
             "bucket spec — unsupported layout")
         val loc = spark.sessionState.catalog.getTableMetadata(
@@ -1316,7 +1028,7 @@ object Snapshot {
           .write.mode(SaveMode.Overwrite).option("path", loc)
           .format("parquet").saveAsTable(en.newName)
       } else {
-        val recorded = jsonSeq(en.e.get("stamps")).map(_.asLong()).toSet
+        val recorded = en.e.stamps.toSet
         val (sliceStamps, standbyStamps) = stampsOf(en.newName)
         if (!en.exists) {
           // a table born in THIS link (e.g. the first delete's frontier
@@ -1325,15 +1037,15 @@ object Snapshot {
             s"Snapshot.applyLink: ${en.newName} is missing on the standby " +
               s"but $linkDir is not its birth link (recorded $recorded " +
               s"vs slice $sliceStamps) — re-seed with restore")
-          if (en.nBuckets > 0) {
-            val cols = jsonSeq(en.e.get("bucketCols")).map(_.asText())
+          if (en.e.nBuckets > 0)
             graft.sources.TableWriter.writeBucketed(en.slice, en.newName,
-              s"$path/${en.suffix}", cols, en.nBuckets, SaveMode.Overwrite)
-          } else
+              s"$path/${en.e.suffix}", en.e.bucketCols, en.e.nBuckets,
+              SaveMode.Overwrite)
+          else
             en.slice.write.mode(SaveMode.Overwrite)
-              .option("path", s"$path/${en.suffix}")
+              .option("path", s"$path/${en.e.suffix}")
               .format("parquet").saveAsTable(en.newName)
-          appended += en.e.get("rows").asLong()
+          appended += en.e.rows
         } else {
           if (standbyStamps == recorded) {
             // already applied (a re-shipped link, or the re-run after a
@@ -1347,7 +1059,7 @@ object Snapshot {
                 "order (a skipped or out-of-order link cannot apply); " +
                 "re-seed with restore if the chain is gone")
             en.slice.write.mode(SaveMode.Append).insertInto(en.newName)
-            appended += en.e.get("rows").asLong()
+            appended += en.e.rows
           }
         }
       }
@@ -1355,8 +1067,7 @@ object Snapshot {
     }
     // the per-table landed-count read-backs (the torn-replica audit —
     // it must read the TABLE, not observe the write) fuse into ONE
-    // action per phase (guide §2.4); values identical to the per-table
-    // spark.table(..).count() jobs this replaces
+    // action per phase
     def auditCounts(es: Seq[Entry]): Unit = {
       val landedOf = fusedTableCounts(spark, es.map(_.newName))
       es.foreach { en =>
@@ -1408,32 +1119,21 @@ object Snapshot {
     */
   def serveAtCut(spark: SparkSession, table: String, kind: String,
       viewPrefix: String): (Long, Seq[String]) = {
-    val (markerOpt, _) = Maintenance.familyTables(table, kind)
-    val marker = markerOpt.getOrElse(throw new IllegalArgumentException(
+    val family = Maintenance.familyKind(kind)
+    require(family.marker.isDefined,
       s"Snapshot.serveAtCut: '$kind' families have no commit marker — " +
         "the rollup's serve is already commit-consistent by its " +
-        "(key, batch_id) collapse; read it directly"))
-    val committed = spark.table(marker).select("batch_id").distinct()
-      .collect().map(_.getLong(0))
-    require(committed.nonEmpty,
-      s"Snapshot.serveAtCut: $marker holds no committed stamps — " +
-        "nothing consistent to serve (crashed build?)")
-    val cut = committed.max
+        "(key, batch_id) collapse; read it directly")
+    val cut = committedCut(spark, table, kind)
     val t = table.toLowerCase
-    val allowed = snapshotSuffixes(kind)
     val views = siblings(spark, t)
-      .filter { n =>
-        val suffix = if (n == t) "base" else n.stripPrefix(t + "_")
-        allowed.contains(suffix)
-      }
+      .filter(n => family.suffixes.contains(Maintenance.suffixOf(t, n)))
       .map { n =>
         val df = spark.table(n)
         val cutDf =
           if (df.columns.contains("batch_id")) df.filter(col("batch_id") <= cut)
           else df
-        val viewName =
-          if (n == t) viewPrefix
-          else s"$viewPrefix${n.stripPrefix(t)}"
+        val viewName = Maintenance.tableOf(viewPrefix, Maintenance.suffixOf(t, n))
         cutDf.createOrReplaceTempView(viewName)
         viewName
       }
@@ -1470,32 +1170,26 @@ object Snapshot {
     // suffix -> (schema, stamped, slices base-first); schema drift
     // across links would union wrong, so it is refused loudly
     val perSuffix = scala.collection.mutable.LinkedHashMap.empty[
-      String, (String, Boolean, List[String])]
+      String, (TableEntry, List[String])]
     chain.foreach { case (d, m) =>
-      jsonSeq(m.get("tables")).foreach { e =>
-        val suffix = e.get("suffix").asText()
-        val schemaJson = e.get("schema").asText()
-        val stamped = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-          .fieldNames.contains("batch_id")
-        perSuffix.get(suffix) match {
-          case Some((s0, _, dirs)) =>
-            require(s0 == schemaJson,
-              s"Snapshot.attach: $suffix changed schema mid-chain at $d " +
+      m.tables.foreach { e =>
+        perSuffix.get(e.suffix) match {
+          case Some((e0, dirs)) =>
+            require(e0.schema == e.schema,
+              s"Snapshot.attach: ${e.suffix} changed schema mid-chain at $d " +
                 "— attach cannot union drifted slices")
-            perSuffix(suffix) = (s0, stamped, dirs :+ s"$d/$suffix")
+            perSuffix(e.suffix) = (e0, dirs :+ s"$d/${e.suffix}")
           case None =>
-            perSuffix(suffix) = (schemaJson, stamped, List(s"$d/$suffix"))
+            perSuffix(e.suffix) = (e, List(s"$d/${e.suffix}"))
         }
       }
     }
-    perSuffix.map { case (suffix, (schemaJson, stamped, dirs)) =>
-      val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-      val read = (p: String) => spark.read.schema(schema).parquet(p)
+    perSuffix.map { case (suffix, (e, dirs)) =>
+      val read = (p: String) => spark.read.schema(e.structType).parquet(p)
       val df =
-        if (stamped) dirs.map(read).reduce(_ unionByName _)
+        if (e.stamped) dirs.map(read).reduce(_ unionByName _)
         else read(dirs.last) // newest frontier copy wins
-      val viewName = if (suffix == "base") viewPrefix
-      else s"${viewPrefix}_$suffix"
+      val viewName = Maintenance.tableOf(viewPrefix, suffix)
       df.createOrReplaceTempView(viewName)
       viewName
     }.toSeq
@@ -1624,7 +1318,7 @@ object Snapshot {
         export(spark, table, dest, cut = Some(cut), kind = Some(kind))
         head = Some(dest); action = "full"
       case Some(hd) =>
-        val headCut = optLong(readManifest(spark, hd), "cut").getOrElse(-1L)
+        val headCut = readManifest(spark, hd).cut.getOrElse(-1L)
         if (cut < headCut) {
           // the cut went BACKWARD: a compact renumbered the ledger's
           // stamps since the head link — the lineage cannot continue;
@@ -1716,8 +1410,8 @@ object Snapshot {
       throw new IllegalArgumentException(
         s"Snapshot.followLineage: no committed lineage under $famRoot"))
     val t = table.toLowerCase
-    val names = snapshotSuffixes(kind)
-      .map(s => if (s == "base") t else s"${t}_$s")
+    val names = Maintenance.familyKind(kind).suffixes
+      .map(Maintenance.tableOf(t, _))
     def dropReplica(): Unit = names.filter(spark.catalog.tableExists)
       .foreach(n => spark.sql(s"DROP TABLE $n"))
     if (!names.exists(spark.catalog.tableExists)) {
@@ -1727,7 +1421,7 @@ object Snapshot {
     val replicaCut = committedCut(spark, t, kind)
     val chain = chainOf(spark, head)
     val pending = chain.filter { case (_, m) =>
-      optLong(m, "cut").getOrElse(-1L) > replicaCut
+      m.cut.getOrElse(-1L) > replicaCut
     }
     if (pending.isEmpty) {
       // CUT REGRESSION (round-12 advice): an epoch roll can renumber
@@ -1736,7 +1430,7 @@ object Snapshot {
       // primary accrues data, and "current" would be a silent lie
       // forever. A head cut below the replica's is the roll's
       // signature; route it into the reseed path, not "current".
-      val headCut = optLong(chain.last._2, "cut").getOrElse(-1L)
+      val headCut = chain.last._2.cut.getOrElse(-1L)
       if (headCut >= replicaCut) return "current"
       if (!reseed)
         throw new IllegalArgumentException(
@@ -1768,8 +1462,6 @@ object Snapshot {
         "reseed"
     }
   }
-
-  private val FleetManifestName = "_FLEET.json"
 
   /** FLEET-CONSISTENT CUT EXPORT: one committed cut across SEVERAL
     * families derived from the same upstream stream — the backup a real
@@ -1822,9 +1514,8 @@ object Snapshot {
     require(tables.distinct == tables,
       s"Snapshot.exportFleetAtCut: duplicate member tables in $tables")
     val parent = incrementalFrom.map { pd =>
-      val m = readFleetManifest(spark, pd)
-      val parentMembers = jsonSeq(m.get("members"))
-        .map(e => e.get("table").asText()).sorted
+      val parentMembers = readJson(spark, pd, FleetManifestName,
+        classOf[FleetManifest], "fleet ").members.map(_.table).sorted
       require(parentMembers == tables.sorted,
         s"Snapshot.exportFleetAtCut: member set ${tables.sorted} does " +
           s"not match the parent fleet's $parentMembers under $pd — " +
@@ -1838,41 +1529,18 @@ object Snapshot {
     val cut = graft.core.Par.run(families) {
       case (t, k) => committedCut(spark, t, k)
     }.min
-    val fleetPath = new org.apache.hadoop.fs.Path(
-      s"$destRoot/$FleetManifestName")
-    val fs = fsFor(spark, fleetPath)
-    fs.delete(fleetPath, false) // stale fleet manifest must not vouch
+    dropManifest(spark, destRoot, FleetManifestName)
     val rows = graft.core.Par.run(families) { case (t, k) =>
       val tl = t.toLowerCase
       export(spark, tl, s"$destRoot/$tl",
         incrementalFrom = parent.map(pd => s"$pd/$tl"),
         cut = Some(cut), auditParent = auditParent, kind = Some(k))
     }.sum
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    import scala.jdk.CollectionConverters._
-    val payload = Map[String, Any](
-      "cut" -> cut,
-      "parent" -> parent.orNull,
-      "members" -> families.map { case (t, k) =>
-        Map("table" -> t.toLowerCase, "kind" -> k).asJava
-      }.asJava).asJava
-    val bytes = mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(payload)
-    val out = fs.create(fleetPath, true) // fleet manifest LAST
-    try out.write(bytes) finally out.close()
+    writeJson(spark, destRoot, FleetManifestName, // fleet manifest LAST
+      FleetManifest(cut, parent, families.map { case (t, k) =>
+        FleetMember(t.toLowerCase, k)
+      }))
     (cut, rows)
-  }
-
-  private def readFleetManifest(spark: SparkSession, destRoot: String):
-      com.fasterxml.jackson.databind.JsonNode = {
-    val p = new org.apache.hadoop.fs.Path(s"$destRoot/$FleetManifestName")
-    val fs = fsFor(spark, p)
-    require(fs.exists(p),
-      s"Snapshot: no $FleetManifestName under $destRoot — not a fleet " +
-        "snapshot (or a crashed fleet export; re-export it)")
-    val in = fs.open(p)
-    try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-    finally in.close()
   }
 
   /** Restore EVERY member of a fleet snapshot — each through its own
@@ -1889,8 +1557,9 @@ object Snapshot {
     */
   def restoreFleet(spark: SparkSession, destRoot: String,
       rename: String => String, newPathRoot: String): (Long, Map[String, String]) = {
-    val m = readFleetManifest(spark, destRoot)
-    val members = jsonSeq(m.get("members")).map(e => e.get("table").asText())
+    val m = readJson(spark, destRoot, FleetManifestName,
+      classOf[FleetManifest], "fleet ")
+    val members = m.members.map(_.table)
     members.foreach { t =>
       val nt = rename(t)
       require(nt.nonEmpty && nt.toLowerCase != t,
@@ -1905,9 +1574,8 @@ object Snapshot {
     members.foreach { t =>
       val nt = rename(t)
       chainOf(spark, s"$destRoot/$t").foreach { case (_, lm) =>
-        jsonSeq(lm.get("tables")).foreach { e =>
-          val suffix = e.get("suffix").asText()
-          val newName = if (suffix == "base") nt else s"${nt}_$suffix"
+        lm.tables.foreach { e =>
+          val newName = Maintenance.tableOf(nt, e.suffix)
           require(!spark.catalog.tableExists(newName),
             s"Snapshot.restoreFleet: target table $newName already " +
               s"exists (member $t) — refusing the WHOLE fleet before " +
@@ -1920,6 +1588,6 @@ object Snapshot {
     graft.core.Par.run(members) { t =>
       restore(spark, s"$destRoot/$t", rename(t), s"$newPathRoot/${rename(t)}")
     }
-    (m.get("cut").asLong(), members.map(t => t -> rename(t)).toMap)
+    (m.cut, members.map(t => t -> rename(t)).toMap)
   }
 }

@@ -102,13 +102,11 @@ object GraphMlOps {
     // arrays is ever pathological. Measured A/B at sf0.1: 1.3–1.7 s vs
     // 5.5–6 s for the best wedge-join plan, identical counts.
     // adj is node-sized (one row + outdeg longs per non-sink node ≈ one
-    // long per edge) — broadcast under the measured edge gate (≈ 8 B ×
-    // 6M ≈ 50 MB built, the PageRank/Dedup byte budget); past the gate
+    // long per edge) — broadcast under the measured edge gate; past it
     // the two adj joins fall back to shuffles, which scale
     // unconditionally.
     val edgeCount = ed.count() // bounded: one long (also the n_edges output)
-    def hinted(df: org.apache.spark.sql.DataFrame) =
-      if (edgeCount <= 6000000L) broadcast(df) else df
+    val hinted = graft.core.BroadcastGate.hint(edgeCount) _
     val adj = oe.groupBy(col("a").as("id")).agg(collect_list(col("brank")).as("nbr"))
     val tri = oe
       .join(hinted(adj.toDF("a", "na")), Seq("a"))
@@ -569,9 +567,7 @@ object GraphMlOps {
         when(keyU < keyV, shiftleft(col("dv.d"), 40) + col("v"))
           .otherwise(shiftleft(col("du.d"), 40) + col("u")).as("brank"))
       .localCheckpoint()
-    val edgeCount = ed.count()
-    def hinted(df: org.apache.spark.sql.DataFrame) =
-      if (edgeCount <= 6000000L) broadcast(df) else df
+    val hinted = graft.core.BroadcastGate.hint(ed.count()) _
     val adj = oe.groupBy(col("a").as("id")).agg(collect_list(col("brank")).as("nbr"))
       .localCheckpoint() // built once, broadcast twice
     // one pass, no materialized witness frame: each edge emits its a- and
@@ -776,9 +772,8 @@ object GraphMlOps {
     val n = emb.count() // bounded: one long — also gates the s-broadcasts
     // the per-vector projection s is one row per embedding; unhinted it
     // sort-merge-shuffled the full exploded (vec_id, dim, xc) frame
-    // every back-projection (3× per run). Same measured gate as q80.
-    def hinted(df: org.apache.spark.sql.DataFrame) =
-      if (n <= 6000000L) broadcast(df) else df
+    // every back-projection (3× per run)
+    val hinted = graft.core.BroadcastGate.hint(n) _
     var v = mu.select(col("dim"), lit(0.125).cast(DoubleType).as("v"))
     var nrm: org.apache.spark.sql.DataFrame = null
     for (_ <- 1 to 3) {
@@ -918,9 +913,8 @@ object GraphMlOps {
       // keep is node-sized (nodes ≤ 2·edges, and `prev` is the measured
       // edge count) — hinted, the peel's two membership probes become
       // broadcast joins instead of two full-edge-list shuffles per
-      // round; past the gate the shuffle join is the at-scale shape
-      def hinted(df: org.apache.spark.sql.DataFrame) =
-        if (prev <= 6000000L) broadcast(df) else df
+      // round
+      val hinted = graft.core.BroadcastGate.hint(prev) _
       e = e.join(hinted(keep.withColumnRenamed("id", "u")), "u")
         .join(hinted(keep.withColumnRenamed("id", "v")), "v")
         .select("u", "v").localCheckpoint()
@@ -984,13 +978,9 @@ object GraphMlOps {
     // checkpointed frames carry no stats, so the loop's node-sized score
     // frames never auto-broadcast and every half-iteration sort-merge-
     // shuffled the FULL edge set (6 × |E| exchanges). Hint them from a
-    // measured bound instead — the q80/q119 gate: scores are node-sized,
-    // nodes ⊆ edge endpoints, so |E| ≤ 6M bounds the built hash relation
-    // by the same ~100 MB budget; past it the hint disengages and the
-    // shuffle join is the correct at-scale shape (guide §3.1).
-    val edgeCount = e.count()
-    def hinted(df: org.apache.spark.sql.DataFrame) =
-      if (edgeCount <= 6000000L) broadcast(df) else df
+    // measured bound instead: scores are node-sized and nodes ⊆ edge
+    // endpoints, so |E| bounds the built hash relation (guide §3.1).
+    val hinted = graft.core.BroadcastGate.hint(e.count()) _
     var h = e.select(col("c")).distinct().withColumn("h", lit(1.0))
     var a: org.apache.spark.sql.DataFrame = null
     for (_ <- 1 to 3) {
@@ -1059,11 +1049,9 @@ object GraphMlOps {
       lit(0).as("hop")).localCheckpoint()
     // the frontier is ≤ 5 × node-sized but checkpointed (no stats), so
     // without a hint every round sort-merge-shuffled the FULL directed
-    // edge list; the q80/q119 measured gate bounds the built relation
-    // (nodes ⊆ edge endpoints) and at scale the hint disengages
-    val edgeCount = se.count()
-    def hinted(df: org.apache.spark.sql.DataFrame) =
-      if (edgeCount <= 6000000L) broadcast(df) else df
+    // edge list; the measured edge count bounds the built relation
+    // (nodes ⊆ edge endpoints)
+    val hinted = graft.core.BroadcastGate.hint(se.count()) _
     for (h <- 1 to 3) {
       val next = hinted(dist.filter(col("hop") === h - 1))
         .join(se, col("id") === col("s"))

@@ -789,6 +789,18 @@ class SnapshotSpec extends SparkSpec {
         graft.core.Scratch.path(standby), "retrieval")
     }
     assert(e2.getMessage.contains("predates cumulative totals"), e2.getMessage)
+    // restore and rebase refuse it by the same name, before anything lands
+    val restored = "snap_r12_legacy_re"
+    drop(restored, Seq("", "postings", "meta", "deleted"))
+    val e3 = intercept[IllegalArgumentException] {
+      Snapshot.restore(spark, base, restored, graft.core.Scratch.path(restored))
+    }
+    assert(e3.getMessage.contains("predates cumulative totals"), e3.getMessage)
+    assert(!spark.catalog.tableExists(s"${restored}_postings"))
+    val e4 = intercept[IllegalArgumentException] {
+      Snapshot.rebase(spark, d1, graft.core.Scratch.path("snap_r12_legacy_rb"))
+    }
+    assert(e4.getMessage.contains("predates cumulative totals"), e4.getMessage)
   }
 
   test("rebase: a chain squashes to a synthetic full — equivalent, " +
