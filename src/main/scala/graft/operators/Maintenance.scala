@@ -321,8 +321,7 @@ object Maintenance {
       Option[Either[String, (String, Long, Long)]] =
     try {
       val in = fs.open(p)
-      val node = try new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(in) finally in.close()
+      val node = try leaseMapper.readTree(in) finally in.close()
       val owner = Option(node).flatMap(n => Option(n.get("owner")))
         .map(_.asText())
       val gen = Option(node).flatMap(n => Option(n.get("generation")))
@@ -339,6 +338,21 @@ object Maintenance {
         Some(Left(s"unreadable lease: ${e.getMessage}"))
     }
 
+  private val leaseMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Write one tenure file; the only place lease JSON is built, so any
+    * owner string round-trips through [[readLease]].
+    */
+  private def writeLease(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path, overwrite: Boolean, owner: String,
+      generation: Long, expiresAtMs: Long): Unit = {
+    val out = fs.create(p, overwrite)
+    try out.write(leaseMapper.writeValueAsBytes(leaseMapper.createObjectNode()
+      .put("owner", owner).put("generation", generation)
+      .put("expiresAtMs", expiresAtMs)))
+    finally out.close()
+  }
+
   /** Atomic create-if-absent of a tenure file; true iff THIS call
     * created it (false = lost the race to another creator).
     */
@@ -346,11 +360,7 @@ object Maintenance {
       p: org.apache.hadoop.fs.Path, owner: String, generation: Long,
       expiresAtMs: Long): Boolean =
     try {
-      val out = fs.create(p, false)
-      try out.write(
-        s"""{"owner":"$owner","generation":$generation,"expiresAtMs":$expiresAtMs}"""
-          .getBytes("UTF-8"))
-      finally out.close()
+      writeLease(fs, p, overwrite = false, owner, generation, expiresAtMs)
       true
     } catch {
       // both the hadoop and java.nio flavors surface depending on FS
@@ -397,11 +407,7 @@ object Maintenance {
             // legally claim an unexpired lease, so the in-place
             // rewrite races nothing; the generation is unchanged —
             // same tenure, extended
-            val out = fs.create(p, true)
-            try out.write(
-              s"""{"owner":"$owner","generation":$gen,"expiresAtMs":${now + ttlMs}}"""
-                .getBytes("UTF-8"))
-            finally out.close()
+            writeLease(fs, p, overwrite = true, owner, gen, now + ttlMs)
             return gen
           } else if (expires <= now) {
             // expired (ours included — an expired own lease is a LOST

@@ -392,6 +392,18 @@ class MaintenanceSpec extends SparkSpec {
     Maintenance.releaseLease(spark, path, "schedB")
   }
 
+  test("lease: an owner with a quote round-trips and still refuses others") {
+    val path = graft.core.Scratch.path("mnt_lease_quote")
+    assert(Maintenance.acquireLease(spark, path, "cron\"A") == 1L)
+    val e = intercept[IllegalStateException] {
+      Maintenance.acquireLease(spark, path, "cronB")
+    }
+    assert(e.getMessage.contains("held by 'cron\"A'"), e.getMessage)
+    // the holder's renew reads its own tenure back: same generation
+    assert(Maintenance.acquireLease(spark, path, "cron\"A") == 1L)
+    Maintenance.releaseLease(spark, path, "cron\"A")
+  }
+
   test("fencing token: a stalled holder's late commit refuses after a claim") {
     import spark.implicits._
     import graft.operators.{IvmRollup, Maintenance => M}

@@ -136,6 +136,56 @@ class PipelineSpec extends SparkSpec {
     assert(files.nonEmpty)
     val meta = spark.read.json(s"$dir/_metadata").head
     assert(meta.getAs[Long]("total_records") == 3)
+    assert(meta.getAs[String]("context") == """{"pipeline":"issues"}""")
+    assert(meta.getAs[String]("exported_at")
+      .matches("""\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}"""))
+  }
+
+  // 4 partitions whose sort keys arrive in reverse order: partition 0
+  // holds the largest k
+  private def reversedFrame(rows: Long) =
+    spark.range(0, rows, 1, 4)
+      .select((lit(rows - 1) - col("id")).as("k"))
+      .select((col("k") % 3).as("g"), col("k"), concat(lit("row-"), col("k")).as("label"))
+
+  private def exportLines(dir: String): Seq[String] = {
+    val files = new java.io.File(dir).listFiles()
+      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+    assert(files.length == 1, s"one data file expected: ${files.map(_.getName).toSeq}")
+    val src = scala.io.Source.fromFile(files.head, "UTF-8")
+    try src.getLines().toList finally src.close()
+  }
+
+  test("review export: one file, sort-key order, count == envelope == lines") {
+    val dir = java.nio.file.Files.createTempDirectory("review").toString + "/out"
+    val n = ReviewExport.write(reversedFrame(200), dir, Seq("g", "k"))
+    val json = new com.fasterxml.jackson.databind.ObjectMapper
+    val keys = exportLines(dir).map(json.readTree).map(r =>
+      (r.get("g").asLong, r.get("k").asLong))
+    assert(keys == keys.sorted, "lines must be in (g, k) order")
+    assert(keys.map(_._2).sorted == (0L until 200L))
+    val meta = spark.read.json(s"$dir/_metadata").head
+    assert(n == 200 && meta.getAs[Long]("total_records") == n && keys.size == n)
+    assert(meta.getAs[String]("context") == "{}")
+  }
+
+  test("review export of an empty frame returns 0 and envelopes 0 records") {
+    val dir = java.nio.file.Files.createTempDirectory("review").toString + "/out"
+    // no input partition at all
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], reversedFrame(1).schema)
+    assert(ReviewExport.write(empty, dir, Seq("g", "k")) == 0L)
+    assert(spark.read.json(s"$dir/_metadata").head.getAs[Long]("total_records") == 0L)
+  }
+
+  test("review export is one Spark action: an exact job count") {
+    val dir = java.nio.file.Files.createTempDirectory("review").toString + "/out"
+    val frame = reversedFrame(40)
+    val (n, jobs) = org.apache.spark.graft.JobCount.of(spark.sparkContext)(
+      ReviewExport.write(frame, dir, Seq("g", "k"), Map("pass" -> "1")))
+    assert(n == 40)
+    // the single-partition shuffle's map stage + the write's result stage
+    assert(jobs == 2, s"$jobs jobs")
   }
 
   test("sink keys that sanitize to the same name stay distinct files") {
