@@ -17,9 +17,22 @@ import org.apache.spark.sql.functions.broadcast
 object BroadcastGate {
   val MaxRows: Long = 6000000L
 
+  /** The budget for answering on the driver: a plan whose optimizer size
+    * estimate (`optimizedPlan.stats.sizeInBytes`) is within it may be
+    * collected whole. It is Spark's own default broadcast threshold
+    * (`spark.sql.autoBroadcastJoinThreshold`, 10 MB), the size Spark
+    * already collects to the driver to build a broadcast side from the
+    * same estimate; `docs/BENCH_NOTES.md` records the driver heap such a
+    * collect retains.
+    */
+  val MaxCollectBytes: Long = 10L * 1024 * 1024
+
   /** `broadcast(df)` while the measured bound `rows` is within
     * [[MaxRows]], else `df` unchanged.
     */
   def hint(rows: Long)(df: DataFrame): DataFrame =
     if (rows <= MaxRows) broadcast(df) else df
+
+  /** Whether a plan of `estimatedBytes` is within [[MaxCollectBytes]]. */
+  def collects(estimatedBytes: BigInt): Boolean = estimatedBytes <= MaxCollectBytes
 }

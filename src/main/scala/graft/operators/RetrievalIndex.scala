@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -333,11 +333,6 @@ object RetrievalIndex {
       .dropDuplicates("n_docs", "batch_id")
       .agg(sum(col("n_docs"))).head.getLong(0)
 
-  /** q88 from the index: top-k docs per query by Σ tf·idf_scaled, ranked
-    * under the (score desc, doc_id asc) total order. The postings scan
-    * is bucket-pruned by the broadcast-joined query terms' `term IN`
-    * pushdown; df and scores aggregate only matched postings.
-    */
   /** Fold the tf-postings tier back to a single batch-0 state — the
     * [[Dedup.compactPairIndex]] of the retrieval index: replayed-crash
     * duplicates AND tombstoned documents leave PHYSICALLY, the
@@ -406,9 +401,139 @@ object RetrievalIndex {
       .saveAsTable(s"${table}_meta")
   }
 
+  /** q88 from the index: the top `k` documents per query by Σ tf·idf_scaled
+    * (the exact integer rational idf, [[graft.queries.CurationOps.idfScaledCol]]),
+    * ranked under the (score desc, doc_id asc) total order, as
+    * (qid, doc_id, score, rank). `asOf` pins the ranking to a version: N,
+    * the postings and the tombstones are all cut at that stamp (valid back
+    * to the last [[compact]]).
+    *
+    * Two tiers, chosen at plan time with no job from the optimizer's size
+    * estimate of what the serve reads (the bucket-pruned `term IN` postings
+    * probe, the `_meta` ledger and the `_deleted` frontier, each cut at
+    * `asOf`) against [[graft.core.BroadcastGate.MaxCollectBytes]]:
+    *
+    *  - below the budget, [[topKLocal]]: ONE Spark action collects the three
+    *    inputs, and the replay collapse, tombstone filter, df, idf, scores
+    *    and ranks run on the driver. N, the tombstones and the postings are
+    *    read by that one action, so they share one pin. The call is EAGER:
+    *    it runs that action and returns a local frame holding the answer,
+    *    so a write after the call (an `extend`, a delete) does not change
+    *    what the frame returns;
+    *  - above it, [[topKDistributed]]: the at-scale plan, with the matched
+    *    postings pinned at call time and N read when the returned frame
+    *    runs.
+    *
+    * The size estimate credits no bucket pruning or term filter (it is the
+    * size of the three tables), so the gate is conservative.
+    */
   def topK(spark: SparkSession, table: String,
       queries: Seq[(Int, Seq[String])], k: Int = 10,
       asOf: Long = Long.MaxValue): DataFrame = {
+    val legs = topKLegs(spark, table, queries, asOf)
+    if (graft.core.BroadcastGate.collects(
+        legs.queryExecution.optimizedPlan.stats.sizeInBytes))
+      topKLocal(spark, legs, queries, k)
+    else topKDistributed(spark, table, queries, k, asOf)
+  }
+
+  // the tags of [[topKLegs]]' three inputs
+  private val PostingsLeg = 0
+  private val MetaLeg = 1
+  private val DeletedLeg = 2
+
+  /** Everything a top-k serve reads, as one union of tagged legs (the
+    * `Snapshot.collectFused` shape) over (leg, term, doc_id, n, batch_id):
+    * the bucket-pruned postings probe (n = tf), the `_meta` ledger
+    * (n = n_docs) and the `_deleted` frontier, each cut at `asOf`. Planned
+    * on the [[probeSession]] clone, so the postings read keeps its bucket
+    * pruning.
+    */
+  private[graft] def topKLegs(spark: SparkSession, table: String,
+      queries: Seq[(Int, Seq[String])], asOf: Long): DataFrame = {
+    val ps = probeSession(spark, s"${table}_postings")
+    val none = (t: String) => lit(null).cast(t)
+    val postings = ps.table(s"${table}_postings")
+      .filter(col("term").isin(queries.flatMap(_._2).distinct: _*))
+      .filter(col("batch_id") <= asOf)
+      .select(lit(PostingsLeg), col("term"), col("doc_id"), col("tf"), col("batch_id"))
+    val meta = ps.table(s"${table}_meta").filter(col("batch_id") <= asOf)
+      .select(lit(MetaLeg), none("string"), none("long"), col("n_docs"), col("batch_id"))
+    val deleted =
+      if (ps.catalog.tableExists(s"${table}_deleted"))
+        Seq(ps.table(s"${table}_deleted").filter(col("batch_id") <= asOf)
+          .select(lit(DeletedLeg), none("string"), col("doc_id"), none("long"),
+            col("batch_id")))
+      else Nil
+    (Seq(postings, meta) ++ deleted).reduce(_ union _)
+      .toDF("leg", "term", "doc_id", "n", "batch_id")
+  }
+
+  /** The driver tier of [[topK]]: collects `legs` ([[topKLegs]]) in one
+    * action, then applies the distributed plan's semantics exactly:
+    *
+    *  - N: the sum of n_docs over distinct (n_docs, batch_id);
+    *  - a tombstoned doc drops from every batch;
+    *  - replays collapse per (term, doc_id, batch_id);
+    *  - each posting joins every (qid, term) pair of the query list, so a
+    *    term repeated in a query counts twice and a term shared by two
+    *    queries scores in both;
+    *  - df is the number of distinct docs per term, and the idf is
+    *    `((2(N − df) + 1)·idfScale) div (2df + 1)` in long arithmetic that
+    *    fails on overflow as ANSI SQL does;
+    *  - rank by (score desc, doc_id asc), top `k` per qid.
+    *
+    * Returns a local frame with the distributed tier's schema: collecting
+    * it submits no job.
+    */
+  private[graft] def topKLocal(spark: SparkSession, legs: DataFrame,
+      queries: Seq[(Int, Seq[String])], k: Int): DataFrame = {
+    val byLeg = legs.collect().groupBy(_.getInt(0)).withDefaultValue(Array.empty[Row])
+    val docOf = (r: Row) => Option(r.get(2)).map(_.asInstanceOf[Long])
+    val n = byLeg(MetaLeg).map(r => (Option(r.get(3)), r.getLong(4))).distinct
+      .flatMap(_._1).map(_.asInstanceOf[Long]).foldLeft(0L)(Math.addExact)
+    val dead = byLeg(DeletedLeg).flatMap(docOf).toSet
+    val byTerm = byLeg(PostingsLeg)
+      .distinctBy(r => (r.getString(1), docOf(r), r.getLong(4)))
+      .filterNot(r => docOf(r).exists(dead))
+      .groupMap(_.getString(1))(r => (docOf(r), r.getLong(3)))
+    val idf = byTerm.map { case (t, hits) =>
+      val df = hits.flatMap(_._1).distinct.length.toLong
+      t -> Math.multiplyExact(
+        Math.addExact(Math.multiplyExact(2L, Math.subtractExact(n, df)), 1L),
+        graft.queries.CurationOps.idfScale) / (2L * df + 1L)
+    }
+    val scores = (for ((qid, terms) <- queries; t <- terms;
+        (doc, tf) <- byTerm.getOrElse(t, Array.empty))
+      yield (qid, doc) -> Math.multiplyExact(tf, idf(t)))
+      .groupMapReduce(_._1)(_._2)(Math.addExact)
+    val order = Ordering.Tuple2(Ordering.Long.reverse, Ordering.Option(Ordering.Long))
+    val rows = scores.toSeq
+      .groupMap(_._1._1) { case ((_, doc), score) => (score, doc) }
+      .toSeq.sortBy(_._1).flatMap { case (qid, hits) =>
+        hits.sorted(order).take(k).zipWithIndex.map { case ((score, doc), i) =>
+          Row(qid, doc.map(Long.box).orNull, score, i + 1)
+        }
+      }
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, TopKSchema)
+  }
+
+  private val TopKSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("qid", IntegerType, nullable = false),
+      StructField("doc_id", LongType), StructField("score", LongType),
+      StructField("rank", IntegerType, nullable = false)))
+  }
+
+  /** The distributed tier of [[topK]]: the bucket-pruned probe joined to
+    * the broadcast query terms, pinned by `localCheckpoint`, then df,
+    * scores and the rank window as shuffles. N rides the plan as a lazy
+    * 1×1, read when the returned frame runs.
+    */
+  private[graft] def topKDistributed(spark: SparkSession, table: String,
+      queries: Seq[(Int, Seq[String])], k: Int,
+      asOf: Long): DataFrame = {
     // `asOf` pins the ranking to a version: N sums only meta rows
     // through the stamp (the signed ledger makes this exact — later
     // deletes' negative rows drop out with their tombstones), postings

@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.graft.JobCount
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
-import graft.operators.RetrievalIndex
+import graft.core.{BroadcastGate, Tables}
+import graft.operators.{RetrievalIndex, Snapshot}
 import graft.queries.CurationOps
 
 /** The persisted inverted index serves the scan-time retrieval
@@ -21,8 +23,63 @@ class RetrievalIndexSpec extends SparkSpec {
   private def drop(table: String): Unit =
     Seq("postings", "meta").foreach(s => spark.sql(s"DROP TABLE IF EXISTS ${table}_$s"))
 
-  private def asSet(df: org.apache.spark.sql.DataFrame) =
+  private def asSet(df: DataFrame) =
     df.collect().map(_.toSeq).toSet
+
+  // a six-word vocabulary and short documents: many documents share a
+  // score, so the doc_id tie-break decides ranks
+  private val vocab = Seq("ant", "bee", "cat", "dog", "eel", "fox")
+
+  private def randomCorpus(r: scala.util.Random, ids: Seq[Long]): Seq[(Long, String)] =
+    ids.map(id => id -> Seq.fill(1 + r.nextInt(5))(vocab(r.nextInt(vocab.size)))
+      .mkString(" "))
+
+  private def frame(corpus: Seq[(Long, String)]): DataFrame = {
+    import spark.implicits._
+    corpus.toDF("doc_id", "text")
+  }
+
+  private def idFrame(ids: Seq[Long]): DataFrame = {
+    import spark.implicits._
+    ids.toDF("doc_id")
+  }
+
+  /** q88's ranking computed from scratch over `live`, in plain Scala. */
+  private def fromScratch(live: Seq[(Long, String)], qs: Seq[(Int, Seq[String])],
+      k: Int): Set[Seq[Any]] = {
+    val tf = live.map { case (id, text) =>
+      id -> text.trim.toLowerCase.split("\\s+").filter(_.nonEmpty)
+        .groupMapReduce(identity)(_ => 1L)(_ + _)
+    }
+    val n = live.size.toLong
+    val idf = qs.flatMap(_._2).distinct.map { t =>
+      val df = tf.count(_._2.contains(t)).toLong
+      t -> ((2 * (n - df) + 1) * CurationOps.idfScale) / (2 * df + 1)
+    }.toMap
+    qs.flatMap { case (qid, ts) =>
+      tf.flatMap { case (id, f) =>
+        val hit = ts.filter(f.contains) // a repeated query term counts twice
+        if (hit.isEmpty) None else Some(id -> hit.map(t => f(t) * idf(t)).sum)
+      }.sortBy { case (id, s) => (-s, id) }.take(k).zipWithIndex
+        .map { case ((id, s), i) => Seq[Any](qid, id, s, i + 1) }
+    }.toSet
+  }
+
+  /** Both tiers of topK on one index and version: the same schema and the
+    * same rows. Returns the rows.
+    */
+  private def tiersAgree(table: String, qs: Seq[(Int, Seq[String])], k: Int,
+      asOf: Long): Seq[Seq[Any]] = {
+    val local = RetrievalIndex.topKLocal(spark,
+      RetrievalIndex.topKLegs(spark, table, qs, asOf), qs, k)
+    val dist = RetrievalIndex.topKDistributed(spark, table, qs, k, asOf)
+    assert(local.schema == dist.schema)
+    val byRank = (df: DataFrame) =>
+      df.collect().map(_.toSeq).sortBy(r => (r(0).asInstanceOf[Int], r(3).asInstanceOf[Int])).toSeq
+    val rows = byRank(local)
+    assert(rows == byRank(dist), s"$table k=$k asOf=$asOf")
+    rows
+  }
 
   test("index topK equals q88 run directly against the corpus") {
     drop("rix_full")
@@ -92,12 +149,10 @@ class RetrievalIndexSpec extends SparkSpec {
   test("the term probe bucket-prunes the postings scan") {
     drop("rix_p")
     RetrievalIndex.build(docs, "rix_p", freshPath("p"), nBuckets = 16)
-    // topK pins the matched probe (localCheckpoint), so the scan lives in
-    // the checkpoint job's plan — assert pruning on the probe shape
-    // itself, on the same bucket-pruning clone the operator plans on
-    val plan = RetrievalIndex.probeSession(spark, "rix_p_postings")
-      .table("rix_p_postings").filter(col("term").isin("spark"))
-      .queryExecution.executedPlan.toString
+    // the plan of topK's fused read, as the operator plans it on the
+    // bucket-pruning clone
+    val plan = RetrievalIndex.topKLegs(spark, "rix_p", Seq(1 -> Seq("spark")),
+      Long.MaxValue).queryExecution.executedPlan.toString
     // a single-term probe must select a strict subset of the 16 buckets
     val m = "SelectedBucketsCount: (\\d+) out of 16".r.findFirstMatchIn(plan)
     assert(m.isDefined, plan.take(2000))
@@ -259,5 +314,101 @@ class RetrievalIndexSpec extends SparkSpec {
     assert(e2.getMessage.contains("compact"), e2.getMessage)
     // in-sequence passes
     graft.core.WriterFence(Set(0L, 1L), 2L, "SpecFamily")
+  }
+
+  test("topK: the local tier returns the distributed tier's rows on random indexes") {
+    var ties = 0
+    for (seed <- Seq(11L, 12L)) {
+      val r = new scala.util.Random(seed)
+      val t = s"rix_eq$seed"
+      drop(t); spark.sql(s"DROP TABLE IF EXISTS ${t}_deleted")
+      val p = freshPath(s"eq$seed")
+      val b0 = randomCorpus(r, 1L to 16L)
+      val b1 = randomCorpus(r, 17L to 28L)
+      val b3 = randomCorpus(r, 29L to 36L)
+      RetrievalIndex.build(frame(b0), t, p, nBuckets = 4)
+      // batch 1 crashes twice after its postings append, then replays
+      RetrievalIndex.applyExtend(frame(b1), t, batchId = 1L, nBuckets = 4)
+      RetrievalIndex.applyExtend(frame(b1), t, batchId = 1L, nBuckets = 4)
+      RetrievalIndex.extend(frame(b1), t, batchId = 1L, nBuckets = 4)
+      // batch 2: a crashed and replayed delete
+      val victims = r.shuffle((1L to 28L).toList).take(5)
+      RetrievalIndex.applyDeleteDocs(spark, idFrame(victims), t, p, batchId = 2L)
+      RetrievalIndex.deleteDocs(spark, idFrame(victims), t, p, batchId = 2L)
+      RetrievalIndex.extend(frame(b3), t, batchId = 3L, nBuckets = 4)
+      // batch 4 deletes two of batch 2's victims again, and one new doc
+      val again = victims.take(2) :+ (29L + r.nextInt(8))
+      RetrievalIndex.deleteDocs(spark, idFrame(again), t, p, batchId = 4L)
+      val qs = Seq(
+        1 -> Seq("ant", "ant"),   // a term repeated inside one query
+        2 -> Seq("ant", "bee"),   // a term shared with query 1
+        3 -> Seq("cat", "zebra"), // a term absent from the index
+        4 -> Seq("zebra"),        // a query with no hit at all
+        5 -> Seq(vocab(r.nextInt(6)), vocab(r.nextInt(6))))
+      // pins before the first delete, at it, between the deletes, after all
+      for (asOf <- Seq(1L, 2L, 3L, Long.MaxValue); k <- Seq(3, 100)) {
+        val rows = tiersAgree(t, qs, k, asOf)
+        ties += rows.groupBy(r => (r(0), r(2))).count(_._2.size > 1)
+      }
+      // k above the hits, against a from-scratch ranking of the live set
+      val live = (b0 ++ b1 ++ b3).filterNot(d => (victims ++ again).contains(d._1))
+      assert(tiersAgree(t, qs, 100, Long.MaxValue).toSet == fromScratch(live, qs, 100))
+      // the same family attached from a snapshot: a temp-view family
+      val snap = freshPath(s"eq${seed}_snap")
+      Snapshot.export(spark, t, snap)
+      Snapshot.attach(spark, snap, s"${t}_att")
+      assert(tiersAgree(s"${t}_att", qs, 3, Long.MaxValue) ==
+        tiersAgree(t, qs, 3, Long.MaxValue))
+    }
+    assert(ties > 0, "no score ties: the doc_id tie-break went untested")
+  }
+
+  test("topK's gate is a pure function of the estimated bytes") {
+    val budget = BigInt(BroadcastGate.MaxCollectBytes)
+    assert(BroadcastGate.collects(0))
+    assert(BroadcastGate.collects(budget))
+    assert(!BroadcastGate.collects(budget + 1))
+  }
+
+  test("topK below the gate pins N, tombstones and postings at the call") {
+    val t = "rix_pin"
+    drop(t)
+    val r = new scala.util.Random(21L)
+    val b0 = randomCorpus(r, 1L to 12L)
+    RetrievalIndex.build(frame(b0), t, freshPath("pin"), nBuckets = 4)
+    val qs = Seq(1 -> Seq("ant", "cat"), 2 -> Seq("dog"))
+    val served = RetrievalIndex.topK(spark, t, qs)
+    // a later batch moves N; the frame already returned must not see it
+    RetrievalIndex.extend(frame(randomCorpus(r, 13L to 20L)), t, batchId = 1L,
+      nBuckets = 4)
+    assert(asSet(served) == fromScratch(b0, qs, 10))
+  }
+
+  test("topK below the gate is one Spark action; collecting its frame is none") {
+    val t = "rix_jobs"
+    drop(t); spark.sql(s"DROP TABLE IF EXISTS ${t}_deleted")
+    val p = freshPath("jobs")
+    val r = new scala.util.Random(31L)
+    RetrievalIndex.build(frame(randomCorpus(r, 1L to 20L)), t, p, nBuckets = 4)
+    RetrievalIndex.deleteDocs(spark, idFrame(Seq(3L, 4L)), t, p, batchId = 1L)
+    val qs = Seq(1 -> Seq("ant", "bee"), 2 -> Seq("eel"))
+    val (served, jobs) = JobCount.of(spark.sparkContext)(RetrievalIndex.topK(spark, t, qs))
+    assert(jobs == 1, s"$jobs jobs")
+    val (rows, more) = JobCount.of(spark.sparkContext)(served.collect())
+    assert(more == 0 && rows.nonEmpty, s"$more jobs")
+  }
+
+  test("above the gate the distributed tier keeps its checkpointed shuffle plan") {
+    drop("rix_dist")
+    RetrievalIndex.build(docs, "rix_dist", freshPath("dist"))
+    val d = RetrievalIndex.topKDistributed(spark, "rix_dist",
+      CurationOps.rankQueries, 10, Long.MaxValue)
+    // the matched probe is pinned by localCheckpoint (an RDD scan) …
+    val logical = d.queryExecution.optimizedPlan.toString
+    assert(logical.contains("LogicalRDD"), logical)
+    // … and df, scores and the rank window are shuffles
+    val physical = d.queryExecution.executedPlan.toString
+    assert(physical.contains("Exchange hashpartitioning(qid"), physical)
+    assert(physical.contains("Window"), physical)
   }
 }
