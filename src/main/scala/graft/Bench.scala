@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Strict round-trip of the emitted bench line — the
     * [[Verify.assertOracleRoundTrip]] discipline applied to the perf
@@ -28,28 +27,7 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same pinned timezone as Verify: Tables.events' NTZ→timestamp cast
-      // is session-timezone-dependent, so without this a non-UTC host
-      // would bench different event instants than the ones oracle-checked
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Always use the sort-based shuffle writer (one output file per
-      // map task) instead of the bypass-merge writer (one file PER
-      // REDUCER per map task — at R reducers that is M×R file creates
-      // per shuffle, measured 2.3× slower on this filesystem for a
-      // 100k-row groupBy). Production-aligned, not a local hack: at
-      // scale-sized partition counts R exceeds the 200-partition bypass
-      // ceiling and the bypass writer never engages anyway; 0 makes the
-      // local R=32 runs take the same writer path. Parameterized so the
-      // driver (or a cluster profile) can restore the default.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(graft.core.GraftSession.envCpus)
     // fixture-drift preflight: a regenerated fixture should fail with a
     // diagnosis up front, not as -1.0 sentinels scattered through the run
     graft.core.Tables.preflight(spark, sfDir)

@@ -5,8 +5,6 @@ import java.sql.DriverManager
 
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.{Discovery, FsKeyValueSink, JdbcSource, KeyValueSink}
 
 /** Connectivity smoke-check CLI — the reference's third entry point
@@ -30,12 +28,7 @@ object ConnectionCheck {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(4)
 
     val results = Seq(
       check("parquet source probe") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Dev tool (optimization round): empirical floor of one Spark action
@@ -11,19 +11,7 @@ import org.apache.spark.sql.functions._
   */
 object ProfileMicro {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_PROFILE_CONF").foreach {
-      _.split(";").filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); b.config(k.trim, v.trim)
-      }
-    }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(graft.core.GraftSession.envCpus)
     import spark.implicits._
 
     def time(label: String, n: Int)(f: Int => Unit): Unit = {

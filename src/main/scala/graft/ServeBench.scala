@@ -81,7 +81,10 @@ object ServeBench {
         batchId = b.toLong)
     }
     val qs = graft.queries.CurationOps.rankQueries
-    val (tPre, nPre) = timeMin3(RetrievalIndex.topK(spark, table, qs).count())
+    // collect, not count: below the collect gate topK returns a local
+    // frame, whose count() would submit two jobs the serve never pays
+    val (tPre, nPre) = timeMin3(
+      RetrievalIndex.topK(spark, table, qs).collect().length.toLong)
     // the round-10 policy probe on the same pre-compact log — the
     // per-schedule overhead the q219 maintenance loop pays (a not-due
     // read: batches axis only, never the tombstone scans)
@@ -90,7 +93,8 @@ object ServeBench {
         graft.operators.Maintenance.CompactPolicy(
           maxBatches = 99L, maxDeadFraction = 1.0))) 1L else 0L)
     RetrievalIndex.compact(spark, table, path)
-    val (tPost, nPost) = timeMin3(RetrievalIndex.topK(spark, table, qs).count())
+    val (tPost, nPost) = timeMin3(
+      RetrievalIndex.topK(spark, table, qs).collect().length.toLong)
     println(f"SERVEBENCH retrieval $tag pre=$tPre%.2f post=$tPost%.2f " +
       f"probe=$tProbe%.2f rows=$nPre/$nPost")
   }
@@ -273,14 +277,7 @@ object ServeBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(graft.core.GraftSession.envCpus)
     // 10× apart in data: serve ∝ matched data shows as ~10× between tags
     Seq("/root/testdata/sf0.01" -> "sf001", "/root/testdata/sf0.1" -> "sf01")
       .foreach { case (dir, tag) =>

@@ -10,8 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `spark.read.parquet` for `spark.table` is a one-line change.
   */
 final class Tables(val spark: SparkSession, val dir: String) {
-  /** Fixture read with the SCHEMA resolved once per (path, flags) per
-    * JVM (guide §6: repeated `spark.read.parquet` calls re-run footer
+  /** Fixture read with the SCHEMA resolved once per (path, flags, file
+    * version) per JVM (guide §6: repeated `spark.read.parquet` calls re-run footer
     * schema inference — a fixed driver-side job every query pays on
     * every accessor call; a metastore-backed `spark.table` would carry
     * the schema as catalog METADATA, and this cache is that metadata,
@@ -22,8 +22,7 @@ final class Tables(val spark: SparkSession, val dir: String) {
     */
   def t(name: String): DataFrame = {
     val p = s"$dir/$name.parquet"
-    val schema = Tables.schemaCache.computeIfAbsent(p,
-      _ => spark.read.parquet(p).schema)
+    val schema = Tables.cachedSchema(spark, p, "")(spark.read.parquet(p).schema)
     spark.read.schema(schema).parquet(p)
   }
 
@@ -59,7 +58,7 @@ final class Tables(val spark: SparkSession, val dir: String) {
     // it), and the plain-`t` cache entry for the same path must never
     // alias a flag-scoped resolution
     val p = s"$dir/events.parquet"
-    val schema = Tables.schemaCache.computeIfAbsent(s"$p#nanosAsLong", { _ =>
+    val schema = Tables.cachedSchema(spark, p, "nanosAsLong") {
       val key = "spark.sql.legacy.parquet.nanosAsLong"
       val prior = spark.conf.getOption(key)
       spark.conf.set(key, "true")
@@ -68,7 +67,7 @@ final class Tables(val spark: SparkSession, val dir: String) {
         case Some(v) => spark.conf.set(key, v)
         case None    => spark.conf.unset(key)
       }
-    })
+    }
     val raw = spark.read.schema(schema).parquet(p)
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -91,13 +90,28 @@ final class Tables(val spark: SparkSession, val dir: String) {
 object Tables {
   def apply(spark: SparkSession, dir: String): Tables = new Tables(spark, dir)
 
-  /** Fixture SCHEMAS by path (+ resolution-flag suffix) — catalog
+  /** Fixture SCHEMAS by path, resolution flag and file version — catalog
     * metadata, resolved once per JVM from the parquet footers
     * themselves. Deliberately NOT data or results: every action on a
     * frame built from a cached schema still reads the parquet files.
+    * The version is the path's length and modification time, so a
+    * fixture rewritten in place resolves its new schema instead of
+    * keeping the old one for the life of the JVM.
     */
+  private final case class SchemaKey(path: String, flag: String, len: Long,
+      mtime: Long)
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+    SchemaKey, org.apache.spark.sql.types.StructType]()
+
+  private def cachedSchema(spark: SparkSession, p: String, flag: String)(
+      resolve: => org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = {
+    val path = new org.apache.hadoop.fs.Path(p)
+    val st = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(path)
+    schemaCache.computeIfAbsent(
+      SchemaKey(p, flag, st.getLen, st.getModificationTime), _ => resolve)
+  }
 
   /** Loud fixture-drift preflight for the driver mains (Verify/Bench):
     * compare each load-bearing fixture column against the dtypes the

@@ -649,13 +649,6 @@ object Dedup {
     * extend) as already-committed instead of folding the built batch in
     * twice.
     */
-  private def tphase[A](name: String)(f: => A): A = {
-    if (sys.env.contains("GRAFT_DEDUP_TIMING")) {
-      val t0 = System.nanoTime(); val r = f
-      println(f"DEDUPTIME $name ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    } else f
-  }
-
   def buildPairIndex(docs: DataFrame, table: String, path: String,
       threshold: Double, nBuckets: Int = 8, k: Int = 5,
       incremental: Boolean = false, commitAlias: Long = -1L): Unit = {
@@ -668,33 +661,33 @@ object Dedup {
     // root would make its Overwrite delete the sibling dict/sets/postings
     // directories underneath it (bitten once in spec)
     val spark = docs.sparkSession
-    val tokens = tphase("b.tokens")(docTokenDigests(docs, k)
-      .localCheckpoint()) // df counts + the encode probe share ONE shingle pass
+    val tokens = docTokenDigests(docs, k)
+      .localCheckpoint() // df counts + the encode probe share ONE shingle pass
     val dfc = tokens.groupBy("digest").agg(count(lit(1)).as("df"))
     // pinned: the dict WRITE and the encode join share one computed
     // ranking (unpinned, the RDD-backed rank sort would run twice)
-    val dict = tphase("b.rank")(graft.core.Ranks.globalRowNumber(
+    val dict = graft.core.Ranks.globalRowNumber(
       dfc, Seq(col("df").asc, col("digest").asc))
       .select(col("digest"), col("global_rank").as("rank"))
-      .localCheckpoint())
+      .localCheckpoint()
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
     // the dict write proceeds CONCURRENTLY with the group/pair pipeline
     // (which joins the pinned in-memory frame, not the table read-back)
     val dictWrite = scala.concurrent.Future {
-      tphase("b.dictWrite")(graft.sources.TableWriter.writeBucketed(
-        dict, s"${table}_dict", s"$path/dict", "digest", nBuckets))
+      graft.sources.TableWriter.writeBucketed(
+        dict, s"${table}_dict", s"$path/dict", "digest", nBuckets)
     }
     // the dict side broadcasts when MEASURED small (count on the pinned
     // RDD is one metadata-cheap job): the encode join then streams the
     // token frame map-side instead of shuffling it by digest — at real
     // vocabulary sizes the gate fails and the shuffle join is correct
-    val groups = tphase("b.groups")(collapsedRankGroups(tokens, dict,
+    val groups = collapsedRankGroups(tokens, dict,
         dictBcast = dict.count() <= MaxBroadcastRows)
-      .localCheckpoint()) // pairs + members + rep sets + prefixes share it
-    val probe = tphase("b.probe")(prefixPostings(groups, threshold)
-      .localCheckpoint()) // pair candidates + the postings table share it
-    val gates = tphase("b.bOk")(broadcastGates(groups))
+      .localCheckpoint() // pairs + members + rep sets + prefixes share it
+    val probe = prefixPostings(groups, threshold)
+      .localCheckpoint() // pair candidates + the postings table share it
+    val gates = broadcastGates(groups)
     // the four data-table writes run CONCURRENTLY (the applyExtend move):
     // their relative order carries no crash contract — the trailing
     // `_batches` marker does, and every input is pinned. Pairs come
@@ -704,8 +697,8 @@ object Dedup {
     // shared — PairGraphSpec pins the equality including the doubles
     def bwrite(df: DataFrame, t: String, sub: String, bcol: String) =
       scala.concurrent.Future {
-        tphase(s"b.write:$sub")(graft.sources.TableWriter.writeBucketed(
-          df.withColumn("batch_id", lit(0L)), t, s"$path/$sub", bcol, nBuckets))
+        graft.sources.TableWriter.writeBucketed(
+          df.withColumn("batch_id", lit(0L)), t, s"$path/$sub", bcol, nBuckets)
       }
     scala.concurrent.Await.result(scala.concurrent.Future.sequence(Seq(
       dictWrite,
@@ -716,8 +709,8 @@ object Dedup {
       bwrite(groups.select("id", "toks"), s"${table}_sets", "sets", "id"),
       bwrite(probe, s"${table}_postings", "postings", "tok"))),
       scala.concurrent.duration.Duration.Inf)
-    tphase("b.marker")(writeBatchMarker(spark, table, s"$path/batches",
-      Seq(0L) ++ Option(commitAlias).filter(_ > 0L)))
+    writeBatchMarker(spark, table, s"$path/batches",
+      Seq(0L) ++ Option(commitAlias).filter(_ > 0L))
   }
 
   /** Overwrite the `_batches` commit-marker table — build's LAST write. */
@@ -1035,12 +1028,12 @@ object Dedup {
     // overlap the two (the fence must still COMPLETE before the rank
     // append below, which the Await enforces)
     val fenceF = scala.concurrent.Future {
-      tphase("e.fence")(spark.table(s"${table}_dict")
+      spark.table(s"${table}_dict")
         .agg(coalesce(max(col("rank")), lit(0L)), count(lit(1)),
-          count_distinct(col("digest"))).head())
+          count_distinct(col("digest"))).head()
     }(scala.concurrent.ExecutionContext.global)
-    val tokens = tphase("e.tokens")(docTokenDigests(batch, k)
-      .localCheckpoint()) // unseen probe + encode share ONE shingle pass
+    val tokens = docTokenDigests(batch, k)
+      .localCheckpoint() // unseen probe + encode share ONE shingle pass
     val dictT = s"${table}_dict"
     // frontier read + single-writer fence in ONE pass: ranks must be
     // dense (max == count) and digests unique — a lost read-then-append
@@ -1057,15 +1050,15 @@ object Dedup {
           "a concurrent extend lost a read-then-append rank update")
     val unseen = tokens.select("digest").distinct()
       .join(spark.table(dictT).select("digest"), Seq("digest"), "left_anti")
-    tphase("e.dictAppend")(graft.core.Ranks.globalRowNumber(unseen, Seq(col("digest").asc))
+    graft.core.Ranks.globalRowNumber(unseen, Seq(col("digest").asc))
       .select(col("digest"), (col("global_rank") + maxRank).as("rank"))
       .repartition(nBuckets, col("digest")) // one file per bucket, as at build
-      .write.mode(org.apache.spark.sql.SaveMode.Append).insertInto(dictT))
-    val groupsB = tphase("e.groups")(collapsedRankGroups(tokens, spark.table(dictT))
-      .localCheckpoint()) // probe + both verifies + all three expansions
-    val probe = tphase("e.probe")(prefixPostings(groupsB, threshold)
-      .localCheckpoint()) // history probe + self-join + postings append share it
-    val gates = tphase("e.bOk")(broadcastGates(groupsB))
+      .write.mode(org.apache.spark.sql.SaveMode.Append).insertInto(dictT)
+    val groupsB = collapsedRankGroups(tokens, spark.table(dictT))
+      .localCheckpoint() // probe + both verifies + all three expansions
+    val probe = prefixPostings(groupsB, threshold)
+      .localCheckpoint() // history probe + self-join + postings append share it
+    val gates = broadcastGates(groupsB)
     val bOk = gates.groupsOk
     // history reads EXCLUDE this batch's own stamp: a replayed crashed
     // extend may find its earlier appends already present, and filtering
@@ -1183,16 +1176,16 @@ object Dedup {
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
     def append(df: DataFrame, t: String, bcol: String) = scala.concurrent.Future {
-      tphase(s"e.append:$t")(df.withColumn("batch_id", lit(batchId))
+      df.withColumn("batch_id", lit(batchId))
         .repartition(nBuckets, col(bcol))
-        .write.mode(org.apache.spark.sql.SaveMode.Append).insertInto(t))
+        .write.mode(org.apache.spark.sql.SaveMode.Append).insertInto(t)
     }
-    tphase("e.appends")(scala.concurrent.Await.result(scala.concurrent.Future.sequence(Seq(
+    scala.concurrent.Await.result(scala.concurrent.Future.sequence(Seq(
       append(st.pairs, table, "id_a"),
       append(st.members, s"${table}_members", "rep"),
       append(st.sets, s"${table}_sets", "id"),
       append(st.posts, s"${table}_postings", "tok"))),
-      scala.concurrent.duration.Duration.Inf))
+      scala.concurrent.duration.Duration.Inf)
     ()
   }
 

@@ -57,6 +57,27 @@ class TablesSpec extends SparkSpec {
       msgs.mkString("\n"))
   }
 
+  test("a fixture rewritten at the same path resolves its new schema") {
+    // the schema cache is keyed by the file's version as well as its
+    // path: a fixture regenerated in place must not keep its first
+    // schema for the life of the JVM
+    val dir = java.nio.file.Files.createTempDirectory("rewrite")
+    def writeFixture(df: org.apache.spark.sql.DataFrame): Unit = {
+      val staging = dir.resolve("staging").toString
+      df.coalesce(1).write.mode("overwrite").parquet(staging)
+      val part = new java.io.File(staging).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.copy(part.toPath, dir.resolve("probe.parquet"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    writeFixture(spark.range(3).toDF("id"))
+    assert(Tables(spark, dir.toString).t("probe").columns.toSeq == Seq("id"))
+    writeFixture(spark.range(3).selectExpr("id", "id * 2 AS extra"))
+    val again = Tables(spark, dir.toString).t("probe")
+    assert(again.columns.toSeq == Seq("id", "extra"))
+    assert(again.selectExpr("sum(extra)").head().getLong(0) == 6L)
+  }
+
   test("raw fixture schemas match the dtypes the queries were written against") {
     assertDtype("events", spark.read.parquet(s"$sfDir/events.parquet"), Map(
       "ts"         -> Set[DataType](TimestampType, TimestampNTZType, LongType),

@@ -108,4 +108,16 @@ class VerifyGuardSpec extends AnyFunSuite {
         """{"value":1.0,"queries":{"q1":"NaN"}}""", Set("q1"))
     }
   }
+
+  test("the test session runs the session config Verify and Bench run") {
+    // the specs must exercise production's shuffle writer and time zone:
+    // SparkSpec builds through GraftSession, like the mains
+    val spark = SparkSpec.spark
+    val conf = spark.sparkContext.getConf
+    assert(conf.getOption("spark.shuffle.sort.bypassMergeThreshold")
+      .contains("0"))
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.getOption("spark.ui.enabled").contains("false"))
+    assert(spark.sparkContext.uiWebUrl.isEmpty)
+  }
 }
