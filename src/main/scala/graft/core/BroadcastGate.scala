@@ -27,6 +27,18 @@ object BroadcastGate {
     */
   val MaxCollectBytes: Long = 10L * 1024 * 1024
 
+  /** The budget of candidate pairs a driver tier may enumerate once its
+    * input is collected: [[MaxCollectBytes]] bounds the rows, not the
+    * pairs, and blocked pair work is quadratic in the block sizes. It is
+    * `ConnectedComponents.run`'s default `localThreshold`: when no pair
+    * is pruned every candidate can become an edge, and the driver's
+    * union-find then gets an edge array no longer than the one that
+    * path collects.
+    * `docs/BENCH_NOTES.md` ("The entity-resolution pair budget") records
+    * the driver time per candidate pair, pruned and unpruned.
+    */
+  val MaxLocalPairs: Long = 1000000L
+
   /** `broadcast(df)` while the measured bound `rows` is within
     * [[MaxRows]], else `df` unchanged.
     */

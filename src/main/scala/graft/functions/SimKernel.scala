@@ -157,4 +157,53 @@ object SimKernel {
     if (total == 0) 100.0
     else 100.0 * (1.0 - indelDistance(ka, kb).toDouble / total)
   }
+
+  // ---- the bag bound: an upper bound of the ratio without the DP.
+  // Every common subsequence is a sub-multiset of both strings, so
+  // LCS <= Σ_c min(na(c), nb(c)), hence dist = la + lb - 2·LCS >=
+  // Σ_c |na(c) - nb(c)|. Folding code points into bins only merges
+  // counts, and min(x + x', y + y') >= min(x, y) + min(x', y'), so the
+  // folded Σ_k |a_k - b_k| is still <= dist.
+
+  /** Histogram bins of the bag bound: `cp mod 96`, so each printable
+    * ASCII code point (U+0020–U+007F, 96 of them) has a bin of its own
+    * and every other code point folds onto one of them. */
+  val BagBins = 96
+
+  /** Adds the code points of `s` to `hist(off until off + BagBins)` and
+    * returns the code-point length of `s` (the kernel's unit). */
+  def bagSketch(s: String, hist: Array[Int], off: Int): Int = {
+    var i = 0
+    var n = 0
+    while (i < s.length) {
+      val cp = s.codePointAt(i)
+      hist(off + cp % BagBins) += 1
+      n += 1
+      i += Character.charCount(cp)
+    }
+    n
+  }
+
+  /** Σ_k |a_k - b_k| over two [[bagSketch]] histograms: a lower bound of
+    * the indel distance of the two strings. */
+  def bagDistance(ha: Array[Int], offA: Int, hb: Array[Int], offB: Int): Int = {
+    var d = 0
+    var k = 0
+    while (k < BagBins) {
+      d += math.abs(ha(offA + k) - hb(offB + k))
+      k += 1
+    }
+    d
+  }
+
+  /** An upper bound of [[indelRatio100]] for strings of code-point
+    * lengths `la`, `lb` whose [[bagDistance]] is `bag`: the ratio's own
+    * arithmetic with `bag` in place of the distance. The map
+    * d ↦ 100·(1 − d/total) is non-increasing in IEEE arithmetic too, so
+    * the bound holds bit for bit, not just in the reals. */
+  def indelRatioBound100(la: Int, lb: Int, bag: Int): Double = {
+    val total = la + lb
+    if (total == 0) 100.0
+    else 100.0 * (1.0 - bag.toDouble / total)
+  }
 }

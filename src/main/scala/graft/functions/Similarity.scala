@@ -115,20 +115,52 @@ object Similarity {
   /** One weighted field of a multi-field record similarity. */
   final case class WeightedField(a: Column, b: Column, weight: Double, score: (Column, Column) => Column)
 
+  /** A field kernel: its Column ratio, and the string that ratio's DP
+    * runs on (what [[SimKernel.indelRatioBound100]] must sketch). */
+  sealed abstract class Kernel(val ratio: (Column, Column) => Column, val input: String => String)
+  object Kernel {
+    case object TokenSort extends Kernel(tokenSortRatio, SimKernel.tokenSortKey)
+    case object Indel extends Kernel(indelRatio, s => s)
+  }
+
+  /** Whether a field takes part in [[weightedSimilarity]] on one side:
+    * non-null and not blank after `trim`. */
+  def present(c: Column): Column = c.isNotNull && trim(c) =!= ""
+
   /** Weighted multi-field similarity with weight renormalization: fields
     * blank/null on either side drop out and the remaining weights rescale;
     * all fields absent → 0.0 (reference
     * `/root/reference/executive_review_tool.py:233-242`).
     */
   def weightedSimilarity(fields: Seq[WeightedField]): Column = {
-    val present = fields.map { f =>
-      (f.a.isNotNull && trim(f.a) =!= "" && f.b.isNotNull && trim(f.b) =!= "").cast(DoubleType)
-    }
-    val num = fields.zip(present).map { case (f, p) =>
+    val both = fields.map(f => (present(f.a) && present(f.b)).cast(DoubleType))
+    val num = fields.zip(both).map { case (f, p) =>
       when(p === 1.0, f.score(f.a, f.b) * f.weight).otherwise(0.0)
     }.reduce(_ + _)
-    val den = fields.zip(present).map { case (f, p) => p * f.weight }.reduce(_ + _)
+    val den = fields.zip(both).map { case (f, p) => p * f.weight }.reduce(_ + _)
     when(den === 0.0, 0.0).otherwise(num / den)
+  }
+
+  /** An upper bound of [[weightedSimilarity]] from an upper bound of each
+    * field's score, in the Column's own arithmetic and field order (the
+    * same left-to-right sums, the same renormalization, 0.0 when no
+    * field is present). Every step is monotone in IEEE arithmetic, so
+    * field bounds >= field scores give a result >= the Column's double.
+    * `both(i)`: field i is [[present]] on both sides; `bound(i)` is read
+    * only there.
+    */
+  def weightedBound(weights: Array[Double], both: Array[Boolean], bound: Int => Double): Double = {
+    var num = 0.0
+    var den = 0.0
+    var i = 0
+    while (i < weights.length) {
+      if (both(i)) {
+        num += bound(i) * weights(i)
+        den += weights(i)
+      }
+      i += 1
+    }
+    if (den == 0.0) 0.0 else num / den
   }
 }
 

@@ -125,7 +125,7 @@ object ConnectedComponents {
     * a boxed HashMap[Long, Long] costs ~6× per entry, which is the
     * difference between the documented threshold budget and a driver OOM.
     */
-  private def localUnionFind(spark: SparkSession,
+  private[graft] def localUnionFind(spark: SparkSession,
       es: Array[(Long, Long)]): DataFrame = {
     val parent = new LongLongMap(es.length * 2)
     def find(x0: Long): Long = {

@@ -24,6 +24,9 @@ object SimilarityJoin {
 
   final case class Result(pairs: DataFrame, oversizedBlocks: DataFrame)
 
+  /** The default skew guard: blocks of more rows are dropped. */
+  val MaxBlockSize: Long = 100000L
+
   /** @param df        input; must contain `idCol` (unique) and the columns
     *                   used by `blockKey`/`score`
     * @param idCol     unique record id column name
@@ -38,7 +41,7 @@ object SimilarityJoin {
       blockKey: Column,
       score: (String => Column, String => Column) => Column,
       threshold: Double,
-      maxBlockSize: Long = 100000L): Result = {
+      maxBlockSize: Long = MaxBlockSize): Result = {
 
     val withBlock = df.withColumn("__block", blockKey)
     val sizes = withBlock.groupBy("__block").count()

@@ -240,8 +240,9 @@ class IvmJoinSpec extends SparkSpec {
       assert(d.nonEmpty, s"($from,$to): the ladder churns every window")
       assert(d.values.forall(v => v == 1L || v == -1L),
         "under the fact-pk contract a diff row flips presence, never stacks")
-      val applied = (servedAt(from).keySet ++ d.keySet).flatMap { row =>
-        val n = servedAt(from).getOrElse(row, 0L) + d.getOrElse(row, 0L)
+      val before = servedAt(from) // one serve per window, not one per row
+      val applied = (before.keySet ++ d.keySet).flatMap { row =>
+        val n = before.getOrElse(row, 0L) + d.getOrElse(row, 0L)
         if (n > 0) Some(row -> n) else None
       }.toMap
       assert(applied == servedAt(to),

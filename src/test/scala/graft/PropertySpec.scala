@@ -2,6 +2,7 @@ package graft
 
 import scala.util.Random
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.core.Coercions
@@ -54,6 +55,68 @@ class PropertySpec extends SparkSpec {
       val d = SimKernel.indelDistance(a, b)
       assert(d >= math.abs(a.length - b.length) && d <= a.length + b.length, s"$a/$b -> $d")
     }
+  }
+
+  // the bag bound's inputs: empty strings, runs of spaces and tabs, and
+  // astral code points (one symbol each, two UTF-16 chars)
+  private def randSpaced(max: Int): String =
+    Iterator.fill(rnd.nextInt(max + 1))(rnd.nextInt(9) match {
+      case 0 => " "
+      case 1 => "  \t "
+      case 2 => Seq("𝔘", "😀", "𝄞")(rnd.nextInt(3))
+      case _ => ('a' + rnd.nextInt(5)).toChar.toString
+    }).mkString
+
+  // the bag bound of two kernel inputs, sketched as the driver tier does
+  private def bagBound(a: String, b: String): Double = {
+    val h = new Array[Int](2 * SimKernel.BagBins)
+    SimKernel.indelRatioBound100(SimKernel.bagSketch(a, h, 0),
+      SimKernel.bagSketch(b, h, SimKernel.BagBins), SimKernel.bagDistance(h, 0, h, SimKernel.BagBins))
+  }
+
+  test("bag bound: never below token-sort / indel ratio, incl. blanks and astral (2000 samples)") {
+    import org.apache.spark.unsafe.types.UTF8String.{fromString => u}
+    import graft.functions.Similarity.Kernel
+    var tight = 0
+    for (_ <- 1 to 2000) {
+      val a = randSpaced(12); val b = randSpaced(12)
+      val ts = SimKernel.tokenSortRatio100(u(a), u(b))
+      val tsBound = bagBound(Kernel.TokenSort.input(a), Kernel.TokenSort.input(b))
+      assert(tsBound >= ts, s"token sort: '$a'/'$b' $tsBound < $ts")
+      val in = SimKernel.indelRatio100(u(a), u(b))
+      val inBound = bagBound(Kernel.Indel.input(a), Kernel.Indel.input(b))
+      assert(inBound >= in, s"indel: '$a'/'$b' $inBound < $in")
+      if (inBound == in && in < 100.0) tight += 1
+    }
+    assert(tight > 0, "the bound is never tight: a looser bound would pass too")
+  }
+
+  test("weighted bag bound: never below the pipeline's weightedSimilarity (1000 pairs)") {
+    import graft.functions.Similarity
+    import graft.pipeline.ExecutiveDedupPipeline
+    val fields = ExecutiveDedupPipeline.Fields
+    def field() = rnd.nextInt(5) match {
+      case 0 => null
+      case 1 => Seq("", " ", "\t")(rnd.nextInt(3))
+      case _ => randSpaced(10)
+    }
+    val pairs = Seq.fill(1000)(Row.fromSeq(Seq.fill(2 * fields.size)(field())))
+    val schema = org.apache.spark.sql.types.StructType(
+      Seq("l", "r").flatMap(s => fields.map(f => org.apache.spark.sql.types.StructField(
+        s"${f._1}_$s", org.apache.spark.sql.types.StringType))))
+    import scala.jdk.CollectionConverters._
+    val scored = spark.createDataFrame(pairs.asJava, schema).select(
+      ExecutiveDedupPipeline.score(n => col(s"${n}_l"), n => col(s"${n}_r")) +:
+        Seq("l", "r").flatMap(s => fields.map(f => Similarity.present(col(s"${f._1}_$s")))): _*)
+      .collect()
+    val weights = fields.map(_._2).toArray
+    for ((p, s) <- pairs.zip(scored)) {
+      val both = Array.tabulate(fields.size)(i => s.getBoolean(1 + i) && s.getBoolean(1 + fields.size + i))
+      val bound = Similarity.weightedBound(weights, both, i =>
+        bagBound(fields(i)._3.input(p.getString(i)), fields(i)._3.input(p.getString(fields.size + i))))
+      assert(bound >= s.getDouble(0), s"$p: $bound < ${s.getDouble(0)}")
+    }
+    assert(scored.exists(_.getDouble(0) == 0.0) && scored.exists(_.getDouble(0) > 0.0))
   }
 
   // ---------------------------------------------------------------- F7

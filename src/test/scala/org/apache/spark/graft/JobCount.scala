@@ -38,3 +38,31 @@ object JobCount {
     }
   }
 }
+
+/** The Dataset actions a block runs on a session, as (action name, query
+  * execution) in completion order: `collect`, `count`, `localCheckpoint`
+  * and the rest report here once they succeed. Like [[JobCount]] it
+  * drains the listener bus before reading. Actions of other threads on
+  * the same session are seen too, so assert on what must be present.
+  */
+object Actions {
+  def of[T](spark: org.apache.spark.sql.SparkSession)(f: => T)
+      : (T, Seq[(String, org.apache.spark.sql.execution.QueryExecution)]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, org.apache.spark.sql.execution.QueryExecution)]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        seen.add(funcName -> qe)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val r = f
+      spark.sparkContext.listenerBus.waitUntilEmpty()
+      import scala.jdk.CollectionConverters._
+      (r, seen.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+}
