@@ -1,16 +1,19 @@
 package graft.core
 
-/** The out-of-sequence writer fence, shared by every maintained-state
-  * family (the [[graft.operators.IvmJoin.applyDelta]] idiom made
-  * uniform — round-7 verdict): batch stamps commit in SEQUENCE, so a
-  * second writer racing ahead with a fresh id fails loudly here instead
-  * of silently violating the single-writer contract (for families whose
+/** The out-of-sequence writer fence of the FENCED maintained families —
+  * retrieval tf and positional, near-dup (LSH), IVF and the join view;
+  * the exact pair index fences by its dict density check instead. The
+  * commit ledger ([[graft.operators.Ledger]]) is its only caller and
+  * reads whether a kind fences from the kind registry. Batch stamps
+  * commit in SEQUENCE, so a second writer racing ahead with a fresh id
+  * fails loudly here instead of silently violating the single-writer
+  * contract (for families whose
   * appends read pre-state, an interleaved writer would corrupt the
   * pre-state reads; for pure-function appends it would double-index
   * documents under two different stamps, which no read-side collapse
   * can fold). A crashed batch's replay passes: its marker never landed,
-  * so max(committed) + 1 is still its own id. Callers no-op committed
-  * replays BEFORE this fence.
+  * so max(committed) + 1 is still its own id. The ledger no-ops
+  * committed replays BEFORE this fence.
   *
   * COMPAT NOTE (round-8 behavior change): the fence requires a
   * CONTIGUOUS ledger. Pre-fence indexes written with sparse-but-unique

@@ -709,27 +709,8 @@ object Dedup {
       bwrite(groups.select("id", "toks"), s"${table}_sets", "sets", "id"),
       bwrite(probe, s"${table}_postings", "postings", "tok"))),
       scala.concurrent.duration.Duration.Inf)
-    writeBatchMarker(spark, table, s"$path/batches",
-      Seq(0L) ++ Option(commitAlias).filter(_ > 0L))
+    Ledger.built(spark, table, "pairs", path, commitAlias)
   }
-
-  /** Overwrite the `_batches` commit-marker table — build's LAST write. */
-  private def writeBatchMarker(spark: org.apache.spark.sql.SparkSession,
-      table: String, path: String, ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    ids.toDF("batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("path", path).format("parquet")
-      .saveAsTable(s"${table}_batches")
-  }
-
-  /** Committed batch stamps of an incremental index (bounded: one row per
-    * batch; replayed marker appends collapse through the distinct).
-    */
-  private def committedBatches(spark: org.apache.spark.sql.SparkSession,
-      table: String): Set[Long] =
-    spark.table(s"${table}_batches").select("batch_id").distinct()
-      .collect().map(_.getLong(0)).toSet
 
   /** Measured broadcast gates over a collapsed-groups frame, from ONE
     * tiny aggregate (the crossNearDup discipline): `groupsOk` gates the
@@ -971,24 +952,9 @@ object Dedup {
     */
   def extendPairIndex(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, table: String, threshold: Double,
-      batchId: Long, k: Int = 5, nBuckets: Int = 8): Unit = {
-    if (committedBatches(spark, table).contains(batchId)) return
-    require(batchId > 0L, s"batchId must be positive (0 is the build): $batchId")
-    applyExtend(spark, batch, table, threshold, batchId, k, nBuckets)
-    commitExtend(spark, table, batchId)
-  }
-
-  /** The extend's trailing commit stamp — LAST, after every data append
-    * of the batch (the crash contract). Split out so staged crash
-    * windows ([[prepareExtend]]) can commit without recomputing.
-    */
-  private[graft] def commitExtend(spark: org.apache.spark.sql.SparkSession,
-      table: String, batchId: Long): Unit = {
-    import spark.implicits._
-    Seq(batchId).toDF("batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .insertInto(s"${table}_batches")
-  }
+      batchId: Long, k: Int = 5, nBuckets: Int = 8): Unit =
+    Ledger.commit(spark, table, "pairs", batchId)(
+      applyExtend(spark, batch, table, threshold, batchId, k, nBuckets))
 
   /** The four per-batch append frames of one extend, every input pinned
     * upstream — [[prepareExtend]] builds them ONCE, [[appendExtend]]
@@ -1277,15 +1243,9 @@ object Dedup {
     * violation (its new pairs would be silently filtered).
     */
   def deleteFromPairIndex(spark: org.apache.spark.sql.SparkSession,
-      ids: DataFrame, table: String, path: String, batchId: Long): Unit = {
-    if (committedBatches(spark, table).contains(batchId)) return
-    require(batchId > 0L, s"batchId must be positive (0 is the build): $batchId")
-    applyDeleteFromPairIndex(spark, ids, table, path, batchId)
-    import spark.implicits._
-    Seq(batchId).toDF("batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .insertInto(s"${table}_batches")
-  }
+      ids: DataFrame, table: String, path: String, batchId: Long): Unit =
+    Ledger.commit(spark, table, "pairs", batchId)(
+      applyDeleteFromPairIndex(spark, ids, table, path, batchId))
 
   /** The tombstone append WITHOUT the trailing commit stamp — the
     * crashed-delete window, split out for staging (q177 / spec).
@@ -1329,8 +1289,7 @@ object Dedup {
     // preserveNamespace: marker {0, maxCommitted} instead of {0}, so a
     // stopped-but-checkpointed PairIndexStream resumes over the compacted
     // family — graft.core.WriterFence.compactKeepStamps states the contract
-    val keepStamp = graft.core.WriterFence.compactKeepStamps(
-      committedBatches(spark, table), preserveNamespace)
+    val ledger = Ledger.compaction(spark, table, "pairs", preserveNamespace)
     // tombstone purge ([[deleteFromPairIndex]]): compact turns the
     // serve-side anti-join into physical absence — pairs touching a
     // deleted end go, deleted member rows go, groups with NO surviving
@@ -1436,16 +1395,7 @@ object Dedup {
     scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(Seq(pairsF, repTailF, dictF)),
       scala.concurrent.duration.Duration.Inf)
-    if (hasDeletes)
-      // empty frontier: schema-only frame, no checkpoint job (the
-      // [[RetrievalIndex.compact]] move)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          spark.table(s"${table}_deleted").schema)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("path", s"$path/deleted")
-        .format("parquet").saveAsTable(s"${table}_deleted")
-    graft.core.CommitGuard.check() // lease-tenure fence at the commit point
-    writeBatchMarker(spark, table, s"$path/batches", Seq(0L) ++ keepStamp)
+    ledger.commit(path)
   }
 
   /** Persist a near-dup index over a document corpus — the MinHash-LSH
@@ -1482,8 +1432,7 @@ object Dedup {
         enc.withColumn("batch_id", lit(0L)),
         s"${table}_sets", s"$path/sets", "id", nBuckets)))),
       scala.concurrent.duration.Duration.Inf)
-    writeBatchMarker(docs.sparkSession, table, s"$path/batches",
-      Seq(0L) ++ Option(commitAlias).filter(_ > 0L))
+    Ledger.built(docs.sparkSession, table, "lsh", path, commitAlias)
   }
 
   /** Probe a [[buildNearDupIndex]] table with a new batch: batch band keys
@@ -1547,17 +1496,9 @@ object Dedup {
   def extendNearDupIndex(spark: org.apache.spark.sql.SparkSession,
       docs: DataFrame, table: String, batchId: Long,
       k: Int = 5, numHashes: Int = 32, bands: Int = 8,
-      nBuckets: Int = 16): Unit = {
-    val committed = committedBatches(spark, table)
-    if (committed.contains(batchId)) return
-    require(batchId > 0L, s"batchId must be positive (0 is the build): $batchId")
-    graft.core.WriterFence(committed, batchId, "NearDupIndex")
-    applyExtendNearDup(docs, table, batchId, k, numHashes, bands, nBuckets)
-    import spark.implicits._
-    Seq(batchId).toDF("batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .insertInto(s"${table}_batches")
-  }
+      nBuckets: Int = 16): Unit =
+    Ledger.commit(spark, table, "lsh", batchId)(
+      applyExtendNearDup(docs, table, batchId, k, numHashes, bands, nBuckets))
 
   /** The data appends of [[extendNearDupIndex]] WITHOUT the trailing
     * commit stamp — the state a crash after the last data append leaves
@@ -1652,17 +1593,9 @@ object Dedup {
     * replays collapse through the read-side distinct.
     */
   def deleteFromNearDupIndex(spark: org.apache.spark.sql.SparkSession,
-      ids: DataFrame, table: String, path: String, batchId: Long): Unit = {
-    val committed = committedBatches(spark, table)
-    if (committed.contains(batchId)) return
-    require(batchId > 0L, s"batchId must be positive (0 is the build): $batchId")
-    graft.core.WriterFence(committed, batchId, "NearDupIndex")
-    applyDeleteFromNearDupIndex(spark, ids, table, path, batchId)
-    import spark.implicits._
-    Seq(batchId).toDF("batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .insertInto(s"${table}_batches")
-  }
+      ids: DataFrame, table: String, path: String, batchId: Long): Unit =
+    Ledger.commit(spark, table, "lsh", batchId)(
+      applyDeleteFromNearDupIndex(spark, ids, table, path, batchId))
 
   private[graft] def applyDeleteFromNearDupIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -1688,8 +1621,7 @@ object Dedup {
       preserveNamespace: Boolean = false): Unit = {
     // see compactPairIndex: {0, maxCommitted} keeps a checkpointed
     // NearDupStream resumable over the compacted family
-    val keepStamp = graft.core.WriterFence.compactKeepStamps(
-      committedBatches(spark, table), preserveNamespace)
+    val ledger = Ledger.compaction(spark, table, "lsh", preserveNamespace)
     def rewrite(t: String, sub: String, bcol: String, keys: Seq[String]): Unit = {
       val collapsed = dropDeleted(spark, table,
           spark.table(t).dropDuplicates(keys :+ "batch_id"))
@@ -1706,16 +1638,7 @@ object Dedup {
       scala.concurrent.Future(
         rewrite(s"${table}_sets", "sets", "id", Seq("id"))))),
       scala.concurrent.duration.Duration.Inf)
-    if (spark.catalog.tableExists(s"${table}_deleted"))
-      // empty frontier: schema-only frame, no checkpoint job (the
-      // [[RetrievalIndex.compact]] move)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          spark.table(s"${table}_deleted").schema)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("path", s"$path/deleted")
-        .format("parquet").saveAsTable(s"${table}_deleted")
-    graft.core.CommitGuard.check() // lease-tenure fence at the commit point
-    writeBatchMarker(spark, table, s"$path/batches", Seq(0L) ++ keepStamp)
+    ledger.commit(path)
   }
 
   /** The FULL verified pair graph of a [[buildNearDupIndex]] table —

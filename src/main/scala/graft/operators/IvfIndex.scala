@@ -52,11 +52,7 @@ object IvfIndex {
       c.withColumn("cell", VectorOps.ivfCellOf(centroids, col("vec")))
         .withColumn("batch_id", lit(0L)),
       s"${table}_cells", s"$path/cells", "cell", nBuckets)
-    import spark.implicits._
-    (Seq(0L) ++ Option(commitAlias).filter(_ > 0L)).toDF("batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("path", s"$path/batches").format("parquet")
-      .saveAsTable(s"${table}_batches")
+    Ledger.built(spark, table, "ivf", path, commitAlias)
   }
 
   /** The frozen quantizer, read back as the literal matrix every assign
@@ -67,18 +63,9 @@ object IvfIndex {
       .select("cvec").collect().map(_.getSeq[Double](0).toArray)
 
   def extend(spark: SparkSession, batch: DataFrame, table: String,
-      batchId: Long, nBuckets: Int = 16): Unit = {
-    require(batchId > 0L, s"batchId must be positive (0 is the build): $batchId")
-    val committed = spark.table(s"${table}_batches")
-      .select("batch_id").distinct().collect().map(_.getLong(0)).toSet
-    if (committed.contains(batchId)) return
-    graft.core.WriterFence(committed, batchId, "IvfIndex")
-    applyExtend(spark, batch, table, batchId, nBuckets)
-    import spark.implicits._
-    Seq(batchId).toDF("batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .insertInto(s"${table}_batches")
-  }
+      batchId: Long, nBuckets: Int = 16): Unit =
+    Ledger.commit(spark, table, "ivf", batchId)(
+      applyExtend(spark, batch, table, batchId, nBuckets))
 
   /** The assignment append WITHOUT the trailing marker — the crashed-
     * extend window (q181 / spec staging).
@@ -131,18 +118,9 @@ object IvfIndex {
     * distinct; [[compact]] purges physically.
     */
   def deleteIds(spark: SparkSession, ids: DataFrame, table: String,
-      path: String, batchId: Long): Unit = {
-    require(batchId > 0L, s"batchId must be positive (0 is the build): $batchId")
-    val committed = spark.table(s"${table}_batches")
-      .select("batch_id").distinct().collect().map(_.getLong(0)).toSet
-    if (committed.contains(batchId)) return
-    graft.core.WriterFence(committed, batchId, "IvfIndex")
-    applyDeleteIds(spark, ids, table, path, batchId)
-    import spark.implicits._
-    Seq(batchId).toDF("batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .insertInto(s"${table}_batches")
-  }
+      path: String, batchId: Long): Unit =
+    Ledger.commit(spark, table, "ivf", batchId)(
+      applyDeleteIds(spark, ids, table, path, batchId))
 
   private[graft] def applyDeleteIds(spark: SparkSession, ids: DataFrame,
       table: String, path: String, batchId: Long): Unit =
@@ -191,9 +169,7 @@ object IvfIndex {
     */
   def compact(spark: SparkSession, table: String, path: String,
       nBuckets: Int = 16, preserveNamespace: Boolean = false): Unit = {
-    val keepStamp = graft.core.WriterFence.compactKeepStamps(
-      spark.table(s"${table}_batches").select("batch_id").distinct()
-        .collect().map(_.getLong(0)).toSet, preserveNamespace)
+    val ledger = Ledger.compaction(spark, table, "ivf", preserveNamespace)
     val collapsed = dropDeleted(spark, table,
         spark.table(s"${table}_cells")
           .dropDuplicates("id", "cell", "batch_id"))
@@ -201,19 +177,6 @@ object IvfIndex {
       .localCheckpoint() // pinned: the Overwrite reads the table it replaces
     graft.sources.TableWriter.writeBucketed(
       collapsed, s"${table}_cells", s"$path/cells", "cell", nBuckets)
-    if (spark.catalog.tableExists(s"${table}_deleted"))
-      // empty frontier: schema-only frame, no checkpoint job (the
-      // [[RetrievalIndex.compact]] move)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          spark.table(s"${table}_deleted").schema)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("path", s"$path/deleted")
-        .format("parquet").saveAsTable(s"${table}_deleted")
-    import spark.implicits._
-    graft.core.CommitGuard.check() // lease-tenure fence at the commit point
-    (Seq(0L) ++ keepStamp).toDF("batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("path", s"$path/batches").format("parquet")
-      .saveAsTable(s"${table}_batches")
+    ledger.commit(path)
   }
 }

@@ -74,16 +74,8 @@ object IvmJoin {
       scala.concurrent.Future(graft.sources.TableWriter.writeBucketed(
         stamp(fact.join(dim, keys)), table, s"$path/view", keys, nBuckets, ow)))),
       scala.concurrent.duration.Duration.Inf)
-    import spark.implicits._
-    Seq(0L).toDF("batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("path", s"$path/batches").format("parquet")
-      .saveAsTable(s"${table}_batches")
+    Ledger.built(spark, table, "join", path)
   }
-
-  private def committed(spark: SparkSession, table: String): Set[Long] =
-    spark.table(s"${table}_batches").select("batch_id").distinct()
-      .collect().map(_.getLong(0)).toSet
 
   /** Net a stamped log: collapse replayed duplicates per (identity,
     * batch) — FAILING LOUDLY on divergent ones, the [[IvmRollup.serve]]
@@ -134,23 +126,12 @@ object IvmJoin {
 
   def applyDelta(spark: SparkSession, table: String, keys: Seq[String],
       factDelta: DataFrame, dimDelta: DataFrame, batchId: Long,
-      nBuckets: Int): Unit = {
-    val committedSet = committed(spark, table)
-    if (committedSet.contains(batchId)) return
-    require(batchId > 0L, s"batchId must be positive (0 is the build): $batchId")
-    // single-writer fence (the shared [[graft.core.WriterFence]], which
-    // this site originated): batches commit in sequence, so a second
-    // writer racing ahead (whose pre-state would silently include this
-    // batch's partial appends) fails HERE instead of corrupting deltas;
-    // a crashed batch replays with max+1 == its own id and passes.
-    graft.core.WriterFence(committedSet, batchId, "IvmJoin")
-    applyDeltaData(spark, table, keys, factDelta, dimDelta, batchId, nBuckets)
-    import spark.implicits._
-    // the commit stamp — LAST, after every data append of the batch
-    Seq(batchId).toDF("batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .insertInto(s"${table}_batches")
-  }
+      nBuckets: Int): Unit =
+    // fenced ([[Ledger]]): a second writer racing ahead, whose pre-state
+    // would silently include this batch's partial appends, fails before
+    // corrupting deltas; a crashed batch replays as max+1 and passes
+    Ledger.commit(spark, table, "join", batchId)(
+      applyDeltaData(spark, table, keys, factDelta, dimDelta, batchId, nBuckets))
 
   /** The data appends of [[applyDelta]] WITHOUT the trailing commit
     * stamp — the state a crash mid-apply leaves behind, split out so
@@ -413,8 +394,7 @@ object IvmJoin {
 
   def compact(spark: SparkSession, table: String, path: String,
       keys: Seq[String], nBuckets: Int, preserveNamespace: Boolean): Unit = {
-    val keepStamp = graft.core.WriterFence.compactKeepStamps(
-      committed(spark, table), preserveNamespace)
+    val ledger = Ledger.compaction(spark, table, "join", preserveNamespace)
     def fold(t: String, sub: String): Unit = {
       val cols = spark.table(t).columns.filterNot(Seq("dn", "batch_id").contains)
       val base = netted(spark.table(t), cols)
@@ -432,11 +412,6 @@ object IvmJoin {
       scala.concurrent.Future(fold(s"${table}_fact", "fact")),
       scala.concurrent.Future(fold(s"${table}_dim", "dim")))),
       scala.concurrent.duration.Duration.Inf)
-    import spark.implicits._
-    graft.core.CommitGuard.check() // lease-tenure fence at the commit point
-    (Seq(0L) ++ keepStamp).toDF("batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("path", s"$path/batches").format("parquet")
-      .saveAsTable(s"${table}_batches")
+    ledger.commit(path)
   }
 }

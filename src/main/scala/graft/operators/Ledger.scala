@@ -1,0 +1,140 @@
+package graft.operators
+
+import org.apache.spark.sql.{SaveMode, SparkSession}
+
+/** The commit ledger of the maintained families: the exactly-once stamp
+  * protocol, written once for every kind with a commit marker
+  * ([[Maintenance.FamilyKind]]'s `marker`: `_batches`, retrieval's
+  * `_meta`, the positional tier's `_pbatches`).
+  *
+  * Every row a maintained verb appends carries its batch stamp, and the
+  * marker holds one row per COMMITTED stamp, appended LAST:
+  *
+  *  - a stamp in the marker certifies that every append of its batch
+  *    landed, so a replay of a committed batch is a no-op;
+  *  - a stamp missing from the marker means the batch crashed, and its
+  *    replay re-appends byte-identical rows that every read path
+  *    collapses per (keys, batch_id);
+  *  - build writes the marker last as {0} (plus a stream's cold-start
+  *    epoch stamp, `commitAlias`), so a crashed build reads as "no
+  *    family yet" ([[exists]]) and the rebuild overwrites;
+  *  - compact rewrites it last as {0} or {0, maxCommitted}
+  *    ([[graft.core.WriterFence.compactKeepStamps]]), after the
+  *    lease-tenure check ([[graft.core.CommitGuard]]).
+  *
+  * Kinds whose verbs read pre-state or could double-index under two
+  * stamps are FENCED ([[graft.core.WriterFence]]): a fresh stamp must be
+  * max(committed) + 1, so their committed stamps form one contiguous run
+  * ([[Maintenance.fsck]] audits it). The exact pair index is not fenced:
+  * its dict density check catches an interleaved writer, and its stream
+  * stamps adds and deletes of one epoch apart and skips empty epochs, so
+  * its stamps may leave gaps.
+  *
+  * Retrieval's `_meta` is the one marker with a payload: each row
+  * carries the batch's signed document count (`n_docs`) in front of the
+  * stamp, and the ranking's N is their sum.
+  */
+private[graft] object Ledger {
+
+  private def kindOf(kind: String) = Maintenance.familyKind(kind)
+
+  /** The table holding the kind's stamps: its marker, or for the
+    * markerless rollup the log itself (max visible stamp is committed
+    * there). */
+  private def ledger(table: String, kind: String): String =
+    kindOf(kind).marker.fold(table)(Maintenance.tableOf(table, _))
+
+  /** The cold-start probe: whether the family's build committed. */
+  def exists(spark: SparkSession, table: String, kind: String): Boolean =
+    spark.catalog.tableExists(ledger(table, kind))
+
+  /** The distinct stamps of a stamped table: one bounded collect. */
+  def stampsOf(spark: SparkSession, t: String): Set[Long] =
+    spark.table(t).select("batch_id").distinct().collect().map(_.getLong(0)).toSet
+
+  /** The family's committed stamps. */
+  def committed(spark: SparkSession, table: String, kind: String): Set[Long] =
+    stampsOf(spark, ledger(table, kind))
+
+  /** The stamped-verb frame: refuse a non-positive stamp, no-op a
+    * committed replay, fence the writer where the kind fences, run the
+    * verb's data appends, then append the marker row LAST. */
+  def commit(spark: SparkSession, table: String, kind: String, batchId: Long)(
+      appends: => Unit): Unit =
+    commitCounted(spark, table, kind, batchId) { appends; 0L }
+
+  /** [[commit]] for a verb whose appends return the marker's payload. */
+  def commitCounted(spark: SparkSession, table: String, kind: String, batchId: Long)(
+      appends: => Long): Unit = {
+    require(batchId > 0L, s"batchId must be positive (0 is the build): $batchId")
+    val done = committed(spark, table, kind)
+    if (done.contains(batchId)) return
+    if (kindOf(kind).fenced) graft.core.WriterFence(done, batchId, s"$kind family $table")
+    val n = appends
+    mark(spark, table, kind, Seq(batchId), n, None)
+  }
+
+  /** The marker append alone, for staging a crash window in two steps. */
+  def append(spark: SparkSession, table: String, kind: String, batchId: Long): Unit =
+    mark(spark, table, kind, Seq(batchId), 0L, None)
+
+  /** Build's LAST write: the marker overwritten as {0}, plus a stream's
+    * cold-start stamp `commitAlias` when positive. `n` is the payload of
+    * the stamp-0 row. */
+  def built(spark: SparkSession, table: String, kind: String, path: String,
+      commitAlias: Long = -1L, n: Long = 0L): Unit =
+    mark(spark, table, kind, Seq(0L) ++ Option(commitAlias).filter(_ > 0L), n, Some(path))
+
+  /** A compact's view of the ledger, read once before its rewrites: the
+    * stamps the marker keeps and the payload the batch-0 row carries
+    * (retrieval's surviving N; one collect answers both). */
+  final class Compaction private[Ledger] (spark: SparkSession, table: String,
+      kind: String, keep: Seq[Long], n: Long) {
+
+    /** The compact's commit, after its data rewrites: truncate the
+      * tombstone frontier, check the lease tenure, rewrite the marker. */
+    def commit(path: String): Unit = {
+      val deleted = Maintenance.tableOf(table, "deleted")
+      if (kindOf(kind).logs.contains("deleted") && spark.catalog.tableExists(deleted))
+        // an empty frontier needs no read of the table it truncates: an
+        // empty frame with the same schema skips the checkpoint job
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            spark.table(deleted).schema)
+          .write.mode(SaveMode.Overwrite).option("path", s"$path/deleted")
+          .format("parquet").saveAsTable(deleted)
+      graft.core.CommitGuard.check() // lease-tenure fence at the commit point
+      mark(spark, table, kind, Seq(0L) ++ keep, n, Some(path))
+    }
+  }
+
+  def compaction(spark: SparkSession, table: String, kind: String,
+      preserveNamespace: Boolean): Compaction = {
+    val (stamps, n) = kindOf(kind).payload match {
+      case Some(payload) =>
+        val rows = spark.table(ledger(table, kind))
+          .dropDuplicates(payload, "batch_id").collect()
+        (rows.map(_.getAs[Long]("batch_id")).toSet, rows.map(_.getAs[Long](payload)).sum)
+      case None => (committed(spark, table, kind), 0L)
+    }
+    new Compaction(spark, table, kind,
+      graft.core.WriterFence.compactKeepStamps(stamps, preserveNamespace), n)
+  }
+
+  /** Write marker rows for `stamps`: the first carries payload `n`, the
+    * rest 0 (neutral to N). Appends when `path` is None, else
+    * overwrites the marker at `path/<marker suffix>`. */
+  private def mark(spark: SparkSession, table: String, kind: String,
+      stamps: Seq[Long], n: Long, path: Option[String]): Unit = {
+    import spark.implicits._
+    val k = kindOf(kind)
+    val marker = ledger(table, kind)
+    val rows = stamps.zipWithIndex.map { case (s, i) => (if (i == 0) n else 0L, s) }
+      .toDF(k.payload.getOrElse("payload"), "batch_id")
+    val df = if (k.payload.isDefined) rows else rows.select("batch_id")
+    path match {
+      case None => df.write.mode(SaveMode.Append).insertInto(marker)
+      case Some(p) => df.write.mode(SaveMode.Overwrite)
+        .option("path", s"$p/${k.marker.get}").format("parquet").saveAsTable(marker)
+    }
+  }
+}

@@ -645,22 +645,28 @@ object Maintenance {
     * The snapshot tier's closed vocabulary is derived, never restated:
     * [[suffixes]] = marker ∪ logs ∪ side tables — what the family
     * operators actually WRITE, so anything else sharing the name prefix
-    * is not family state.
+    * is not family state. `fenced` and `payload` are read by the commit
+    * ledger ([[Ledger]]): whether a fresh stamp must be max(committed) + 1
+    * (every marker-ful kind but `pairs`, whose fence is its dict density
+    * check), and the column a marker row carries in front of its stamp.
     */
   private[operators] final case class FamilyKind(marker: Option[String],
       logs: Seq[String], side: Seq[String],
-      compactIfDue: (SparkSession, Family, CompactPolicy) => Boolean) {
+      compactIfDue: (SparkSession, Family, CompactPolicy) => Boolean,
+      fenced: Boolean = true, payload: Option[String] = None) {
     def suffixes: Set[String] = (marker.toSeq ++ logs ++ side).toSet
   }
 
   private val kinds: Seq[(String, FamilyKind)] = Seq(
     "pairs" -> FamilyKind(Some("batches"),
       Seq("base", "members", "sets", "postings", "deleted"), Seq("dict"),
-      (s, f, p) => compactPairsIfDue(s, f.table, f.path, p, f.nBuckets)),
+      (s, f, p) => compactPairsIfDue(s, f.table, f.path, p, f.nBuckets),
+      fenced = false),
     "lsh" -> FamilyKind(Some("batches"), Seq("postings", "sets", "deleted"),
       Nil, (s, f, p) => compactLshIfDue(s, f.table, f.path, p, f.nBuckets)),
     "retrieval" -> FamilyKind(Some("meta"), Seq("postings", "deleted"), Nil,
-      (s, f, p) => compactRetrievalIfDue(s, f.table, f.path, p, f.nBuckets)),
+      (s, f, p) => compactRetrievalIfDue(s, f.table, f.path, p, f.nBuckets),
+      payload = Some("n_docs")),
     "positions" -> FamilyKind(Some("pbatches"), Seq("positions", "deleted"),
       Nil, (s, f, p) => compactPositionsIfDue(s, f.table, f.path, p, f.nBuckets)),
     "ivf" -> FamilyKind(Some("batches"), Seq("cells", "deleted"),
@@ -672,7 +678,8 @@ object Maintenance {
         compactJoinIfDue(s, f.table, f.path, f.joinKeys, p, f.nBuckets)
       }),
     "rollup" -> FamilyKind(None, Seq("base"), Nil,
-      (s, f, p) => compactRollupIfDue(s, f.table, f.path, p, f.nBuckets)))
+      (s, f, p) => compactRollupIfDue(s, f.table, f.path, p, f.nBuckets),
+      fenced = false))
 
   private[operators] def familyKind(kind: String): FamilyKind =
     kinds.collectFirst { case (`kind`, k) => k }.getOrElse(
@@ -701,19 +708,21 @@ object Maintenance {
     *
     *  1. `marker_present` / `marker_base`: the commit marker exists,
     *     is non-empty, and contains the build's stamp 0.
-    *  2. `marker_shape`: the non-zero committed stamps form ONE
-    *     contiguous run ending at max — the only two shapes the
-    *     protocol can write are {0..max} (build + fenced extends) and
-    *     {0, m..max} (a namespace-preserving compact at m, then
-    *     extends), and both satisfy this; a HOLE (a stamp missing
-    *     mid-run) can only mean ledger corruption, because the fence
-    *     admits exactly max+1 and compact rewrites the whole marker.
+    *  2. `marker_shape`: on a FENCED kind ([[Ledger]]) the non-zero
+    *     committed stamps form ONE contiguous run ending at max — the
+    *     only two shapes the protocol can write are {0..max} (build +
+    *     fenced extends) and {0, m..max} (a namespace-preserving compact
+    *     at m, then extends); a HOLE can only mean ledger corruption,
+    *     because the fence admits exactly max+1 and compact rewrites the
+    *     whole marker. The unfenced `pairs` kind admits any fresh stamp
+    *     (its stream stamps an epoch's adds 2·(e+1) and its deletes
+    *     2·(e+1)+1, and skips empty epochs), so gaps are legal there.
     *  3. `log_stamps:<table>`: every stamped log's distinct batch ids
-    *     are ⊆ committed ∪ {max+1} — at most ONE uncommitted stamp may
-    *     exist and it must be exactly max+1 (the crash window between a
-    *     batch's data appends and its marker commit). Two uncommitted
-    *     stamps, or an uncommitted stamp below max, cannot be produced
-    *     by the protocol.
+    *     are committed but for at most ONE in-flight stamp (the crash
+    *     window between a batch's data appends and its marker commit):
+    *     exactly max+1 on a fenced kind, any stamp above max on an
+    *     unfenced one. Two uncommitted stamps, or an uncommitted stamp
+    *     below max, cannot be produced by the protocol.
     *
     * Cost: bounded — the marker collect is one row per batch, and each
     * log check is a column-pruned distinct over its `batch_id` column
@@ -729,7 +738,6 @@ object Maintenance {
     */
   def fsck(spark: SparkSession, table: String, kind: String):
       org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
     val k = familyKind(kind)
     val markerOpt = k.marker.map(tableOf(table, _))
     val logs = k.logs.map(tableOf(table, _))
@@ -738,12 +746,11 @@ object Maintenance {
     // committed stamps (rollup: derived from the log itself, no marker)
     val committed: Set[Long] = markerOpt match {
       case Some(marker) =>
-        if (!spark.catalog.tableExists(marker)) {
+        if (!Ledger.exists(spark, table, kind)) {
           rows += (("marker_present", marker, false, "marker table absent"))
           Set.empty
         } else {
-          val stamps = spark.table(marker).select("batch_id").distinct()
-            .collect().map(_.getLong(0)).toSet
+          val stamps = Ledger.committed(spark, table, kind)
           rows += (("marker_present", marker, stamps.nonEmpty,
             s"${stamps.size} committed stamps"))
           if (stamps.nonEmpty) {
@@ -751,10 +758,9 @@ object Maintenance {
               "build stamp 0 " +
                 (if (stamps.contains(0L)) "present" else "MISSING")))
             val nz = stamps.filter(_ != 0L).toSeq.sorted
-            val contiguous = nz.isEmpty ||
-              nz == (nz.head to nz.max)
+            val contiguous = !k.fenced || nz.isEmpty || nz == (nz.head to nz.max)
             rows += (("marker_shape", marker, contiguous,
-              if (contiguous) s"non-zero run ${nz.headOption.getOrElse(0L)}..${nz.lastOption.getOrElse(0L)}"
+              if (contiguous) s"non-zero stamps ${nz.headOption.getOrElse(0L)}..${nz.lastOption.getOrElse(0L)}"
               else s"HOLE in committed run: ${nz.take(12).mkString(",")}"))
           }
           stamps
@@ -762,6 +768,7 @@ object Maintenance {
       case None => Set.empty
     }
     val maxCommitted = if (committed.nonEmpty) committed.max else -1L
+    val inFlight = (s: Long) => if (k.fenced) s == maxCommitted + 1L else s > maxCommitted
     // per-log stamp audits are independent bounded collects — overlap
     // their fixed per-action latency (guide §2.6); Par.run preserves
     // input order, so the report rows are identical to the sequential
@@ -775,8 +782,7 @@ object Maintenance {
       else if (!spark.table(t).columns.contains("batch_id"))
         (s"log_stamps:$t", t, true, "unstamped (no batch_id)")
       else {
-        val stamps = spark.table(t).select(col("batch_id")).distinct()
-          .collect().map(_.getLong(0)).toSet
+        val stamps = Ledger.stampsOf(spark, t)
         if (markerOpt.isEmpty)
           // markerless rollup: stamps carry no cross-table contract;
           // audit only that the log is non-degenerate
@@ -784,10 +790,10 @@ object Maintenance {
             s"${stamps.size} distinct stamps")
         else {
           val unknown = stamps -- committed
-          val ok = unknown.isEmpty || unknown == Set(maxCommitted + 1L)
+          val ok = unknown.isEmpty || (unknown.size == 1 && inFlight(unknown.head))
           (s"log_stamps:$t", t, ok,
             if (unknown.isEmpty) s"${stamps.size} stamps, all committed"
-            else if (ok) s"one in-flight stamp ${maxCommitted + 1L} (crash window)"
+            else if (ok) s"one in-flight stamp ${unknown.head} (crash window)"
             else s"ORPHAN stamps beyond the crash window: ${unknown.toSeq.sorted.take(12).mkString(",")}")
         }
       }

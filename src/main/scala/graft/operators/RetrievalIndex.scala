@@ -71,98 +71,46 @@ object RetrievalIndex {
     s
   }
 
-  /** Write order is the crash contract: postings first, `_meta` LAST as
-    * the commit marker — [[RetrievalStream]] (and any caller probing for
-    * an existing index) checks `_meta`, so a crash between the two
-    * writes reads as "no index yet" and the next build safely overwrites
-    * the orphaned postings instead of extending a half-built pair.
-    *
-    * Exactly-once under replay, the [[Dedup.buildPairIndex]] /
-    * [[IvmRollup]] protocol: every posting row carries a `batch_id`
-    * stamp (build = 0), and `_meta` — one `(n_docs, batch_id)` row per
-    * COMMITTED batch, written last — doubles as the per-batch commit
-    * marker ([[extend]] probes it to make replays of committed batches
-    * no-ops; a crashed batch's replay re-appends byte-identical rows
-    * that the serve paths collapse per (term, doc_id, batch_id)).
-    *
-    * `commitAlias` (streaming): record the given stamp as committed in
-    * the SAME meta write (an `n_docs = 0` row — neutral to N), so a
-    * [[RetrievalStream]] cold-start build that crashes after this
-    * marker but before the checkpoint commit replays into the extend
-    * path and no-ops there instead of indexing the batch twice.
-    *
-    * `docs` is pinned once: postings and the cardinality row must see
-    * the same snapshot, and the corpus scan is paid once, not twice.
+  /** Build the index: the postings (stamp 0), then `_meta` LAST, one
+    * `(n_docs, batch_id)` row per committed batch — the commit marker
+    * and the ranking's N ([[Ledger]]: a crash between the two writes
+    * reads as "no index yet" and the next build overwrites).
+    * `commitAlias` records a stream cold-start's own stamp as an
+    * `n_docs = 0` row, neutral to N. The document count is observed on
+    * the postings write, so both see one scan of `docs`.
     */
   def build(docs: DataFrame, table: String, path: String, nBuckets: Int = 16,
       commitAlias: Long = -1L): Unit = {
-    // the cardinality rides the postings write as an observed metric
-    // (guide §2.4: the count and the postings see the SAME single scan
-    // of the batch — what the localCheckpoint+count pair this replaces
-    // pinned with two extra jobs)
     val obs = org.apache.spark.sql.Observation()
     val d = docs.observe(obs, count(lit(1)).as("n_docs"))
     graft.sources.TableWriter.writeBucketed(
       postings(d).withColumn("batch_id", lit(0L)),
       s"${table}_postings", s"$path/postings", "term", nBuckets)
-    val spark = d.sparkSession
-    import spark.implicits._
-    // a zero-task write (empty batch → zero input splits) reports an
-    // EMPTY metrics map, which is exactly a count of 0
-    (Seq((obs.get.getOrElse("n_docs", 0L).asInstanceOf[Long], 0L)) ++
-      Option(commitAlias).filter(_ > 0L).map((0L, _)))
-      .toDF("n_docs", "batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("path", s"$path/meta").format("parquet")
-      .saveAsTable(s"${table}_meta")
+    Ledger.built(d.sparkSession, table, "retrieval", path, commitAlias, observed(obs))
   }
 
-  /** Committed batch stamps: one `_meta` row per batch, distinct-folded
-    * (bounded — a handful of rows, collected as the replay gate).
-    */
-  private def committedBatches(spark: SparkSession, table: String): Set[Long] =
-    spark.table(s"${table}_meta").select("batch_id").distinct()
-      .collect().map(_.getLong(0)).toSet
+  /** The document count observed on a write. A zero-task write (empty
+    * batch → zero input splits) reports an EMPTY metrics map, which is
+    * exactly a count of 0. */
+  private def observed(obs: org.apache.spark.sql.Observation): Long =
+    obs.get.getOrElse("n_docs", 0L).asInstanceOf[Long]
 
-  /** Fold a new batch into the index, exactly-once under replay:
-    *
-    *  - a replay of a COMMITTED batch (its stamp is in `_meta`) is a
-    *    no-op;
-    *  - a replay of a CRASHED batch (postings appended, meta missing)
-    *    re-runs [[applyExtend]] — a deterministic function of the
-    *    pinned batch, so the re-appended rows are byte-identical and
-    *    the serve-side (term, doc_id, batch_id) collapse recovers the
-    *    exact index — then appends the meta/marker row LAST.
-    *
-    * N is never double-counted: the meta row is the final write and its
-    * presence gates the no-op. Stamps must be unique per batch — the
-    * single-writer contract ([[graft.streaming.RetrievalStream]] derives
-    * them from the checkpoint's epoch) — and the contract is FENCED, not
-    * just documented ([[graft.core.WriterFence]]): a fresh stamp must be
-    * max(committed) + 1, so two writers interleaving fresh ids (which
-    * would double-index documents under two stamps no read-side
-    * collapse can fold) fail loudly here.
+  /** Fold a new batch into the index under the [[Ledger]] frame (the
+    * kind is fenced): a committed replay no-ops, a crashed replay
+    * re-appends byte-identical postings that the serve paths collapse
+    * per (term, doc_id, batch_id), and N is never double-counted because
+    * the `_meta` row carrying the batch's count lands LAST.
     */
   def extend(docs: DataFrame, table: String, batchId: Long,
-      nBuckets: Int = 16): Unit = {
-    val spark = docs.sparkSession
-    val committed = committedBatches(spark, table)
-    if (committed.contains(batchId)) return
-    graft.core.WriterFence(committed, batchId, "RetrievalIndex")
-    // cardinality observed on the postings append's own scan — the
-    // meta row still records exactly what the postings saw (one pinned
-    // evaluation, as before, minus the checkpoint + count jobs)
-    val obs = org.apache.spark.sql.Observation()
-    applyExtend(docs.observe(obs, count(lit(1)).as("n_docs")),
-      table, batchId, nBuckets)
-    import spark.implicits._
-    // empty-batch extends (a quiet stream epoch) run zero tasks and
-    // report an empty metrics map — i.e. a count of 0
-    Seq((obs.get.getOrElse("n_docs", 0L).asInstanceOf[Long], batchId))
-      .toDF("n_docs", "batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .insertInto(s"${table}_meta")
-  }
+      nBuckets: Int = 16): Unit =
+    Ledger.commitCounted(docs.sparkSession, table, "retrieval", batchId) {
+      // cardinality observed on the postings append's own scan — the
+      // meta row records exactly what the postings saw
+      val obs = org.apache.spark.sql.Observation()
+      applyExtend(docs.observe(obs, count(lit(1)).as("n_docs")),
+        table, batchId, nBuckets)
+      observed(obs)
+    }
 
   /** The extend's DATA append without the trailing meta commit — the
     * state a crash after the postings append leaves behind. Exposed for
@@ -192,17 +140,9 @@ object RetrievalIndex {
     * so N never double-subtracts.
     */
   def deleteDocs(spark: SparkSession, ids: DataFrame, table: String,
-      path: String, batchId: Long): Unit = {
-    require(batchId > 0L, s"batchId must be positive (0 is the build): $batchId")
-    val committed = committedBatches(spark, table)
-    if (committed.contains(batchId)) return
-    graft.core.WriterFence(committed, batchId, "RetrievalIndex")
-    val n = applyDeleteDocs(spark, ids, table, path, batchId)
-    import spark.implicits._
-    Seq((-n, batchId)).toDF("n_docs", "batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .insertInto(s"${table}_meta")
-  }
+      path: String, batchId: Long): Unit =
+    Ledger.commitCounted(spark, table, "retrieval", batchId)(
+      -applyDeleteDocs(spark, ids, table, path, batchId))
 
   /** The tombstone append WITHOUT the trailing meta commit — the
     * crashed-delete window (q180 / spec staging).
@@ -347,35 +287,20 @@ object RetrievalIndex {
     * converges. The positional tier ([[buildPositions]]) keeps its own
     * lifecycle and is untouched.
     *
-    * `preserveNamespace` (the round-9 PLANS.md "epoch→stamp ledger"
-    * lift, option 1): write the marker as {0, maxCommitted} instead of
-    * {0}, so a STOPPED-but-checkpointed stream can resume over the
-    * compacted index — its next epoch-derived stamp is maxCommitted + 1
-    * and passes the [[graft.core.WriterFence]], and a replay of its
-    * LAST committed epoch (the only epoch foreachBatch can re-deliver)
-    * no-ops on the preserved stamp. Forgetting the INTERIOR stamps
-    * (1..max−1) is safe for exactly that reason — no replay of them can
-    * arrive from the one checkpoint that owns this index — and it is
-    * the feature for everyone else: a MANUAL replay of a pre-compact
-    * batch id now fails the fence loudly instead of re-applying as a
-    * fresh batch (spec-pinned). Quiescence is still required, in the
-    * strong sense: the stream must be stopped with its last delivered
-    * epoch COMMITTED (no orphaned data-without-marker appends — those
-    * would fold into batch 0 and then re-deliver). Default stays the
-    * full reset: manual ladders restart at batchId = 1 (q182's shape).
+    * `preserveNamespace` keeps the marker at {0, maxCommitted}
+    * ([[graft.core.WriterFence.compactKeepStamps]]) so a stopped stream
+    * resumes over the compacted index; it must stop with its last
+    * delivered epoch COMMITTED, or its orphaned appends fold into batch
+    * 0 and then re-deliver. The default resets to {0}: manual ladders
+    * restart at batchId = 1 (q182's shape).
     */
   def compact(spark: SparkSession, table: String, path: String,
       nBuckets: Int = 16, preserveNamespace: Boolean = false): Unit = {
     // ONE bounded collect of the `_meta` ledger answers both the exact
     // surviving N (corpusN's sum over distinct (n_docs, batch_id)) and
-    // the committed stamp set — fused from two jobs (guide §2.4),
-    // values bit-identical to the two-read original
-    val metaRows = spark.table(s"${table}_meta")
-      .dropDuplicates("n_docs", "batch_id").collect()
-    val n = metaRows.map(_.getAs[Long]("n_docs")).sum
-    val keepStamp = graft.core.WriterFence.compactKeepStamps(
-      metaRows.map(_.getAs[Long]("batch_id")).toSet, preserveNamespace)
-    val hasDeletes = spark.catalog.tableExists(s"${table}_deleted")
+    // the committed stamp set; the preserved stamp rides as an
+    // n_docs = 0 row, neutral to N
+    val ledger = Ledger.compaction(spark, table, "retrieval", preserveNamespace)
     val collapsed = dropDeletedDocs(spark, table,
         spark.table(s"${table}_postings")
           .dropDuplicates("term", "doc_id", "batch_id"))
@@ -383,22 +308,7 @@ object RetrievalIndex {
       .localCheckpoint() // pinned: the Overwrite reads the table it replaces
     graft.sources.TableWriter.writeBucketed(
       collapsed, s"${table}_postings", s"$path/postings", "term", nBuckets)
-    if (hasDeletes)
-      // an EMPTY frontier needs no read of the table it truncates — an
-      // empty frame with the same schema skips the checkpoint job
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          spark.table(s"${table}_deleted").schema)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("path", s"$path/deleted")
-        .format("parquet").saveAsTable(s"${table}_deleted")
-    import spark.implicits._
-    graft.core.CommitGuard.check() // lease-tenure fence at the commit point
-    // the preserved stamp rides as an n_docs = 0 row — neutral to N,
-    // exactly the commitAlias encoding the stream cold-start uses
-    (Seq((n, 0L)) ++ keepStamp.map((0L, _))).toDF("n_docs", "batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("path", s"$path/meta").format("parquet")
-      .saveAsTable(s"${table}_meta")
+    ledger.commit(path)
   }
 
   /** q88 from the index: the top `k` documents per query by Σ tf·idf_scaled
@@ -574,17 +484,9 @@ object RetrievalIndex {
     graft.sources.TableWriter.writeBucketed(
       positionRows(docs).withColumn("batch_id", lit(0L)),
       s"${table}_positions", s"$path/positions", "term", nBuckets)
-    // `_pbatches` — the positional tier's committed-batch ledger and
-    // commit marker, written LAST (the `_meta` protocol): build = {0}.
-    // `commitAlias` records a streaming cold-start epoch's own stamp in
-    // the SAME marker write (the [[build]] move), so a crash after this
-    // marker but before the checkpoint commit replays into a no-op
-    // extend instead of indexing the batch twice.
-    import docs.sparkSession.implicits._
-    (Seq(0L) ++ Option(commitAlias).filter(_ > 0L)).toDF("batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("path", s"$path/pbatches").format("parquet")
-      .saveAsTable(s"${table}_pbatches")
+    // `_pbatches` — the positional tier's commit marker, written LAST
+    // (the `_meta` protocol), with a stream cold-start's own stamp
+    Ledger.built(docs.sparkSession, table, "positions", path, commitAlias)
   }
 
   /** (term, doc_id, positions) of one corpus slice — the pure function
@@ -608,19 +510,9 @@ object RetrievalIndex {
     * never renumber anything.
     */
   def extendPositions(docs: DataFrame, table: String, batchId: Long,
-      nBuckets: Int = 16): Unit = {
-    require(batchId > 0L, s"batchId must be positive (0 is the build): $batchId")
-    val spark = docs.sparkSession
-    val committed = spark.table(s"${table}_pbatches")
-      .select("batch_id").distinct().collect().map(_.getLong(0)).toSet
-    if (committed.contains(batchId)) return
-    graft.core.WriterFence(committed, batchId, "RetrievalIndex.positions")
-    applyExtendPositions(docs, table, batchId, nBuckets)
-    import spark.implicits._
-    Seq(batchId).toDF("batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .insertInto(s"${table}_pbatches")
-  }
+      nBuckets: Int = 16): Unit =
+    Ledger.commit(docs.sparkSession, table, "positions", batchId)(
+      applyExtendPositions(docs, table, batchId, nBuckets))
 
   /** The positions append WITHOUT the trailing marker — the crashed-
     * extend window, split out for staging (q178 / spec).
@@ -640,18 +532,9 @@ object RetrievalIndex {
     * ranked, AND phrase search together.
     */
   def deletePositionDocs(spark: SparkSession, ids: DataFrame, table: String,
-      path: String, batchId: Long): Unit = {
-    require(batchId > 0L, s"batchId must be positive (0 is the build): $batchId")
-    val committed = spark.table(s"${table}_pbatches")
-      .select("batch_id").distinct().collect().map(_.getLong(0)).toSet
-    if (committed.contains(batchId)) return
-    graft.core.WriterFence(committed, batchId, "RetrievalIndex.positions")
-    applyDeletePositionDocs(spark, ids, table, path, batchId)
-    import spark.implicits._
-    Seq(batchId).toDF("batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .insertInto(s"${table}_pbatches")
-  }
+      path: String, batchId: Long): Unit =
+    Ledger.commit(spark, table, "positions", batchId)(
+      applyDeletePositionDocs(spark, ids, table, path, batchId))
 
   private[graft] def applyDeletePositionDocs(spark: SparkSession,
       ids: DataFrame, table: String, path: String, batchId: Long): Unit =
@@ -671,9 +554,7 @@ object RetrievalIndex {
     */
   def compactPositions(spark: SparkSession, table: String, path: String,
       nBuckets: Int = 16, preserveNamespace: Boolean = false): Unit = {
-    val keepStamp = graft.core.WriterFence.compactKeepStamps(
-      spark.table(s"${table}_pbatches").select("batch_id").distinct()
-        .collect().map(_.getLong(0)).toSet, preserveNamespace)
+    val ledger = Ledger.compaction(spark, table, "positions", preserveNamespace)
     val collapsed = dropDeletedDocs(spark, table,
         spark.table(s"${table}_positions")
           .dropDuplicates("term", "doc_id", "batch_id"))
@@ -681,19 +562,7 @@ object RetrievalIndex {
       .localCheckpoint() // pinned: the Overwrite reads the table it replaces
     graft.sources.TableWriter.writeBucketed(
       collapsed, s"${table}_positions", s"$path/positions", "term", nBuckets)
-    if (spark.catalog.tableExists(s"${table}_deleted"))
-      // empty frontier: schema-only frame, no checkpoint job (as in compact)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          spark.table(s"${table}_deleted").schema)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("path", s"$path/deleted")
-        .format("parquet").saveAsTable(s"${table}_deleted")
-    import spark.implicits._
-    graft.core.CommitGuard.check() // lease-tenure fence at the commit point
-    (Seq(0L) ++ keepStamp).toDF("batch_id")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("path", s"$path/pbatches").format("parquet")
-      .saveAsTable(s"${table}_pbatches")
+    ledger.commit(path)
   }
 
   /** Exact phrase search from the positional index: a document matches

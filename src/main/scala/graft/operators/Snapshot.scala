@@ -532,13 +532,10 @@ object Snapshot {
       kind: String): Long = {
     // markerless rollup: the committed-cut surrogate — max visible
     // stamp of its own log, with the slice's stability proven in export
-    val ledger = Maintenance.familyKind(kind).marker
-      .fold(table)(Maintenance.tableOf(table, _))
-    val committed = spark.table(ledger).select("batch_id").distinct()
-      .collect().map(_.getLong(0))
+    val committed = Ledger.committed(spark, table, kind)
     require(committed.nonEmpty,
-      s"Snapshot: $ledger holds no committed stamps — nothing " +
-        "consistent to cut at (crashed build?)")
+      s"Snapshot: the $kind family $table holds no committed stamps — " +
+        "nothing consistent to cut at (crashed build?)")
     committed.max
   }
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{BroadcastGate, Coercions, RoleResolver}
+import graft.core.{BroadcastGate, Coercions, Num, RoleResolver}
 import graft.functions.{SimKernel, Similarity}
 import graft.operators.{ConnectedComponents, EntityOps, SimilarityJoin}
 
@@ -242,19 +242,13 @@ object ExecutiveDedupPipeline {
           score(n => col(s"${n}_l"), n => col(s"${n}_r")).as("sim"))
     val edges = survivors.result().grouped(ScoreChunk)
       .flatMap(chunk => scored(chunk.toSeq).collect().filter(_.getDouble(2) >= threshold))
-      .toArray.sortBy(e => (e.getLong(0), -e.getLong(1)))
+      .toArray
 
     val comp = ConnectedComponents.localUnionFind(spark,
       edges.map(e => (e.getLong(0), e.getLong(1))))
-    // `bands` averages a component's edge scores in the order its input
-    // streams them, and a double sum depends on its order. A component's
-    // edges all lie in one block. Within the collect gate the distributed
-    // tier's self-join runs as a broadcast hash join into one partition,
-    // which emits a block's pairs by src ascending, then dst descending
-    // (the hashed relation returns a key's rows newest first), and its
-    // checkpoint has no size statistics, so `bands` streams it against a
-    // broadcast `comp`. An RDD frame of one partition in that order is
-    // read the same way.
+    // one RDD partition, not a local frame: without size statistics the
+    // edges stream against a broadcast `comp`, as the distributed tier's
+    // checkpoint does (a local frame costs each downstream write a job)
     val edgeFrame = spark.createDataFrame(
       spark.sparkContext.parallelize(edges.toSeq, 1), scored(Nil).schema)
     Some(Graph(ids, edgeFrame, comp))
@@ -298,7 +292,9 @@ object ExecutiveDedupPipeline {
 
     val bands = edges.join(comp, edges("src") === comp("id"))
       .groupBy("component")
-      .agg(avg("sim").as("avg_sim"), count(lit(1)).as("n_edges"))
+      // a decimal sum, so the average is the same in any edge order (the
+      // oracle's DECIMAL(38,8) cast, ReferenceOps q30)
+      .agg(Num.davg(col("sim"), 8).as("avg_sim"), count(lit(1)).as("n_edges"))
       .join(clustered.groupBy("component").agg(count(lit(1)).as("n_members")), "component")
       .filter(col("n_members") > 1) // P8: singletons are not groups
       .withColumn("band", EntityOps.band(col("avg_sim"), highBand, threshold))

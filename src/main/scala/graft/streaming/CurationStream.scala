@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Ledger}
 import graft.pipeline.DedupPipeline
 
 /** Streaming incremental corpus curation — the streaming twin of
@@ -25,7 +25,8 @@ import graft.pipeline.DedupPipeline
   * (stable across replays — the foreachBatch contract), a committed
   * replay skips, a crashed replay re-appends byte-identical rows that
   * every index read collapses per (keys, batch_id). Cold start probes
-  * `_batches` — the build's LAST write, its commit marker — and the
+  * the commit marker ([[graft.operators.Ledger.exists]], the build's
+  * LAST write) and the
   * build records the epoch's own stamp (`commitAlias`) so a crash
   * between the marker and the checkpoint commit replays into a no-op
   * extend. NOTE the keepSink is still at-least-once: idempotence there
@@ -55,7 +56,7 @@ object CurationStream {
         // the pipeline runs several actions over the batch (stats, CC,
         // probes) — pin the micro-batch once
         val b = batch.localCheckpoint()
-        if (sp.catalog.tableExists(s"${indexTable}_batches")) {
+        if (Ledger.exists(sp, indexTable, "lsh")) {
           if (b.isEmpty)
             // an EMPTY epoch still stamps its marker (zero data rows):
             // the writer fence requires max(committed) + 1, and a

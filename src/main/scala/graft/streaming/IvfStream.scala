@@ -3,14 +3,14 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.IvfIndex
+import graft.operators.{IvfIndex, Ledger}
 
 /** Streaming ingest for the IVF vector index — the [[RetrievalStream]]
   * pattern on the vector tier, closing the verb matrix's last stream
   * cell: vectors arrive as a stream of (id, vec) rows, the first
   * non-empty micro-batch TRAINS the quantizer and builds the index
-  * (cold start — [[IvfIndex.build]]'s `_batches` marker is the
-  * existence probe), and every later epoch assigns ONLY its own batch
+  * (cold start — [[IvfIndex.build]]'s commit marker is the
+  * existence probe, [[graft.operators.Ledger.exists]]), and every later epoch assigns ONLY its own batch
   * under the frozen centroids ([[IvfIndex.extend]], cost ∝ batch).
   *
   * Exactly-once via the index's stamp protocol: stamps are
@@ -20,7 +20,7 @@ import graft.operators.IvfIndex
   * of the frozen centroids and the batch) that [[IvfIndex.topK]]
   * collapses per (id, batch_id). EMPTY epochs still extend — zero cell
   * rows plus the marker — so the stamp ledger stays contiguous for the
-  * writer fence ([[graft.core.WriterFence]]). One checkpoint owns one
+  * writer fence ([[graft.operators.Ledger]]). One checkpoint owns one
   * index; `commitAlias` records the cold-start epoch's own stamp so a
   * crash between the build's marker and the checkpoint commit replays
   * into a no-op extend.
@@ -49,7 +49,7 @@ object IvfStream {
       nBuckets: Int = 16): Unit = {
     val sp = batch.sparkSession
     val b = batch.localCheckpoint() // existence probe + assignment share it
-    if (sp.catalog.tableExists(s"${table}_batches"))
+    if (Ledger.exists(sp, table, "ivf"))
       IvfIndex.extend(sp, b, table, batchId = epochId + 1, nBuckets)
     else if (!b.isEmpty)
       IvfIndex.build(b, table, path, nCells, iters, nBuckets,

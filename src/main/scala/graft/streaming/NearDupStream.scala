@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Ledger}
 
 /** Streaming ingest for the persisted MinHash-LSH near-dup index — the
   * [[RetrievalStream]] pattern on the LSH tier. This is the INDEX
@@ -16,8 +16,9 @@ import graft.operators.Dedup
   * verb matrix's LSH stream cell is this one.
   *
   * Exactly-once via the index's own batch-stamp protocol (the
-  * [[PairIndexStream]] design): cold start probes `_batches` (the
-  * build's LAST write, its commit marker) and the build records the
+  * [[PairIndexStream]] design): cold start probes the commit marker
+  * (the build's LAST write, [[graft.operators.Ledger.exists]]) and the
+  * build records the
   * epoch's own stamp (`commitAlias`); extends stamp `epochId + 1`
   * (stable across replays — the foreachBatch contract), a committed
   * replay no-ops on the marker, a crashed replay re-appends
@@ -25,7 +26,7 @@ import graft.operators.Dedup
   * [[Dedup.hashedSets]] encoding) that every read path collapses per
   * (keys, batch_id). EMPTY epochs still extend — zero data rows plus
   * the marker — so the stamp ledger stays contiguous for the writer
-  * fence ([[graft.core.WriterFence]]). One checkpoint owns one index.
+  * fence ([[graft.operators.Ledger]]). One checkpoint owns one index.
   */
 object NearDupStream {
 
@@ -48,7 +49,7 @@ object NearDupStream {
       bands: Int = 8): Unit = {
     val sp = batch.sparkSession
     val b = batch.localCheckpoint() // existence probe + hash pass share it
-    if (sp.catalog.tableExists(s"${table}_batches"))
+    if (Ledger.exists(sp, table, "lsh"))
       Dedup.extendNearDupIndex(sp, b, table, batchId = epochId + 1,
         k, numHashes, bands)
     else if (!b.isEmpty)

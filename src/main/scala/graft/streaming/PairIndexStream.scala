@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Ledger}
 
 /** Streaming ingest for the EXACT near-dup pair index — documents
   * arrive as a stream, each micro-batch pairs ONLY against itself and
@@ -17,8 +17,8 @@ import graft.operators.Dedup
   *
   *  - Cold start: the first non-empty batch builds the index
   *    ([[Dedup.buildPairIndex]] incremental mode). The existence probe
-  *    checks `_batches` — the LAST write and therefore the commit
-  *    marker — so a crash mid-build reads as "no index yet" on replay
+  *    ([[Ledger.exists]]) checks the commit marker, the build's LAST
+  *    write, so a crash mid-build reads as "no index yet" on replay
   *    and the rebuild overwrites the orphaned partial tables. The
   *    build also commits the epoch's own stamp (`commitAlias`), so a
   *    crash AFTER the marker but before the checkpoint commit replays
@@ -28,7 +28,9 @@ import graft.operators.Dedup
   *    replay re-appends byte-identical rows that
   *    [[Dedup.servePairIndex]] collapses. No duplicate pairs, no
   *    batch half-missing from the side tables — the two failure
-  *    shapes the unstamped design documented are both closed.
+  *    shapes the unstamped design documented are both closed. Empty
+  *    epochs are skipped unstamped: the pairs kind does not fence its
+  *    writer, so its stamps may leave gaps ([[Ledger]]).
   *
   * One checkpoint owns one index (stamps are epoch-derived): pointing a
   * NEW checkpoint at an existing index would restart epochs at 0 and
@@ -44,7 +46,7 @@ object PairIndexStream {
         val sp = batch.sparkSession
         val b = batch.localCheckpoint() // existence probe + both paths share it
         if (!b.isEmpty) {
-          if (sp.catalog.tableExists(s"${table}_batches"))
+          if (Ledger.exists(sp, table, "pairs"))
             Dedup.extendPairIndex(sp, b, table, threshold, batchId = epochId + 1)
           else
             Dedup.buildPairIndex(b, table, path, threshold, nBuckets,
@@ -90,14 +92,14 @@ object PairIndexStream {
     val adds = b.filter(col("op") === "add").select("id", "text")
     val addStamp = 2L * (epochId + 1)
     if (!adds.isEmpty) {
-      if (sp.catalog.tableExists(s"${table}_batches"))
+      if (Ledger.exists(sp, table, "pairs"))
         Dedup.extendPairIndex(sp, adds, table, threshold, batchId = addStamp)
       else
         Dedup.buildPairIndex(adds, table, path, threshold, nBuckets,
           incremental = true, commitAlias = addStamp)
     }
     val dels = b.filter(col("op") === "delete").select("id")
-    if (!dels.isEmpty && sp.catalog.tableExists(s"${table}_batches"))
+    if (!dels.isEmpty && Ledger.exists(sp, table, "pairs"))
       Dedup.deleteFromPairIndex(sp, dels, table, path,
         batchId = addStamp + 1)
     ()

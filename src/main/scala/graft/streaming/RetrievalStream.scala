@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.RetrievalIndex
+import graft.operators.{Ledger, RetrievalIndex}
 
 /** Streaming ingest for the persisted inverted index — the
   * [[CurationStream]] pattern applied to retrieval: documents arrive as
@@ -19,8 +19,9 @@ import graft.operators.RetrievalIndex
   * (the [[PairIndexStream]] design):
   *
   *  - Cold start: the first non-empty batch builds the table pair
-  *    ([[RetrievalIndex.build]]). The existence probe checks `_meta` —
-  *    build's LAST write, its commit marker — so a crash mid-build
+  *    ([[RetrievalIndex.build]]). The existence probe
+  *    ([[graft.operators.Ledger.exists]]) checks the commit marker,
+  *    build's LAST write, so a crash mid-build
   *    reads as "no index yet" on replay and the rebuild overwrites the
   *    orphaned postings. The build also commits the epoch's own stamp
   *    (`commitAlias`), so a crash AFTER the marker but before the
@@ -28,8 +29,8 @@ import graft.operators.RetrievalIndex
   *  - Extends: stamped with `epochId + 1` (stable across replays — the
   *    foreachBatch contract). A committed replay skips; a crashed
   *    replay re-appends byte-identical postings that the serve paths
-  *    collapse per (term, doc_id, batch_id), and `_meta`'s N is never
-  *    double-counted (the meta row is the trailing commit).
+  *    collapse per (term, doc_id, batch_id), and the ledger's N is
+  *    never double-counted (the marker row is the trailing commit).
   *
   * One checkpoint owns one index (stamps are epoch-derived) — the
   * single-writer contract.
@@ -52,7 +53,7 @@ object RetrievalStream {
   def foldEpoch(batch: DataFrame, epochId: Long, table: String,
       path: String, nBuckets: Int = 16): Unit = {
     val sp = batch.sparkSession
-    if (sp.catalog.tableExists(s"${table}_meta"))
+    if (Ledger.exists(sp, table, "retrieval"))
       // an EMPTY epoch still extends: zero postings plus a (0, stamp)
       // meta row, so N is unchanged and the stamp ledger stays
       // contiguous — the writer fence requires max(committed) + 1,
@@ -84,7 +85,7 @@ object RetrievalStream {
       .start()
 
   /** One positional epoch's fold, static-stageable like [[foldEpoch]].
-    * Cold start probes `_pbatches` (the tier's marker, written LAST by
+    * Cold start probes the tier's marker (written LAST by
     * [[RetrievalIndex.buildPositions]]) and records the epoch's own
     * stamp via `commitAlias`; extends stamp `epochId + 1`, and EMPTY
     * epochs still stamp to keep the fence's ledger contiguous.
@@ -92,7 +93,7 @@ object RetrievalStream {
   def foldEpochPositions(batch: DataFrame, epochId: Long, table: String,
       path: String, nBuckets: Int = 16): Unit = {
     val sp = batch.sparkSession
-    if (sp.catalog.tableExists(s"${table}_pbatches"))
+    if (Ledger.exists(sp, table, "positions"))
       // extendPositions scans the batch once (its positions append) —
       // no checkpoint needed on the hot path (the foldEpoch move)
       RetrievalIndex.extendPositions(batch, table, batchId = epochId + 1)

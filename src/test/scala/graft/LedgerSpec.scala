@@ -1,0 +1,221 @@
+package graft
+
+import org.apache.spark.graft.JobCount
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.operators.{Dedup, IvfIndex, IvmJoin, RetrievalIndex, Snapshot}
+import graft.streaming.RetrievalStream
+
+/** The commit ledger of the maintained families, one row per kind that
+  * keeps a commit marker: a non-positive stamp is refused, a committed
+  * replay adds no rows, a crashed replay (the verb's data appends, then
+  * the whole verb) converges to the uncrashed family, and on the fenced
+  * kinds a stamp of max + 2 fails the writer fence. Each row also pins
+  * the exact job counts of its extend, delete and compact.
+  */
+class LedgerSpec extends SparkSpec {
+  import LedgerSpec.Kind
+
+  private val Buckets = 2
+
+  /** 40 short documents; ids with the same `id % 8` share all but one
+    * word, so the pair tiers find pairs in every batch. */
+  private def docs(from: Int, until: Int, idCol: String): DataFrame = {
+    val words = Seq("alpha", "bravo", "charlie", "delta", "echo", "foxtrot",
+      "golf", "hotel", "india", "juliet", "kilo", "lima")
+    val rows = (from until until).map { i =>
+      val base = (0 until 8).map(w => words((i % 8 + w) % words.size))
+      (i.toLong, (base.updated(i % 7, s"w$i")).mkString(" "))
+    }
+    spark.createDataFrame(rows).toDF(idCol, "text")
+  }
+
+  private def vectors(from: Int, until: Int): DataFrame =
+    spark.createDataFrame((from until until).map { i =>
+      (i.toLong, Seq(1.0 + i % 5, (i % 3).toDouble, 2.0 - i % 4, 0.5 * (i % 2)))
+    }).toDF("id", "vec")
+
+  private def fact(from: Int, until: Int, dn: Long): DataFrame =
+    spark.createDataFrame((from until until).map(i => (i.toLong % 6, i.toLong, 1.5 * i, dn)))
+      .toDF("k", "o", "v", "dn")
+  private def dim(keys: Seq[Long], dn: Long): DataFrame =
+    spark.createDataFrame(keys.map(k => (k, s"seg$k", dn))).toDF("k", "seg", "dn")
+
+  private def collected(df: DataFrame): Set[String] =
+    df.collect().map(_.mkString("|")).toSet
+
+  private val threshold = 0.3
+  private val queries = Seq((1, Seq("alpha", "golf")), (2, Seq("w33", "kilo")))
+  private val phrases = Seq((1, Seq("bravo", "charlie")), (2, Seq("kilo", "lima")))
+
+  private val kinds = Seq(
+    Kind("pairs", Seq("base", "members", "sets", "postings", "dict", "batches", "deleted"),
+      fenced = false,
+      (t, p) => Dedup.buildPairIndex(docs(0, 24, "id"), t, p, threshold,
+        nBuckets = Buckets, incremental = true),
+      (t, b) => Dedup.extendPairIndex(spark, docs(24, 40, "id"), t, threshold, b,
+        nBuckets = Buckets),
+      (t, b) => Dedup.applyExtend(spark, docs(24, 40, "id"), t, threshold, b, 5,
+        nBuckets = Buckets),
+      Some((t, p, b) => Dedup.deleteFromPairIndex(spark,
+        docs(0, 40, "id").filter(col("id") % 5 === 0), t, p, b)),
+      (t, p) => Dedup.compactPairIndex(spark, t, p, Buckets),
+      t => collected(Dedup.servePairIndex(spark, t)),
+      Map("extend" -> 35, "delete" -> 5, "compact" -> 26)),
+    Kind("lsh", Seq("postings", "sets", "batches", "deleted"), fenced = true,
+      (t, p) => Dedup.buildNearDupIndex(docs(0, 24, "id"), t, p, nBuckets = Buckets),
+      (t, b) => Dedup.extendNearDupIndex(spark, docs(24, 40, "id"), t, b,
+        nBuckets = Buckets),
+      (t, b) => Dedup.applyExtendNearDup(docs(24, 40, "id"), t, b, 5, 32, 8, Buckets),
+      Some((t, p, b) => Dedup.deleteFromNearDupIndex(spark,
+        docs(0, 40, "id").filter(col("id") % 5 === 0), t, p, b)),
+      (t, p) => Dedup.compactNearDupIndex(spark, t, p, Buckets),
+      t => collected(Dedup.serveNearDupPairs(spark, t, threshold)),
+      Map("extend" -> 8, "delete" -> 5, "compact" -> 14)),
+    Kind("retrieval", Seq("postings", "meta", "deleted"), fenced = true,
+      (t, p) => RetrievalIndex.build(docs(0, 24, "doc_id"), t, p, Buckets),
+      (t, b) => RetrievalIndex.extend(docs(24, 40, "doc_id"), t, b, Buckets),
+      (t, b) => RetrievalIndex.applyExtend(docs(24, 40, "doc_id"), t, b, Buckets),
+      Some((t, p, b) => RetrievalIndex.deleteDocs(spark,
+        docs(0, 40, "doc_id").filter(col("doc_id") % 5 === 0), t, p, b)),
+      (t, p) => RetrievalIndex.compact(spark, t, p, Buckets),
+      t => collected(RetrievalIndex.topK(spark, t, queries, k = 5)),
+      Map("extend" -> 6, "delete" -> 8, "compact" -> 9)),
+    Kind("positions", Seq("positions", "pbatches", "deleted"), fenced = true,
+      (t, p) => RetrievalIndex.buildPositions(docs(0, 24, "doc_id"), t, p, Buckets),
+      (t, b) => RetrievalIndex.extendPositions(docs(24, 40, "doc_id"), t, b, Buckets),
+      (t, b) => RetrievalIndex.applyExtendPositions(docs(24, 40, "doc_id"), t, b, Buckets),
+      Some((t, p, b) => RetrievalIndex.deletePositionDocs(spark,
+        docs(0, 40, "doc_id").filter(col("doc_id") % 5 === 0), t, p, b)),
+      (t, p) => RetrievalIndex.compactPositions(spark, t, p, Buckets),
+      t => collected(RetrievalIndex.phrase(spark, t, phrases)),
+      Map("extend" -> 6, "delete" -> 5, "compact" -> 9)),
+    Kind("ivf", Seq("centroids", "cells", "batches", "deleted"), fenced = true,
+      (t, p) => IvfIndex.build(vectors(0, 24), t, p, nCells = 2, iters = 1,
+        nBuckets = Buckets),
+      (t, b) => IvfIndex.extend(spark, vectors(24, 40), t, b, Buckets),
+      (t, b) => IvfIndex.applyExtend(spark, vectors(24, 40), t, b, Buckets),
+      Some((t, p, b) => IvfIndex.deleteIds(spark,
+        vectors(0, 40).filter(col("id") % 5 === 0).select("id"), t, p, b)),
+      (t, p) => IvfIndex.compact(spark, t, p, Buckets),
+      t => collected(IvfIndex.topK(spark, t,
+        vectors(0, 3).select(col("id").as("qid"), col("vec").as("qvec")), k = 4,
+        nProbe = 2)),
+      Map("extend" -> 8, "delete" -> 5, "compact" -> 9)),
+    Kind("join", Seq("base", "fact", "dim", "batches"), fenced = true,
+      (t, p) => IvmJoin.build(fact(0, 24, 1L).drop("dn"), dim(0L until 6L, 1L).drop("dn"),
+        "k", t, p, Buckets),
+      (t, b) => IvmJoin.applyDelta(spark, t, "k", fact(24, 40, 1L), dim(Nil, 1L), b,
+        Buckets),
+      (t, b) => IvmJoin.applyDeltaData(spark, t, "k", fact(24, 40, 1L), dim(Nil, 1L), b,
+        Buckets),
+      None,
+      (t, p) => IvmJoin.compact(spark, t, p, Seq("k"), Buckets),
+      t => collected(IvmJoin.serve(spark, t)),
+      Map("extend" -> 15, "compact" -> 12)))
+
+  private def tableOf(t: String, s: String) = if (s == "base") t else s"${t}_$s"
+
+  private def fresh(k: Kind, name: String): (String, String) = {
+    val t = s"ledger_${k.kind}_$name"
+    k.suffixes.foreach(s => spark.sql(s"DROP TABLE IF EXISTS ${tableOf(t, s)}"))
+    val p = graft.core.Scratch.path(t)
+    k.build(t, p)
+    (t, p)
+  }
+
+  /** Rows in every table of the family, marker included. */
+  private def rows(k: Kind, t: String): Map[String, Long] =
+    k.suffixes.map(tableOf(t, _)).filter(spark.catalog.tableExists)
+      .map(n => n -> spark.table(n).count()).toMap
+
+  kinds.foreach { k =>
+    test(s"${k.kind}: a non-positive stamp is refused before anything is read") {
+      val (t, p) = fresh(k, "zero")
+      Seq(0L, -1L).foreach { b =>
+        val e = intercept[IllegalArgumentException](k.extend(t, b))
+        assert(e.getMessage.contains("must be positive"), e.getMessage)
+        k.delete.foreach { d =>
+          intercept[IllegalArgumentException](d(t, p, b))
+        }
+      }
+    }
+
+    test(s"${k.kind}: a committed replay adds no rows") {
+      val (t, p) = fresh(k, "replay")
+      k.extend(t, 1L)
+      val afterExtend = rows(k, t)
+      k.extend(t, 1L)
+      assert(rows(k, t) == afterExtend)
+      k.delete.foreach { d =>
+        d(t, p, 2L)
+        val afterDelete = rows(k, t)
+        d(t, p, 2L)
+        assert(rows(k, t) == afterDelete)
+      }
+    }
+
+    test(s"${k.kind}: a crashed replay converges to the uncrashed family") {
+      val (clean, _) = fresh(k, "clean")
+      k.extend(clean, 1L)
+      val (crashed, _) = fresh(k, "crashed")
+      k.stage(crashed, 1L)
+      k.extend(crashed, 1L)
+      val want = k.serve(clean)
+      assert(want.nonEmpty)
+      assert(k.serve(crashed) == want)
+    }
+
+    test(s"${k.kind}: a stamp of max + 2 " +
+        (if (k.fenced) "fails the writer fence" else "commits (the kind does not fence)")) {
+      val (t, _) = fresh(k, "fence")
+      if (k.fenced) {
+        val e = intercept[IllegalArgumentException](k.extend(t, 2L))
+        assert(e.getMessage.contains("out of sequence"), e.getMessage)
+      } else {
+        k.extend(t, 2L)
+        assert(rows(k, t)(tableOf(t, "batches")) == 2L)
+      }
+    }
+
+    test(s"${k.kind}: extend, delete and compact run their pinned job counts") {
+      val (t, p) = fresh(k, "pins")
+      val sc = spark.sparkContext
+      val got = Map("extend" -> JobCount.all(sc)(k.extend(t, 1L))._2) ++
+        k.delete.map(d => "delete" -> JobCount.all(sc)(d(t, p, 2L))._2) ++
+        Map("compact" -> JobCount.all(sc)(k.compact(t, p))._2)
+      assert(got == k.pins)
+    }
+  }
+
+  test("RetrievalStream.foldEpoch cold and warm, and Snapshot.committedCut, " +
+      "run their pinned job counts") {
+    val t = "ledger_stream"
+    Seq("postings", "meta", "deleted").foreach(s => spark.sql(s"DROP TABLE IF EXISTS ${t}_$s"))
+    val p = graft.core.Scratch.path(t)
+    val sc = spark.sparkContext
+    val cold = JobCount.all(sc)(
+      RetrievalStream.foldEpoch(docs(0, 24, "doc_id"), 0L, t, p, Buckets))._2
+    val warm = JobCount.all(sc)(
+      RetrievalStream.foldEpoch(docs(24, 40, "doc_id"), 1L, t, p, Buckets))._2
+    val (cut, cutJobs) = JobCount.all(sc)(Snapshot.committedCut(spark, t, "retrieval"))
+    assert(cut == 2L)
+    assert((cold, warm, cutJobs) == ((6, 6, 2)))
+  }
+}
+
+object LedgerSpec {
+
+  /** One kind: its tables (suffixes of the family name, "base" = the
+    * family's own table), build, the extend verb and its crash seam (the
+    * data appends without the marker), delete, compact and a serve. */
+  final case class Kind(kind: String, suffixes: Seq[String], fenced: Boolean,
+      build: (String, String) => Unit,
+      extend: (String, Long) => Unit,
+      stage: (String, Long) => Unit,
+      delete: Option[(String, String, Long) => Unit],
+      compact: (String, String) => Unit,
+      serve: String => Set[String],
+      pins: Map[String, Int])
+}

@@ -6,7 +6,7 @@ import graft.core.Tables
 import graft.operators.{Dedup, IvfIndex, IvmJoin, Maintenance, RetrievalIndex}
 import graft.operators.Maintenance.CompactPolicy
 import graft.queries.CurationOps
-import graft.streaming.RetrievalStream
+import graft.streaming.{PairIndexStream, RetrievalStream}
 
 /** The maintenance loop's round-10 lifts: the NAMESPACE-PRESERVING
   * compact (a checkpointed stream survives a policy compact — the
@@ -299,6 +299,26 @@ class MaintenanceSpec extends SparkSpec {
     val bad = fsckBad(table, "retrieval")
     assert(bad.exists(_.startsWith("log_stamps:")),
       s"orphan stamp must trip the log check, got $bad")
+  }
+
+  test("fsck: a stream-built pair index with gaps in its stamps reads clean") {
+    val table = "mnt_fsck_cdc"
+    drop(table, Seq("members", "sets", "postings", "dict", "batches", "deleted"))
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val path = graft.core.Scratch.path(table)
+    val adds = docs.select(col("doc_id").as("id"), col("text"), lit("add").as("op"))
+    // two add-only CDC epochs stamp their adds 2·(e+1): committed {0, 2, 4}
+    PairIndexStream.foldCdc(adds.filter(col("id") % 3 === 0), 0L, table, path, 0.8)
+    PairIndexStream.foldCdc(adds.filter(col("id") % 3 === 1), 1L, table, path, 0.8)
+    assert(marker(s"${table}_batches") == Set(0L, 2L, 4L))
+    assert(fsckBad(table, "pairs").isEmpty, "the unfenced kind's gaps are legal")
+    // epoch 2 crashes after its adds' data appends: in flight at 6 = max + 2
+    val third = adds.filter(col("id") % 3 === 2).select("id", "text")
+    Dedup.applyExtend(spark, third, table, 0.8, 6L, 5)
+    assert(fsckBad(table, "pairs").isEmpty, "the in-flight stamp above max is legal")
+    // a second uncommitted stamp, below max, is still an orphan
+    Dedup.applyDeleteFromPairIndex(spark, adds.limit(1).select("id"), table, path, 3L)
+    assert(fsckBad(table, "pairs").contains(s"log_stamps:${table}_deleted"))
   }
 
   test("fsck covers the remaining families: pairs, IVF, join view") {

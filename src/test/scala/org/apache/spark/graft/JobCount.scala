@@ -37,6 +37,29 @@ object JobCount {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** `f`'s result and the number of Spark jobs started on `sc` while it
+    * ran, from any thread. Verbs that append through `Future`s on the
+    * global pool submit jobs from pool threads, whose inherited local
+    * properties belong to whichever block first spawned them, so [[of]]
+    * would miss those jobs. The suites run one at a time in one JVM, so
+    * nothing else submits jobs while a pinned block runs.
+    */
+  def all[T](sc: SparkContext)(f: => T): (T, Int) = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    sc.listenerBus.waitUntilEmpty()
+    sc.addSparkListener(listener)
+    try {
+      val r = f
+      sc.listenerBus.waitUntilEmpty()
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 /** The Dataset actions a block runs on a session, as (action name, query
