@@ -89,7 +89,8 @@ object ServeBench {
     // per-schedule overhead the q219 maintenance loop pays (a not-due
     // read: batches axis only, never the tombstone scans)
     val (tProbe, _) = timeMin3(
-      if (graft.operators.Maintenance.shouldCompactRetrieval(spark, table,
+      if (graft.operators.Maintenance.shouldCompact(spark,
+        graft.operators.Maintenance.Family(table, "retrieval", path),
         graft.operators.Maintenance.CompactPolicy(
           maxBatches = 99L, maxDeadFraction = 1.0))) 1L else 0L)
     RetrievalIndex.compact(spark, table, path)
@@ -153,7 +154,7 @@ object ServeBench {
     val (tPre, nPre) = timeMin3(IvmRollup.serve(spark, table).count())
     val (tDesc, _) = timeMin3(IvmRollup.describe(spark, table).count())
     val (tProbe, _) = timeMin3(
-      if (Maintenance.shouldCompactRollup(spark, table,
+      if (Maintenance.shouldCompact(spark, Maintenance.Family(table, "rollup", path),
         Maintenance.CompactPolicy(maxBatches = 99L, maxDeadFraction = 1.0))) 1L else 0L)
     // the round-10 diff verb vs what a consumer WITHOUT it pays for the
     // same answer: serve both versions and full-outer-join them

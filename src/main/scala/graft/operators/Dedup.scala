@@ -1181,19 +1181,10 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
     // tombstones ([[deleteFromPairIndex]]): pairs touching a deleted
     // document disappear from every serve — surviving pair scores are
-    // pairwise, so the anti-join IS the corpus-minus-deleted semantics.
-    // The deletion frontier is small by the right-to-be-forgotten
-    // argument (q151/q165) and table-backed, so Catalyst broadcasts it
-    // from its own statistics; indexes without deletions skip the join
-    // entirely (one catalog probe).
-    if (spark.catalog.tableExists(s"${table}_deleted")) {
-      val del = spark.table(s"${table}_deleted")
-        .filter(col("batch_id") <= asOf).select("id").distinct()
-      pairs
-        .join(del.withColumnRenamed("id", "id_a"), Seq("id_a"), "left_anti")
-        .join(del.withColumnRenamed("id", "id_b"), Seq("id_b"), "left_anti")
-        .select("id_a", "id_b", "jaccard")
-    } else pairs
+    // pairwise, so the anti-join on both ends IS the
+    // corpus-minus-deleted semantics
+    Frontier.purge(spark, table, "pairs", pairs, asOf, Seq("id_a", "id_b"))
+      .select("id_a", "id_b", "jaccard")
   }
 
   /** Operational statistics of an incremental [[buildPairIndex]] table
@@ -1211,36 +1202,23 @@ object Dedup {
       table: String): DataFrame = {
     val members = spark.table(s"${table}_members")
       .select("id").distinct() // (rep, id, batch_id) replay dups collapse
-    val del =
-      if (spark.catalog.tableExists(s"${table}_deleted"))
-        spark.table(s"${table}_deleted").select("id").distinct()
-      else members.limit(0)
     // three bounded scalar aggregates; the 1×1 crossJoins are the
     // broadcast-scalar shape (QualityAudit's), not data products
-    members.join(del, Seq("id"), "left_anti")
+    Frontier.purge(spark, table, "pairs", members)
       .agg(count(lit(1)).as("live_docs"))
       .crossJoin(servePairIndex(spark, table).agg(count(lit(1)).as("live_pairs")))
-      .crossJoin(del.agg(count(lit(1)).as("tombstoned")))
+      .crossJoin(Frontier.tombstoned(spark, table, "pairs"))
   }
 
   /** Tombstone documents in an incremental [[buildPairIndex]] table —
-    * the right-to-be-forgotten leg of the maintained tier. Cost ∝
-    * |deleted|: ONE append to a `_deleted` side table; no index rewrite
-    * (the q151/q165 deletion-plan argument — audits pay a small
-    * anti-join until [[compactPairIndex]] purges physically). Serve
-    * semantics become "the pair graph of corpus MINUS deleted": every
-    * pair with a deleted end disappears, surviving pair scores are
-    * untouched (Jaccard is pairwise). Later extends stay correct with
-    * NO interaction: new batch×history pairs against deleted docs are
-    * still generated into the pairs table, and the serve anti-join
-    * removes them — correctness lives in one place.
-    *
-    * Exactly-once like the extends: tombstones are stamped, the
-    * `_batches` marker append goes LAST, committed replays no-op, and
-    * crashed replays re-append byte-identical ids that the serve-side
-    * distinct collapses. Tombstones are permanent until a compact
-    * purges them; re-ingesting a deleted id is a caller-contract
-    * violation (its new pairs would be silently filtered).
+    * the [[Frontier]] protocol. Serve semantics become "the pair graph
+    * of corpus MINUS deleted": every pair with a deleted end
+    * disappears, surviving pair scores are untouched (Jaccard is
+    * pairwise). Later extends stay correct with NO interaction: new
+    * batch×history pairs against deleted docs are still generated into
+    * the pairs table, and the serve anti-join removes them. Re-ingesting
+    * a deleted id is a caller-contract violation (its new pairs would be
+    * silently filtered until a compact purges the tombstone).
     */
   def deleteFromPairIndex(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, table: String, path: String, batchId: Long): Unit =
@@ -1253,30 +1231,12 @@ object Dedup {
   private[graft] def applyDeleteFromPairIndex(
       spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, table: String, path: String, batchId: Long): Unit =
-    ids.select(col("id")).dropDuplicates("id")
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1) // a deletion frontier is one small file, not 32
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .option("path", s"$path/deleted")
-      .format("parquet").saveAsTable(s"${table}_deleted")
+    Frontier.append(ids, table, "pairs", path, batchId)
 
   /** Fold an incremental [[buildPairIndex]] table family back to a
-    * single batch-0 state — the [[IvmRollup.compact]] of the pair
-    * index: replayed-crash duplicates collapse away physically (not
-    * just at serve), and each table rewrites to one file per bucket,
-    * so read cost stops growing with the number of batches folded.
-    *
-    * Restartable, not transactional: each table rewrite is an
-    * Overwrite of a PINNED collapsed frame (the rewrite reads the
-    * table it replaces), and a crash between rewrites leaves a
-    * CONTENT-EQUIVALENT index — collapse only removes byte-identical
-    * duplicate rows, and every read path collapses stamps anyway — so
-    * rerunning compact converges (idempotent). The `_batches` marker
-    * rewrites LAST to exactly {0}: like [[IvmRollup.compact]] /
-    * q175, compaction RESETS the replay namespace — it requires
-    * quiescence (the single-writer contract), and callers must not
-    * replay pre-compact batch ids afterward (they would re-apply as
-    * new batches).
+    * single batch-0 state ([[Ledger.Compaction]]), so read cost stops
+    * growing with the number of batches folded. The pairs table and
+    * the unstamped `_dict` rewrite through their own folds below.
     *
     * Fails loudly BEFORE rewriting if any pair appears under two
     * different batch ids: that contract violation is kept visible by
@@ -1289,7 +1249,7 @@ object Dedup {
     // preserveNamespace: marker {0, maxCommitted} instead of {0}, so a
     // stopped-but-checkpointed PairIndexStream resumes over the compacted
     // family — graft.core.WriterFence.compactKeepStamps states the contract
-    val ledger = Ledger.compaction(spark, table, "pairs", preserveNamespace)
+    val ledger = Ledger.compaction(spark, table, "pairs", path, preserveNamespace)
     // tombstone purge ([[deleteFromPairIndex]]): compact turns the
     // serve-side anti-join into physical absence — pairs touching a
     // deleted end go, deleted member rows go, groups with NO surviving
@@ -1298,27 +1258,12 @@ object Dedup {
     // content label, never a served pair end — it stays). Ordering
     // keeps every crash point correct-serving: purged rewrites first
     // (tombstones still active — the anti-join is a no-op on purged
-    // rows), the `_deleted` table clears AFTER all rewrites, marker
-    // LAST; rerunning from any point converges.
-    val hasDeletes = spark.catalog.tableExists(s"${table}_deleted")
-    val deleted =
-      if (hasDeletes)
-        spark.table(s"${table}_deleted").select("id").distinct().localCheckpoint()
-      else null
+    // rows), the frontier truncates AFTER all rewrites, marker LAST;
+    // rerunning from any point converges. The tombstoned ids are read
+    // once, pinned, for the pairs and members purges.
+    val deleted = Frontier.dead(spark, table, "pairs").map(_.localCheckpoint())
     def purgeIds(df: DataFrame, cols: Seq[String]): DataFrame =
-      if (!hasDeletes) df
-      else cols.foldLeft(df) { (d, c) =>
-        d.join(deleted.withColumnRenamed("id", c), Seq(c), "left_anti")
-      }
-    def rewrite(t: String, sub: String, bcol: String, keys: Seq[String],
-        purge: DataFrame => DataFrame): Unit = {
-      val collapsed = purge(spark.table(t)
-          .dropDuplicates(keys :+ "batch_id"))
-        .drop("batch_id").withColumn("batch_id", lit(0L))
-        .localCheckpoint() // pinned: the Overwrite reads the table it replaces
-      graft.sources.TableWriter.writeBucketed(
-        collapsed, t, s"$path/$sub", bcol, nBuckets)
-    }
+      deleted.fold(df)(Frontier.antiJoin(df, "pairs", _, cols))
     // rewrites run CONCURRENTLY where the dependency graph allows (the
     // marker, written last, carries the crash contract; rewrite order
     // affects nothing but the wall clock): sets/postings wait on the
@@ -1365,23 +1310,18 @@ object Dedup {
         folded, table, s"$path/pairs", "id_a", nBuckets)
     }
     val repTailF = scala.concurrent.Future {
-      rewrite(s"${table}_members", "members", "rep", Seq("rep", "id"),
-        purgeIds(_, Seq("id")))
+      ledger.rewrite("members", Seq("rep", "id"), "rep", nBuckets, purgeIds(_, Nil))
       // reps with ≥1 surviving member, AFTER the members rewrite so the
       // probe reads the already-purged table
-      val liveReps =
-        if (hasDeletes)
-          spark.table(s"${table}_members").select(col("rep").as("id"))
-            .distinct().localCheckpoint()
-        else null
+      val liveReps = deleted.map(_ =>
+        spark.table(s"${table}_members").select(col("rep").as("id"))
+          .distinct().localCheckpoint())
       def keepLive(df: DataFrame): DataFrame =
-        if (!hasDeletes) df
-        else df.join(liveReps, Seq("id"), "left_semi")
+        liveReps.fold(df)(df.join(_, Seq("id"), "left_semi"))
       val setsF = scala.concurrent.Future(
-        rewrite(s"${table}_sets", "sets", "id", Seq("id"), keepLive))
+        ledger.rewrite("sets", Seq("id"), "id", nBuckets, keepLive))
       val postF = scala.concurrent.Future(
-        rewrite(s"${table}_postings", "postings", "tok",
-          Seq("tok", "id", "rn"), keepLive))
+        ledger.rewrite("postings", Seq("tok", "id", "rn"), "tok", nBuckets, keepLive))
       scala.concurrent.Await.result(
         scala.concurrent.Future.sequence(Seq(setsF, postF)),
         scala.concurrent.duration.Duration.Inf)
@@ -1395,7 +1335,7 @@ object Dedup {
     scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(Seq(pairsF, repTailF, dictF)),
       scala.concurrent.duration.Duration.Inf)
-    ledger.commit(path)
+    ledger.commit()
   }
 
   /** Persist a near-dup index over a document corpus — the MinHash-LSH
@@ -1534,12 +1474,12 @@ object Dedup {
     */
   private def indexPostings(spark: org.apache.spark.sql.SparkSession,
       table: String): DataFrame =
-    dropDeleted(spark, table,
+    Frontier.purge(spark, table, "lsh",
       spark.table(s"${table}_postings")
         .dropDuplicates("id", "band", "key", "batch_id").drop("batch_id"))
   private def indexSets(spark: org.apache.spark.sql.SparkSession,
       table: String): DataFrame =
-    dropDeleted(spark, table,
+    Frontier.purge(spark, table, "lsh",
       spark.table(s"${table}_sets")
         .dropDuplicates("id", "batch_id").drop("batch_id"))
 
@@ -1556,41 +1496,19 @@ object Dedup {
     */
   def describeNearDupIndex(spark: org.apache.spark.sql.SparkSession,
       table: String): DataFrame = {
-    import spark.implicits._
     val sets = indexSets(spark, table)
-    val tombstoned =
-      if (spark.catalog.tableExists(s"${table}_deleted"))
-        spark.table(s"${table}_deleted").select("id").distinct().count()
-      else 0L
     sets.agg(count(lit(1)).as("live_docs"))
       .crossJoin(sets.select(explode(col("toks")).as("d"))
         .agg(count_distinct(col("d")).as("distinct_shingles")))
       .crossJoin(indexPostings(spark, table)
         .agg(count(lit(1)).as("band_postings")))
-      .crossJoin(Seq(tombstoned).toDF("tombstoned"))
+      .crossJoin(Frontier.tombstoned(spark, table, "lsh"))
   }
 
-  /** Tombstone filter on an index read ([[deleteFromNearDupIndex]]):
-    * deleted ids drop at the read, so every downstream join/expansion
-    * sees corpus-minus-deleted in ONE place. The frontier is small by
-    * the right-to-be-forgotten argument and table-backed (Catalyst
-    * broadcasts from statistics); indexes without deletions skip the
-    * join entirely.
-    */
-  private def dropDeleted(spark: org.apache.spark.sql.SparkSession,
-      table: String, df: DataFrame,
-      asOf: Long = Long.MaxValue): DataFrame =
-    if (spark.catalog.tableExists(s"${table}_deleted"))
-      df.join(spark.table(s"${table}_deleted")
-          .filter(col("batch_id") <= asOf).select("id").distinct(),
-        Seq("id"), "left_anti")
-    else df
-
   /** Tombstone documents in a [[buildNearDupIndex]] table — the
-    * [[deleteFromPairIndex]] protocol on the LSH tier, simpler still
-    * because the per-doc read paths filter centrally ([[dropDeleted]]):
-    * one stamped append, marker-gated, committed replays no-op, crash
-    * replays collapse through the read-side distinct.
+    * [[Frontier]] protocol; the per-doc read paths ([[indexPostings]],
+    * [[indexSets]]) drop deleted ids, so every downstream
+    * join/expansion sees corpus-minus-deleted.
     */
   def deleteFromNearDupIndex(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, table: String, path: String, batchId: Long): Unit =
@@ -1600,45 +1518,25 @@ object Dedup {
   private[graft] def applyDeleteFromNearDupIndex(
       spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, table: String, path: String, batchId: Long): Unit =
-    ids.select(col("id")).dropDuplicates("id")
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1) // a deletion frontier is one small file
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .option("path", s"$path/deleted")
-      .format("parquet").saveAsTable(s"${table}_deleted")
+    Frontier.append(ids, table, "lsh", path, batchId)
 
-  /** Fold a [[buildNearDupIndex]] family back to batch 0 — the
-    * [[compactPairIndex]] of the LSH tier: replayed duplicates and
-    * tombstoned documents leave PHYSICALLY, both tables rewrite to one
-    * file per bucket, tombstones clear after the data rewrites, the
-    * `_batches` marker rewrites LAST to {0} (namespace reset; requires
-    * quiescence). Restartable by the same content-equivalence argument:
-    * every crash point still serves corpus-minus-deleted, rerun
-    * converges.
+  /** Fold a [[buildNearDupIndex]] family back to batch 0
+    * ([[Ledger.Compaction]]): both tables rewrite concurrently.
     */
   def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, path: String, nBuckets: Int = 16,
       preserveNamespace: Boolean = false): Unit = {
     // see compactPairIndex: {0, maxCommitted} keeps a checkpointed
     // NearDupStream resumable over the compacted family
-    val ledger = Ledger.compaction(spark, table, "lsh", preserveNamespace)
-    def rewrite(t: String, sub: String, bcol: String, keys: Seq[String]): Unit = {
-      val collapsed = dropDeleted(spark, table,
-          spark.table(t).dropDuplicates(keys :+ "batch_id"))
-        .drop("batch_id").withColumn("batch_id", lit(0L))
-        .localCheckpoint() // pinned: the Overwrite reads the table it replaces
-      graft.sources.TableWriter.writeBucketed(
-        collapsed, t, s"$path/$sub", bcol, nBuckets)
-    }
+    val ledger = Ledger.compaction(spark, table, "lsh", path, preserveNamespace)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
     scala.concurrent.Await.result(scala.concurrent.Future.sequence(Seq(
       scala.concurrent.Future(
-        rewrite(s"${table}_postings", "postings", "key", Seq("id", "band", "key"))),
-      scala.concurrent.Future(
-        rewrite(s"${table}_sets", "sets", "id", Seq("id"))))),
+        ledger.rewrite("postings", Seq("id", "band", "key"), "key", nBuckets)),
+      scala.concurrent.Future(ledger.rewrite("sets", Seq("id"), "id", nBuckets)))),
       scala.concurrent.duration.Duration.Inf)
-    ledger.commit(path)
+    ledger.commit()
   }
 
   /** The FULL verified pair graph of a [[buildNearDupIndex]] table —
@@ -1668,7 +1566,7 @@ object Dedup {
     // data and tombstones at a batch stamp (the servePairIndex MVCC
     // read, valid back to the last compact): appends are pure functions
     // of their batch, so the stamp cut IS the corpus-through-asOf index.
-    val groups = dropDeleted(spark, table,
+    val groups = Frontier.purge(spark, table, "lsh",
         spark.table(s"${table}_sets")
           .filter(col("batch_id") <= asOf).select("id", "toks"), asOf)
       .groupBy("toks")

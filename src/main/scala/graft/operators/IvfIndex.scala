@@ -98,38 +98,22 @@ object IvfIndex {
     // vector, so the stamp cut is exactly the file as of that batch;
     // tombstones cut at the same stamp. Valid back to the last compact.
     val centroids = centroidsOf(spark, table)
-    val assigned = dropDeleted(spark, table,
+    val assigned = Frontier.purge(spark, table, "ivf",
       spark.table(s"${table}_cells").filter(col("batch_id") <= asOf)
         .dropDuplicates("id", "cell", "batch_id").drop("batch_id"), asOf)
     VectorOps.ivfServe(assigned, queries, centroids, k, nProbe, scale)
   }
 
-  private def dropDeleted(spark: SparkSession, table: String,
-      df: DataFrame, asOf: Long = Long.MaxValue): DataFrame =
-    if (spark.catalog.tableExists(s"${table}_deleted"))
-      df.join(spark.table(s"${table}_deleted")
-          .filter(col("batch_id") <= asOf).select("id").distinct(),
-        Seq("id"), "left_anti")
-    else df
-
-  /** Tombstone vectors out of the index — the [[Dedup.deleteFromPairIndex]]
-    * protocol: one stamped append (cost ∝ deleted, no rewrite),
-    * marker-gated, crash replays collapse through the read-side
-    * distinct; [[compact]] purges physically.
-    */
+  /** Tombstone vectors out of the index: the [[Frontier]] protocol. */
   def deleteIds(spark: SparkSession, ids: DataFrame, table: String,
       path: String, batchId: Long): Unit =
     Ledger.commit(spark, table, "ivf", batchId)(
       applyDeleteIds(spark, ids, table, path, batchId))
 
+  /** The tombstone append WITHOUT the trailing marker (crash staging). */
   private[graft] def applyDeleteIds(spark: SparkSession, ids: DataFrame,
       table: String, path: String, batchId: Long): Unit =
-    ids.select(col("id")).dropDuplicates("id")
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1) // a deletion frontier is one small file
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .option("path", s"$path/deleted")
-      .format("parquet").saveAsTable(s"${table}_deleted")
+    Frontier.append(ids, table, "ivf", path, batchId)
 
   /** DESCRIBE INDEX on the IVF tier — (live_vectors, n_cells,
     * tombstoned): the inverted file's coverage under the same
@@ -138,45 +122,29 @@ object IvfIndex {
     * as a freeze check). Bounded aggregates, no corpus rescan.
     */
   def describe(spark: SparkSession, table: String): DataFrame = {
-    import spark.implicits._
-    val live = dropDeleted(spark, table,
+    val live = Frontier.purge(spark, table, "ivf",
       spark.table(s"${table}_cells")
         .dropDuplicates("id", "cell", "batch_id"))
       .select("id").distinct()
     // the scalar legs ride the returned plan as 1×1 crossJoined
     // aggregates — no eager jobs inside the verb (the
     // [[RetrievalIndex.describe]] move); values identical
-    val tombstoned =
-      if (spark.catalog.tableExists(s"${table}_deleted"))
-        spark.table(s"${table}_deleted")
-          .agg(count_distinct(col("id")).as("tombstoned"))
-      else Seq(0L).toDF("tombstoned")
     live.agg(count(lit(1)).as("live_vectors"))
       .crossJoin(spark.table(s"${table}_centroids")
         .agg(count(lit(1)).as("n_cells")))
-      .crossJoin(tombstoned)
+      .crossJoin(Frontier.tombstoned(spark, table, "ivf"))
   }
 
-  /** Fold the inverted file back to batch 0 — replay duplicates and
-    * tombstoned vectors leave physically, one file per bucket,
-    * tombstones clear after the data rewrite, the marker rewrites LAST
-    * (namespace reset; quiescence required). The frozen centroids are
-    * untouched — compaction never moves a cell boundary. Restartable
-    * by the house content-equivalence argument. `preserveNamespace`
-    * keeps the max committed stamp in the marker so a checkpointed
-    * [[graft.streaming.IvfStream]] resumes over the compacted file —
-    * [[graft.core.WriterFence.compactKeepStamps]] states the contract.
+  /** Fold the inverted file back to batch 0 ([[Ledger.Compaction]]);
+    * the frozen centroids are untouched — compaction never moves a cell
+    * boundary. `preserveNamespace` keeps the max committed stamp so a
+    * checkpointed [[graft.streaming.IvfStream]] resumes over the
+    * compacted file ([[graft.core.WriterFence.compactKeepStamps]]).
     */
   def compact(spark: SparkSession, table: String, path: String,
       nBuckets: Int = 16, preserveNamespace: Boolean = false): Unit = {
-    val ledger = Ledger.compaction(spark, table, "ivf", preserveNamespace)
-    val collapsed = dropDeleted(spark, table,
-        spark.table(s"${table}_cells")
-          .dropDuplicates("id", "cell", "batch_id"))
-      .drop("batch_id").withColumn("batch_id", lit(0L))
-      .localCheckpoint() // pinned: the Overwrite reads the table it replaces
-    graft.sources.TableWriter.writeBucketed(
-      collapsed, s"${table}_cells", s"$path/cells", "cell", nBuckets)
-    ledger.commit(path)
+    val ledger = Ledger.compaction(spark, table, "ivf", path, preserveNamespace)
+    ledger.rewrite("cells", Seq("id", "cell"), "cell", nBuckets)
+    ledger.commit()
   }
 }

@@ -394,7 +394,7 @@ object IvmJoin {
 
   def compact(spark: SparkSession, table: String, path: String,
       keys: Seq[String], nBuckets: Int, preserveNamespace: Boolean): Unit = {
-    val ledger = Ledger.compaction(spark, table, "join", preserveNamespace)
+    val ledger = Ledger.compaction(spark, table, "join", path, preserveNamespace)
     def fold(t: String, sub: String): Unit = {
       val cols = spark.table(t).columns.filterNot(Seq("dn", "batch_id").contains)
       val base = netted(spark.table(t), cols)
@@ -412,6 +412,6 @@ object IvmJoin {
       scala.concurrent.Future(fold(s"${table}_fact", "fact")),
       scala.concurrent.Future(fold(s"${table}_dim", "dim")))),
       scala.concurrent.duration.Duration.Inf)
-    ledger.commit(path)
+    ledger.commit()
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 
 /** The commit ledger of the maintained families: the exactly-once stamp
   * protocol, written once for every kind with a commit marker
@@ -48,13 +49,26 @@ private[graft] object Ledger {
   def exists(spark: SparkSession, table: String, kind: String): Boolean =
     spark.catalog.tableExists(ledger(table, kind))
 
-  /** The distinct stamps of a stamped table: one bounded collect. */
+  /** The distinct stamps of a stamped log, distinct on the executors:
+    * a data log is not bounded by the batch count. */
   def stampsOf(spark: SparkSession, t: String): Set[Long] =
     spark.table(t).select("batch_id").distinct().collect().map(_.getLong(0)).toSet
 
-  /** The family's committed stamps. */
+  /** The marker's rows as (payload or 0, stamp), by one scan with no
+    * shuffle: a marker holds about one row per committed batch, so the
+    * distinct and the payload sum run on the driver. */
+  private def markerRows(spark: SparkSession, table: String, kind: String): Seq[(Long, Long)] = {
+    val payload = kindOf(kind).payload
+    spark.table(ledger(table, kind)).select((payload.toSeq :+ "batch_id").map(col): _*)
+      .collect().toSeq.map(r => if (payload.isDefined) (r.getLong(0), r.getLong(1))
+        else (0L, r.getLong(0)))
+  }
+
+  /** The family's committed stamps: the marker's, or for the
+    * markerless rollup the log's own. */
   def committed(spark: SparkSession, table: String, kind: String): Set[Long] =
-    stampsOf(spark, ledger(table, kind))
+    if (kindOf(kind).marker.isDefined) markerRows(spark, table, kind).map(_._2).toSet
+    else stampsOf(spark, table)
 
   /** The stamped-verb frame: refuse a non-positive stamp, no-op a
     * committed replay, fence the writer where the kind fences, run the
@@ -85,39 +99,63 @@ private[graft] object Ledger {
       commitAlias: Long = -1L, n: Long = 0L): Unit =
     mark(spark, table, kind, Seq(0L) ++ Option(commitAlias).filter(_ > 0L), n, Some(path))
 
-  /** A compact's view of the ledger, read once before its rewrites: the
-    * stamps the marker keeps and the payload the batch-0 row carries
-    * (retrieval's surviving N; one collect answers both). */
+  /** A compact: the fold of a family's stamped logs back to batch 0,
+    * written once (the join view folds its netted logs itself and
+    * shares the commit). The ledger is read once before the rewrites
+    * ([[compaction]]): the stamps the marker keeps and the payload its
+    * batch-0 row carries (retrieval's surviving N). Then:
+    *
+    *  - each log is rewritten ([[rewrite]]): replays collapse per (keys,
+    *    batch_id), tombstoned rows leave ([[Frontier]]), every row is
+    *    restamped 0, and the frame is pinned before the Overwrite that
+    *    replaces the table it reads, one file per bucket;
+    *  - the commit ([[commit]]) truncates the frontier after the data
+    *    rewrites, checks the lease tenure, and rewrites the marker LAST
+    *    as {0} (the namespace reset: quiescence required, manual ladders
+    *    restart at stamp 1) or {0, maxCommitted} when preserving
+    *    ([[graft.core.WriterFence.compactKeepStamps]]).
+    *
+    * Restartable, not transactional: a crash between rewrites leaves a
+    * CONTENT-EQUIVALENT family (the collapse removes only byte-identical
+    * replays, every read collapses stamps anyway, and the tombstones stay
+    * active until the data is purged), so a rerun converges. */
   final class Compaction private[Ledger] (spark: SparkSession, table: String,
-      kind: String, keep: Seq[Long], n: Long) {
+      kind: String, path: String, keep: Seq[Long], n: Long) {
+
+    /** Fold one stamped log (`suffix`) to batch 0: collapse replays per
+      * (`keys`, batch_id), `purge` the tombstoned rows (default: the
+      * kind's [[Frontier]]), restamp 0 and rewrite the pinned frame one
+      * file per `bucketCol` bucket under `path/<suffix>`. */
+    def rewrite(suffix: String, keys: Seq[String], bucketCol: String, nBuckets: Int,
+        purge: DataFrame => DataFrame = Frontier.purge(spark, table, kind, _)): Unit = {
+      val t = Maintenance.tableOf(table, suffix)
+      val collapsed = purge(spark.table(t).dropDuplicates(keys :+ "batch_id"))
+        .drop("batch_id").withColumn("batch_id", lit(0L))
+        .localCheckpoint() // pinned: the Overwrite reads the table it replaces
+      graft.sources.TableWriter.writeBucketed(
+        collapsed, t, s"$path/$suffix", bucketCol, nBuckets)
+    }
 
     /** The compact's commit, after its data rewrites: truncate the
       * tombstone frontier, check the lease tenure, rewrite the marker. */
-    def commit(path: String): Unit = {
-      val deleted = Maintenance.tableOf(table, "deleted")
-      if (kindOf(kind).logs.contains("deleted") && spark.catalog.tableExists(deleted))
-        // an empty frontier needs no read of the table it truncates: an
-        // empty frame with the same schema skips the checkpoint job
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            spark.table(deleted).schema)
-          .write.mode(SaveMode.Overwrite).option("path", s"$path/deleted")
-          .format("parquet").saveAsTable(deleted)
+    def commit(): Unit = {
+      if (kindOf(kind).frontier.isDefined) Frontier.truncate(spark, table, kind, path)
       graft.core.CommitGuard.check() // lease-tenure fence at the commit point
       mark(spark, table, kind, Seq(0L) ++ keep, n, Some(path))
     }
   }
 
-  def compaction(spark: SparkSession, table: String, kind: String,
+  /** A compact's ledger read. A manual compact (`preserveNamespace =
+    * false`) keeps no stamp, so on a kind without a payload it reads
+    * nothing; otherwise one [[markerRows]] scan answers both the stamps
+    * and the payload's sum over distinct (payload, stamp) rows. */
+  def compaction(spark: SparkSession, table: String, kind: String, path: String,
       preserveNamespace: Boolean): Compaction = {
-    val (stamps, n) = kindOf(kind).payload match {
-      case Some(payload) =>
-        val rows = spark.table(ledger(table, kind))
-          .dropDuplicates(payload, "batch_id").collect()
-        (rows.map(_.getAs[Long]("batch_id")).toSet, rows.map(_.getAs[Long](payload)).sum)
-      case None => (committed(spark, table, kind), 0L)
-    }
-    new Compaction(spark, table, kind,
-      graft.core.WriterFence.compactKeepStamps(stamps, preserveNamespace), n)
+    val rows =
+      if (preserveNamespace || kindOf(kind).payload.isDefined) markerRows(spark, table, kind)
+      else Nil
+    new Compaction(spark, table, kind, path, graft.core.WriterFence.compactKeepStamps(
+      rows.map(_._2).toSet, preserveNamespace), rows.distinct.map(_._1).sum)
   }
 
   /** Write marker rows for `stamps`: the first carries payload `n`, the

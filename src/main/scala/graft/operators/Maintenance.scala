@@ -24,8 +24,8 @@ import org.apache.spark.sql.SparkSession
   * families (join view, pair/LSH/retrieval/positional/IVF indexes) a
   * DEFAULT compact also resets the stamp namespace to {0}, so a
   * checkpointed stream whose epoch counter kept its old value would
-  * fail the writer fence on resume — which is why every fenced-family
-  * `compact*IfDue` here passes `preserveNamespace = true`: the marker
+  * fail the writer fence on resume — which is why [[compactIfDue]] runs
+  * every fenced kind's compact with `preserveNamespace = true`: the marker
   * rewrites to {0, maxCommitted} ([[graft.core.WriterFence
   * .compactKeepStamps]], the round-9 PLANS.md lift), the resumed
   * stream's next epoch-derived stamp is maxCommitted + 1 and passes
@@ -62,180 +62,89 @@ object Maintenance {
     batches > policy.maxBatches ||
       (total > 0L && dead.toDouble / total > policy.maxDeadFraction)
 
-  /** The rollup's compact decision, from one [[IvmRollup.describe]]
-    * read: dead weight = keys whose net count fell to ≤ 0.
+  /** Whether `family` is due under `policy`, from its bounded debt
+    * read (never a corpus rescan):
+    *
+    *  - the five index kinds (pairs, lsh, retrieval, positions, ivf)
+    *    share [[indexDebtDue]] over the registry's data log and the
+    *    kind's [[Frontier]] id column;
+    *  - the rollup reads its [[IvmRollup.describe]] row: dead weight =
+    *    keys whose net count fell to ≤ 0;
+    *  - the join view reads ALL THREE of its logs (round-9 advice: the
+    *    view log alone misses a dim-only churn stream whose keys match
+    *    no facts — its `_dim` log grows batches and files without ever
+    *    adding a view entry, so the family would never come due while
+    *    the debt the limit-probe broadcast gate works around keeps
+    *    accumulating). Each log reports its own two axes through the
+    *    loud-fenced [[IvmJoin.logDebt]] read (batches = distinct
+    *    non-zero data stamps; dead = collapsed entries beyond one per
+    *    net-live row), and ANY log being due makes the family due —
+    *    compact rewrites all three together.
     */
-  def shouldCompactRollup(spark: SparkSession, table: String,
-      policy: CompactPolicy): Boolean = {
-    val r = IvmRollup.describe(spark, table).head()
-    due(r.getAs[Long]("batches_since_compact"), r.getAs[Long]("dead_keys"),
-      r.getAs[Long]("live_keys") + r.getAs[Long]("dead_keys"), policy)
+  def shouldCompact(spark: SparkSession, family: Family,
+      policy: CompactPolicy): Boolean = family.kind match {
+    case "rollup" =>
+      val r = IvmRollup.describe(spark, family.table).head()
+      due(r.getAs[Long]("batches_since_compact"), r.getAs[Long]("dead_keys"),
+        r.getAs[Long]("live_keys") + r.getAs[Long]("dead_keys"), policy)
+    case "join" =>
+      // the three logs' debt probes are independent read-only aggregates
+      // — overlap their fixed per-action latency (guide §2.6); `exists`
+      // over the ordered results keeps the decision identical
+      graft.core.Par.run(Seq("base", "fact", "dim").map(tableOf(family.table, _)))(
+        t => IvmJoin.logDebt(spark, t))
+        .exists { case (batches, dead, total) => due(batches, dead, total, policy) }
+    case kind => indexDebtDue(spark, family.table, kind, policy)
   }
 
   /** Read → decide → maybe compact; returns whether the compact ran
-    * (so a scheduler can log/meter the loop). The read is the bounded
-    * DESCRIBE; a not-due call touches nothing.
+    * (so a scheduler can log/meter the loop). The read is
+    * [[shouldCompact]]'s; a not-due call touches nothing. The compact
+    * is the kind's registry compact, namespace-preserving on the fenced
+    * kinds (see the operational contract above).
     */
-  def compactRollupIfDue(spark: SparkSession, table: String, path: String,
-      policy: CompactPolicy, nBuckets: Int = 16): Boolean = {
-    val go = shouldCompactRollup(spark, table, policy)
-    if (go) IvmRollup.compact(spark, table, path, nBuckets)
+  def compactIfDue(spark: SparkSession, family: Family,
+      policy: CompactPolicy): Boolean = {
+    val go = shouldCompact(spark, family, policy)
+    if (go) familyKind(family.kind).compact(spark, family)
     go
   }
 
-  /** The join view's compact decision, across ALL THREE of the
-    * family's logs (round-9 advice: the view log alone misses a
-    * dim-only churn stream whose keys match no facts — its `_dim` log
-    * grows batches and files without ever adding a view entry, so the
-    * family would never come due while the very debt the limit-probe
-    * broadcast gate works around keeps accumulating). Each log reports
-    * its own two axes through the loud-fenced [[IvmJoin.logDebt]]
-    * read (batches = distinct non-zero data stamps; dead = collapsed
-    * entries beyond one per net-live row), and ANY log being due makes
-    * the family due — compact rewrites all three together.
-    */
-  def shouldCompactJoin(spark: SparkSession, table: String,
-      policy: CompactPolicy): Boolean =
-    // the three logs' debt probes are independent read-only aggregates
-    // — overlap their fixed per-action latency (guide §2.6); `exists`
-    // over the ordered results keeps the decision identical
-    graft.core.Par.run(Seq(table, s"${table}_fact", s"${table}_dim"))(
-      t => IvmJoin.logDebt(spark, t))
-      .exists { case (batches, dead, total) => due(batches, dead, total, policy) }
-
-  def compactJoinIfDue(spark: SparkSession, table: String, path: String,
-      keys: Seq[String], policy: CompactPolicy,
-      nBuckets: Int = 16): Boolean = {
-    val go = shouldCompactJoin(spark, table, policy)
-    if (go) IvmJoin.compact(spark, table, path, keys, nBuckets,
-      preserveNamespace = true) // the loop must not strand a checkpointed stream
-    go
-  }
-
-  /** The exact pair index's compact decision. Deliberately NOT
-    * [[Dedup.pairIndexStats]] (whose live_pairs re-serves the whole
-    * pair graph — an audit read, too heavy for a policy probe): the
-    * probe reads only the two debt axes — max committed stamp from the
-    * `_batches` marker, and the tombstone fraction over the collapsed
-    * member set. Cost: one bounded marker collect + one distinct over
-    * members/deleted — ∝ index, never corpus.
-    *
-    * The same two-axis policy fits every index family (each compact
-    * purges its tombstones); [[indexDebtDue]] is that shared shape,
-    * and the remaining families' verbs below instantiate it over
-    * their own data log and id column.
-    */
-  def shouldCompactPairs(spark: SparkSession, table: String,
-      policy: CompactPolicy): Boolean =
-    indexDebtDue(spark, s"${table}_members", "id", s"${table}_deleted", policy)
-
-  /** The index-family debt probe, shared by the five stamped-log
-    * index families (pairs / LSH / retrieval tf / positional / IVF):
+  /** The index-kind debt probe, over the kind's data log (the registry
+    * [[Frontier.Spec]]'s `dataLog`: the pair index's `_members`, the
+    * LSH `_sets`, retrieval's `_postings`, `_positions`, the IVF
+    * `_cells`) and its frontier. Deliberately NOT a describe verb (the
+    * pair index's live_pairs re-serves the whole pair graph — an audit
+    * read, too heavy for a policy probe):
     *
     *  - the batches axis first — a distinct DATA-BEARING stamp count
-    *    over the family's data log, the [[IvmRollup.describe]]
-    *    rationale twice over: epoch-derived stream stamps rule out
-    *    max(), and the MARKER rules itself out because streams stamp
-    *    empty epochs for fence contiguity — a quiet stream's markers
-    *    are zero fold-able debt. (Delete batches append no data rows;
-    *    their debt is the dead axis below.) When this axis alone
-    *    decides, the probe never pays the tombstone scans.
+    *    over the data log, the [[IvmRollup.describe]] rationale twice
+    *    over: epoch-derived stream stamps rule out max(), and the
+    *    MARKER rules itself out because streams stamp empty epochs for
+    *    fence contiguity — a quiet stream's markers are zero fold-able
+    *    debt. (Delete batches append no data rows; their debt is the
+    *    dead axis below.) When this axis alone decides, the probe never
+    *    pays the tombstone scans.
     *  - the dead axis: distinct tombstoned ids over distinct indexed
     *    ids. A tombstone aimed at a never-indexed id (legal, it just
     *    never matches) can push the fraction past 1 — which still
     *    reads as "compact", the only sensible answer for a ledger
     *    dominated by dead weight.
     */
-  private def indexDebtDue(spark: SparkSession, dataLog: String,
-      idCol: String, deletedTable: String, policy: CompactPolicy): Boolean = {
+  private def indexDebtDue(spark: SparkSession, table: String, kind: String,
+      policy: CompactPolicy): Boolean = {
     import org.apache.spark.sql.functions.{col, count_distinct, when}
+    val f = Frontier.spec(kind)
+    val dataLog = tableOf(table, f.dataLog)
     val batches = spark.table(dataLog)
       .agg(count_distinct(when(col("batch_id") =!= 0L, col("batch_id"))))
       .head().getLong(0)
     if (batches > policy.maxBatches) return true
-    val dead =
-      if (spark.catalog.tableExists(deletedTable))
-        spark.table(deletedTable).select(idCol).distinct().count()
-      else 0L
+    val dead = Frontier.dead(spark, table, kind).fold(0L)(_.count())
     if (dead == 0L) return false // no tombstones → nothing to purge
     val total = spark.table(dataLog)
-      .select(idCol).distinct().count() // replay duplicates collapse
+      .select(f.idCol).distinct().count() // replay duplicates collapse
     due(batches, dead, total, policy)
-  }
-
-  def compactPairsIfDue(spark: SparkSession, table: String, path: String,
-      policy: CompactPolicy, nBuckets: Int = 8): Boolean = {
-    val go = shouldCompactPairs(spark, table, policy)
-    if (go) Dedup.compactPairIndex(spark, table, path, nBuckets,
-      preserveNamespace = true)
-    go
-  }
-
-  /** The LSH near-dup index's decision: data log = `_sets` (one row
-    * per indexed doc per batch — the cheaper of the family's two logs,
-    * and every extend writes both, so its stamps ARE the family's).
-    */
-  def shouldCompactLsh(spark: SparkSession, table: String,
-      policy: CompactPolicy): Boolean =
-    indexDebtDue(spark, s"${table}_sets", "id", s"${table}_deleted", policy)
-
-  def compactLshIfDue(spark: SparkSession, table: String, path: String,
-      policy: CompactPolicy, nBuckets: Int = 16): Boolean = {
-    val go = shouldCompactLsh(spark, table, policy)
-    if (go) Dedup.compactNearDupIndex(spark, table, path, nBuckets,
-      preserveNamespace = true)
-    go
-  }
-
-  /** The tf-retrieval index's decision: data log = `_postings`. The
-    * `_meta` ledger is deliberately NOT the batches source — streams
-    * stamp EMPTY epochs there (fence contiguity), which are zero
-    * fold-able debt.
-    */
-  def shouldCompactRetrieval(spark: SparkSession, table: String,
-      policy: CompactPolicy): Boolean =
-    indexDebtDue(spark, s"${table}_postings", "doc_id",
-      s"${table}_deleted", policy)
-
-  def compactRetrievalIfDue(spark: SparkSession, table: String, path: String,
-      policy: CompactPolicy, nBuckets: Int = 16): Boolean = {
-    val go = shouldCompactRetrieval(spark, table, policy)
-    if (go) RetrievalIndex.compact(spark, table, path, nBuckets,
-      preserveNamespace = true)
-    go
-  }
-
-  /** The positional tier's decision: data log = `_positions`; the
-    * `_deleted` frontier is SHARED with the tf tier when both live on
-    * one table family (one deletion hits every tier), which the probe
-    * reads as-is.
-    */
-  def shouldCompactPositions(spark: SparkSession, table: String,
-      policy: CompactPolicy): Boolean =
-    indexDebtDue(spark, s"${table}_positions", "doc_id",
-      s"${table}_deleted", policy)
-
-  def compactPositionsIfDue(spark: SparkSession, table: String,
-      path: String, policy: CompactPolicy, nBuckets: Int = 16): Boolean = {
-    val go = shouldCompactPositions(spark, table, policy)
-    if (go) RetrievalIndex.compactPositions(spark, table, path, nBuckets,
-      preserveNamespace = true)
-    go
-  }
-
-  /** The IVF index's decision: data log = `_cells` (the inverted
-    * file); the frozen `_centroids` carry no debt by construction.
-    */
-  def shouldCompactIvf(spark: SparkSession, table: String,
-      policy: CompactPolicy): Boolean =
-    indexDebtDue(spark, s"${table}_cells", "id", s"${table}_deleted", policy)
-
-  def compactIvfIfDue(spark: SparkSession, table: String, path: String,
-      policy: CompactPolicy, nBuckets: Int = 16): Boolean = {
-    val go = shouldCompactIvf(spark, table, policy)
-    if (go) IvfIndex.compact(spark, table, path, nBuckets,
-      preserveNamespace = true)
-    go
   }
 
   // ------------------------------------------------------------------
@@ -613,8 +522,7 @@ object Maintenance {
       val generation = acquireLease(spark, f.path, me, leaseTtlMs)
       val (ran, backup) = try graft.core.CommitGuard.withGuard(
         () => requireLeaseHeld(spark, f.path, me, generation)) {
-        val compacted = familyKind(f.kind)
-          .compactIfDue(spark, f, f.policy.getOrElse(policy))
+        val compacted = compactIfDue(spark, f, f.policy.getOrElse(policy))
         // backup AFTER the compact, same lease tenure: the tick that
         // rewrites history is the tick whose backup rolls the epoch
         // (Snapshot.backupTick's delta→full fallback), and the lease
@@ -638,10 +546,10 @@ object Maintenance {
     * commit marker (None for the markerless rollup), the stamped logs
     * [[fsck]] audits, the unstamped side tables that carry no ledger to
     * audit (the pair graph's frozen `_dict`, the IVF's frozen
-    * `_centroids`), and the kind's policy-driven compact. Every
-    * family's `_deleted` frontier is an APPEND-mode stamped ledger
-    * (which is what lets delete verbs compose with
-    * [[graft.operators.Snapshot.exportAtCut]]'s commit-boundary slice).
+    * `_centroids`), and the kind's policy compact ([[compactIfDue]]).
+    * The five index kinds keep a tombstone [[Frontier]] (its suffix, id
+    * column and data log), itself a stamped log; a kind's frontier is
+    * its own, never shared with another kind on the same table.
     * The snapshot tier's closed vocabulary is derived, never restated:
     * [[suffixes]] = marker ∪ logs ∪ side tables — what the family
     * operators actually WRITE, so anything else sharing the name prefix
@@ -651,34 +559,47 @@ object Maintenance {
     * check), and the column a marker row carries in front of its stamp.
     */
   private[operators] final case class FamilyKind(marker: Option[String],
-      logs: Seq[String], side: Seq[String],
-      compactIfDue: (SparkSession, Family, CompactPolicy) => Boolean,
+      dataLogs: Seq[String], side: Seq[String],
+      compact: (SparkSession, Family) => Unit,
+      frontier: Option[Frontier.Spec] = None,
       fenced: Boolean = true, payload: Option[String] = None) {
+    /** Every stamped log, the frontier last. */
+    def logs: Seq[String] = dataLogs ++ frontier.map(_.suffix)
     def suffixes: Set[String] = (marker.toSeq ++ logs ++ side).toSet
   }
 
   private val kinds: Seq[(String, FamilyKind)] = Seq(
-    "pairs" -> FamilyKind(Some("batches"),
-      Seq("base", "members", "sets", "postings", "deleted"), Seq("dict"),
-      (s, f, p) => compactPairsIfDue(s, f.table, f.path, p, f.nBuckets),
-      fenced = false),
-    "lsh" -> FamilyKind(Some("batches"), Seq("postings", "sets", "deleted"),
-      Nil, (s, f, p) => compactLshIfDue(s, f.table, f.path, p, f.nBuckets)),
-    "retrieval" -> FamilyKind(Some("meta"), Seq("postings", "deleted"), Nil,
-      (s, f, p) => compactRetrievalIfDue(s, f.table, f.path, p, f.nBuckets),
-      payload = Some("n_docs")),
-    "positions" -> FamilyKind(Some("pbatches"), Seq("positions", "deleted"),
-      Nil, (s, f, p) => compactPositionsIfDue(s, f.table, f.path, p, f.nBuckets)),
-    "ivf" -> FamilyKind(Some("batches"), Seq("cells", "deleted"),
-      Seq("centroids"),
-      (s, f, p) => compactIvfIfDue(s, f.table, f.path, p, f.nBuckets)),
+    "pairs" -> FamilyKind(Some("batches"), Seq("base", "members", "sets", "postings"),
+      Seq("dict"),
+      (s, f) => Dedup.compactPairIndex(s, f.table, f.path, f.nBuckets,
+        preserveNamespace = true),
+      Some(Frontier.Spec("deleted", "id", "members")), fenced = false),
+    "lsh" -> FamilyKind(Some("batches"), Seq("postings", "sets"), Nil,
+      (s, f) => Dedup.compactNearDupIndex(s, f.table, f.path, f.nBuckets,
+        preserveNamespace = true),
+      // `_sets`: one row per indexed doc per batch — the cheaper of the
+      // two logs, and every extend writes both
+      Some(Frontier.Spec("deleted", "id", "sets"))),
+    "retrieval" -> FamilyKind(Some("meta"), Seq("postings"), Nil,
+      (s, f) => RetrievalIndex.compact(s, f.table, f.path, f.nBuckets,
+        preserveNamespace = true),
+      Some(Frontier.Spec("deleted", "doc_id", "postings")), payload = Some("n_docs")),
+    "positions" -> FamilyKind(Some("pbatches"), Seq("positions"), Nil,
+      (s, f) => RetrievalIndex.compactPositions(s, f.table, f.path, f.nBuckets,
+        preserveNamespace = true),
+      Some(Frontier.Spec("pdeleted", "doc_id", "positions"))),
+    "ivf" -> FamilyKind(Some("batches"), Seq("cells"), Seq("centroids"),
+      (s, f) => IvfIndex.compact(s, f.table, f.path, f.nBuckets,
+        preserveNamespace = true),
+      Some(Frontier.Spec("deleted", "id", "cells"))),
     "join" -> FamilyKind(Some("batches"), Seq("base", "fact", "dim"), Nil,
-      (s, f, p) => {
+      (s, f) => {
         require(f.joinKeys.nonEmpty, s"sweep: join family ${f.table} needs joinKeys")
-        compactJoinIfDue(s, f.table, f.path, f.joinKeys, p, f.nBuckets)
+        IvmJoin.compact(s, f.table, f.path, f.joinKeys, f.nBuckets,
+          preserveNamespace = true) // the loop must not strand a checkpointed stream
       }),
     "rollup" -> FamilyKind(None, Seq("base"), Nil,
-      (s, f, p) => compactRollupIfDue(s, f.table, f.path, p, f.nBuckets),
+      (s, f) => IvmRollup.compact(s, f.table, f.path, f.nBuckets),
       fenced = false))
 
   private[operators] def familyKind(kind: String): FamilyKind =
@@ -741,6 +662,7 @@ object Maintenance {
     val k = familyKind(kind)
     val markerOpt = k.marker.map(tableOf(table, _))
     val logs = k.logs.map(tableOf(table, _))
+    val frontier = k.frontier.map(f => tableOf(table, f.suffix))
     val rows = scala.collection.mutable.ArrayBuffer.empty[
       (String, String, Boolean, String)]
     // committed stamps (rollup: derived from the log itself, no marker)
@@ -776,8 +698,8 @@ object Maintenance {
       if (!spark.catalog.tableExists(t))
         // only the deletion frontier is born lazily (first delete);
         // a missing CORE log is structural damage, not an option
-        (s"log_stamps:$t", t, t.endsWith("_deleted"),
-          if (t.endsWith("_deleted")) "absent (no deletes yet)"
+        (s"log_stamps:$t", t, frontier.contains(t),
+          if (frontier.contains(t)) "absent (no deletes yet)"
           else "CORE LOG ABSENT")
       else if (!spark.table(t).columns.contains("batch_id"))
         (s"log_stamps:$t", t, true, "unstamped (no batch_id)")

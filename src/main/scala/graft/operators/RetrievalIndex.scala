@@ -123,21 +123,18 @@ object RetrievalIndex {
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .insertInto(s"${table}_postings")
 
-  /** Tombstone documents out of the index — right-to-be-forgotten on
-    * the retrieval tier, where deletion has a SCORING consequence: the
-    * idf's N must shrink too. One stamped tombstone append, then a
-    * `_meta` row with NEGATIVE cardinality as the trailing commit —
-    * [[corpusN]] sums meta rows, so N adjusts through the exact same
-    * ledger the builds and extends use, and the meta row doubles as
-    * the marker (committed replays no-op; a crashed delete's replay
-    * re-appends byte-identical tombstones that the read-side distinct
-    * collapses, and recomputes the SAME fresh-count because its
-    * tombstone scan excludes its own stamp).
+  /** Tombstone documents out of the index — the [[Frontier]] protocol
+    * on the retrieval tier, where deletion has a SCORING consequence:
+    * the idf's N must shrink too. The trailing marker row carries the
+    * NEGATIVE count of fresh tombstones, so N adjusts through the same
+    * `_meta` ledger the builds and extends use; a crashed delete's
+    * replay recomputes the SAME fresh count, because its tombstone scan
+    * excludes its own stamp.
     *
     * Applies to the tf postings tier ([[topK]]/[[boolean]]); the
-    * positional tier keeps its own lifecycle. Double-deleting an id in
-    * a LATER batch is filtered (fresh = ids minus existing tombstones)
-    * so N never double-subtracts.
+    * positional tier keeps its own frontier ([[Frontier]]).
+    * Double-deleting an id in a LATER batch is filtered (fresh = ids
+    * minus existing tombstones) so N never double-subtracts.
     */
   def deleteDocs(spark: SparkSession, ids: DataFrame, table: String,
       path: String, batchId: Long): Unit =
@@ -150,38 +147,17 @@ object RetrievalIndex {
     */
   private[graft] def applyDeleteDocs(spark: SparkSession, ids: DataFrame,
       table: String, path: String, batchId: Long): Long = {
-    val existing =
-      if (spark.catalog.tableExists(s"${table}_deleted"))
-        spark.table(s"${table}_deleted")
-          .filter(col("batch_id") =!= batchId) // replay: exclude own crashed rows
-          .select("doc_id")
-      else null
     val distinctIds = ids.select(col("doc_id")).dropDuplicates("doc_id")
-    val fresh = (if (existing == null) distinctIds
-                 else distinctIds.join(existing, Seq("doc_id"), "left_anti"))
+    val fresh = Frontier.read(spark, table, "retrieval").fold(distinctIds)(d =>
+        distinctIds.join(d.filter(col("batch_id") =!= batchId) // replay: exclude own crashed rows
+          .select("doc_id"), Seq("doc_id"), "left_anti"))
       .withColumn("batch_id", lit(batchId))
       .coalesce(1) // a deletion frontier is one small file
       .localCheckpoint() // count + append share one evaluation
     val n = fresh.count()
-    fresh.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .option("path", s"$path/deleted")
-      .format("parquet").saveAsTable(s"${table}_deleted")
+    Frontier.write(table, "retrieval", path, fresh)
     n
   }
-
-  /** Tombstone filter on a term-filtered postings frame: deleted docs
-    * drop before scoring (and [[corpusN]] already shrank N through the
-    * negative meta rows). The frontier is small and table-backed —
-    * Catalyst broadcasts it from statistics; indexes without deletions
-    * skip the join (one catalog probe).
-    */
-  private def dropDeletedDocs(ps: SparkSession, table: String,
-      df: DataFrame, asOf: Long = Long.MaxValue): DataFrame =
-    if (ps.catalog.tableExists(s"${table}_deleted"))
-      df.join(ps.table(s"${table}_deleted")
-          .filter(col("batch_id") <= asOf).select("doc_id").distinct(),
-        Seq("doc_id"), "left_anti")
-    else df
 
   /** DESCRIBE INDEX on the tf tier — the [[Dedup.pairIndexStats]]
     * observability verb for this family: one row of (live_docs,
@@ -196,8 +172,7 @@ object RetrievalIndex {
     * live_postings and fails the audit loudly rather than folding.
     */
   def describe(spark: SparkSession, table: String): DataFrame = {
-    import spark.implicits._
-    val live = dropDeletedDocs(spark, table,
+    val live = Frontier.purge(spark, table, "retrieval",
       collapseReplays(spark.table(s"${table}_postings"))
         .select("term", "doc_id"))
     // every scalar rides the returned plan as a 1×1 crossJoined
@@ -206,16 +181,11 @@ object RetrievalIndex {
     val liveDocs = spark.table(s"${table}_meta")
       .dropDuplicates("n_docs", "batch_id")
       .agg(coalesce(sum(col("n_docs")), lit(0L)).as("live_docs"))
-    val tombstoned =
-      if (spark.catalog.tableExists(s"${table}_deleted"))
-        spark.table(s"${table}_deleted")
-          .agg(count_distinct(col("doc_id")).as("tombstoned"))
-      else Seq(0L).toDF("tombstoned")
     liveDocs
       .crossJoin(live.agg(
         count_distinct(col("term")).as("distinct_terms"),
         count(lit(1)).as("live_postings")))
-      .crossJoin(tombstoned)
+      .crossJoin(Frontier.tombstoned(spark, table, "retrieval"))
   }
 
   /** DESCRIBE INDEX on the POSITIONAL tier — [[describe]]'s sibling
@@ -229,24 +199,18 @@ object RetrievalIndex {
     * the frontier distinct; no corpus rescan.
     */
   def describePositions(spark: SparkSession, table: String): DataFrame = {
-    import spark.implicits._
-    val live = dropDeletedDocs(spark, table,
+    val live = Frontier.purge(spark, table, "positions",
       spark.table(s"${table}_positions")
         .dropDuplicates("term", "doc_id", "batch_id")
         .select(col("term"), col("doc_id"), col("positions")))
     // tombstone debt rides the returned plan (no eager count job —
     // the [[describe]] move; values identical)
-    val tombstoned =
-      if (spark.catalog.tableExists(s"${table}_deleted"))
-        spark.table(s"${table}_deleted")
-          .agg(count_distinct(col("doc_id")).as("tombstoned"))
-      else Seq(0L).toDF("tombstoned")
     live.agg(
         count_distinct(col("doc_id")).as("live_docs"),
         count_distinct(col("term")).as("distinct_terms"),
         count(lit(1)).as("posting_rows"),
         sum(size(col("positions"))).cast("long").as("total_positions"))
-      .crossJoin(tombstoned)
+      .crossJoin(Frontier.tombstoned(spark, table, "positions"))
   }
 
   /** Replayed-append collapse over a (possibly term-filtered) postings
@@ -273,19 +237,13 @@ object RetrievalIndex {
       .dropDuplicates("n_docs", "batch_id")
       .agg(sum(col("n_docs"))).head.getLong(0)
 
-  /** Fold the tf-postings tier back to a single batch-0 state — the
-    * [[Dedup.compactPairIndex]] of the retrieval index: replayed-crash
-    * duplicates AND tombstoned documents leave PHYSICALLY, the
-    * postings rewrite to one file per bucket, and `_meta` folds to ONE
+  /** Fold the tf-postings tier back to a single batch-0 state
+    * ([[Ledger.Compaction]]): replayed-crash duplicates AND tombstoned
+    * documents leave PHYSICALLY, and `_meta` (the marker) folds to ONE
     * batch-0 row holding the EXACT surviving N (Σ n_docs already
     * accounts tombstones through the negative delete rows — the fold
-    * just materializes the sum). Tombstones clear after the data
-    * rewrites, `_meta` rewrites LAST (it is the marker — namespace
-    * reset, the house compact semantics; requires quiescence).
-    * Restartable: every crash point still serves corpus-minus-deleted
-    * (tombstones stay active until the data is purged), rerun
-    * converges. The positional tier ([[buildPositions]]) keeps its own
-    * lifecycle and is untouched.
+    * just materializes the sum). The positional tier
+    * ([[buildPositions]]) keeps its own lifecycle and is untouched.
     *
     * `preserveNamespace` keeps the marker at {0, maxCommitted}
     * ([[graft.core.WriterFence.compactKeepStamps]]) so a stopped stream
@@ -296,19 +254,12 @@ object RetrievalIndex {
     */
   def compact(spark: SparkSession, table: String, path: String,
       nBuckets: Int = 16, preserveNamespace: Boolean = false): Unit = {
-    // ONE bounded collect of the `_meta` ledger answers both the exact
-    // surviving N (corpusN's sum over distinct (n_docs, batch_id)) and
-    // the committed stamp set; the preserved stamp rides as an
-    // n_docs = 0 row, neutral to N
-    val ledger = Ledger.compaction(spark, table, "retrieval", preserveNamespace)
-    val collapsed = dropDeletedDocs(spark, table,
-        spark.table(s"${table}_postings")
-          .dropDuplicates("term", "doc_id", "batch_id"))
-      .drop("batch_id").withColumn("batch_id", lit(0L))
-      .localCheckpoint() // pinned: the Overwrite reads the table it replaces
-    graft.sources.TableWriter.writeBucketed(
-      collapsed, s"${table}_postings", s"$path/postings", "term", nBuckets)
-    ledger.commit(path)
+    // the ledger read answers both the exact surviving N (corpusN's sum
+    // over distinct (n_docs, batch_id)) and the committed stamp set; the
+    // preserved stamp rides as an n_docs = 0 row, neutral to N
+    val ledger = Ledger.compaction(spark, table, "retrieval", path, preserveNamespace)
+    ledger.rewrite("postings", Seq("term", "doc_id"), "term", nBuckets)
+    ledger.commit()
   }
 
   /** q88 from the index: the top `k` documents per query by Σ tf·idf_scaled
@@ -369,12 +320,10 @@ object RetrievalIndex {
       .select(lit(PostingsLeg), col("term"), col("doc_id"), col("tf"), col("batch_id"))
     val meta = ps.table(s"${table}_meta").filter(col("batch_id") <= asOf)
       .select(lit(MetaLeg), none("string"), none("long"), col("n_docs"), col("batch_id"))
-    val deleted =
-      if (ps.catalog.tableExists(s"${table}_deleted"))
-        Seq(ps.table(s"${table}_deleted").filter(col("batch_id") <= asOf)
-          .select(lit(DeletedLeg), none("string"), col("doc_id"), none("long"),
-            col("batch_id")))
-      else Nil
+    val deleted = Frontier.read(ps, table, "retrieval").map(
+      _.filter(col("batch_id") <= asOf)
+        .select(lit(DeletedLeg), none("string"), col("doc_id"), none("long"),
+          col("batch_id")))
     (Seq(postings, meta) ++ deleted).reduce(_ union _)
       .toDF("leg", "term", "doc_id", "n", "batch_id")
   }
@@ -458,9 +407,10 @@ object RetrievalIndex {
     // plan + materialize the probe on the bucket-pruning clone; once
     // pinned, downstream stages run on the caller's session as usual
     val ps = probeSession(spark, s"${table}_postings")
-    val p = dropDeletedDocs(ps, table, collapseReplays(ps.table(s"${table}_postings")
-      .filter(col("term").isin(terms: _*)) // explicit IN → bucket pruning
-      .filter(col("batch_id") <= asOf)), asOf)
+    val p = Frontier.purge(ps, table, "retrieval",
+      collapseReplays(ps.table(s"${table}_postings")
+        .filter(col("term").isin(terms: _*)) // explicit IN → bucket pruning
+        .filter(col("batch_id") <= asOf)), asOf)
     val q = broadcast(queryTermsDf(ps, queries))
     val matched = p.join(q, "term").localCheckpoint()
     val scored = graft.queries.CurationOps.scoreMatchedLazyN(matched, nDf)
@@ -524,45 +474,30 @@ object RetrievalIndex {
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .insertInto(s"${table}_positions")
 
-  /** Tombstone documents out of the POSITIONAL tier — the same
-    * protocol as [[deleteDocs]] minus the N ledger (phrase search has
-    * no idf): one stamped tombstone append, `_pbatches` marker LAST.
-    * Shares the `_deleted` table with the tf tier when both exist on
-    * one table family — a deleted document disappears from term,
-    * ranked, AND phrase search together.
+  /** Tombstone documents out of the POSITIONAL tier — the
+    * [[Frontier]] protocol without [[deleteDocs]]' N ledger (phrase
+    * search has no idf), into the tier's own `_pdeleted` frontier:
+    * a delete on one tier leaves the other tier's answers unchanged.
     */
   def deletePositionDocs(spark: SparkSession, ids: DataFrame, table: String,
       path: String, batchId: Long): Unit =
     Ledger.commit(spark, table, "positions", batchId)(
       applyDeletePositionDocs(spark, ids, table, path, batchId))
 
+  /** The tombstone append WITHOUT the trailing marker (crash staging). */
   private[graft] def applyDeletePositionDocs(spark: SparkSession,
       ids: DataFrame, table: String, path: String, batchId: Long): Unit =
-    ids.select(col("doc_id")).dropDuplicates("doc_id")
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1) // a deletion frontier is one small file
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .option("path", s"$path/deleted")
-      .format("parquet").saveAsTable(s"${table}_deleted")
+    Frontier.append(ids, table, "positions", path, batchId)
 
-  /** Fold the positional tier back to batch 0 — replay duplicates and
-    * tombstoned docs leave physically, one file per bucket, tombstones
-    * clear after the data rewrite, `_pbatches` rewrites LAST to {0}
-    * (namespace reset; quiescence required). Restartable by the house
-    * content-equivalence argument. `preserveNamespace` keeps the max
-    * committed stamp in the marker — see [[compact]]'s contract note.
+  /** Fold the positional tier back to batch 0 ([[Ledger.Compaction]]);
+    * `preserveNamespace` keeps the max committed stamp in the marker —
+    * see [[compact]]'s contract note.
     */
   def compactPositions(spark: SparkSession, table: String, path: String,
       nBuckets: Int = 16, preserveNamespace: Boolean = false): Unit = {
-    val ledger = Ledger.compaction(spark, table, "positions", preserveNamespace)
-    val collapsed = dropDeletedDocs(spark, table,
-        spark.table(s"${table}_positions")
-          .dropDuplicates("term", "doc_id", "batch_id"))
-      .drop("batch_id").withColumn("batch_id", lit(0L))
-      .localCheckpoint() // pinned: the Overwrite reads the table it replaces
-    graft.sources.TableWriter.writeBucketed(
-      collapsed, s"${table}_positions", s"$path/positions", "term", nBuckets)
-    ledger.commit(path)
+    val ledger = Ledger.compaction(spark, table, "positions", path, preserveNamespace)
+    ledger.rewrite("positions", Seq("term", "doc_id"), "term", nBuckets)
+    ledger.commit()
   }
 
   /** Exact phrase search from the positional index: a document matches
@@ -584,7 +519,7 @@ object RetrievalIndex {
       asOf: Long = Long.MaxValue): DataFrame = {
     val terms = phrases.flatMap(_._2).distinct
     val ps = probeSession(spark, s"${table}_positions")
-    val p = dropDeletedDocs(ps, table,
+    val p = Frontier.purge(ps, table, "positions",
       ps.table(s"${table}_positions")
         .filter(col("term").isin(terms: _*)) // explicit IN → bucket pruning
         .filter(col("batch_id") <= asOf) // AS-OF stamp cut (MVCC read)
@@ -621,8 +556,9 @@ object RetrievalIndex {
       queries: Seq[(Int, Seq[String])]): DataFrame = {
     val terms = queries.flatMap(_._2).distinct
     val ps = probeSession(spark, s"${table}_postings")
-    val p = dropDeletedDocs(ps, table, collapseReplays(ps.table(s"${table}_postings")
-      .filter(col("term").isin(terms: _*))))
+    val p = Frontier.purge(ps, table, "retrieval",
+      collapseReplays(ps.table(s"${table}_postings")
+        .filter(col("term").isin(terms: _*))))
     val q = broadcast(queryTermsDf(ps, queries))
     val arity = queries.foldLeft(lit(-1)) { case (acc, (qid, ts)) =>
       when(col("qid") === qid, lit(ts.size)).otherwise(acc)

@@ -808,7 +808,7 @@ object AnalyticsOps {
   // manual mid-stream compact is neutral; this row proves the compact a
   // POLICY triggers from the DESCRIBE self-report is the SAME
   // operation: build the base, fold batch 1 (q81's deletes), then run
-  // the maintenance loop (Maintenance.compactRollupIfDue) under
+  // the maintenance loop (Maintenance.compactIfDue) under
   // maxBatches = 0 — the accumulated batch makes it due, so the
   // DESCRIBE numbers, not the caller, decide. The loop must then
   // SETTLE: a second probe on the freshly compacted log reads
@@ -832,9 +832,10 @@ object AnalyticsOps {
           (-col("o_totalprice")).cast(DecimalType(38, 2)).as("dr")),
       batchId = 1L)
     val policy = Maintenance.CompactPolicy(maxBatches = 0L)
-    require(Maintenance.compactRollupIfDue(spark, table, path, policy),
+    val family = Maintenance.Family(table, "rollup", path)
+    require(Maintenance.compactIfDue(spark, family, policy),
       "q213: one accumulated batch under maxBatches = 0 must be due")
-    require(!Maintenance.compactRollupIfDue(spark, table, path, policy),
+    require(!Maintenance.compactIfDue(spark, family, policy),
       "q213: a freshly compacted log must NOT be due — the loop settles")
     IvmRollup.applyDelta(spark, table,
       o.filter(col("o_orderkey") % 103 === 0)

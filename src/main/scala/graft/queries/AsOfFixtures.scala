@@ -63,7 +63,7 @@ object AsOfFixtures {
         name, graft.core.Scratch.path(name), batchId = 2L)
     }
 
-  /** Positional (phrase) index — shares the `_deleted` semantics. */
+  /** Positional (phrase) index, with its own `_pdeleted` frontier. */
   def positions(spark: SparkSession, dir: String): String =
     once("pix", dir) { name =>
       val d = Tables(spark, dir).documents

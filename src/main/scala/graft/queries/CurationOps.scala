@@ -1239,16 +1239,15 @@ object CurationOps {
     // and deleted docs leave physically, tombstones clear, namespace
     // resets) → phrase. Oracle = the token-level phrase scan over
     // documents WHERE doc_id % 7 != 3 — a deleted document must
-    // vanish from adjacency answers exactly as from term and ranked
-    // search (the shared `_deleted` table is the design: one deletion
-    // hits every tier of a table family).
+    // vanish from adjacency answers (the tier's own `_pdeleted`
+    // tombstone frontier).
     GraftQuery("q184_positions_lifecycle",
       Some(phraseSearchSqlOver("doc_id % 7 != 3")),
       (spark, dir) => {
         val docsAll = Tables(spark, dir).documents
         val table = "graft_q184_pix"
         val path = graft.core.Scratch.path(table)
-        Seq("positions", "pbatches", "deleted").foreach(sfx =>
+        Seq("positions", "pbatches", "pdeleted").foreach(sfx =>
           spark.sql(s"DROP TABLE IF EXISTS ${table}_$sfx"))
         graft.operators.RetrievalIndex.buildPositions(
           docsAll.filter(col("doc_id") % 2 === 0), table, path)
@@ -1321,7 +1320,7 @@ object CurationOps {
     // verdict's top lift, driver-checked. The corpus arrives as three
     // stream epochs through RetrievalStream's exact fold; after epoch 1
     // the maintenance loop fires (maxBatches = 0 — one data-bearing
-    // batch of debt makes the family due) and compactRetrievalIfDue
+    // batch of debt makes the family due) and compactIfDue
     // runs the NAMESPACE-PRESERVING compact (marker {0, maxCommitted} —
     // WriterFence.compactKeepStamps), then must SETTLE (a freshly
     // folded log reads zero debt). Epoch 2 then resumes the SAME
@@ -1345,9 +1344,10 @@ object CurationOps {
         graft.streaming.RetrievalStream.foldEpoch(
           docs.filter(col("doc_id") % 3 === 1), epochId = 1L, table, path)
         val policy = Maintenance.CompactPolicy(maxBatches = 0L)
-        require(Maintenance.compactRetrievalIfDue(spark, table, path, policy),
+        val family = Maintenance.Family(table, "retrieval", path)
+        require(Maintenance.compactIfDue(spark, family, policy),
           "q217: one data-bearing batch under maxBatches = 0 must be due")
-        require(!Maintenance.compactRetrievalIfDue(spark, table, path, policy),
+        require(!Maintenance.compactIfDue(spark, family, policy),
           "q217: a freshly compacted index must NOT be due — the loop settles")
         graft.streaming.RetrievalStream.foldEpoch( // resumed epoch counter
           docs.filter(col("doc_id") % 3 === 2), epochId = 2L, table, path)
@@ -1355,7 +1355,7 @@ object CurationOps {
       }),
     // q219: the maintenance loop END TO END — q217 proves one policy
     // compact composes with one resumed epoch; this row proves the
-    // LOOP composes: five stream epochs with compactRetrievalIfDue run
+    // LOOP composes: five stream epochs with compactIfDue run
     // after every one (the scheduler cadence), policy maxBatches = 1.
     // The due pattern is pinned in-row — epochs 0 (cold build = batch-0
     // data, zero debt) and 1 leave ≤ 1 batch of debt (not due), epoch 2
@@ -1379,7 +1379,8 @@ object CurationOps {
           graft.streaming.RetrievalStream.foldEpoch(
             docs.filter(col("doc_id") % 5 === epoch), epochId = epoch,
             table, path)
-          val ran = Maintenance.compactRetrievalIfDue(spark, table, path, policy)
+          val ran = Maintenance.compactIfDue(spark,
+            Maintenance.Family(table, "retrieval", path), policy)
           require(ran == expectDue(epoch.toInt),
             s"q219: epoch $epoch due=$ran, expected ${expectDue(epoch.toInt)}")
         }
@@ -1559,7 +1560,8 @@ object CurationOps {
             Snapshot.export(spark, table, dest)
           }
           lastExport = Some(dest)
-          val ran = Maintenance.compactRetrievalIfDue(spark, table, path, policy)
+          val ran = Maintenance.compactIfDue(spark,
+            Maintenance.Family(table, "retrieval", path), policy)
           require(ran == expectDue(epoch.toInt),
             s"q227: epoch $epoch due=$ran, expected ${expectDue(epoch.toInt)}")
         }

@@ -1219,7 +1219,7 @@ object LlmOps {
     // compact PRESERVES the stamp namespace, so the post-compact extend
     // stamps maxCommitted + 1 through the same fence a resumed stream
     // would. Ladder: train+freeze on evens → extend vec_id % 4 = 1 →
-    // tombstone vec_id % 7 = 3 → compactIvfIfDue (dead-axis due; must
+    // tombstone vec_id % 7 = 3 → compactIfDue (dead-axis due; must
     // then settle) → extend vec_id % 4 = 3 onto the compacted file →
     // topK. Oracle = the trainFilter'd unrolled-Lloyd twin whose
     // candidates are (survivors of the pre-compact corpus) ∪ (the
@@ -1250,9 +1250,10 @@ object LlmOps {
           batchId = 2L)
         val policy = Maintenance.CompactPolicy(
           maxBatches = 99L, maxDeadFraction = 0.1)
-        require(Maintenance.compactIvfIfDue(spark, table, path, policy),
+        val family = Maintenance.Family(table, "ivf", path)
+        require(Maintenance.compactIfDue(spark, family, policy),
           "q218: 1/7 of the file tombstoned must trip the dead axis")
-        require(!Maintenance.compactIvfIfDue(spark, table, path, policy),
+        require(!Maintenance.compactIfDue(spark, family, policy),
           "q218: a freshly compacted file must NOT be due — the loop settles")
         IvfIndex.extend(spark, corpus.filter(col("id") % 4 === 3), table,
           batchId = 3L) // maxCommitted(2) + 1 through the preserved fence

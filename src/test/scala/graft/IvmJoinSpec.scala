@@ -212,9 +212,10 @@ class IvmJoinSpec extends SparkSpec {
       .getAs[Long]("batches_since_compact") == 2L,
       "empty epochs are fence bookkeeping, not compactable debt")
     // batches boundary ("more than"): 2 batches not due at 2, due at 1
-    assert(!Maintenance.shouldCompactJoin(spark, table,
+    val family = Maintenance.Family(table, "join", path, Seq("custkey"))
+    assert(!Maintenance.shouldCompact(spark, family,
       CompactPolicy(maxBatches = 2L, maxDeadFraction = 1.0)))
-    assert(Maintenance.compactJoinIfDue(spark, table, path, Seq("custkey"),
+    assert(Maintenance.compactIfDue(spark, family,
       CompactPolicy(maxBatches = 1L, maxDeadFraction = 1.0)))
     // the policy-run compact is the manual one: folded to batch 0, debt
     // gone, serve still == recompute, and the loop settles
@@ -223,7 +224,7 @@ class IvmJoinSpec extends SparkSpec {
     assert(r2.getAs[Long]("view_log_entries") == live, r2.toString)
     assert(asSet(IvmJoin.serve(spark, table)) ==
       asSet(recomputed().select(IvmJoin.serve(spark, table).columns.map(col): _*)))
-    assert(!Maintenance.shouldCompactJoin(spark, table,
+    assert(!Maintenance.shouldCompact(spark, family,
       CompactPolicy(maxBatches = 0L, maxDeadFraction = 0.0)))
   }
 

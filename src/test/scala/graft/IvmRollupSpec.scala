@@ -165,18 +165,19 @@ class IvmRollupSpec extends SparkSpec {
     // batches boundary: 2 accumulated batches — maxBatches = 2 is NOT
     // due (bound is "more than"), 1 is
     val lax = CompactPolicy(maxBatches = 2L, maxDeadFraction = 1.0)
-    assert(!Maintenance.shouldCompactRollup(spark, table, lax))
-    assert(!Maintenance.compactRollupIfDue(spark, table, path, lax))
+    val family = Maintenance.Family(table, "rollup", path)
+    assert(!Maintenance.shouldCompact(spark, family, lax))
+    assert(!Maintenance.compactIfDue(spark, family, lax))
     assert(spark.table(table).agg(max("batch_id")).head.getLong(0) == 2L,
       "a not-due probe must leave the log untouched")
     val strict = CompactPolicy(maxBatches = 1L, maxDeadFraction = 1.0)
-    assert(Maintenance.compactRollupIfDue(spark, table, path, strict))
+    assert(Maintenance.compactIfDue(spark, family, strict))
     assert(spark.table(table).agg(max("batch_id")).head.getLong(0) == 0L,
       "the policy-run compact folds to batch 0, like the manual one")
     assert(served() == recomputed(), "policy compact == recompute")
     // and the loop settles: the compacted log is not due under ANY
     // batches threshold (0 > 0 is false) with no dead weight
-    assert(!Maintenance.shouldCompactRollup(spark, table,
+    assert(!Maintenance.shouldCompact(spark, family,
       CompactPolicy(maxBatches = 0L, maxDeadFraction = 0.0)))
   }
 
@@ -203,7 +204,7 @@ class IvmRollupSpec extends SparkSpec {
     delta(1L, 10L)
     val r = IvmRollup.describe(spark, t).head()
     assert(r.getAs[Long]("batches_since_compact") == 1L, r.toString)
-    assert(!Maintenance.shouldCompactRollup(spark, t,
+    assert(!Maintenance.shouldCompact(spark, Maintenance.Family(t, "rollup", p),
       CompactPolicy(maxBatches = 1L, maxDeadFraction = 1.0)),
       "no post-compact flapping under epoch-derived stamps")
   }
@@ -223,7 +224,7 @@ class IvmRollupSpec extends SparkSpec {
     val r = IvmRollup.describe(spark, t).head()
     assert(Seq("live_keys", "dead_keys", "log_entries", "batches_since_compact")
       .forall(c => r.getAs[Long](c) == 0L), r.toString)
-    assert(!Maintenance.shouldCompactRollup(spark, t,
+    assert(!Maintenance.shouldCompact(spark, Maintenance.Family(t, "rollup", p),
       CompactPolicy(maxBatches = 0L, maxDeadFraction = 0.0)),
       "an empty log is never due — and never an NPE")
   }
@@ -256,10 +257,11 @@ class IvmRollupSpec extends SparkSpec {
       Seq((2L, -1L, "-1.00")).toDF("key", "dn", "dr")
         .select(col("key"), col("dn"), col("dr").cast(DecimalType(38, 2)).as("dr")), 1L)
     // at the boundary (0.5) not due — the bound is "more than"
-    assert(!Maintenance.shouldCompactRollup(spark, t,
+    val family = Maintenance.Family(t, "rollup", p)
+    assert(!Maintenance.shouldCompact(spark, family,
       CompactPolicy(maxBatches = 99L, maxDeadFraction = 0.5)))
     // just under it, due, even though the batch bound is slack
-    assert(Maintenance.compactRollupIfDue(spark, t, p,
+    assert(Maintenance.compactIfDue(spark, family,
       CompactPolicy(maxBatches = 99L, maxDeadFraction = 0.49)))
     // the dead key left physically; nothing is due anymore
     val r = IvmRollup.describe(spark, t).head()

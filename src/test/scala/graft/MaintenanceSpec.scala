@@ -11,7 +11,7 @@ import graft.streaming.{PairIndexStream, RetrievalStream}
 /** The maintenance loop's round-10 lifts: the NAMESPACE-PRESERVING
   * compact (a checkpointed stream survives a policy compact — the
   * PLANS.md "epoch→stamp ledger" option 1), the policy verbs on the
-  * four remaining index families, and the join decision reading all
+  * four remaining index kinds, and the join decision reading all
   * three of its logs. Rollup/join/pairs policy boundaries live in
   * IvmRollupSpec/IvmJoinSpec/PairGraphSpec.
   */
@@ -125,95 +125,92 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   // --------------------------------------------------------------------
-  // policy verbs on the four remaining families
+  // the policy verbs on the four remaining index kinds, one row each:
+  // the fixture (returning the row's post-compact check), the probes and
+  // their expected answers; every row then runs the due compact under
+  // CompactPolicy(0, 1.0) and checks that the loop settles
 
-  test("LSH policy: batches axis counts data-bearing stamps; dead axis triggers; settles") {
-    val table = "mnt_lsh"
-    drop(table, Seq("postings", "sets", "batches", "deleted"))
-    val path = graft.core.Scratch.path(table)
-    val d = docs.select(col("doc_id").as("id"), col("text"))
-    Dedup.buildNearDupIndex(d.filter(col("id") % 2 === 0), table, path)
-    Dedup.extendNearDupIndex(spark, d.filter(col("id") % 2 === 1),
-      table, batchId = 1L)
-    Dedup.deleteFromNearDupIndex(spark,
-      d.filter(col("id") % 7 === 3).select("id"),
-      table, path, batchId = 2L)
-    // one data-bearing batch (the delete's stamp is not fold-able debt)
-    assert(!Maintenance.shouldCompactLsh(spark, table,
-      CompactPolicy(maxBatches = 1L, maxDeadFraction = 1.0)))
-    assert(Maintenance.shouldCompactLsh(spark, table,
-      CompactPolicy(maxBatches = 0L, maxDeadFraction = 1.0)))
-    // dead axis: ~1/7 tombstoned > 0.1
-    assert(Maintenance.shouldCompactLsh(spark, table,
-      CompactPolicy(maxBatches = 99L, maxDeadFraction = 0.1)))
-    assert(Maintenance.compactLshIfDue(spark, table, path,
-      CompactPolicy(maxBatches = 0L, maxDeadFraction = 1.0)))
-    assert(!Maintenance.shouldCompactLsh(spark, table,
-      CompactPolicy(maxBatches = 0L, maxDeadFraction = 0.0)),
-      "a freshly compacted family must settle")
-    // the policy compact preserved the namespace for a live stream
-    assert(marker(s"${table}_batches") == Set(0L, 2L))
-  }
+  private final case class PolicyRow(name: String, kind: String, table: String,
+      suffixes: Seq[String], setup: (String, String) => (() => Unit),
+      probes: Seq[(CompactPolicy, Boolean)])
 
-  test("retrieval policy: empty stream epochs are fence bookkeeping, not debt") {
-    val table = "mnt_rix_policy"
-    drop(table, Seq("postings", "meta", "deleted"))
-    val path = graft.core.Scratch.path(table)
-    RetrievalStream.foldEpoch(docs.filter(col("doc_id") % 2 === 0),
-      epochId = 0L, table, path)
-    RetrievalStream.foldEpoch(docs.limit(0), epochId = 1L, table, path) // empty
-    RetrievalStream.foldEpoch(docs.filter(col("doc_id") % 2 === 1),
-      epochId = 2L, table, path)
-    // stamps {1, 2, 3} committed, but only 3 carries postings (1 is a
-    // cold-start build = batch-0 data; 2 is empty): ONE batch of debt
-    assert(!Maintenance.shouldCompactRetrieval(spark, table,
-      CompactPolicy(maxBatches = 1L, maxDeadFraction = 1.0)))
-    assert(Maintenance.compactRetrievalIfDue(spark, table, path,
-      CompactPolicy(maxBatches = 0L, maxDeadFraction = 1.0)))
-    assert(!Maintenance.shouldCompactRetrieval(spark, table,
-      CompactPolicy(maxBatches = 0L, maxDeadFraction = 0.0)))
-    // and the stream can keep going (the IfDue verbs preserve)
-    RetrievalStream.foldEpoch(docs.limit(0), epochId = 3L, table, path)
-  }
+  private val policyRows = Seq(
+    PolicyRow("LSH policy: batches axis counts data-bearing stamps; dead axis triggers; settles",
+      "lsh", "mnt_lsh", Seq("postings", "sets", "batches", "deleted"),
+      (table, path) => {
+        val d = docs.select(col("doc_id").as("id"), col("text"))
+        Dedup.buildNearDupIndex(d.filter(col("id") % 2 === 0), table, path)
+        Dedup.extendNearDupIndex(spark, d.filter(col("id") % 2 === 1),
+          table, batchId = 1L)
+        Dedup.deleteFromNearDupIndex(spark,
+          d.filter(col("id") % 7 === 3).select("id"),
+          table, path, batchId = 2L)
+        // the policy compact preserved the namespace for a live stream
+        () => assert(marker(s"${table}_batches") == Set(0L, 2L))
+      },
+      Seq(
+        // one data-bearing batch (the delete's stamp is not fold-able debt)
+        CompactPolicy(maxBatches = 1L, maxDeadFraction = 1.0) -> false,
+        CompactPolicy(maxBatches = 0L, maxDeadFraction = 1.0) -> true,
+        // dead axis: ~1/7 tombstoned > 0.1
+        CompactPolicy(maxBatches = 99L, maxDeadFraction = 0.1) -> true)),
+    PolicyRow("retrieval policy: empty stream epochs are fence bookkeeping, not debt",
+      "retrieval", "mnt_rix_policy", Seq("postings", "meta", "deleted"),
+      (table, path) => {
+        RetrievalStream.foldEpoch(docs.filter(col("doc_id") % 2 === 0),
+          epochId = 0L, table, path)
+        RetrievalStream.foldEpoch(docs.limit(0), epochId = 1L, table, path) // empty
+        RetrievalStream.foldEpoch(docs.filter(col("doc_id") % 2 === 1),
+          epochId = 2L, table, path)
+        // and the stream can keep going (the policy compact preserves)
+        () => RetrievalStream.foldEpoch(docs.limit(0), epochId = 3L, table, path)
+      },
+      // stamps {1, 2, 3} committed, but only 3 carries postings (1 is a
+      // cold-start build = batch-0 data; 2 is empty): ONE batch of debt
+      Seq(CompactPolicy(maxBatches = 1L, maxDeadFraction = 1.0) -> false)),
+    PolicyRow("positions policy: boundary + settle on the phrase tier",
+      "positions", "mnt_pix_policy", Seq("positions", "pbatches", "pdeleted"),
+      (table, path) => {
+        RetrievalIndex.buildPositions(docs.filter(col("doc_id") % 2 === 0), table, path)
+        RetrievalIndex.extendPositions(docs.filter(col("doc_id") % 2 === 1),
+          table, batchId = 1L)
+        () => assert(marker(s"${table}_pbatches") == Set(0L, 1L))
+      },
+      Seq(CompactPolicy(maxBatches = 1L, maxDeadFraction = 1.0) -> false)),
+    PolicyRow("IVF policy: boundary + settle, centroids untouched",
+      "ivf", "mnt_ivf_policy", Seq("centroids", "cells", "batches", "deleted"),
+      (table, path) => {
+        val vecs = Tables(spark, sfDir).embeddings
+          .select(col("vec_id").as("id"), col("embedding").as("vec"))
+        IvfIndex.build(vecs.filter(col("id") % 2 === 0), table, path, nCells = 4)
+        IvfIndex.extend(spark, vecs.filter(col("id") % 2 === 1), table, batchId = 1L)
+        IvfIndex.deleteIds(spark, vecs.filter(col("id") % 5 === 0).select("id"),
+          table, path, batchId = 2L)
+        val cents = asSet(spark.table(s"${table}_centroids"))
+        () => assert(asSet(spark.table(s"${table}_centroids")) == cents,
+          "compaction never moves a cell boundary")
+      },
+      Seq(
+        CompactPolicy(maxBatches = 1L, maxDeadFraction = 1.0) -> false,
+        // dead axis: 1/5 tombstoned > 0.1
+        CompactPolicy(maxBatches = 99L, maxDeadFraction = 0.1) -> true)))
 
-  test("positions policy: boundary + settle on the phrase tier") {
-    val table = "mnt_pix_policy"
-    drop(table, Seq("positions", "pbatches", "deleted"))
-    val path = graft.core.Scratch.path(table)
-    RetrievalIndex.buildPositions(docs.filter(col("doc_id") % 2 === 0), table, path)
-    RetrievalIndex.extendPositions(docs.filter(col("doc_id") % 2 === 1),
-      table, batchId = 1L)
-    assert(!Maintenance.shouldCompactPositions(spark, table,
-      CompactPolicy(maxBatches = 1L, maxDeadFraction = 1.0)))
-    assert(Maintenance.compactPositionsIfDue(spark, table, path,
-      CompactPolicy(maxBatches = 0L, maxDeadFraction = 1.0)))
-    assert(!Maintenance.shouldCompactPositions(spark, table,
-      CompactPolicy(maxBatches = 0L, maxDeadFraction = 0.0)))
-    assert(marker(s"${table}_pbatches") == Set(0L, 1L))
-  }
-
-  test("IVF policy: boundary + settle, centroids untouched") {
-    val table = "mnt_ivf_policy"
-    drop(table, Seq("centroids", "cells", "batches", "deleted"))
-    val path = graft.core.Scratch.path(table)
-    val vecs = Tables(spark, sfDir).embeddings
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    IvfIndex.build(vecs.filter(col("id") % 2 === 0), table, path, nCells = 4)
-    IvfIndex.extend(spark, vecs.filter(col("id") % 2 === 1), table, batchId = 1L)
-    IvfIndex.deleteIds(spark, vecs.filter(col("id") % 5 === 0).select("id"),
-      table, path, batchId = 2L)
-    val cents = asSet(spark.table(s"${table}_centroids"))
-    assert(!Maintenance.shouldCompactIvf(spark, table,
-      CompactPolicy(maxBatches = 1L, maxDeadFraction = 1.0)))
-    // dead axis: 1/5 tombstoned > 0.1
-    assert(Maintenance.shouldCompactIvf(spark, table,
-      CompactPolicy(maxBatches = 99L, maxDeadFraction = 0.1)))
-    assert(Maintenance.compactIvfIfDue(spark, table, path,
-      CompactPolicy(maxBatches = 0L, maxDeadFraction = 1.0)))
-    assert(!Maintenance.shouldCompactIvf(spark, table,
-      CompactPolicy(maxBatches = 0L, maxDeadFraction = 0.0)))
-    assert(asSet(spark.table(s"${table}_centroids")) == cents,
-      "compaction never moves a cell boundary")
+  policyRows.foreach { r =>
+    test(r.name) {
+      drop(r.table, r.suffixes)
+      val path = graft.core.Scratch.path(r.table)
+      val after = r.setup(r.table, path)
+      val family = Maintenance.Family(r.table, r.kind, path)
+      r.probes.foreach { case (policy, want) =>
+        assert(Maintenance.shouldCompact(spark, family, policy) == want, policy)
+      }
+      assert(Maintenance.compactIfDue(spark, family,
+        CompactPolicy(maxBatches = 0L, maxDeadFraction = 1.0)))
+      assert(!Maintenance.shouldCompact(spark, family,
+        CompactPolicy(maxBatches = 0L, maxDeadFraction = 0.0)),
+        "a freshly compacted family must settle")
+      after()
+    }
   }
 
   // --------------------------------------------------------------------
@@ -240,19 +237,20 @@ class MaintenanceSpec extends SparkSpec {
     assert(IvmJoin.describe(spark, table).head()
       .getAs[Long]("batches_since_compact") == 0L,
       "fixture sanity: the view log must have seen nothing")
-    assert(Maintenance.shouldCompactJoin(spark, table,
+    val family = Maintenance.Family(table, "join", path, Seq("k"))
+    assert(Maintenance.shouldCompact(spark, family,
       CompactPolicy(maxBatches = 1L, maxDeadFraction = 1.0)),
       "2 dim-log batches must make the family due at maxBatches = 1")
-    assert(!Maintenance.shouldCompactJoin(spark, table,
+    assert(!Maintenance.shouldCompact(spark, family,
       CompactPolicy(maxBatches = 2L, maxDeadFraction = 1.0)))
     // dead axis on the dim log: 2 churned-away entries + 1 live of 3
     // collapsed identities... entries − live > 0 must trigger a tight
     // dead-fraction policy even with a generous batches bound
-    assert(Maintenance.shouldCompactJoin(spark, table,
+    assert(Maintenance.shouldCompact(spark, family,
       CompactPolicy(maxBatches = 99L, maxDeadFraction = 0.1)))
-    assert(Maintenance.compactJoinIfDue(spark, table, path, Seq("k"),
+    assert(Maintenance.compactIfDue(spark, family,
       CompactPolicy(maxBatches = 0L, maxDeadFraction = 1.0)))
-    assert(!Maintenance.shouldCompactJoin(spark, table,
+    assert(!Maintenance.shouldCompact(spark, family,
       CompactPolicy(maxBatches = 0L, maxDeadFraction = 0.0)),
       "the loop settles after folding all three logs")
   }

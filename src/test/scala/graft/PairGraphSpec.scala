@@ -219,20 +219,22 @@ class PairGraphSpec extends SparkSpec {
     Dedup.deleteFromPairIndex(spark, victims, "pg_auto", tmp("auto"), batchId = 2L)
     // batches axis counts DATA-BEARING stamps: one extend (the delete's
     // marker stamp and any empty-epoch stamps are not fold-able debt)
-    assert(!Maintenance.shouldCompactPairs(spark, "pg_auto",
+    // the pair index's compacts default to 8 buckets
+    val family = Maintenance.Family("pg_auto", "pairs", tmp("auto"), nBuckets = 8)
+    assert(!Maintenance.shouldCompact(spark, family,
       CompactPolicy(maxBatches = 1L, maxDeadFraction = 1.0)))
     // dead-fraction trigger: every 7th doc tombstoned ≈ 1/7 > 0.1
-    assert(Maintenance.shouldCompactPairs(spark, "pg_auto",
+    assert(Maintenance.shouldCompact(spark, family,
       CompactPolicy(maxBatches = 99L, maxDeadFraction = 0.1)))
     val want = Dedup.jaccardPairs(docs.filter(col("id") % 7 =!= 3), threshold = 0.8)
       .collect().map(key).toSet
-    assert(Maintenance.compactPairsIfDue(spark, "pg_auto", tmp("auto"),
+    assert(Maintenance.compactIfDue(spark, family,
       CompactPolicy(maxBatches = 0L, maxDeadFraction = 1.0)))
     // the policy-run compact is the manual one: tombstones purged,
     // namespace reset, serve == recompute — and the loop settles
     assert(spark.table("pg_auto_deleted").isEmpty)
     assert(Dedup.servePairIndex(spark, "pg_auto").collect().map(key).toSet == want)
-    assert(!Maintenance.shouldCompactPairs(spark, "pg_auto",
+    assert(!Maintenance.shouldCompact(spark, family,
       CompactPolicy(maxBatches = 0L, maxDeadFraction = 0.0)))
   }
 

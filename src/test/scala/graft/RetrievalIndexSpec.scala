@@ -264,6 +264,43 @@ class RetrievalIndexSpec extends SparkSpec {
     assert(spark.table("rix_pi_positions").count() == rows)
   }
 
+  test("two tiers on one table: deletes and compacts on either leave the other unchanged") {
+    val t = "rix_two"
+    Seq("postings", "meta", "deleted", "positions", "pbatches", "pdeleted")
+      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS ${t}_$s"))
+    val p = freshPath("two")
+    val three = frame(Seq(1L -> "alpha beta gamma", 2L -> "alpha beta delta",
+      3L -> "beta alpha gamma"))
+    RetrievalIndex.build(three, t, p)
+    RetrievalIndex.buildPositions(three, t, p)
+    def phrase = RetrievalIndex.phrase(spark, t, Seq((1, Seq("alpha", "beta"))))
+      .collect().map(_.getAs[Long]("doc_id")).toSet
+    def ranked = RetrievalIndex.topK(spark, t, Seq((1, Seq("alpha"))))
+      .collect().map(_.getAs[Long]("doc_id")).toSet
+    def fsckOk(kind: String) = {
+      val bad = graft.operators.Maintenance.fsck(spark, t, kind).filter(!col("ok")).collect()
+      assert(bad.isEmpty, s"$kind: ${bad.mkString("; ")}")
+    }
+    assert((phrase, ranked) == ((Set(1L, 2L), Set(1L, 2L, 3L))))
+    // a tf delete, then the tf compact: the phrase tier never sees it
+    RetrievalIndex.deleteDocs(spark, idFrame(Seq(2L)), t, p, batchId = 1L)
+    assert((phrase, ranked) == ((Set(1L, 2L), Set(1L, 3L))))
+    fsckOk("retrieval"); fsckOk("positions")
+    RetrievalIndex.compact(spark, t, p)
+    assert((phrase, ranked) == ((Set(1L, 2L), Set(1L, 3L))))
+    // a positional delete, then the positional compact: the tf tier
+    // keeps its answers, and its own tombstone is not resurrected
+    RetrievalIndex.deletePositionDocs(spark, idFrame(Seq(1L)), t, p, batchId = 1L)
+    assert((phrase, ranked) == ((Set(2L), Set(1L, 3L))))
+    RetrievalIndex.compactPositions(spark, t, p)
+    assert((phrase, ranked) == ((Set(2L), Set(1L, 3L))))
+    // two tf deletes: each tier's ledger audits clean against its own marker
+    RetrievalIndex.deleteDocs(spark, idFrame(Seq(3L)), t, p, batchId = 1L)
+    RetrievalIndex.deleteDocs(spark, idFrame(Seq(1L)), t, p, batchId = 2L)
+    assert((phrase, ranked) == ((Set(2L), Set.empty[Long])))
+    fsckOk("retrieval"); fsckOk("positions")
+  }
+
   test("the writer fence rejects an out-of-sequence stamp loudly, on both tiers") {
     drop("rix_fn")
     Seq("rix_fn_deleted", "rix_fnp_positions", "rix_fnp_pbatches")
