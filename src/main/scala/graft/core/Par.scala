@@ -28,6 +28,11 @@ package graft.core
   * have thrown. Each task body runs under `blocking{}` so the global
   * pool spawns compensation threads deterministically instead of
   * relying on Await's managed blocking for nested overlap.
+  *
+  * Each item runs with the CALLER's Spark local properties (job group,
+  * scheduler pool, trace tags), captured at submit time and set on the
+  * worker for that item only, so the jobs an item submits are
+  * attributed to the caller; the worker's own are restored afterwards.
   */
 object Par {
 
@@ -36,9 +41,12 @@ object Par {
     else {
       import scala.concurrent._
       import scala.util.{Failure, Try}
+      import org.apache.spark.graft.LocalProperties
       implicit val ec: ExecutionContext = ExecutionContext.global
+      val props = LocalProperties.capture()
       val joined = Await.result(
-        Future.sequence(items.map(a => Future(Try(blocking(f(a)))))),
+        Future.sequence(items.map(a =>
+          Future(Try(blocking(LocalProperties.withCaptured(props)(f(a))))))),
         duration.Duration.Inf)
       joined.collectFirst { case Failure(e) => e }.foreach(throw _)
       joined.map(_.get)

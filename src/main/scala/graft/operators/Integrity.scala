@@ -38,6 +38,7 @@ object Integrity {
     concat_ws("\u001f", cols.map(c => coalesce(c.cast("string"), lit("\u0000"))): _*)
 
   private val SumMod = 1L << 48
+  private val Mask = SumMod - 1 // x mod 2⁴⁸ for x >= 0
 
   /** The commutative digest pair over a row-hash column named `h`:
     * `xor_hash` plus `sum_hash` (decimal-exact sum of row hashes mod 2⁴⁸,
@@ -77,8 +78,9 @@ object Integrity {
     * link while scanning only the link's own rows. With `withStamps`,
     * `st` also collects the frame's distinct `batch_id` stamps in the
     * same scan (else it is an empty array). One column-complete scan,
-    * map-side-combined; an empty frame digests to (0, 0). The frame is
-    * lazy so callers can fuse several into one action.
+    * map-side-combined; an empty frame digests to (0, 0). The SQL form
+    * of the digest: [[digests]] computes the same numbers for several
+    * frames in one scan-only job, and PropertySpec holds it to this one.
     */
   def contentDigestAgg(df: DataFrame, withStamps: Boolean = false): DataFrame = {
     val h = rowHash(df.columns.toSeq.map(col)).as("h")
@@ -86,12 +88,6 @@ object Integrity {
       if (withStamps) collect_set(col("batch_id")) else array().cast("array<bigint>")
     (if (withStamps) df.select(h, col("batch_id")) else df.select(h))
       .agg(count(lit(1)).as("n"), modSum(col("h")).as("s"), stamps.as("st"))
-  }
-
-  /** [[contentDigestAgg]]'s (n, s), collected. */
-  def contentDigest(df: DataFrame): (Long, Long) = {
-    val r = contentDigestAgg(df).head()
-    (r.getLong(0), r.getLong(1))
   }
 
   /** The [[contentDigestAgg]] modulus — additive chaining must reduce
@@ -103,20 +99,79 @@ object Integrity {
   private def modSum(h: Column): Column =
     coalesce((sum(h.cast("decimal(38,0)")) % lit(SumMod)).cast(LongType), lit(0L))
 
-  /** One scan of a stamped CUT slice answering both questions the
-    * incremental export asks of it ([[Snapshot.export]]'s delta path),
-    * as a single-row aggregate frame `(st, hn, hs)`: the slice's
-    * distinct stamps AND the count + digest of its `batch_id <= since`
-    * prefix — the parent-history audit. The values equal a
-    * distinct-collect scan plus a [[contentDigestAgg]] scan of the
-    * prefix (an empty prefix digests to (0, 0)).
+  /** One leg of [[digests]]: `df` with the reads asked of it — the
+    * row-hash sum over all its columns (`hashed`), its distinct
+    * `batch_id` stamps (`stamped`), and the count + hash sum of its
+    * `batch_id <= since` prefix (`since`, the parent-history audit of a
+    * delta export).
     */
-  def cutAuditAgg(cutDf: DataFrame, since: Long): DataFrame = {
-    val hist = col("batch_id") <= since
-    cutDf
-      .select(rowHash(cutDf.columns.toSeq.map(col)).as("h"), col("batch_id"))
-      .agg(collect_set(col("batch_id")).as("st"),
-        count(when(hist, 1)).as("hn"), modSum(when(hist, col("h"))).as("hs"))
+  final case class Leg(df: DataFrame, hashed: Boolean = true,
+      stamped: Boolean = false, since: Option[Long] = None)
+
+  /** A leg's answers: row count `n`, row-hash sum mod 2⁴⁸ `s` (0 when
+    * not hashed), distinct non-null stamps (∅ when not stamped), and the
+    * `batch_id <= since` prefix's count `hn` and hash sum `hs` (0 / 0
+    * without a `since`). */
+  final case class Digest(n: Long, s: Long, stamps: Set[Long], hn: Long, hs: Long) {
+    def sortedStamps: Seq[Long] = stamps.toSeq.sorted
+  }
+
+  /** Every leg answered by ONE scan-only Spark job: each leg projects to
+    * (leg, row hash, batch_id), the executors fold per-partition
+    * partials (count, hash sum mod 2⁴⁸, distinct stamps, prefix count and
+    * hash sum) and the driver merges them. No shuffle, so one job
+    * whatever the number of legs — a union of per-leg aggregates would
+    * run each leg's partial aggregate as its own shuffle-map job under
+    * AQE. The values are exactly [[contentDigestAgg]]'s (n, s),
+    * `count(1)`, `collect_set(batch_id)` and the prefix audit's
+    * `count(when(batch_id <= since, 1))` / mod-sum: a null `batch_id` is
+    * no stamp and in no prefix, an empty leg gives 0 / 0 / ∅. The
+    * driver holds per leg only its distinct stamps (∝ batches), so a
+    * stamped leg must be a stamped log, never an unbounded key column.
+    */
+  def digests(legs: Seq[Leg]): Seq[Digest] =
+    if (legs.isEmpty) Nil
+    else {
+      val nullLong = lit(null).cast(LongType)
+      val rows = legs.zipWithIndex.map { case (l, i) =>
+        require(l.since.isEmpty || l.stamped,
+          "Integrity.digests: a prefix audit (since) needs a stamped leg")
+        l.df.select(lit(i).as("leg"),
+          if (l.hashed) rowHash(l.df.columns.toSeq.map(col)) else nullLong,
+          if (l.stamped) col("batch_id").cast(LongType) else nullLong)
+      }.reduce(_ union _)
+      val since = legs.map(_.since).toArray
+      val partials = rows.queryExecution.toRdd.mapPartitions { it =>
+        val acc = new Array[Partial](since.length)
+        it.foreach { r =>
+          val i = r.getInt(0)
+          if (acc(i) == null) acc(i) = new Partial
+          val p = acc(i)
+          val h = if (r.isNullAt(1)) 0L else r.getLong(1)
+          p.n += 1; p.s = (p.s + h) & Mask
+          if (!r.isNullAt(2)) {
+            val b = r.getLong(2)
+            p.stamps += b
+            if (since(i).exists(b <= _)) { p.hn += 1; p.hs = (p.hs + h) & Mask }
+          }
+        }
+        acc.iterator.zipWithIndex.collect { case (p, i) if p != null => (i, p) }
+      }.collect()
+      val merged = Array.fill(legs.size)(new Partial)
+      partials.foreach { case (i, p) => merged(i).merge(p) }
+      merged.toSeq.map(p => Digest(p.n, p.s, p.stamps.toSet, p.hn, p.hs))
+    }
+
+  // a leg's per-partition fold; row hashes are < 2⁴⁸, so two reduced
+  // sums add without overflow before the next mask
+  private final class Partial extends Serializable {
+    var n = 0L; var s = 0L; var hn = 0L; var hs = 0L
+    val stamps = scala.collection.mutable.HashSet.empty[Long]
+    def merge(o: Partial): Unit = {
+      n += o.n; s = (s + o.s) & Mask
+      hn += o.hn; hs = (hs + o.hs) & Mask
+      stamps ++= o.stamps
+    }
   }
 
   /** Bucket-digest reconciliation (anti-entropy): compare two snapshots

@@ -42,17 +42,19 @@ private[graft] object Ledger {
   /** The table holding the kind's stamps: its marker, or for the
     * markerless rollup the log itself (max visible stamp is committed
     * there). */
-  private def ledger(table: String, kind: String): String =
+  private[operators] def ledger(table: String, kind: String): String =
     kindOf(kind).marker.fold(table)(Maintenance.tableOf(table, _))
 
   /** The cold-start probe: whether the family's build committed. */
   def exists(spark: SparkSession, table: String, kind: String): Boolean =
     spark.catalog.tableExists(ledger(table, kind))
 
-  /** The distinct stamps of a stamped log, distinct on the executors:
-    * a data log is not bounded by the batch count. */
+  /** The distinct stamps of a stamped log, by one scan-only job that
+    * folds them per partition on the executors: a data log is not
+    * bounded by the batch count, its stamp set is. */
   def stampsOf(spark: SparkSession, t: String): Set[Long] =
-    spark.table(t).select("batch_id").distinct().collect().map(_.getLong(0)).toSet
+    Integrity.digests(Seq(Integrity.Leg(spark.table(t), hashed = false, stamped = true)))
+      .head.stamps
 
   /** The marker's rows as (payload or 0, stamp), by one scan with no
     * shuffle: a marker holds about one row per committed batch, so the

@@ -123,28 +123,44 @@ object Maintenance {
     *    MARKER rules itself out because streams stamp empty epochs for
     *    fence contiguity — a quiet stream's markers are zero fold-able
     *    debt. (Delete batches append no data rows; their debt is the
-    *    dead axis below.) When this axis alone decides, the probe never
-    *    pays the tombstone scans.
-    *  - the dead axis: distinct tombstoned ids over distinct indexed
-    *    ids. A tombstone aimed at a never-indexed id (legal, it just
-    *    never matches) can push the fraction past 1 — which still
-    *    reads as "compact", the only sensible answer for a ledger
-    *    dominated by dead weight.
+    *    dead axis below.) The same scan-only job ([[Integrity.digests]])
+    *    counts the frontier's rows, so a due probe, and a probe whose
+    *    frontier is empty or absent (no delete since the last compact),
+    *    decide on that one job.
+    *  - the dead axis, only for a not-due probe with tombstones: distinct
+    *    tombstoned ids over distinct indexed ids, both counted by one
+    *    distinct over the union of the two id columns (the frontier's
+    *    ids cast to the log's id type) and one collect. A tombstone aimed at a
+    *    never-indexed id (legal, it just never matches) can push the
+    *    fraction past 1 — which still reads as "compact", the only
+    *    sensible answer for a ledger dominated by dead weight.
     */
   private def indexDebtDue(spark: SparkSession, table: String, kind: String,
       policy: CompactPolicy): Boolean = {
-    import org.apache.spark.sql.functions.{col, count_distinct, when}
+    import org.apache.spark.sql.functions.{col, lit}
     val f = Frontier.spec(kind)
-    val dataLog = tableOf(table, f.dataLog)
-    val batches = spark.table(dataLog)
-      .agg(count_distinct(when(col("batch_id") =!= 0L, col("batch_id"))))
-      .head().getLong(0)
+    val log = spark.table(tableOf(table, f.dataLog))
+    val frontier = Frontier.read(spark, table, kind)
+    val got = Integrity.digests(Integrity.Leg(log, hashed = false, stamped = true) +:
+      frontier.map(Integrity.Leg(_, hashed = false)).toSeq)
+    val batches = got.head.stamps.count(_ != 0L).toLong
     if (batches > policy.maxBatches) return true
-    val dead = Frontier.dead(spark, table, kind).fold(0L)(_.count())
-    if (dead == 0L) return false // no tombstones → nothing to purge
-    val total = spark.table(dataLog)
-      .select(f.idCol).distinct().count() // replay duplicates collapse
-    due(batches, dead, total, policy)
+    if (got.drop(1).forall(_.n == 0L)) return false // no tombstones → nothing to purge
+    // distinct ids per side, replay duplicates collapsed: leg 0 holds
+    // the ids Frontier.dead reads (every stamped tombstone), leg 1 the
+    // log's. Each distinct (leg, id) lands in one shuffle partition, so
+    // per-partition row counts add up to the two distinct counts: one
+    // shuffle and one collect, no second aggregate
+    val idType = log.schema(f.idCol).dataType
+    val perPartition = frontier.get.filter(col("batch_id").isNotNull)
+      .select(lit(0).as("leg"), col(f.idCol).cast(idType).as("id"))
+      .union(log.select(lit(1), col(f.idCol)))
+      .distinct().queryExecution.toRdd.mapPartitions { it =>
+        val n = new Array[Long](2)
+        it.foreach(r => n(r.getInt(0)) += 1)
+        Iterator(n)
+      }.collect()
+    due(batches, perPartition.map(_(0)).sum, perPartition.map(_(1)).sum, policy)
   }
 
   // ------------------------------------------------------------------

@@ -304,7 +304,7 @@ object RetrievalIndex {
   private val DeletedLeg = 2
 
   /** Everything a top-k serve reads, as one union of tagged legs (the
-    * `Snapshot.collectFused` shape) over (leg, term, doc_id, n, batch_id):
+    * [[Integrity.digests]] shape) over (leg, term, doc_id, n, batch_id):
     * the bucket-pruned postings probe (n = tf), the `_meta` ledger
     * (n = n_docs) and the `_deleted` frontier, each cut at `asOf`. Planned
     * on the [[probeSession]] clone, so the postings read keeps its bucket

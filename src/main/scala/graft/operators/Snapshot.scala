@@ -4,8 +4,8 @@ import com.fasterxml.jackson.annotation.JsonInclude
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{array, col, collect_set, count, lit}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Portable snapshots of a maintained-state family — the backup/restore
@@ -86,8 +86,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * metadata, counts, stamp sets, digests, and the manifest bytes — all
   * bounded by batch count, never rows), and the delta slice
   * `batch_id > since` prunes at the scan. The per-link content digest
-  * ([[graft.operators.Integrity.contentDigest]]) is one map-side-
-  * combined aggregate over the rows the link writes anyway, and the
+  * ([[graft.operators.Integrity.digests]]) is one scan-only fold
+  * over the rows the link writes anyway, and the
   * WHOLE-TABLE digest on every link comes free of rescans: the modular
   * sum is additive over multiset union, so each link's `totalChecksum`
   * is parent total + own slice digest. Restore pays one ingest-class
@@ -221,14 +221,16 @@ object Snapshot {
     */
   private def siblings(spark: SparkSession, table: String): Seq[String] = {
     val t = table.toLowerCase
-    spark.catalog.listTables().collect()
-      // temp views share the listing (an [[attach]]ed chain, ad-hoc
-      // scratch views) but are not snapshot material — and
-      // getTableMetadata would throw on one mid-export
-      .filter(!_.isTemporary)
-      .map(_.name)
+    val catalog = spark.sessionState.catalog
+    // the session catalog's listing is metadata only (the public
+    // `catalog.listTables()` is a Dataset, collected by a Spark job).
+    // Temp views (an [[attach]]ed chain, ad-hoc scratch views) are not
+    // snapshot material — and getTableMetadata would throw on one
+    // mid-export — so they stay out of the listing
+    catalog.listTables(catalog.getCurrentDatabase, "*", includeLocalTempViews = false)
+      .map(_.table)
       .filter(n => n == t || n.startsWith(t + "_"))
-      .sorted.toSeq
+      .sorted
   }
 
   /** Test seam: invoked after each table's slice lands on disk, before
@@ -256,12 +258,12 @@ object Snapshot {
     * written into THIS snapshot directory.
     *
     * Four phases (guide §2.4/§2.6): the per-table pre-write cut audits
-    * fuse into ONE union-of-aggregates action; the per-table writes
-    * overlap; the post-write read-back digests (+ landed-stamp collects)
-    * and the cut-consistency live re-checks fuse into one more action;
-    * then the totals arithmetic and the manifest. T tables cost T
-    * writes + ≤3 fused actions. Landed stamps are read from the landed
-    * slice on the full path: the write IS the cut frame's
+    * run as ONE scan-only job ([[Integrity.digests]]); the per-table
+    * writes overlap; the post-write read-back digests (+ landed stamps)
+    * and the cut-consistency live re-checks run as one more; then the
+    * totals arithmetic and the manifest. T tables cost T writes + 2
+    * scan-only jobs on a delta, 1 on a full. Landed stamps are read from
+    * the landed slice on the full path: the write IS the cut frame's
     * materialization, so the sets are equal by construction.
     */
   def export(spark: SparkSession, table: String, dest: String,
@@ -336,18 +338,16 @@ object Snapshot {
     def sinceOf(p: TableEntry): Long =
       if (p.stamps.nonEmpty) p.stamps.max else -1L
     // phase 1 — every delta table's slice-stamps + parent-history
-    // audit, one action; the audits gate the writes
+    // audit, one scan-only job; the audits gate the writes
     val deltas = preps.filter(_.parentE.isDefined)
-    val audits: Map[String, (Seq[Long], Long, Long)] = deltas.map(_.name)
-      .zip(collectFused(deltas.map(p =>
-        Integrity.cutAuditAgg(p.cutDf, sinceOf(p.parentE.get._2))))
-        .map(r => (r.getSeq[Long](0).sorted, r.getLong(1), r.getLong(2))))
-      .toMap
+    val audits: Map[String, Integrity.Digest] = deltas.map(_.name)
+      .zip(Integrity.digests(deltas.map(p => Integrity.Leg(p.cutDf, stamped = true,
+        since = Some(sinceOf(p.parentE.get._2)))))).toMap
     deltas.foreach { p =>
       val (pd, pe) = p.parentE.get
-      val (stamps, hn, hsum) = audits(p.name)
+      val Integrity.Digest(_, _, stamps, hn, hsum) = audits(p.name)
       val rowsTotal = cumulativeRows(pd, pe)
-      require(pe.stamps.toSet.subsetOf(stamps.toSet),
+      require(pe.stamps.toSet.subsetOf(stamps),
         s"Snapshot.export: ${p.name} no longer holds the parent " +
           s"snapshot's stamps (a compact rewrote history since " +
           s"$pd) — incremental chains break at compacts; take a " +
@@ -402,10 +402,10 @@ object Snapshot {
     //    `batch_id <= cut` are append-only between compacts, so an
     //    unchanged count+digest across the copy means the slice was
     //    a complete committed prefix, not a mid-append tear.
-    // One action for all of it.
+    // One scan-only job for all of it.
     val landedLegs = preps.map { p =>
-      (spark.read.schema(p.schema).parquet(s"$dest/${p.suffix}"),
-        p.stamped && p.parentE.isEmpty)
+      Integrity.Leg(spark.read.schema(p.schema).parquet(s"$dest/${p.suffix}"),
+        stamped = p.stamped && p.parentE.isEmpty)
     }
     val liveIdx = preps.zipWithIndex.filter { case (p, _) =>
       cut.isDefined && (!p.stamped || verifyStampedCut)
@@ -416,19 +416,16 @@ object Snapshot {
       // would pin the pre-copy file listing
       spark.catalog.refreshTable(p.name)
       val fresh = spark.table(p.name)
-      (if (p.stamped) fresh.filter(col("batch_id") <= cut.get)
-       else fresh, false)
+      Integrity.Leg(if (p.stamped) fresh.filter(col("batch_id") <= cut.get) else fresh)
     }
-    val got = fusedDigestLegs(landedLegs ++ liveLegs)
+    val got = Integrity.digests(landedLegs ++ liveLegs)
     val lives: Map[Int, (Long, Long)] = liveIdx.map(_._2)
-      .zip(got.drop(preps.size).map(t => (t._1, t._2))).toMap
+      .zip(got.drop(preps.size).map(d => (d.n, d.s))).toMap
     // phase 4 — totals arithmetic, consistency requires, manifest rows
     val entries = preps.zipWithIndex.map { case (p, i) =>
-      val (written, sliceSum, landedStamps) = got(i)
-      val stamps: Seq[Long] = p.parentE match {
-        case Some(_) => audits(p.name)._1
-        case None => if (p.stamped) landedStamps else Nil
-      }
+      val Integrity.Digest(written, sliceSum, _, _, _) = got(i)
+      // an unstamped table's digest holds no stamps
+      val stamps = (if (p.parentE.isDefined) audits(p.name) else got(i)).sortedStamps
       // whole-cut-state totals, rescan-free on deltas: the modular-sum
       // digest is additive over multiset union (a pre-digest legacy
       // parent breaks the digest chain — the child records none and
@@ -529,14 +526,20 @@ object Snapshot {
     * collect ∝ batches.
     */
   def committedCut(spark: SparkSession, table: String,
-      kind: String): Long = {
-    // markerless rollup: the committed-cut surrogate — max visible
-    // stamp of its own log, with the slice's stability proven in export
+      kind: String): Long =
+    committedStamps(spark, table, kind).max
+
+  /** The family's committed stamps, refused when empty — their max is
+    * the cut (markerless rollup: the committed-cut surrogate, max
+    * visible stamp of its own log, with the slice's stability proven in
+    * export). */
+  private def committedStamps(spark: SparkSession, table: String,
+      kind: String): Set[Long] = {
     val committed = Ledger.committed(spark, table, kind)
     require(committed.nonEmpty,
       s"Snapshot: the $kind family $table holds no committed stamps — " +
         "nothing consistent to cut at (crashed build?)")
-    committed.max
+    committed
   }
 
   /** The snapshot chain base-first, parent pointers followed; refuses
@@ -627,8 +630,8 @@ object Snapshot {
       // each link's cumulative cut-state counts — a torn restore
       // surfaces at the first link it diverges from. The per-table
       // landed-count read-backs (the torn-restore audit — it must read
-      // the TABLE, not observe the write) fuse into ONE action per link
-      val landedOf = fusedTableCounts(spark, targets.map(_._1))
+      // the TABLE, not observe the write) run as ONE scan-only job per link
+      val landedOf = tableCounts(spark, targets.map(_._1))
       targets.foreach { case (newName, expected) =>
         val landed = landedOf(newName)
         require(landed == expected,
@@ -639,40 +642,13 @@ object Snapshot {
     }
   }
 
-  /** Several single-row aggregate frames answered by ONE action — a
-    * union of the legs tagged by input position (guide §2.4), so each
-    * leg's values are exactly those its own job would return. Rows come
-    * back untagged, in input order; every leg must share one schema.
-    */
-  private def collectFused(legs: Seq[DataFrame]): Seq[Row] =
-    if (legs.isEmpty) Nil
-    else {
-      val got = legs.zipWithIndex
-        .map { case (df, i) =>
-          df.select(lit(i).as("__leg") +: df.columns.toSeq.map(col): _*)
-        }
-        .reduce(_ union _).collect()
-        .map(r => r.getInt(0) -> Row.fromSeq(r.toSeq.tail)).toMap
-      legs.indices.map(got)
-    }
-
-  /** How many rows each of these tables holds, in one action. */
-  private def fusedTableCounts(spark: SparkSession,
+  /** How many rows each of these tables holds, in one scan-only job. */
+  private def tableCounts(spark: SparkSession,
       tables: Seq[String]): Map[String, Long] =
-    tables.zip(collectFused(tables.map(t =>
-      spark.table(t).agg(count(lit(1)))))).map { case (t, r) =>
-      t -> r.getLong(0)
+    tables.zip(Integrity.digests(tables.map(t =>
+      Integrity.Leg(spark.table(t), hashed = false)))).map { case (t, d) =>
+      t -> d.n
     }.toMap
-
-  /** Several frames' [[Integrity.contentDigestAgg]] read-backs in one
-    * action: per leg (count, modular row-hash sum, sorted distinct
-    * stamps when `withStamps`, else Nil), in input order.
-    */
-  private def fusedDigestLegs(legs: Seq[(DataFrame, Boolean)]):
-      Seq[(Long, Long, Seq[Long])] =
-    collectFused(legs.map { case (df, withStamps) =>
-      Integrity.contentDigestAgg(df, withStamps)
-    }).map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).sorted))
 
   /** Audit a snapshot chain WITHOUT restoring it: every link reachable
     * base-first (manifest present, same family, no cycles — [[chainOf]]
@@ -704,17 +680,17 @@ object Snapshot {
         (d, e, deep && e.checksum.isDefined, dfOpt)
       }
     }
-    // EVERY (link, table) audit fused into ONE action (guide §2.4):
-    // each leg exactly Integrity.contentDigestAgg's (or count-only's)
-    // arithmetic. A runtime read error (corrupt file discovered
-    // mid-scan) falls back to the per-entry overlapped path below,
-    // which marks exactly the damaged entry UNREADABLE.
+    // EVERY (link, table) audit in ONE scan-only job
+    // ([[Integrity.digests]]): each leg exactly
+    // Integrity.contentDigestAgg's (or count-only's) arithmetic. A
+    // runtime read error (corrupt file discovered mid-scan) falls back
+    // to the per-entry overlapped path below, which marks exactly the
+    // damaged entry UNREADABLE.
+    def leg(df: DataFrame, checkDigest: Boolean) = Integrity.Leg(df, hashed = checkDigest)
     val fused: Option[Seq[(Long, Long)]] =
-      try Some(collectFused(legs.collect {
-        case (_, _, true, Some(df)) =>
-          Integrity.contentDigestAgg(df).select("n", "s")
-        case (_, _, false, Some(df)) => df.agg(count(lit(1)), lit(0L))
-      }).map(r => (r.getLong(0), r.getLong(1))))
+      try Some(Integrity.digests(legs.collect {
+        case (_, _, checkDigest, Some(df)) => leg(df, checkDigest)
+      }).map(d => (d.n, d.s)))
       catch { case scala.util.control.NonFatal(_) => None }
     def assemble(d: String, e: TableEntry, checkDigest: Boolean,
         landed: Long, sum: Long): (String, String, Boolean, String) = {
@@ -745,7 +721,8 @@ object Snapshot {
           try dfOpt match {
             case None => (-1L, 0L)
             case Some(df) =>
-              if (checkDigest) Integrity.contentDigest(df) else (df.count(), 0L)
+              val d = Integrity.digests(Seq(leg(df, checkDigest))).head
+              (d.n, d.s)
           } catch { case scala.util.control.NonFatal(_) => (-1L, 0L) }
         assemble(d, e, checkDigest, landed, sum)
       }
@@ -888,8 +865,8 @@ object Snapshot {
     }
     // per-suffix squash copies are independent until the trailing
     // manifest — overlap them (guide §2.6); their read-back digests
-    // (+ landed-stamp collects) then fuse into ONE union-of-aggregates
-    // action across the tables (guide §2.4; per-table values identical)
+    // (+ landed stamps) then run as ONE scan-only job across the tables
+    // ([[Integrity.digests]]; per-table values identical)
     graft.core.Par.run(headM.tables) { e =>
       val dirs = dirsOf(e.suffix)
       val read = spark.read.schema(e.structType)
@@ -898,11 +875,13 @@ object Snapshot {
         else read.parquet(dirs.last) // newest frontier
       src.write.mode(SaveMode.Overwrite).parquet(s"$dest/${e.suffix}")
     }
-    val landed = fusedDigestLegs(headM.tables.map { e =>
-      (spark.read.schema(e.structType).parquet(s"$dest/${e.suffix}"), e.stamped)
+    val landed = Integrity.digests(headM.tables.map { e =>
+      Integrity.Leg(spark.read.schema(e.structType).parquet(s"$dest/${e.suffix}"),
+        stamped = e.stamped)
     })
     val entries = headM.tables.lazyZip(expectedRows).lazyZip(landed).map {
-      case (e, expected, (written, sum, landedStamps)) =>
+      case (e, expected, d @ Integrity.Digest(written, sum, _, _, _)) =>
+        val landedStamps = d.sortedStamps
         // the chain's digest arithmetic, checked against the squashed
         // bytes: cumulative totals were computed additively link by link,
         // so they must equal one honest digest of the union
@@ -993,21 +972,19 @@ object Snapshot {
     }
     val dataEs = dataEntries.map(entryOf)
     val markerEs = markerEntries.map(entryOf)
-    // EVERY stamped entry's pre-append stamp sets (slice + standby) fuse
-    // into ONE action (guide §2.4). The marker's leg is valid here too:
+    // EVERY stamped entry's pre-append stamp sets (slice + standby) in
+    // ONE scan-only job ([[Integrity.digests]]). The marker's leg is valid here too:
     // its table is not touched until the strictly-last marker append,
     // so its pre-append stamp set equals what a read after the data
     // appends would see.
     val stampedEs = (dataEs ++ markerEs).filter(_.stamped)
-    val stampsOf: Map[String, (Set[Long], Set[Long])] = stampedEs
-      .map(_.newName)
-      .zip(collectFused(stampedEs.map { en =>
-        val ss = en.slice.agg(collect_set(col("batch_id")).as("ss"))
-        if (en.exists) ss.crossJoin(spark.table(en.newName)
-          .agg(collect_set(col("batch_id")).as("ts")))
-        else ss.select(col("ss"), array().cast("array<bigint>").as("ts"))
-      }).map(r => (r.getSeq[Long](0).toSet, r.getSeq[Long](1).toSet)))
-      .toMap
+    def stampLeg(df: DataFrame) = Integrity.Leg(df, hashed = false, stamped = true)
+    val got = Integrity.digests(stampedEs.flatMap { en =>
+      stampLeg(en.slice) +: (if (en.exists) Seq(stampLeg(spark.table(en.newName))) else Nil)
+    }).iterator
+    val stampsOf: Map[String, (Set[Long], Set[Long])] = stampedEs.map { en =>
+      en.newName -> (got.next().stamps, if (en.exists) got.next().stamps else Set.empty[Long])
+    }.toMap
     def applyOne(en: Entry): Long = {
       var appended = 0L
       if (!en.stamped) {
@@ -1063,10 +1040,10 @@ object Snapshot {
       appended
     }
     // the per-table landed-count read-backs (the torn-replica audit —
-    // it must read the TABLE, not observe the write) fuse into ONE
-    // action per phase
+    // it must read the TABLE, not observe the write) run as ONE
+    // scan-only job per phase
     def auditCounts(es: Seq[Entry]): Unit = {
-      val landedOf = fusedTableCounts(spark, es.map(_.newName))
+      val landedOf = tableCounts(spark, es.map(_.newName))
       es.foreach { en =>
         val landed = landedOf(en.newName)
         require(landed == en.expectedTotal,
@@ -1248,18 +1225,23 @@ object Snapshot {
     *     The root is autopilot-OWNED and the tick runs under the
     *     family's compact lease (see below), so nothing live writes
     *     there concurrently.
-    *  2. Take the due backup at the family's committed cut
-    *     ([[committedCut]] — live streams tolerated by construction):
-    *     a FULL (`b<seq>_full_<cut>`) when the root is empty, a cut
-    *     DELTA (`b<seq>_link_<cut>`) anchored on the lineage head once
-    *     `everyBatches` commits have landed since it, nothing
-    *     otherwise. COMPACTS roll the epoch automatically — the
+    *  2. Take the due backup at the family's committed cut (the max of
+    *     the committed stamps, read once — live streams tolerated by
+    *     construction): a FULL (`b<seq>_full_<cut>`) when the root is
+    *     empty, a cut DELTA (`b<seq>_link_<cut>`) anchored on the
+    *     lineage head once `everyBatches` commits have landed since it,
+    *     nothing otherwise. COMPACTS roll the epoch automatically — the
     *     documented "every compact starts a new full-backup epoch"
     *     contract, enforced by schedule rather than operator memory —
-    *     through both of the shapes a compact takes: a cut BELOW the
-    *     head's (stamps renumbered) rolls immediately, and a delta
-    *     whose parent audit refuses (history rewritten under an
-    *     unchanged max stamp) falls back to a fresh FULL. The sweep
+    *     through every shape a compact takes: a cut BELOW the head's
+    *     rolls immediately; a due tick whose head ledger stamps are no
+    *     longer a subset of the committed ones (a namespace-preserving
+    *     compact folded them to {0, max}) rolls straight to a FULL,
+    *     the verdict the delta's phase-1 stamp check would reach, so
+    *     the full takes `b<seq+1>`; and a delta whose parent audit
+    *     refuses anyway (history rewritten under surviving stamps)
+    *     falls back to a fresh FULL, which takes `b<seq+2>` after the
+    *     refused link's number. The sweep
     *     compacts and backs up in the same lease tenure, compact
     *     first, so the epoch roll lands the same tick the compact
     *     does. Lineage dirs are ordered by the monotonic `b<seq>`
@@ -1304,7 +1286,8 @@ object Snapshot {
       fs.listStatus(rootPath).filter(_.isDirectory).map(_.getPath)
         .filterNot(p => fs.exists(new org.apache.hadoop.fs.Path(p, ManifestName)))
         .foreach(p => fs.delete(p, true))
-    val cut = committedCut(spark, table, kind)
+    val committed = committedStamps(spark, table, kind)
+    val cut = committed.max
     var head = latestBackup(spark, famRoot)
     var seq = head.map(backupSeq).getOrElse(0L)
     def nextDir(what: String) = { seq += 1; s"$famRoot/b${seq}_${what}_$cut" }
@@ -1315,15 +1298,24 @@ object Snapshot {
         export(spark, table, dest, cut = Some(cut), kind = Some(kind))
         head = Some(dest); action = "full"
       case Some(hd) =>
-        val headCut = readManifest(spark, hd).cut.getOrElse(-1L)
-        if (cut < headCut) {
-          // the cut went BACKWARD: a compact renumbered the ledger's
-          // stamps since the head link — the lineage cannot continue;
-          // roll the epoch with a fresh FULL at the new numbering
+        val headM = readManifest(spark, hd)
+        val headCut = headM.cut.getOrElse(-1L)
+        val due = cut - headCut >= bp.everyBatches
+        // the head's ledger stamps must survive in the committed set —
+        // the delta's phase-1 stamp-subset check on the ledger table,
+        // answered from the stamps already read
+        val ledger = Ledger.ledger(table.toLowerCase, kind)
+        val renumbered = headM.tables.find(_.name == ledger)
+          .exists(e => !e.stamps.toSet.subsetOf(committed))
+        if (cut < headCut || (due && renumbered)) {
+          // a compact renumbered the ledger's stamps since the head
+          // link — the cut went BACKWARD, or the head's stamps are gone
+          // from the ledger: the lineage cannot continue; roll the epoch
+          // with a fresh FULL at the new numbering
           val dest = nextDir("full")
           export(spark, table, dest, cut = Some(cut), kind = Some(kind))
           head = Some(dest); action = "full"
-        } else if (cut - headCut >= bp.everyBatches) {
+        } else if (due) {
           try {
             val dest = nextDir("link")
             export(spark, table, dest, incrementalFrom = Some(hd),

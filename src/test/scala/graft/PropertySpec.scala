@@ -616,4 +616,45 @@ class PropertySpec extends SparkSpec {
       }
     }
   }
+
+  // ------------------------------------------------------------ Integrity
+  test("Integrity.digests equals the Spark aggregates it replaces on random frames " +
+      "(40 frames: empty, null stamps, 1–9 partitions, prefix cut below/inside/above)") {
+    import org.apache.spark.sql.types._
+    import graft.operators.Integrity
+    val schema = StructType(Seq(StructField("id", LongType), StructField("txt", StringType),
+      StructField("batch_id", LongType)))
+    val r = new Random(7)
+    def frame(n: Int, parts: Int) = spark.createDataFrame(
+      spark.sparkContext.parallelize((0 until n).map { i =>
+        Row(r.nextLong(), if (r.nextInt(5) == 0) null else randStr(6),
+          if (r.nextInt(6) == 0) null else java.lang.Long.valueOf(r.nextInt(7).toLong))
+      }, parts), schema)
+    val hist = (since: Long) => col("batch_id") <= since
+    val h = Integrity.rowHash(schema.fieldNames.toSeq.map(col))
+    for (round <- 1 to 40) {
+      // every frame of more than two rows sums its 48-bit hashes past 2⁴⁸
+      val n = if (round % 8 == 0) 0 else r.nextInt(60)
+      val df = frame(n, 1 + r.nextInt(9))
+      val since = Seq(-1L, 3L, 99L)(round % 3) // below, inside, above the stamps 0..6
+      val Seq(all, counted, audited) = Integrity.digests(Seq(
+        Integrity.Leg(df, stamped = true), Integrity.Leg(df, hashed = false),
+        Integrity.Leg(df, stamped = true, since = Some(since))))
+      val digest = Integrity.contentDigestAgg(df, withStamps = true).head()
+      val audit = df.select(h.as("h"), col("batch_id")).agg(
+        count(when(hist(since), 1)),
+        coalesce((sum(when(hist(since), col("h")).cast("decimal(38,0)")) %
+          lit(Integrity.digestMod)).cast("long"), lit(0L))).head()
+      val ctx = s"round $round: $n rows, since $since"
+      assert((all.n, all.s, all.stamps) ==
+        ((digest.getLong(0), digest.getLong(1), digest.getSeq[Long](2).toSet)), ctx)
+      assert(all.stamps == df.agg(collect_set("batch_id")).head().getSeq[Long](0).toSet, ctx)
+      assert((counted.n, counted.s, counted.stamps) ==
+        ((df.agg(count(lit(1))).head().getLong(0), 0L, Set.empty[Long])), ctx)
+      assert((audited.hn, audited.hs) == ((audit.getLong(0), audit.getLong(1))), ctx)
+      assert((audited.n, audited.s, audited.stamps) == ((all.n, all.s, all.stamps)), ctx)
+      assert((all.hn, all.hs) == ((0L, 0L)), ctx)
+    }
+    assert(Integrity.digests(Nil).isEmpty)
+  }
 }

@@ -39,17 +39,26 @@ object JobCount {
   }
 
   /** `f`'s result and the number of Spark jobs started on `sc` while it
-    * ran, from any thread. Verbs that append through `Future`s on the
-    * global pool submit jobs from pool threads, whose inherited local
-    * properties belong to whichever block first spawned them, so [[of]]
-    * would miss those jobs. The suites run one at a time in one JVM, so
-    * nothing else submits jobs while a pinned block runs.
+    * ran, from any thread. `graft.core.Par.run` workers carry their
+    * caller's local properties, so [[of]] sees their jobs; verbs that
+    * append through raw `Future`s on the global pool (IvmJoin's three-log
+    * writes) submit jobs from pool threads whose inherited properties
+    * belong to whichever block first spawned them, and [[of]] would miss
+    * those. The suites run one at a time in one JVM, so nothing else
+    * submits jobs while a pinned block runs.
     */
   def all[T](sc: SparkContext)(f: => T): (T, Int) = {
-    val jobs = new AtomicInteger
+    val (r, props) = property(sc, Tag)(f)
+    (r, props.size)
+  }
+
+  /** `f`'s result and local property `key` (null where unset) of every
+    * Spark job started on `sc` while it ran, from any thread. */
+  def property[T](sc: SparkContext, key: String)(f: => T): (T, Seq[String]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty(key)))); ()
       }
     }
     sc.listenerBus.waitUntilEmpty()
@@ -57,7 +66,8 @@ object JobCount {
     try {
       val r = f
       sc.listenerBus.waitUntilEmpty()
-      (r, jobs.get)
+      import scala.jdk.CollectionConverters._
+      (r, seen.asScala.toSeq.map(_.orNull))
     } finally sc.removeSparkListener(listener)
   }
 }
