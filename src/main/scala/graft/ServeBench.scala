@@ -53,8 +53,8 @@ object ServeBench {
       threshold = 0.8, incremental = true)
     (1 to 7).foreach { b =>
       if (b == 4) // one honest crash window: appends land twice
-        Dedup.applyExtend(spark, docs.filter(col("id") % 8 === b), table,
-          threshold = 0.8, batchId = b.toLong, k = 5)
+        graft.operators.Ledger.crashBeforeMarker(Dedup.extendPairIndex(spark,
+          docs.filter(col("id") % 8 === b), table, threshold = 0.8, batchId = b.toLong))
       Dedup.extendPairIndex(spark, docs.filter(col("id") % 8 === b), table,
         threshold = 0.8, batchId = b.toLong)
     }
@@ -75,8 +75,8 @@ object ServeBench {
     RetrievalIndex.build(docs.filter(col("doc_id") % 8 === 0), table, path)
     (1 to 7).foreach { b =>
       if (b == 4)
-        RetrievalIndex.applyExtend(docs.filter(col("doc_id") % 8 === b),
-          table, batchId = b.toLong)
+        graft.operators.Ledger.crashBeforeMarker(RetrievalIndex.extend(
+          docs.filter(col("doc_id") % 8 === b), table, batchId = b.toLong))
       RetrievalIndex.extend(docs.filter(col("doc_id") % 8 === b), table,
         batchId = b.toLong)
     }
@@ -118,15 +118,15 @@ object ServeBench {
         .withColumn("o_orderkey", col("o_orderkey") + b * 10000000L)
         .withColumn("dn", lit(1L))
       if (b == 2)
-        IvmJoin.applyDeltaData(spark, table, Seq("custkey"), churn, noDim,
-          b.toLong, 16)
+        graft.operators.Ledger.crashBeforeMarker(IvmJoin.applyDelta(spark, table,
+          "custkey", churn, noDim, batchId = b.toLong))
       IvmJoin.applyDelta(spark, table, "custkey", churn, noDim, batchId = b.toLong)
     }
     val (tPre, nPre) = timeMin3(IvmJoin.serve(spark, table).count())
     // the round-9 DESCRIBE read on the same pre-compact log: the policy
     // probe a scheduler pays — must be serve-class flat, never worse
     val (tDesc, _) = timeMin3(IvmJoin.describe(spark, table).count())
-    IvmJoin.compact(spark, table, path, "custkey")
+    IvmJoin.compact(spark, table, path, Seq("custkey"))
     val (tPost, nPost) = timeMin3(IvmJoin.serve(spark, table).count())
     println(f"SERVEBENCH joinview $tag pre=$tPre%.2f post=$tPost%.2f " +
       f"describe=$tDesc%.2f rows=$nPre/$nPost")

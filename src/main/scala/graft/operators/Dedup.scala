@@ -688,7 +688,7 @@ object Dedup {
     val probe = prefixPostings(groups, threshold)
       .localCheckpoint() // pair candidates + the postings table share it
     val gates = broadcastGates(groups)
-    // the four data-table writes run CONCURRENTLY (the applyExtend move):
+    // the four data-table writes run CONCURRENTLY (the appendExtend move):
     // their relative order carries no crash contract — the trailing
     // `_batches` marker does, and every input is pinned. Pairs come
     // straight from the collapsed groups (no second, independent
@@ -953,8 +953,9 @@ object Dedup {
   def extendPairIndex(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, table: String, threshold: Double,
       batchId: Long, k: Int = 5, nBuckets: Int = 8): Unit =
-    Ledger.commit(spark, table, "pairs", batchId)(
-      applyExtend(spark, batch, table, threshold, batchId, k, nBuckets))
+    Ledger.commit(spark, table, "pairs", batchId)(appendExtend(spark,
+      prepareExtend(spark, batch, table, threshold, batchId, k, nBuckets),
+      table, batchId, nBuckets))
 
   /** The four per-batch append frames of one extend, every input pinned
     * upstream — [[prepareExtend]] builds them ONCE, [[appendExtend]]
@@ -968,19 +969,6 @@ object Dedup {
     */
   private[graft] final case class ExtendStage(pairs: DataFrame,
       members: DataFrame, sets: DataFrame, posts: DataFrame)
-
-  /** The data appends of [[extendPairIndex]] WITHOUT the trailing commit
-    * stamp — the state a crash mid-extend leaves behind. Split out so
-    * the crash window is drivable end-to-end (q172 / PairGraphSpec run
-    * applyExtend then replay the full extend and assert the serve path
-    * collapses the duplicates).
-    */
-  private[graft] def applyExtend(spark: org.apache.spark.sql.SparkSession,
-      batch: DataFrame, table: String, threshold: Double,
-      batchId: Long, k: Int, nBuckets: Int = 8): Unit =
-    appendExtend(spark,
-      prepareExtend(spark, batch, table, threshold, batchId, k, nBuckets),
-      table, batchId, nBuckets)
 
   /** Everything of one extend UP TO the data appends: fence, shingle
     * pass, dict-rank frontier append (naturally idempotent — unstamped),
@@ -1223,15 +1211,7 @@ object Dedup {
   def deleteFromPairIndex(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, table: String, path: String, batchId: Long): Unit =
     Ledger.commit(spark, table, "pairs", batchId)(
-      applyDeleteFromPairIndex(spark, ids, table, path, batchId))
-
-  /** The tombstone append WITHOUT the trailing commit stamp — the
-    * crashed-delete window, split out for staging (q177 / spec).
-    */
-  private[graft] def applyDeleteFromPairIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      ids: DataFrame, table: String, path: String, batchId: Long): Unit =
-    Frontier.append(ids, table, "pairs", path, batchId)
+      Frontier.append(ids, table, "pairs", path, batchId))
 
   /** Fold an incremental [[buildPairIndex]] table family back to a
     * single batch-0 state ([[Ledger.Compaction]]), so read cost stops
@@ -1437,34 +1417,24 @@ object Dedup {
       docs: DataFrame, table: String, batchId: Long,
       k: Int = 5, numHashes: Int = 32, bands: Int = 8,
       nBuckets: Int = 16): Unit =
-    Ledger.commit(spark, table, "lsh", batchId)(
-      applyExtendNearDup(docs, table, batchId, k, numHashes, bands, nBuckets))
-
-  /** The data appends of [[extendNearDupIndex]] WITHOUT the trailing
-    * commit stamp — the state a crash after the last data append leaves
-    * behind, split out (like [[applyExtend]]) so specs and driver rows
-    * can stage the crash window end to end.
-    */
-  private[graft] def applyExtendNearDup(docs: DataFrame, table: String,
-      batchId: Long, k: Int, numHashes: Int, bands: Int,
-      nBuckets: Int = 16): Unit = {
-    val enc = hashedSets(docs, k).localCheckpoint() // one shingle pass, two tables
-    // concurrent appends — the `_batches` stamp, not order, is the contract
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    scala.concurrent.Await.result(scala.concurrent.Future.sequence(Seq(
-      scala.concurrent.Future(
-        stableBandKeys(enc, numHashes, bands).withColumn("batch_id", lit(batchId))
-          .repartition(nBuckets, col("key")) // one file per bucket
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .insertInto(s"${table}_postings")),
-      scala.concurrent.Future(
-        enc.withColumn("batch_id", lit(batchId))
-          .repartition(nBuckets, col("id"))
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .insertInto(s"${table}_sets")))),
-      scala.concurrent.duration.Duration.Inf)
-  }
+    Ledger.commit(spark, table, "lsh", batchId) {
+      val enc = hashedSets(docs, k).localCheckpoint() // one shingle pass, two tables
+      // concurrent appends — the `_batches` stamp, not order, is the contract
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.global
+      scala.concurrent.Await.result(scala.concurrent.Future.sequence(Seq(
+        scala.concurrent.Future(
+          stableBandKeys(enc, numHashes, bands).withColumn("batch_id", lit(batchId))
+            .repartition(nBuckets, col("key")) // one file per bucket
+            .write.mode(org.apache.spark.sql.SaveMode.Append)
+            .insertInto(s"${table}_postings")),
+        scala.concurrent.Future(
+          enc.withColumn("batch_id", lit(batchId))
+            .repartition(nBuckets, col("id"))
+            .write.mode(org.apache.spark.sql.SaveMode.Append)
+            .insertInto(s"${table}_sets")))),
+        scala.concurrent.duration.Duration.Inf)
+    }
 
   /** The near-dup index's postings/sets after collapsing replayed
     * appends per (keys, batch_id) — replays are byte-identical because
@@ -1513,12 +1483,7 @@ object Dedup {
   def deleteFromNearDupIndex(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, table: String, path: String, batchId: Long): Unit =
     Ledger.commit(spark, table, "lsh", batchId)(
-      applyDeleteFromNearDupIndex(spark, ids, table, path, batchId))
-
-  private[graft] def applyDeleteFromNearDupIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      ids: DataFrame, table: String, path: String, batchId: Long): Unit =
-    Frontier.append(ids, table, "lsh", path, batchId)
+      Frontier.append(ids, table, "lsh", path, batchId))
 
   /** Fold a [[buildNearDupIndex]] family back to batch 0
     * ([[Ledger.Compaction]]): both tables rewrite concurrently.

@@ -64,22 +64,15 @@ object IvfIndex {
 
   def extend(spark: SparkSession, batch: DataFrame, table: String,
       batchId: Long, nBuckets: Int = 16): Unit =
-    Ledger.commit(spark, table, "ivf", batchId)(
-      applyExtend(spark, batch, table, batchId, nBuckets))
-
-  /** The assignment append WITHOUT the trailing marker — the crashed-
-    * extend window (q181 / spec staging).
-    */
-  private[graft] def applyExtend(spark: SparkSession, batch: DataFrame,
-      table: String, batchId: Long, nBuckets: Int = 16): Unit = {
-    val centroids = centroidsOf(spark, table)
-    batch.select(col("id"), col("vec").cast("array<double>").as("vec"))
-      .withColumn("cell", VectorOps.ivfCellOf(centroids, col("vec")))
-      .withColumn("batch_id", lit(batchId))
-      .repartition(nBuckets, col("cell")) // one file per bucket, as at build
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .insertInto(s"${table}_cells")
-  }
+    Ledger.commit(spark, table, "ivf", batchId) {
+      val centroids = centroidsOf(spark, table)
+      batch.select(col("id"), col("vec").cast("array<double>").as("vec"))
+        .withColumn("cell", VectorOps.ivfCellOf(centroids, col("vec")))
+        .withColumn("batch_id", lit(batchId))
+        .repartition(nBuckets, col("cell")) // one file per bucket, as at build
+        .write.mode(org.apache.spark.sql.SaveMode.Append)
+        .insertInto(s"${table}_cells")
+    }
 
   /** The [[VectorOps.ivfTopK]] contract served from the persisted
     * index: probe each query's nProbe nearest cells under the frozen
@@ -108,12 +101,7 @@ object IvfIndex {
   def deleteIds(spark: SparkSession, ids: DataFrame, table: String,
       path: String, batchId: Long): Unit =
     Ledger.commit(spark, table, "ivf", batchId)(
-      applyDeleteIds(spark, ids, table, path, batchId))
-
-  /** The tombstone append WITHOUT the trailing marker (crash staging). */
-  private[graft] def applyDeleteIds(spark: SparkSession, ids: DataFrame,
-      table: String, path: String, batchId: Long): Unit =
-    Frontier.append(ids, table, "ivf", path, batchId)
+      Frontier.append(ids, table, "ivf", path, batchId))
 
   /** DESCRIBE INDEX on the IVF tier — (live_vectors, n_cells,
     * tombstoned): the inverted file's coverage under the same

@@ -94,6 +94,38 @@ private[graft] object Ledger {
   def append(spark: SparkSession, table: String, kind: String, batchId: Long): Unit =
     mark(spark, table, kind, Seq(batchId), 0L, None)
 
+  /** The crash seam: set while a staged crash runs on this thread. A
+    * plain (non-inheritable) thread-local, as [[graft.core.CommitGuard]]'s,
+    * so a staging never leaks into another thread's verbs; it is not
+    * that guard, which means lease tenure. */
+  private val crashing = new ThreadLocal[Boolean] {
+    override def initialValue(): Boolean = false
+  }
+
+  /** The staged crash, thrown by [[mark]] before it writes. A control
+    * throwable, so a verb's NonFatal handlers let it through. */
+  private final class Crashed extends scala.util.control.ControlThrowable
+
+  /** Run `verb` as a crash right before its marker write: every action
+    * of the production verb runs (the committed-replay check, the
+    * writer fence, the data appends, a compact's rewrites and frontier
+    * truncation), then the first marker write ([[mark]]) of a build,
+    * stamped verb or compact throws instead of writing: the one legal
+    * crash window of the protocol. A `verb` that returns without
+    * reaching a marker write (a committed replay no-ops) fails loudly,
+    * so a staging never passes silently; anything else `verb` throws (a
+    * fence refusal) propagates. The flag is cleared on every exit. Adds
+    * no Spark job. */
+  def crashBeforeMarker(verb: => Unit): Unit = {
+    crashing.set(true)
+    try {
+      verb
+      throw new IllegalStateException(
+        "Ledger.crashBeforeMarker: the staged verb returned without a marker write")
+    } catch { case _: Crashed => () }
+    finally crashing.set(false)
+  }
+
   /** Build's LAST write: the marker overwritten as {0}, plus a stream's
     * cold-start stamp `commitAlias` when positive. `n` is the payload of
     * the stamp-0 row. */
@@ -165,6 +197,7 @@ private[graft] object Ledger {
     * overwrites the marker at `path/<marker suffix>`. */
   private def mark(spark: SparkSession, table: String, kind: String,
       stamps: Seq[Long], n: Long, path: Option[String]): Unit = {
+    if (crashing.get()) throw new Crashed
     import spark.implicits._
     val k = kindOf(kind)
     val marker = ledger(table, kind)

@@ -62,40 +62,46 @@ object Maintenance {
     batches > policy.maxBatches ||
       (total > 0L && dead.toDouble / total > policy.maxDeadFraction)
 
-  /** Whether `family` is due under `policy`, from its bounded debt
-    * read (never a corpus rescan):
+  /** Whether `family` is due under `policy`, from its kind's bounded
+    * debt read (never a corpus rescan), the registry's `due`:
     *
     *  - the five index kinds (pairs, lsh, retrieval, positions, ivf)
     *    share [[indexDebtDue]] over the registry's data log and the
     *    kind's [[Frontier]] id column;
-    *  - the rollup reads its [[IvmRollup.describe]] row: dead weight =
-    *    keys whose net count fell to ≤ 0;
-    *  - the join view reads ALL THREE of its logs (round-9 advice: the
-    *    view log alone misses a dim-only churn stream whose keys match
-    *    no facts — its `_dim` log grows batches and files without ever
-    *    adding a view entry, so the family would never come due while
-    *    the debt the limit-probe broadcast gate works around keeps
-    *    accumulating). Each log reports its own two axes through the
-    *    loud-fenced [[IvmJoin.logDebt]] read (batches = distinct
-    *    non-zero data stamps; dead = collapsed entries beyond one per
-    *    net-live row), and ANY log being due makes the family due —
-    *    compact rewrites all three together.
+    *  - the rollup reads its [[IvmRollup.describe]] row ([[rollupDue]]);
+    *  - the join view reads all three of its logs ([[joinDue]]).
     */
   def shouldCompact(spark: SparkSession, family: Family,
-      policy: CompactPolicy): Boolean = family.kind match {
-    case "rollup" =>
-      val r = IvmRollup.describe(spark, family.table).head()
-      due(r.getAs[Long]("batches_since_compact"), r.getAs[Long]("dead_keys"),
-        r.getAs[Long]("live_keys") + r.getAs[Long]("dead_keys"), policy)
-    case "join" =>
-      // the three logs' debt probes are independent read-only aggregates
-      // — overlap their fixed per-action latency (guide §2.6); `exists`
-      // over the ordered results keeps the decision identical
-      graft.core.Par.run(Seq("base", "fact", "dim").map(tableOf(family.table, _)))(
-        t => IvmJoin.logDebt(spark, t))
-        .exists { case (batches, dead, total) => due(batches, dead, total, policy) }
-    case kind => indexDebtDue(spark, family.table, kind, policy)
+      policy: CompactPolicy): Boolean =
+    familyKind(family.kind).due(spark, family, policy)
+
+  /** The rollup's debt: dead weight = keys whose net count fell to ≤ 0. */
+  private def rollupDue(spark: SparkSession, family: Family,
+      policy: CompactPolicy): Boolean = {
+    val r = IvmRollup.describe(spark, family.table).head()
+    due(r.getAs[Long]("batches_since_compact"), r.getAs[Long]("dead_keys"),
+      r.getAs[Long]("live_keys") + r.getAs[Long]("dead_keys"), policy)
   }
+
+  /** The join view's debt, over ALL THREE of its logs (round-9 advice:
+    * the view log alone misses a dim-only churn stream whose keys match
+    * no facts — its `_dim` log grows batches and files without ever
+    * adding a view entry, so the family would never come due while the
+    * debt the limit-probe broadcast gate works around keeps
+    * accumulating). Each log reports its own two axes through the
+    * loud-fenced [[IvmJoin.logDebt]] read (batches = distinct non-zero
+    * data stamps; dead = collapsed entries beyond one per net-live
+    * row), and ANY log being due makes the family due — compact
+    * rewrites all three together.
+    */
+  private def joinDue(spark: SparkSession, family: Family,
+      policy: CompactPolicy): Boolean =
+    // the three logs' debt probes are independent read-only aggregates
+    // — overlap their fixed per-action latency (guide §2.6); `exists`
+    // over the ordered results keeps the decision identical
+    graft.core.Par.run(Seq("base", "fact", "dim").map(tableOf(family.table, _)))(
+      t => IvmJoin.logDebt(spark, t))
+      .exists { case (batches, dead, total) => due(batches, dead, total, policy) }
 
   /** Read → decide → maybe compact; returns whether the compact ran
     * (so a scheduler can log/meter the loop). The read is
@@ -135,9 +141,10 @@ object Maintenance {
     *    fraction past 1 — which still reads as "compact", the only
     *    sensible answer for a ledger dominated by dead weight.
     */
-  private def indexDebtDue(spark: SparkSession, table: String, kind: String,
+  private def indexDebtDue(spark: SparkSession, family: Family,
       policy: CompactPolicy): Boolean = {
     import org.apache.spark.sql.functions.{col, lit}
+    val (table, kind) = (family.table, family.kind)
     val f = Frontier.spec(kind)
     val log = spark.table(tableOf(table, f.dataLog))
     val frontier = Frontier.read(spark, table, kind)
@@ -562,7 +569,8 @@ object Maintenance {
     * commit marker (None for the markerless rollup), the stamped logs
     * [[fsck]] audits, the unstamped side tables that carry no ledger to
     * audit (the pair graph's frozen `_dict`, the IVF's frozen
-    * `_centroids`), and the kind's policy compact ([[compactIfDue]]).
+    * `_centroids`), the kind's policy compact ([[compactIfDue]]) and
+    * its debt read ([[shouldCompact]]; [[indexDebtDue]] by default).
     * The five index kinds keep a tombstone [[Frontier]] (its suffix, id
     * column and data log), itself a stamped log; a kind's frontier is
     * its own, never shared with another kind on the same table.
@@ -578,7 +586,8 @@ object Maintenance {
       dataLogs: Seq[String], side: Seq[String],
       compact: (SparkSession, Family) => Unit,
       frontier: Option[Frontier.Spec] = None,
-      fenced: Boolean = true, payload: Option[String] = None) {
+      fenced: Boolean = true, payload: Option[String] = None,
+      due: (SparkSession, Family, CompactPolicy) => Boolean = indexDebtDue) {
     /** Every stamped log, the frontier last. */
     def logs: Seq[String] = dataLogs ++ frontier.map(_.suffix)
     def suffixes: Set[String] = (marker.toSeq ++ logs ++ side).toSet
@@ -613,10 +622,10 @@ object Maintenance {
         require(f.joinKeys.nonEmpty, s"sweep: join family ${f.table} needs joinKeys")
         IvmJoin.compact(s, f.table, f.path, f.joinKeys, f.nBuckets,
           preserveNamespace = true) // the loop must not strand a checkpointed stream
-      }),
+      }, due = joinDue),
     "rollup" -> FamilyKind(None, Seq("base"), Nil,
       (s, f) => IvmRollup.compact(s, f.table, f.path, f.nBuckets),
-      fenced = false))
+      fenced = false, due = rollupDue))
 
   private[operators] def familyKind(kind: String): FamilyKind =
     kinds.collectFirst { case (`kind`, k) => k }.getOrElse(

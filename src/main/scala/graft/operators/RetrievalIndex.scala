@@ -107,21 +107,13 @@ object RetrievalIndex {
       // cardinality observed on the postings append's own scan — the
       // meta row records exactly what the postings saw
       val obs = org.apache.spark.sql.Observation()
-      applyExtend(docs.observe(obs, count(lit(1)).as("n_docs")),
-        table, batchId, nBuckets)
+      postings(docs.observe(obs, count(lit(1)).as("n_docs")))
+        .withColumn("batch_id", lit(batchId))
+        .repartition(nBuckets, col("term")) // one file per bucket, as at build
+        .write.mode(org.apache.spark.sql.SaveMode.Append)
+        .insertInto(s"${table}_postings")
       observed(obs)
     }
-
-  /** The extend's DATA append without the trailing meta commit — the
-    * state a crash after the postings append leaves behind. Exposed for
-    * crash staging (q174 / RetrievalIndexSpec replay tests).
-    */
-  private[graft] def applyExtend(docs: DataFrame, table: String, batchId: Long,
-      nBuckets: Int = 16): Unit =
-    postings(docs).withColumn("batch_id", lit(batchId))
-      .repartition(nBuckets, col("term")) // one file per bucket, as at build
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .insertInto(s"${table}_postings")
 
   /** Tombstone documents out of the index — the [[Frontier]] protocol
     * on the retrieval tier, where deletion has a SCORING consequence:
@@ -138,26 +130,18 @@ object RetrievalIndex {
     */
   def deleteDocs(spark: SparkSession, ids: DataFrame, table: String,
       path: String, batchId: Long): Unit =
-    Ledger.commitCounted(spark, table, "retrieval", batchId)(
-      -applyDeleteDocs(spark, ids, table, path, batchId))
-
-  /** The tombstone append WITHOUT the trailing meta commit — the
-    * crashed-delete window (q180 / spec staging).
-    * @return the number of FRESH tombstones (drives the N adjustment)
-    */
-  private[graft] def applyDeleteDocs(spark: SparkSession, ids: DataFrame,
-      table: String, path: String, batchId: Long): Long = {
-    val distinctIds = ids.select(col("doc_id")).dropDuplicates("doc_id")
-    val fresh = Frontier.read(spark, table, "retrieval").fold(distinctIds)(d =>
-        distinctIds.join(d.filter(col("batch_id") =!= batchId) // replay: exclude own crashed rows
-          .select("doc_id"), Seq("doc_id"), "left_anti"))
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1) // a deletion frontier is one small file
-      .localCheckpoint() // count + append share one evaluation
-    val n = fresh.count()
-    Frontier.write(table, "retrieval", path, fresh)
-    n
-  }
+    Ledger.commitCounted(spark, table, "retrieval", batchId) {
+      val distinctIds = ids.select(col("doc_id")).dropDuplicates("doc_id")
+      val fresh = Frontier.read(spark, table, "retrieval").fold(distinctIds)(d =>
+          distinctIds.join(d.filter(col("batch_id") =!= batchId) // replay: exclude own crashed rows
+            .select("doc_id"), Seq("doc_id"), "left_anti"))
+        .withColumn("batch_id", lit(batchId))
+        .coalesce(1) // a deletion frontier is one small file
+        .localCheckpoint() // count + append share one evaluation
+      val n = fresh.count() // the FRESH tombstones: N shrinks by exactly these
+      Frontier.write(table, "retrieval", path, fresh)
+      -n
+    }
 
   /** DESCRIBE INDEX on the tf tier — the [[Dedup.pairIndexStats]]
     * observability verb for this family: one row of (live_docs,
@@ -462,17 +446,10 @@ object RetrievalIndex {
   def extendPositions(docs: DataFrame, table: String, batchId: Long,
       nBuckets: Int = 16): Unit =
     Ledger.commit(docs.sparkSession, table, "positions", batchId)(
-      applyExtendPositions(docs, table, batchId, nBuckets))
-
-  /** The positions append WITHOUT the trailing marker — the crashed-
-    * extend window, split out for staging (q178 / spec).
-    */
-  private[graft] def applyExtendPositions(docs: DataFrame, table: String,
-      batchId: Long, nBuckets: Int = 16): Unit =
-    positionRows(docs).withColumn("batch_id", lit(batchId))
-      .repartition(nBuckets, col("term")) // one file per bucket, as at build
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .insertInto(s"${table}_positions")
+      positionRows(docs).withColumn("batch_id", lit(batchId))
+        .repartition(nBuckets, col("term")) // one file per bucket, as at build
+        .write.mode(org.apache.spark.sql.SaveMode.Append)
+        .insertInto(s"${table}_positions"))
 
   /** Tombstone documents out of the POSITIONAL tier — the
     * [[Frontier]] protocol without [[deleteDocs]]' N ledger (phrase
@@ -482,12 +459,7 @@ object RetrievalIndex {
   def deletePositionDocs(spark: SparkSession, ids: DataFrame, table: String,
       path: String, batchId: Long): Unit =
     Ledger.commit(spark, table, "positions", batchId)(
-      applyDeletePositionDocs(spark, ids, table, path, batchId))
-
-  /** The tombstone append WITHOUT the trailing marker (crash staging). */
-  private[graft] def applyDeletePositionDocs(spark: SparkSession,
-      ids: DataFrame, table: String, path: String, batchId: Long): Unit =
-    Frontier.append(ids, table, "positions", path, batchId)
+      Frontier.append(ids, table, "positions", path, batchId))
 
   /** Fold the positional tier back to batch 0 ([[Ledger.Compaction]]);
     * `preserveNamespace` keeps the max committed stamp in the marker —

@@ -1046,9 +1046,9 @@ object AnalyticsOps {
         .withColumn("c_mktsegment", concat(col("c_mktsegment"), lit("_v2")))
         .withColumn("dn", lit(1L)))
     val noFact = fact.limit(0).withColumn("dn", lit(1L))
-    IvmJoin.applyDeltaData(spark, table, "custkey", // crash: marker missing…
-      noFact, dimChange, batchId = 2L)
-    IvmJoin.applyDelta(spark, table, "custkey",     // …full replay collapses
+    graft.operators.Ledger.crashBeforeMarker(IvmJoin.applyDelta( // crash: marker missing…
+      spark, table, "custkey", noFact, dimChange, batchId = 2L))
+    IvmJoin.applyDelta(spark, table, "custkey",                  // …full replay collapses
       noFact, dimChange, batchId = 2L)
     IvmJoin.serve(spark, table)
   }
@@ -1274,11 +1274,11 @@ object AnalyticsOps {
         .withColumn("dn", lit(1L)))
     val noDim = dim.limit(0).withColumn("dn", lit(1L))
     val noFact = fact.limit(0).withColumn("dn", lit(1L))
-    IvmJoin.applyDeltaData(spark, table, "custkey", // crash after the data…
+    graft.operators.Ledger.crashBeforeMarker(IvmJoin.applyDelta( // crash after the data…
+      spark, table, "custkey", factChurn, noDim, batchId = 1L))
+    IvmJoin.applyDelta(spark, table, "custkey",                  // …full replay
       factChurn, noDim, batchId = 1L)
-    IvmJoin.applyDelta(spark, table, "custkey",     // …full replay
-      factChurn, noDim, batchId = 1L)
-    IvmJoin.compact(spark, table, path, "custkey")
+    IvmJoin.compact(spark, table, path, Seq("custkey"))
     IvmJoin.applyDelta(spark, table, "custkey", noFact, // namespace reset
       dim.filter(col("custkey") % 13 === 0).withColumn("dn", lit(-1L))
         .unionByName(dim.filter(col("custkey") % 13 === 0)
@@ -1389,11 +1389,12 @@ object AnalyticsOps {
         .withColumn("dn", lit(1L)))
     graft.streaming.IvmJoinStream.foldEpoch(
       asFact(del), epochId = 0L, table, "custkey", factCols, dimCols)
-    IvmJoin.applyDeltaData(spark, table, "custkey", // crash: marker missing…
-      ins, dimChange, batchId = 2L)
-    graft.streaming.IvmJoinStream.foldEpoch(       // …the epoch re-delivers
-      asFact(ins).unionByName(asDim(dimChange)),
-      epochId = 1L, table, "custkey", factCols, dimCols)
+    val epoch1 = asFact(ins).unionByName(asDim(dimChange))
+    graft.operators.Ledger.crashBeforeMarker(                    // crash: marker missing…
+      graft.streaming.IvmJoinStream.foldEpoch(epoch1, epochId = 1L, table, "custkey",
+        factCols, dimCols))
+    graft.streaming.IvmJoinStream.foldEpoch(                     // …the epoch re-delivers
+      epoch1, epochId = 1L, table, "custkey", factCols, dimCols)
     IvmJoin.serve(spark, table)
   }
 

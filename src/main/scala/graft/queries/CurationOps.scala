@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 import graft.core.Tables
-import graft.operators.{Integrity, Sampling}
+import graft.operators.{Integrity, Ledger, Sampling}
 
 /** Corpus-curation surface beyond the per-document filters: mixture
   * construction against a token budget, deterministic training-shard
@@ -1199,7 +1199,8 @@ object CurationOps {
         graft.operators.RetrievalIndex.buildPositions(
           docsAll.filter(col("doc_id") % 2 === 0), table, path)
         val odds = docsAll.filter(col("doc_id") % 2 === 1)
-        graft.operators.RetrievalIndex.applyExtendPositions(odds, table, batchId = 1L)
+        Ledger.crashBeforeMarker(
+          graft.operators.RetrievalIndex.extendPositions(odds, table, batchId = 1L))
         graft.operators.RetrievalIndex.extendPositions(odds, table, batchId = 1L)
         graft.operators.RetrievalIndex.phrase(spark, table, phraseQueries)
       }),
@@ -1207,8 +1208,8 @@ object CurationOps {
     // q207 move on adjacency search (RetrievalStream.foldEpochPositions,
     // static-staged): epoch 0 cold-starts the phrase index (no
     // `_pbatches` → buildPositions, commitAlias records the epoch's
-    // stamp); epoch 1 is staged as a CRASH (applyExtendPositions: the
-    // position rows land, the marker does not) + a full re-delivery,
+    // stamp); epoch 1's fold is staged as a CRASH (Ledger.crashBeforeMarker:
+    // the position rows land, the marker does not) + a full re-delivery,
     // whose byte-identical re-appends phrase()'s per-(term, doc_id,
     // batch_id) collapse folds. Positions are 0-based per document, so
     // the streamed increment renumbers nothing. Oracle = q169's
@@ -1227,9 +1228,9 @@ object CurationOps {
         graft.streaming.RetrievalStream.foldEpochPositions(
           docsAll.filter(col("doc_id") % 2 === 0), epochId = 0L, table, path)
         val odds = docsAll.filter(col("doc_id") % 2 === 1)
-        graft.operators.RetrievalIndex.applyExtendPositions(odds, table, // crash…
-          batchId = 2L)
-        graft.streaming.RetrievalStream.foldEpochPositions(              // …re-delivery
+        Ledger.crashBeforeMarker(graft.streaming.RetrievalStream  // crash…
+          .foldEpochPositions(odds, epochId = 1L, table, path))
+        graft.streaming.RetrievalStream.foldEpochPositions(        // …re-delivery
           odds, epochId = 1L, table, path)
         graft.operators.RetrievalIndex.phrase(spark, table, phraseQueries)
       }),
@@ -1252,11 +1253,12 @@ object CurationOps {
         graft.operators.RetrievalIndex.buildPositions(
           docsAll.filter(col("doc_id") % 2 === 0), table, path)
         val odds = docsAll.filter(col("doc_id") % 2 === 1)
-        graft.operators.RetrievalIndex.applyExtendPositions(odds, table, batchId = 1L)
+        Ledger.crashBeforeMarker(
+          graft.operators.RetrievalIndex.extendPositions(odds, table, batchId = 1L))
         graft.operators.RetrievalIndex.extendPositions(odds, table, batchId = 1L)
         val victims = docsAll.filter(col("doc_id") % 7 === 3).select("doc_id")
-        graft.operators.RetrievalIndex.applyDeletePositionDocs(
-          spark, victims, table, path, batchId = 2L)
+        Ledger.crashBeforeMarker(graft.operators.RetrievalIndex.deletePositionDocs(
+          spark, victims, table, path, batchId = 2L))
         graft.operators.RetrievalIndex.deletePositionDocs(
           spark, victims, table, path, batchId = 2L)
         graft.operators.RetrievalIndex.compactPositions(spark, table, path)
@@ -1265,8 +1267,8 @@ object CurationOps {
     // q174: the inverted index under CRASH-REPLAY — q172's theorem for
     // the retrieval tier. The corpus arrives as two batches (doc_id
     // parity): the first builds the index, the second's extend CRASHES
-    // after its postings append (applyExtend — the data lands, the
-    // trailing meta commit does not), then the batch replays in full.
+    // after its postings append (Ledger.crashBeforeMarker — the data
+    // lands, the trailing meta commit does not), then the batch replays in full.
     // Every batch-1 posting row is in the table twice; the serve path's
     // per-(term, doc_id, batch_id) collapse and the meta-as-marker N
     // must recover the exact scan-time ranking — proven cross-engine by
@@ -1282,7 +1284,8 @@ object CurationOps {
         graft.operators.RetrievalIndex.build(
           docs.filter(col("doc_id") % 2 === 0), table, path)
         val odds = docs.filter(col("doc_id") % 2 === 1)
-        graft.operators.RetrievalIndex.applyExtend(odds, table, batchId = 1L)
+        Ledger.crashBeforeMarker(
+          graft.operators.RetrievalIndex.extend(odds, table, batchId = 1L))
         graft.operators.RetrievalIndex.extend(odds, table, batchId = 1L)
         graft.operators.RetrievalIndex.topK(spark, table, rankQueries)
       }),
@@ -1291,8 +1294,8 @@ object CurationOps {
     // through the stream's exact fold (foldEpoch). Epoch 0 is the cold
     // start — the existence probe reads no `_meta`, so the fold BUILDS
     // and records its own stamp via commitAlias (a 0-docs meta row,
-    // neutral to N). Epoch 1's extend is staged as a CRASH
-    // (applyExtend: postings land, the trailing meta commit does not)
+    // neutral to N). Epoch 1's fold is staged as a CRASH
+    // (Ledger.crashBeforeMarker: postings land, the meta commit does not)
     // + a full re-delivery of the epoch, whose byte-identical
     // re-appends the serve path collapses per (term, doc_id, batch_id)
     // — and N is never double-counted because the meta row is the
@@ -1310,9 +1313,9 @@ object CurationOps {
         graft.streaming.RetrievalStream.foldEpoch(
           docs.filter(col("doc_id") % 2 === 0), epochId = 0L, table, path)
         val odds = docs.filter(col("doc_id") % 2 === 1)
-        graft.operators.RetrievalIndex.applyExtend(odds, table, // crash…
-          batchId = 2L)
-        graft.streaming.RetrievalStream.foldEpoch(              // …re-delivery
+        Ledger.crashBeforeMarker(graft.streaming.RetrievalStream.foldEpoch( // crash…
+          odds, epochId = 1L, table, path))
+        graft.streaming.RetrievalStream.foldEpoch(                         // …re-delivery
           odds, epochId = 1L, table, path)
         graft.operators.RetrievalIndex.topK(spark, table, rankQueries)
       }),
@@ -1686,8 +1689,8 @@ object CurationOps {
         // epoch 2 commits (stamp 3); epoch 3's DATA lands but its
         // marker does not — the stream is mid-epoch, stamp 4 in flight
         graft.streaming.RetrievalStream.foldEpoch(slice(2), 2L, table, path)
-        graft.operators.RetrievalIndex.applyExtend(slice(3), table,
-          batchId = 4L)
+        Ledger.crashBeforeMarker(
+          graft.streaming.RetrievalStream.foldEpoch(slice(3), 3L, table, path))
         // the hot-backup moment: no quiescence, no refusal — the cut is
         // the max COMMITTED stamp, so the backup captures epochs 0..2
         // and excludes the in-flight appends exactly
@@ -2328,8 +2331,8 @@ object CurationOps {
         graft.operators.RetrievalIndex.extend(
           docsAll.filter(col("doc_id") % 2 === 1), table, batchId = 1L)
         val victims = docsAll.filter(col("doc_id") % 7 === 3).select("doc_id")
-        graft.operators.RetrievalIndex.applyDeleteDocs(
-          spark, victims, table, path, batchId = 2L)
+        Ledger.crashBeforeMarker(graft.operators.RetrievalIndex.deleteDocs(
+          spark, victims, table, path, batchId = 2L))
         graft.operators.RetrievalIndex.deleteDocs(
           spark, victims, table, path, batchId = 2L)
         graft.operators.RetrievalIndex.topK(spark, table, rankQueries)
@@ -2354,11 +2357,12 @@ object CurationOps {
         graft.operators.RetrievalIndex.build(
           docsAll.filter(col("doc_id") % 2 === 0), table, path)
         val odds = docsAll.filter(col("doc_id") % 2 === 1)
-        graft.operators.RetrievalIndex.applyExtend(odds, table, batchId = 1L)
+        Ledger.crashBeforeMarker(
+          graft.operators.RetrievalIndex.extend(odds, table, batchId = 1L))
         graft.operators.RetrievalIndex.extend(odds, table, batchId = 1L)
         val victims = docsAll.filter(col("doc_id") % 7 === 3).select("doc_id")
-        graft.operators.RetrievalIndex.applyDeleteDocs(
-          spark, victims, table, path, batchId = 2L)
+        Ledger.crashBeforeMarker(graft.operators.RetrievalIndex.deleteDocs(
+          spark, victims, table, path, batchId = 2L))
         graft.operators.RetrievalIndex.deleteDocs(
           spark, victims, table, path, batchId = 2L)
         graft.operators.RetrievalIndex.compact(spark, table, path)

@@ -4,16 +4,16 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.core.Tables
-import graft.operators.Dedup
+import graft.operators.{Dedup, Ledger}
 
 /** Per-JVM memoized CRASH-REPLAY scenario over the incremental pair
   * index — the state q172 audits:
   *
   *   1. build the index from the even-id half of `documents`
   *      ([[Dedup.buildPairIndex]] incremental, batch 0);
-  *   2. run the odd-id extend's data appends WITHOUT the trailing
-  *      commit stamp ([[Dedup.applyExtend]]) — exactly the state a
-  *      crash after the last data append leaves behind;
+  *   2. run the odd-id extend as a crash before its commit stamp
+  *      ([[Ledger.crashBeforeMarker]]) — exactly the state a crash
+  *      after the last data append leaves behind;
   *   3. replay the full extend ([[Dedup.extendPairIndex]], same
   *      batch id): the marker is absent, so the batch re-folds end to
   *      end — against history reads that exclude its own stamp — and
@@ -40,7 +40,8 @@ object IncPairGraph {
       val odds = docs.filter(col("id") % 2 === 1)
       Dedup.buildPairIndex(evens, name, graft.core.Scratch.path(name),
         threshold, incremental = true)
-      Dedup.applyExtend(spark, odds, name, threshold, batchId = 1L, k = 5)
+      Ledger.crashBeforeMarker(
+        Dedup.extendPairIndex(spark, odds, name, threshold, batchId = 1L))
       Dedup.extendPairIndex(spark, odds, name, threshold, batchId = 1L)
       name
     })

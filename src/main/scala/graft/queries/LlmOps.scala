@@ -6,7 +6,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.core.{Num, Tables}
 import graft.functions.TextFunctions
-import graft.operators.{Chunker, Dedup, Funnel, Multimodal, Packing, RangeJoin, Sampling, VectorOps}
+import graft.operators.{Chunker, Dedup, Funnel, Ledger, Multimodal, Packing, RangeJoin, Sampling,
+  VectorOps}
 
 /** LLM-training-data pipeline surface over `documents` / `embeddings`:
   * dedup (exact, fingerprint, n-gram Jaccard, MinHash LSH, SimHash),
@@ -753,7 +754,8 @@ object LlmOps {
         Dedup.extendPairIndex(spark, docs.filter(col("id") % 2 === 1),
           table, threshold = 0.8, batchId = 1L)
         val victims = docs.filter(col("id") % 7 === 3).select(col("id"))
-        Dedup.applyDeleteFromPairIndex(spark, victims, table, path, batchId = 2L)
+        Ledger.crashBeforeMarker(
+          Dedup.deleteFromPairIndex(spark, victims, table, path, batchId = 2L))
         Dedup.deleteFromPairIndex(spark, victims, table, path, batchId = 2L)
         leakageRollup(Dedup.servePairIndex(spark, table))
       }),
@@ -868,8 +870,8 @@ object LlmOps {
     // epochs through the stream's exact fold (foldEpoch). Epoch 0 is
     // the cold start — the existence probe reads no `_batches`, so the
     // fold BUILDS and records its own stamp via commitAlias. Epoch 1's
-    // extend is staged as a CRASH (applyExtendNearDup: band postings +
-    // digest sets land, the marker does not) + a full re-delivery of
+    // fold is staged as a CRASH (Ledger.crashBeforeMarker: band postings
+    // + digest sets land, the marker does not) + a full re-delivery of
     // the epoch — the foreachBatch restart contract — whose
     // byte-identical re-appends (batch-stable hashedSets encoding)
     // every read path collapses. Oracle = q173's exact brute-force
@@ -890,9 +892,9 @@ object LlmOps {
         graft.streaming.NearDupStream.foldEpoch(
           docs.filter(col("id") % 2 === 0), epochId = 0L, table, path)
         val odds = docs.filter(col("id") % 2 === 1)
-        Dedup.applyExtendNearDup(odds, table, batchId = 2L, // crash: marker missing…
-          k = 5, numHashes = 32, bands = 8)
-        graft.streaming.NearDupStream.foldEpoch(            // …the epoch re-delivers
+        Ledger.crashBeforeMarker(graft.streaming.NearDupStream.foldEpoch( // crash…
+          odds, epochId = 1L, table, path))
+        graft.streaming.NearDupStream.foldEpoch(                         // …the epoch re-delivers
           odds, epochId = 1L, table, path)
         Dedup.serveNearDupPairs(spark, table, threshold = 0.8)
       }),
@@ -987,11 +989,11 @@ object LlmOps {
         spark.sql(s"DROP TABLE IF EXISTS ${table}_deleted")
         Dedup.buildNearDupIndex(docs.filter(col("id") % 2 === 0), table, path)
         val odds = docs.filter(col("id") % 2 === 1)
-        Dedup.applyExtendNearDup(odds, table, batchId = 1L,
-          k = 5, numHashes = 32, bands = 8)
+        Ledger.crashBeforeMarker(Dedup.extendNearDupIndex(spark, odds, table, batchId = 1L))
         Dedup.extendNearDupIndex(spark, odds, table, batchId = 1L)
         val victims = docs.filter(col("id") % 7 === 3).select(col("id"))
-        Dedup.applyDeleteFromNearDupIndex(spark, victims, table, path, batchId = 2L)
+        Ledger.crashBeforeMarker(
+          Dedup.deleteFromNearDupIndex(spark, victims, table, path, batchId = 2L))
         Dedup.deleteFromNearDupIndex(spark, victims, table, path, batchId = 2L)
         Dedup.compactNearDupIndex(spark, table, path)
         Dedup.serveNearDupPairs(spark, table, threshold = 0.8)
@@ -1166,7 +1168,8 @@ object LlmOps {
           corpus.filter(col("id") % 2 === 0), table, path,
           nCells = 16, iters = 3)
         val odds = corpus.filter(col("id") % 2 === 1)
-        graft.operators.IvfIndex.applyExtend(spark, odds, table, batchId = 1L)
+        Ledger.crashBeforeMarker(
+          graft.operators.IvfIndex.extend(spark, odds, table, batchId = 1L))
         graft.operators.IvfIndex.extend(spark, odds, table, batchId = 1L)
         graft.operators.IvfIndex.topK(spark, table, queries, k = 5, nProbe = 8)
       }),
@@ -1178,7 +1181,7 @@ object LlmOps {
     // fold TRAINS the quantizer on its own batch (even vec_ids),
     // freezes it, and records its stamp via commitAlias; epoch 1 (odd
     // vec_ids) assigns under the FROZEN centroids, staged as a CRASH
-    // (applyExtend: cell rows land, marker missing) + full re-delivery
+    // (Ledger.crashBeforeMarker: cell rows land, marker missing) + full re-delivery
     // whose re-appends are byte-identical (assignment is a pure
     // function of frozen centroids and batch) and collapse per
     // (id, batch_id) in topK. Oracle = q181's trainFilter'd unrolled-
@@ -1202,9 +1205,9 @@ object LlmOps {
           corpus.filter(col("id") % 2 === 0), epochId = 0L, table, path,
           nCells = 16, iters = 3)
         val odds = corpus.filter(col("id") % 2 === 1)
-        graft.operators.IvfIndex.applyExtend(spark, odds, table, // crash…
-          batchId = 2L)
-        graft.streaming.IvfStream.foldEpoch(                     // …re-delivery
+        Ledger.crashBeforeMarker(graft.streaming.IvfStream.foldEpoch( // crash…
+          odds, epochId = 1L, table, path, nCells = 16, iters = 3))
+        graft.streaming.IvfStream.foldEpoch(                         // …re-delivery
           odds, epochId = 1L, table, path, nCells = 16, iters = 3)
         graft.operators.IvfIndex.topK(spark, table, queries, k = 5, nProbe = 8)
       }),
@@ -1335,10 +1338,12 @@ object LlmOps {
           corpus.filter(col("id") % 2 === 0), table, path,
           nCells = 16, iters = 3)
         val odds = corpus.filter(col("id") % 2 === 1)
-        graft.operators.IvfIndex.applyExtend(spark, odds, table, batchId = 1L)
+        Ledger.crashBeforeMarker(
+          graft.operators.IvfIndex.extend(spark, odds, table, batchId = 1L))
         graft.operators.IvfIndex.extend(spark, odds, table, batchId = 1L)
         val victims = corpus.filter(col("id") % 7 === 3).select("id")
-        graft.operators.IvfIndex.applyDeleteIds(spark, victims, table, path, batchId = 2L)
+        Ledger.crashBeforeMarker(
+          graft.operators.IvfIndex.deleteIds(spark, victims, table, path, batchId = 2L))
         graft.operators.IvfIndex.deleteIds(spark, victims, table, path, batchId = 2L)
         graft.operators.IvfIndex.compact(spark, table, path)
         graft.operators.IvfIndex.topK(spark, table, queries, k = 5, nProbe = 8)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Ledger}
 
 class DedupSpec extends SparkSpec {
 
@@ -185,8 +185,7 @@ class DedupSpec extends SparkSpec {
     try {
       Dedup.buildNearDupIndex(evens, "nd_inc", s"$tmp/idx")
       // crash window: data appends land, the trailing commit stamp does not
-      Dedup.applyExtendNearDup(odds, "nd_inc", batchId = 1L,
-        k = 5, numHashes = 32, bands = 8)
+      Ledger.crashBeforeMarker(Dedup.extendNearDupIndex(spark, odds, "nd_inc", batchId = 1L))
       // full replay of the crashed batch: marker absent, so it re-folds
       // and re-appends byte-identical rows, then commits
       Dedup.extendNearDupIndex(spark, odds, "nd_inc", batchId = 1L)
@@ -220,12 +219,12 @@ class DedupSpec extends SparkSpec {
     try {
       Dedup.buildNearDupIndex(evens, "nd_del", s"$tmp/idx")
       // crashed extend + replay: duplicates in both tables
-      Dedup.applyExtendNearDup(odds, "nd_del", batchId = 1L,
-        k = 5, numHashes = 32, bands = 8)
+      Ledger.crashBeforeMarker(Dedup.extendNearDupIndex(spark, odds, "nd_del", batchId = 1L))
       Dedup.extendNearDupIndex(spark, odds, "nd_del", batchId = 1L)
       // crashed delete + replay of a victim set that intersects real pairs
       val victims = docs.select(col("id")).filter(col("id") % 7 === 3)
-      Dedup.applyDeleteFromNearDupIndex(spark, victims, "nd_del", s"$tmp/idx", batchId = 2L)
+      Ledger.crashBeforeMarker(
+        Dedup.deleteFromNearDupIndex(spark, victims, "nd_del", s"$tmp/idx", batchId = 2L))
       Dedup.deleteFromNearDupIndex(spark, victims, "nd_del", s"$tmp/idx", batchId = 2L)
       val want = pairSet(Dedup.minhashLsh(
         docs.select("id", "text").filter(col("id") % 7 =!= 3), threshold = 0.8))
@@ -267,8 +266,7 @@ class DedupSpec extends SparkSpec {
       }
       assert(e.getMessage.contains("out of sequence"))
       // in-sequence passes, including the crashed replay of the same id
-      Dedup.applyExtendNearDup(odds, "nd_fn", batchId = 1L,
-        k = 5, numHashes = 32, bands = 8)
+      Ledger.crashBeforeMarker(Dedup.extendNearDupIndex(spark, odds, "nd_fn", batchId = 1L))
       Dedup.extendNearDupIndex(spark, odds, "nd_fn", batchId = 1L)
       // deletes share the ledger
       val victims = docs.select(col("id")).filter(col("id") % 7 === 3)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.IvmJoin
+import graft.operators.{IvmJoin, Ledger}
 
 /** The maintained join view (operators.IvmJoin): counting-algorithm
   * deltas on both sides, crash-replay collapse, the multiplicity fence,
@@ -64,7 +64,8 @@ class IvmJoinSpec extends SparkSpec {
     IvmJoin.build(fact, dim, "custkey", table, path)
     IvmJoin.applyDelta(spark, table, "custkey", factDelta, noDim, batchId = 1L)
     // crash: the data appends land, the marker does not — then replay
-    IvmJoin.applyDeltaData(spark, table, "custkey", noFact, dimDelta, batchId = 2L)
+    Ledger.crashBeforeMarker(
+      IvmJoin.applyDelta(spark, table, "custkey", noFact, dimDelta, batchId = 2L))
     IvmJoin.applyDelta(spark, table, "custkey", noFact, dimDelta, batchId = 2L)
     assert(asSet(IvmJoin.serve(spark, table)) ==
       asSet(recomputed().select(IvmJoin.serve(spark, table).columns.map(col): _*)))
@@ -90,7 +91,7 @@ class IvmJoinSpec extends SparkSpec {
   test("compact folds the logs to batch 0 without changing the view") {
     buildAndFold()
     val before = asSet(IvmJoin.serve(spark, table))
-    IvmJoin.compact(spark, table, path, "custkey")
+    IvmJoin.compact(spark, table, path, Seq("custkey"))
     assert(asSet(IvmJoin.serve(spark, table)) == before)
     assert(spark.table(table).select("batch_id").distinct().collect()
       .map(_.getLong(0)).toSet == Set(0L))

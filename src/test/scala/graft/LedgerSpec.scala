@@ -4,15 +4,18 @@ import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, IvfIndex, IvmJoin, Maintenance, RetrievalIndex, Snapshot}
+import graft.operators.{Dedup, IvfIndex, IvmJoin, Ledger, Maintenance, RetrievalIndex,
+  Snapshot}
 import graft.operators.Maintenance.{CompactPolicy, Family}
 import graft.streaming.RetrievalStream
 
 /** The commit ledger of the maintained families, one row per kind that
   * keeps a commit marker: a non-positive stamp is refused, a committed
-  * replay adds no rows, a crashed replay (the verb's data appends, then
-  * the whole verb) converges to the uncrashed family, and on the fenced
-  * kinds a stamp of max + 2 fails the writer fence. Each row also pins
+  * replay adds no rows, and on the fenced kinds a stamp of max + 2 fails
+  * the writer fence. A crashed extend, delete (index kinds) and compact,
+  * each the production verb crashed right before its marker write
+  * ([[Ledger.crashBeforeMarker]]), commit no stamp, read clean under
+  * fsck and converge on rerun to the uncrashed family. Each row also pins
   * the exact job counts of its extend, delete and compact, and on the
   * index kinds those of the policy probe, not due and due. The marker
   * read behind every committed-stamp check is one job (a scan collected
@@ -63,8 +66,6 @@ class LedgerSpec extends SparkSpec {
         nBuckets = Buckets, incremental = true),
       (t, b) => Dedup.extendPairIndex(spark, docs(24, 40, "id"), t, threshold, b,
         nBuckets = Buckets),
-      (t, b) => Dedup.applyExtend(spark, docs(24, 40, "id"), t, threshold, b, 5,
-        nBuckets = Buckets),
       Some((t, p, b) => Dedup.deleteFromPairIndex(spark,
         docs(0, 40, "id").filter(col("id") % 5 === 0), t, p, b)),
       (t, p) => Dedup.compactPairIndex(spark, t, p, Buckets),
@@ -74,7 +75,6 @@ class LedgerSpec extends SparkSpec {
       (t, p) => Dedup.buildNearDupIndex(docs(0, 24, "id"), t, p, nBuckets = Buckets),
       (t, b) => Dedup.extendNearDupIndex(spark, docs(24, 40, "id"), t, b,
         nBuckets = Buckets),
-      (t, b) => Dedup.applyExtendNearDup(docs(24, 40, "id"), t, b, 5, 32, 8, Buckets),
       Some((t, p, b) => Dedup.deleteFromNearDupIndex(spark,
         docs(0, 40, "id").filter(col("id") % 5 === 0), t, p, b)),
       (t, p) => Dedup.compactNearDupIndex(spark, t, p, Buckets),
@@ -83,7 +83,6 @@ class LedgerSpec extends SparkSpec {
     Kind("retrieval", Seq("postings", "meta", "deleted"), fenced = true,
       (t, p) => RetrievalIndex.build(docs(0, 24, "doc_id"), t, p, Buckets),
       (t, b) => RetrievalIndex.extend(docs(24, 40, "doc_id"), t, b, Buckets),
-      (t, b) => RetrievalIndex.applyExtend(docs(24, 40, "doc_id"), t, b, Buckets),
       Some((t, p, b) => RetrievalIndex.deleteDocs(spark,
         docs(0, 40, "doc_id").filter(col("doc_id") % 5 === 0), t, p, b)),
       (t, p) => RetrievalIndex.compact(spark, t, p, Buckets),
@@ -92,7 +91,6 @@ class LedgerSpec extends SparkSpec {
     Kind("positions", Seq("positions", "pbatches", "pdeleted"), fenced = true,
       (t, p) => RetrievalIndex.buildPositions(docs(0, 24, "doc_id"), t, p, Buckets),
       (t, b) => RetrievalIndex.extendPositions(docs(24, 40, "doc_id"), t, b, Buckets),
-      (t, b) => RetrievalIndex.applyExtendPositions(docs(24, 40, "doc_id"), t, b, Buckets),
       Some((t, p, b) => RetrievalIndex.deletePositionDocs(spark,
         docs(0, 40, "doc_id").filter(col("doc_id") % 5 === 0), t, p, b)),
       (t, p) => RetrievalIndex.compactPositions(spark, t, p, Buckets),
@@ -102,7 +100,6 @@ class LedgerSpec extends SparkSpec {
       (t, p) => IvfIndex.build(vectors(0, 24), t, p, nCells = 2, iters = 1,
         nBuckets = Buckets),
       (t, b) => IvfIndex.extend(spark, vectors(24, 40), t, b, Buckets),
-      (t, b) => IvfIndex.applyExtend(spark, vectors(24, 40), t, b, Buckets),
       Some((t, p, b) => IvfIndex.deleteIds(spark,
         vectors(0, 40).filter(col("id") % 5 === 0).select("id"), t, p, b)),
       (t, p) => IvfIndex.compact(spark, t, p, Buckets),
@@ -114,8 +111,6 @@ class LedgerSpec extends SparkSpec {
       (t, p) => IvmJoin.build(fact(0, 24, 1L).drop("dn"), dim(0L until 6L, 1L).drop("dn"),
         "k", t, p, Buckets),
       (t, b) => IvmJoin.applyDelta(spark, t, "k", fact(24, 40, 1L), dim(Nil, 1L), b,
-        Buckets),
-      (t, b) => IvmJoin.applyDeltaData(spark, t, "k", fact(24, 40, 1L), dim(Nil, 1L), b,
         Buckets),
       None,
       (t, p) => IvmJoin.compact(spark, t, p, Seq("k"), Buckets),
@@ -136,6 +131,24 @@ class LedgerSpec extends SparkSpec {
   private def rows(k: Kind, t: String): Map[String, Long] =
     k.suffixes.map(tableOf(t, _)).filter(spark.catalog.tableExists)
       .map(n => n -> spark.table(n).count()).toMap
+
+  private def committed(k: Kind, t: String): Set[Long] =
+    Ledger.committed(spark, t, k.kind)
+
+  private def fsckBad(k: Kind, t: String): Seq[String] =
+    Maintenance.fsck(spark, t, k.kind).filter(!col("ok"))
+      .select("check").collect().map(_.getString(0)).toSeq
+
+  /** Run `verb` as a crash before its marker write on family `t`, and
+    * check the one legal crash window: the verb's appends or rewrites
+    * landed, no stamp was committed, and fsck reads clean. */
+  private def crash(k: Kind, t: String, landed: Boolean)(verb: => Unit): Unit = {
+    val (stamps, before) = (committed(k, t), rows(k, t))
+    Ledger.crashBeforeMarker(verb)
+    assert(committed(k, t) == stamps, "a crashed verb commits no stamp")
+    if (landed) assert(rows(k, t) != before, "the crashed verb's appends must land")
+    assert(fsckBad(k, t).isEmpty)
+  }
 
   kinds.foreach { k =>
     test(s"${k.kind}: a non-positive stamp is refused before anything is read") {
@@ -167,11 +180,51 @@ class LedgerSpec extends SparkSpec {
       val (clean, _) = fresh(k, "clean")
       k.extend(clean, 1L)
       val (crashed, _) = fresh(k, "crashed")
-      k.stage(crashed, 1L)
+      crash(k, crashed, landed = true)(k.extend(crashed, 1L))
+      assert(!committed(k, crashed).contains(1L))
       k.extend(crashed, 1L)
       val want = k.serve(clean)
       assert(want.nonEmpty)
       assert(k.serve(crashed) == want)
+      assert(committed(k, crashed) == committed(k, clean))
+    }
+
+    k.delete.foreach { delete =>
+      test(s"${k.kind}: a crashed delete reads clean and its rerun converges") {
+        val (clean, cp) = fresh(k, "cleandel")
+        k.extend(clean, 1L)
+        delete(clean, cp, 2L)
+        val (crashed, p) = fresh(k, "crasheddel")
+        k.extend(crashed, 1L)
+        crash(k, crashed, landed = true)(delete(crashed, p, 2L))
+        assert(!committed(k, crashed).contains(2L))
+        delete(crashed, p, 2L)
+        assert(k.serve(crashed) == k.serve(clean))
+        assert(committed(k, crashed) == committed(k, clean))
+      }
+    }
+
+    test(s"${k.kind}: a crashed compact reads clean and its rerun converges") {
+      // the ladder the compact folds: an extend and, on the index kinds,
+      // a delete, so the crash lands after the frontier's truncation
+      def ladder(t: String, p: String): Unit = {
+        k.extend(t, 1L)
+        k.delete.foreach(_(t, p, 2L))
+      }
+      val (clean, cp) = fresh(k, "cleancpt")
+      ladder(clean, cp)
+      k.compact(clean, cp)
+      val (crashed, p) = fresh(k, "crashedcpt")
+      ladder(crashed, p)
+      val want = k.serve(crashed)
+      crash(k, crashed, landed = false)(k.compact(crashed, p))
+      k.suffixes.filter(_.endsWith("deleted")).foreach(f =>
+        assert(spark.table(tableOf(crashed, f)).isEmpty, s"$f is truncated before the marker"))
+      assert(k.serve(crashed) == want)
+      k.compact(crashed, p)
+      assert(k.serve(crashed) == want)
+      assert(k.serve(clean) == want)
+      assert(committed(k, crashed) == Set(0L) && committed(k, clean) == Set(0L))
     }
 
     test(s"${k.kind}: a stamp of max + 2 " +
@@ -212,6 +265,28 @@ class LedgerSpec extends SparkSpec {
         assert(Map("probe" -> notDueJobs, "probe due" -> dueJobs) ==
           k.pins.filter(_._1.startsWith("probe")))
       }
+  }
+
+  test("the crash seam fails loudly on a verb that never reaches its marker") {
+    val k = kinds.find(_.kind == "retrieval").get
+    val (t, _) = fresh(k, "seamnoop")
+    k.extend(t, 1L)
+    // a committed replay no-ops: a staging that would pass silently
+    val e = intercept[IllegalStateException](Ledger.crashBeforeMarker(k.extend(t, 1L)))
+    assert(e.getMessage.contains("without a marker write"), e.getMessage)
+    // and the flag is cleared: the next verb commits
+    k.extend(t, 2L)
+    assert(committed(k, t) == Set(0L, 1L, 2L))
+  }
+
+  test("the crash seam clears its flag when the verb throws something else") {
+    val k = kinds.find(_.kind == "retrieval").get
+    val (t, _) = fresh(k, "seamfence")
+    // the writer fence refuses stamp 5 before any append
+    val e = intercept[IllegalArgumentException](Ledger.crashBeforeMarker(k.extend(t, 5L)))
+    assert(e.getMessage.contains("out of sequence"), e.getMessage)
+    k.extend(t, 1L)
+    assert(committed(k, t) == Set(0L, 1L))
   }
 
   test("Maintenance.sweep over one retrieval family runs its pinned job counts, " +
@@ -275,12 +350,12 @@ class LedgerSpec extends SparkSpec {
 object LedgerSpec {
 
   /** One kind: its tables (suffixes of the family name, "base" = the
-    * family's own table), build, the extend verb and its crash seam (the
-    * data appends without the marker), delete, compact and a serve. */
+    * family's own table), build, extend, delete, compact and a serve.
+    * Crashes are staged through the verbs themselves
+    * ([[graft.operators.Ledger.crashBeforeMarker]]). */
   final case class Kind(kind: String, suffixes: Seq[String], fenced: Boolean,
       build: (String, String) => Unit,
       extend: (String, Long) => Unit,
-      stage: (String, Long) => Unit,
       delete: Option[(String, String, Long) => Unit],
       compact: (String, String) => Unit,
       serve: String => Set[String],

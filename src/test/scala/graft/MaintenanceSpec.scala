@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.operators.{Dedup, IvfIndex, IvmJoin, Maintenance, RetrievalIndex}
+import graft.operators.{Dedup, IvfIndex, IvmJoin, Ledger, Maintenance, RetrievalIndex}
 import graft.operators.Maintenance.CompactPolicy
 import graft.queries.CurationOps
 import graft.streaming.{PairIndexStream, RetrievalStream}
@@ -258,6 +258,14 @@ class MaintenanceSpec extends SparkSpec {
   // --------------------------------------------------------------------
   // fsck: the structural ledger audit (round 10)
 
+  /** A botched manual repair: one row of log `t` re-appended under
+    * `stamp`, outside every verb (the fence would refuse the verb). */
+  private def rawAppend(t: String, stamp: Long): Unit = {
+    val rows = spark.table(t).limit(1).withColumn("batch_id", lit(stamp)).collect()
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), spark.table(t).schema)
+      .write.mode(org.apache.spark.sql.SaveMode.Append).insertInto(t)
+  }
+
   private def fsckBad(table: String, kind: String) =
     Maintenance.fsck(spark, table, kind).filter(!col("ok"))
       .select("check").collect().map(_.getString(0)).toSeq
@@ -286,14 +294,14 @@ class MaintenanceSpec extends SparkSpec {
     val path = graft.core.Scratch.path(table)
     RetrievalIndex.build(docs.filter(col("doc_id") % 3 === 0), table, path)
     // crash window: data appended at max+1 = 1, marker never written
-    RetrievalIndex.applyExtend(docs.filter(col("doc_id") % 3 === 1),
-      table, batchId = 1L)
+    Ledger.crashBeforeMarker(RetrievalIndex.extend(docs.filter(col("doc_id") % 3 === 1),
+      table, batchId = 1L))
     assert(fsckBad(table, "retrieval").isEmpty,
       "the single max+1 stamp is the legal crash window")
     // an orphan BEYOND the window (stamp 5 over committed {0}) can't be
-    // produced by the fenced protocol — fsck must flag the log
-    RetrievalIndex.applyExtend(docs.filter(col("doc_id") % 3 === 2),
-      table, batchId = 5L)
+    // produced by the fenced protocol, only by a raw append — fsck must
+    // flag the log
+    rawAppend(s"${table}_postings", 5L)
     val bad = fsckBad(table, "retrieval")
     assert(bad.exists(_.startsWith("log_stamps:")),
       s"orphan stamp must trip the log check, got $bad")
@@ -312,10 +320,11 @@ class MaintenanceSpec extends SparkSpec {
     assert(fsckBad(table, "pairs").isEmpty, "the unfenced kind's gaps are legal")
     // epoch 2 crashes after its adds' data appends: in flight at 6 = max + 2
     val third = adds.filter(col("id") % 3 === 2).select("id", "text")
-    Dedup.applyExtend(spark, third, table, 0.8, 6L, 5)
+    Ledger.crashBeforeMarker(Dedup.extendPairIndex(spark, third, table, 0.8, 6L))
     assert(fsckBad(table, "pairs").isEmpty, "the in-flight stamp above max is legal")
     // a second uncommitted stamp, below max, is still an orphan
-    Dedup.applyDeleteFromPairIndex(spark, adds.limit(1).select("id"), table, path, 3L)
+    Ledger.crashBeforeMarker(
+      Dedup.deleteFromPairIndex(spark, adds.limit(1).select("id"), table, path, 3L))
     assert(fsckBad(table, "pairs").contains(s"log_stamps:${table}_deleted"))
   }
 
@@ -351,10 +360,9 @@ class MaintenanceSpec extends SparkSpec {
       dim.limit(0).withColumn("dn", lit(1L)), batchId = 1L)
     assert(Maintenance.fsck(spark, jt, "join").filter(!col("ok")).count() == 0L)
     // and a staged violation on the join: fact-log data at an orphan
-    // stamp (5 over committed {0,1}) must flag log_stamps on that log
-    IvmJoin.applyDeltaData(spark, jt, "k",
-      Seq((2L, 202L, 7.0)).toDF("k", "o", "v").withColumn("dn", lit(1L)),
-      dim.limit(0).withColumn("dn", lit(1L)), batchId = 5L)
+    // stamp (5 over committed {0,1}, which the fence refuses to any verb,
+    // so a raw append) must flag log_stamps on that log
+    rawAppend(s"${jt}_fact", 5L)
     val bad = Maintenance.fsck(spark, jt, "join").filter(!col("ok"))
       .select("check").collect().map(_.getString(0))
     assert(bad.exists(_.startsWith("log_stamps:")), bad.mkString(","))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Ledger}
 import graft.queries.PairGraph
 
 /** The persisted pair-graph table (PairGraph memo over
@@ -92,7 +92,7 @@ class PairGraphSpec extends SparkSpec {
     Dedup.buildPairIndex(docs.filter(col("id") % 2 === 0), "pg_crash",
       tmp("crash"), 0.8, incremental = true)
     // crash after the LAST data append: everything landed except the stamp
-    Dedup.applyExtend(spark, odds, "pg_crash", 0.8, batchId = 1L, k = 5)
+    Ledger.crashBeforeMarker(Dedup.extendPairIndex(spark, odds, "pg_crash", 0.8, batchId = 1L))
     // replay folds the batch again in full; raw rows duplicate...
     Dedup.extendPairIndex(spark, odds, "pg_crash", 0.8, batchId = 1L)
     val raw = spark.table("pg_crash").count()
@@ -107,8 +107,8 @@ class PairGraphSpec extends SparkSpec {
     drop("pg_crash2")
     Dedup.buildPairIndex(docs.filter(col("id") % 3 === 0), "pg_crash2",
       tmp("crash2"), 0.8, incremental = true)
-    Dedup.applyExtend(spark, docs.filter(col("id") % 3 === 1), "pg_crash2", 0.8,
-      batchId = 1L, k = 5)
+    Ledger.crashBeforeMarker(Dedup.extendPairIndex(spark,
+      docs.filter(col("id") % 3 === 1), "pg_crash2", 0.8, batchId = 1L))
     Dedup.extendPairIndex(spark, docs.filter(col("id") % 3 === 1), "pg_crash2",
       0.8, batchId = 1L)
     Dedup.extendPairIndex(spark, docs.filter(col("id") % 3 === 2), "pg_crash2",
@@ -121,7 +121,7 @@ class PairGraphSpec extends SparkSpec {
     val odds = docs.filter(col("id") % 2 === 1)
     Dedup.buildPairIndex(docs.filter(col("id") % 2 === 0), "pg_cpt",
       tmp("cpt"), 0.8, incremental = true)
-    Dedup.applyExtend(spark, odds, "pg_cpt", 0.8, batchId = 1L, k = 5)
+    Ledger.crashBeforeMarker(Dedup.extendPairIndex(spark, odds, "pg_cpt", 0.8, batchId = 1L))
     Dedup.extendPairIndex(spark, odds, "pg_cpt", 0.8, batchId = 1L)
     val rawBefore = spark.table("pg_cpt").count()
     val want = Dedup.jaccardPairs(docs, threshold = 0.8).collect().map(key).toSet
@@ -181,7 +181,8 @@ class PairGraphSpec extends SparkSpec {
       0.8, batchId = 1L)
     val victims = docs.filter(col("id") % 7 === 3).select(col("id"))
     // crashed delete (ids landed, stamp missing) + full replay
-    Dedup.applyDeleteFromPairIndex(spark, victims, "pg_del", tmp("del"), batchId = 2L)
+    Ledger.crashBeforeMarker(
+      Dedup.deleteFromPairIndex(spark, victims, "pg_del", tmp("del"), batchId = 2L))
     Dedup.deleteFromPairIndex(spark, victims, "pg_del", tmp("del"), batchId = 2L)
     val want = Dedup.jaccardPairs(docs.filter(col("id") % 7 =!= 3), threshold = 0.8)
       .collect().map(key).toSet

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.{BroadcastGate, Tables}
-import graft.operators.{RetrievalIndex, Snapshot}
+import graft.operators.{Ledger, RetrievalIndex, Snapshot}
 import graft.queries.CurationOps
 
 /** The persisted inverted index serves the scan-time retrieval
@@ -129,7 +129,7 @@ class RetrievalIndexSpec extends SparkSpec {
     val odds = docs.filter(col("doc_id") % 2 === 1)
     RetrievalIndex.build(evens, "rix_cr", freshPath("cr"))
     // the crash: data append lands, the trailing meta commit does not
-    RetrievalIndex.applyExtend(odds, "rix_cr", batchId = 1L)
+    Ledger.crashBeforeMarker(RetrievalIndex.extend(odds, "rix_cr", batchId = 1L))
     // replay: marker absent → the batch re-folds end to end and commits
     RetrievalIndex.extend(odds, "rix_cr", batchId = 1L)
     // every batch-1 posting row is in the table TWICE …
@@ -191,7 +191,8 @@ class RetrievalIndexSpec extends SparkSpec {
     RetrievalIndex.extend(docs.filter(col("doc_id") % 2 === 1), "rix_dl", batchId = 1L)
     val victims = docs.filter(col("doc_id") % 7 === 3).select("doc_id")
     // crashed delete (tombstones land, meta row doesn't) + full replay
-    RetrievalIndex.applyDeleteDocs(spark, victims, "rix_dl", dlPath, batchId = 2L)
+    Ledger.crashBeforeMarker(
+      RetrievalIndex.deleteDocs(spark, victims, "rix_dl", dlPath, batchId = 2L))
     RetrievalIndex.deleteDocs(spark, victims, "rix_dl", dlPath, batchId = 2L)
     // N is exact despite the crash: meta sums to the surviving count
     val n = spark.table("rix_dl_meta").dropDuplicates("n_docs", "batch_id")
@@ -221,7 +222,7 @@ class RetrievalIndexSpec extends SparkSpec {
     val cpPath = freshPath("cp")
     RetrievalIndex.build(docs.filter(col("doc_id") % 2 === 0), "rix_cp", cpPath)
     val odds = docs.filter(col("doc_id") % 2 === 1)
-    RetrievalIndex.applyExtend(odds, "rix_cp", batchId = 1L)
+    Ledger.crashBeforeMarker(RetrievalIndex.extend(odds, "rix_cp", batchId = 1L))
     RetrievalIndex.extend(odds, "rix_cp", batchId = 1L) // crash + replay
     val victims = docs.filter(col("doc_id") % 7 === 3).select("doc_id")
     RetrievalIndex.deleteDocs(spark, victims, "rix_cp", cpPath, batchId = 2L)
@@ -250,7 +251,7 @@ class RetrievalIndexSpec extends SparkSpec {
     val odds = docs.filter(col("doc_id") % 2 === 1)
     RetrievalIndex.buildPositions(evens, "rix_pi", freshPath("pi"))
     // crash: positions land, the marker doesn't — then the full replay
-    RetrievalIndex.applyExtendPositions(odds, "rix_pi", batchId = 1L)
+    Ledger.crashBeforeMarker(RetrievalIndex.extendPositions(odds, "rix_pi", batchId = 1L))
     RetrievalIndex.extendPositions(odds, "rix_pi", batchId = 1L)
     val dup = spark.table("rix_pi_positions").filter(col("batch_id") === 1L)
     assert(dup.count() == 2 * dup.dropDuplicates("term", "doc_id").count())
@@ -315,7 +316,7 @@ class RetrievalIndexSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("out of sequence"))
     // …while the in-sequence batch passes, including its crashed replay
-    RetrievalIndex.applyExtend(odds, "rix_fn", batchId = 1L)
+    Ledger.crashBeforeMarker(RetrievalIndex.extend(odds, "rix_fn", batchId = 1L))
     RetrievalIndex.extend(odds, "rix_fn", batchId = 1L)
     // deletes share the ledger: same fence, same sequence
     val victims = docs.filter(col("doc_id") % 7 === 3).select("doc_id")
@@ -365,12 +366,13 @@ class RetrievalIndexSpec extends SparkSpec {
       val b3 = randomCorpus(r, 29L to 36L)
       RetrievalIndex.build(frame(b0), t, p, nBuckets = 4)
       // batch 1 crashes twice after its postings append, then replays
-      RetrievalIndex.applyExtend(frame(b1), t, batchId = 1L, nBuckets = 4)
-      RetrievalIndex.applyExtend(frame(b1), t, batchId = 1L, nBuckets = 4)
+      (1 to 2).foreach(_ => Ledger.crashBeforeMarker(
+        RetrievalIndex.extend(frame(b1), t, batchId = 1L, nBuckets = 4)))
       RetrievalIndex.extend(frame(b1), t, batchId = 1L, nBuckets = 4)
       // batch 2: a crashed and replayed delete
       val victims = r.shuffle((1L to 28L).toList).take(5)
-      RetrievalIndex.applyDeleteDocs(spark, idFrame(victims), t, p, batchId = 2L)
+      Ledger.crashBeforeMarker(
+        RetrievalIndex.deleteDocs(spark, idFrame(victims), t, p, batchId = 2L))
       RetrievalIndex.deleteDocs(spark, idFrame(victims), t, p, batchId = 2L)
       RetrievalIndex.extend(frame(b3), t, batchId = 3L, nBuckets = 4)
       // batch 4 deletes two of batch 2's victims again, and one new doc

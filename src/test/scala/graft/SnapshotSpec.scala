@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.operators.{IvmRollup, Maintenance, RetrievalIndex, Snapshot}
+import graft.operators.{IvmRollup, Ledger, Maintenance, RetrievalIndex, Snapshot}
 import graft.queries.CurationOps
 
 /** Snapshot export/restore (round 10): the backup verb must round-trip
@@ -269,8 +269,8 @@ class SnapshotSpec extends SparkSpec {
       batchId = 1L)
     // mid-epoch: stamp 2's DATA lands, its marker does not — the one
     // legal crash-window state a live stream exposes at any instant
-    RetrievalIndex.applyExtend(docs.filter(col("doc_id") % 7 === 3)
-      .withColumn("doc_id", col("doc_id") + 1000000L), src, batchId = 2L)
+    Ledger.crashBeforeMarker(RetrievalIndex.extend(docs.filter(col("doc_id") % 7 === 3)
+      .withColumn("doc_id", col("doc_id") + 1000000L), src, batchId = 2L))
     val dest = graft.core.Scratch.path("snap_cut_dest")
     val (cut, rows) = Snapshot.exportAtCut(spark, src, "retrieval", dest)
     assert(cut == 1L && rows > 0L)

@@ -846,18 +846,17 @@ class StreamingSpec extends SparkSpec {
       // epoch 0 (stamp 1) CRASHES after its data appends: the fact
       // insert lands in all three logs, the marker does not
       val delta = Seq((2L, 202L, 5.0)).toDF("custkey", "o_orderkey", "o_totalprice")
-      IvmJoin.applyDeltaData(spark, table, "custkey",
-        delta.withColumn("dn", lit(1L)),
-        dim.limit(0).withColumn("dn", lit(1L)), batchId = 1L)
-      // the restarted stream replays epoch 0 through the SAME fold the
-      // foreachBatch calls — re-appends are byte-identical and the
-      // serve collapse folds them: the insert lands exactly once
-      graft.streaming.IvmJoinStream.foldEpoch(
+      def fold(): Unit = graft.streaming.IvmJoinStream.foldEpoch(
         delta.withColumn("c_mktsegment", lit(""))
           .withColumn("side", lit("fact")).withColumn("dn", lit(1L)),
         epochId = 0L, table, "custkey",
         factCols = Seq("custkey", "o_orderkey", "o_totalprice"),
         dimCols = Seq("custkey", "c_mktsegment"))
+      graft.operators.Ledger.crashBeforeMarker(fold())
+      // the restarted stream replays epoch 0 through the SAME fold the
+      // foreachBatch calls — re-appends are byte-identical and the
+      // serve collapse folds them: the insert lands exactly once
+      fold()
       val got = IvmJoin.serve(spark, table).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getString(3))).toSet
       assert(got == Set((1L, 101L, 10.0, "A"),

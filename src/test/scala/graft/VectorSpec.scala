@@ -120,7 +120,8 @@ class VectorSpec extends SparkSpec {
       IvfIndex.extend(spark, corpus.filter(col("id") % 4 === 3), "ivf_b", batchId = 2L)
       IvfIndex.build(evens, "ivf_c", tmp("c"))
       val odds = corpus.filter(col("id") % 2 === 1)
-      IvfIndex.applyExtend(spark, odds, "ivf_c", batchId = 1L)
+      graft.operators.Ledger.crashBeforeMarker(
+        IvfIndex.extend(spark, odds, "ivf_c", batchId = 1L))
       IvfIndex.extend(spark, odds, "ivf_c", batchId = 1L) // replay of the crash
       val a = key(IvfIndex.topK(spark, "ivf_a", queries, k = 5, nProbe = 8))
       assert(a == key(IvfIndex.topK(spark, "ivf_b", queries, k = 5, nProbe = 8)))
@@ -174,7 +175,8 @@ class VectorSpec extends SparkSpec {
       }
       assert(e.getMessage.contains("out of sequence"))
       // in-sequence passes, including the crashed replay of the same id
-      IvfIndex.applyExtend(spark, odds, "ivf_fn", batchId = 1L)
+      graft.operators.Ledger.crashBeforeMarker(
+        IvfIndex.extend(spark, odds, "ivf_fn", batchId = 1L))
       IvfIndex.extend(spark, odds, "ivf_fn", batchId = 1L)
       // deletes share the ledger
       val victims = corpus.filter(col("id") % 7 === 3).select("id")
